@@ -59,30 +59,38 @@ object ExprRegistry {
     * two-scan shape as [[WholeFrameAgg]], zero single-partition stages. */
   final case class AggThenRow(agg: Column, row: Column => Column) extends Derived
   /** A GLOBAL ordered fn (no `partition_by`): the derive stage routes it
-    * through [[OrderedAtScale.applyGlobal]]'s range-bucketed two-level
+    * as an [[OrderedAtScale.Ordered]] unit through
+    * [[OrderedAtScale.applyLevel]]'s range-bucketed two-level
     * decomposition, so no config can compile to a single-partition
     * WindowExec (round-16: the last scale cliff, closed). */
   final case class GlobalOrdered(spec: OrderedAtScale.GlobalOrderedSpec) extends Derived
-  /** A frame-level rewrite for global ordered fns whose decomposition
-    * needs more than prefix+within recombination (`rle_id`'s bucket
-    * chain-merge): the derive stage calls `build(frame, outName)`. */
+  /** A frame-level rewrite for global fns that need BOTH order directions
+    * (`peak_*`, `interpolate_by`: one [[OrderedAtScale.applyLevel]] per
+    * direction): the derive stage calls `build(frame, outName)`. */
   final case class FrameLevel(build: (org.apache.spark.sql.DataFrame, String) =>
     org.apache.spark.sql.DataFrame) extends Derived
-  /** A batchable GLOBAL raw-frame rolling fn (the moment/percentile
-    * family): consecutive entries sharing (orderBy, desc, k) fuse into ONE
-    * [[OrderedAtScale.globalRollingFrameMulti]] decomposition — the
-    * [[GlobalOrdered]] batching rule applied to the rolling family (a
-    * 6-statistic config is one range exchange, not six). */
+  /** A batchable GLOBAL raw-frame rolling fn (the rolling family and the
+    * shift family): consecutive entries sharing (orderBy, desc, k, tieOf)
+    * fuse into ONE [[OrderedAtScale.RollGroup]] (a 6-statistic config is
+    * one head+tail export, not six). `tieOf` is set for shift-family
+    * entries (the column's text): a shift batches only with shifts of the
+    * same column, so its tie hash stays the per-call `xxhash64(order_by,
+    * x)` whatever rolling fns sit next to it. */
   final case class GlobalRollingFrame(
       orderBy: Seq[String],
       desc: Boolean,
       k: Int,
       x: Column,
       rollingAgg: org.apache.spark.sql.expressions.WindowSpec => Column,
-      frameAgg: Column => Column) extends Derived
+      frameAgg: Column => Column,
+      tieOf: Option[String] = None) extends Derived {
+    /** This entry alone as a level unit writing `outName`. */
+    def unit(outName: String): OrderedAtScale.RollGroup =
+      OrderedAtScale.RollGroup(orderBy, desc, k, Seq((outName, x, rollingAgg, frameAgg)))
+  }
   /** The RANGE-framed twin of [[GlobalRollingFrame]]: consecutive entries
     * sharing (by, window, closed) fuse into ONE
-    * [[OrderedAtScale.globalRollingByMulti]] decomposition. */
+    * [[OrderedAtScale.RollByGroup]]. */
   final case class GlobalRollingBy(
       by: String,
       window: Long,
@@ -91,16 +99,14 @@ object ExprRegistry {
       rangeAgg: org.apache.spark.sql.expressions.WindowSpec => Column,
       own: OrderedAtScale.OwnFrame,
       boundary: (Column, Column, Column) => Column) extends Derived
-  /** A global run-id chain (`rle_id` with no `partition_by`) — a first-class
-    * Derived (round 20, was an opaque [[FrameLevel]]) so the derive stage
-    * can pool it into a FUSED decomposition level
-    * ([[OrderedAtScale.applyFusedLevel]]) with other same-order globals
-    * instead of paying its own exchange + cut sample. */
+  /** A global run-id chain (`rle_id` with no `partition_by`), pooled into a
+    * FUSED level ([[OrderedAtScale.applyLevel]], an
+    * [[OrderedAtScale.RunIdUnit]]) with other same-order globals instead
+    * of paying its own exchange + cut sample. */
   final case class GlobalRunId(
       valueCol: String,
       orderBy: Seq[String],
-      desc: Boolean,
-      maxBuckets: Int = 100000) extends Derived
+      desc: Boolean) extends Derived
 
   type DeriveFn = Map[String, Any] => Derived
 
@@ -192,7 +198,7 @@ object ExprRegistry {
 
   /** Running aggregate along an explicit order: the per-key windowed form
     * with `partition_by`; WITHOUT it, the range-bucketed two-level
-    * decomposition ([[OrderedAtScale.applyGlobal]]) — a global running fn
+    * decomposition ([[OrderedAtScale.Ordered]]) — a global running fn
     * never compiles to a single-partition window. `recombine`
     * re-aggregates bucket totals; `combine` merges a row's prior-bucket
     * prefix (null in the first bucket) with its within-bucket running
@@ -217,11 +223,11 @@ object ExprRegistry {
 
   /** Shift family (`shift`/`diff`/`pct_change`, and `lead` via a negated
     * offset): per-key windowed lag with `partition_by`; the global form is
-    * [[OrderedAtScale.globalShift]]'s tail-exchange decomposition (bucket
-    * boundary rows read the prior buckets' exported n-row tails). `post`
-    * wraps the shifted value (diff: `x - shifted`). Offset 0 is the
-    * column itself; negative offsets flip the order direction (lead(n) ==
-    * lag(n) over the reversed total order). */
+    * a [[GlobalRollingFrame]] with k = |n|+1 ([[shiftFrame]]), so it pools
+    * into the fused level with the other same-order globals. `post` wraps
+    * the shifted value (diff: `x - shifted`). Offset 0 is the column
+    * itself; negative offsets flip the order direction (lead(n) == lag(n)
+    * over the reversed total order). */
   private def shiftLike(fn: String, post: (Column, Column) => Column): DeriveFn = kw => {
     val n = intVal(kw, "n", 1)
     val x = c(kw)
@@ -232,15 +238,25 @@ object ExprRegistry {
       RowWise(post(x, x))
     } else {
       val (ord, desc) = ordAndDesc(kw, fn)
-      val flip = if (n < 0) !desc else desc
-      FrameLevel((df, out) =>
-        OrderedAtScale.globalShift(df, x, math.abs(n), ord, flip, out, post(x, _)))
+      shiftFrame(ord, if (n < 0) !desc else desc, math.abs(n), x, post)
     }
   }
 
+  /** Global lag by `n` >= 1 as a raw-frame rolling unit over the last n+1
+    * rows: interior rows take the within-bucket `lag(x, n)`; a boundary
+    * row (within-bucket row number ≤ n) recomposes its frame from the
+    * prior buckets' tails, and the row n back is the frame's first element
+    * when the frame is full (a shorter frame means the global start: null). */
+  private def shiftFrame(ord: Seq[String], desc: Boolean, n: Int, x: Column,
+      post: (Column, Column) => Column): GlobalRollingFrame =
+    GlobalRollingFrame(ord, desc, n + 1, x,
+      w => post(x, lag(x, n).over(w)),
+      xs => post(x, when(size(xs) === n + 1, element_at(xs, 1))),
+      tieOf = Some(x.toString))
+
   /** peak_max/peak_min: strict neighbor comparison in both directions.
-    * Global forms stage prev/next via two [[OrderedAtScale.globalShift]]
-    * passes (one per direction). */
+    * Global forms stage prev/next with one [[shiftFrame]] level per
+    * direction. */
   private def peakLike(fn: String, beats: (Column, Column) => Column): DeriveFn = kw => {
     val x = c(kw)
     if (strSeq(kw, "partition_by").nonEmpty) {
@@ -253,9 +269,13 @@ object ExprRegistry {
         Seq("__pk_prev", "__pk_next").find(df.columns.contains).foreach(n =>
           throw new IllegalArgumentException(
             s"$fn: input frame already has internal shadow column '$n' — rename it first"))
-        val staged = OrderedAtScale.globalShift(
-          OrderedAtScale.globalShift(df, x, 1, ord, desc, "__pk_prev"),
-          x, 1, ord, !desc, "__pk_next")
+        def neighbor(d: Boolean, name: String) =
+          Seq(shiftFrame(ord, d, 1, x, (_, s) => s).unit(name))
+        // the second level samples its cuts from `df` too: same key tuples,
+        // without re-running the first level
+        val staged = OrderedAtScale.applyLevel(
+          OrderedAtScale.applyLevel(df, neighbor(desc, "__pk_prev")),
+          neighbor(!desc, "__pk_next"), Some(df))
         val (prev, next) = (col("__pk_prev"), col("__pk_next"))
         staged.withColumn(out,
           (prev.isNull || beats(x, prev)) && (next.isNull || beats(x, next)))
@@ -266,13 +286,10 @@ object ExprRegistry {
 
   /** Decomposable rolling aggregate (sum/min/max): per-key windowed with
     * `partition_by`. The global form rides the BATCHABLE raw-frame
-    * decomposition ([[GlobalRollingFrame]] →
-    * [[OrderedAtScale.globalRollingFrameMulti]]) since round 19 — it used
-    * to take a dedicated one-fn-per-level tail exchange
-    * ([[OrderedAtScale.globalRolling]]), so a config with several
-    * same-(order, k) decomposable rollings paid one full decomposition
-    * level EACH (q164's rolling_sum + rolling_max were two levels; now
-    * one, shared also with any moment-family entries of the same frame).
+    * decomposition ([[GlobalRollingFrame]] → [[OrderedAtScale.RollGroup]]),
+    * so several same-(order, k) decomposable rollings share one head+tail
+    * export (q164's rolling_sum + rolling_max), also with any
+    * moment-family entries of the same frame.
     * The boundary branch folds the raw frame values with `tailCombine` in
     * frame order — for the decomposable aggregates that is the exact
     * windowed value (sum/min/max over the same multiset; null-skipping
@@ -305,7 +322,7 @@ object ExprRegistry {
   /** Rolling fn whose aggregate needs the RAW frame values (the moment/
     * percentile family): per-key windowed with `partition_by`; WITHOUT it,
     * the head+tail raw-value exchange
-    * ([[OrderedAtScale.globalRollingFrame]]) whose boundary rows
+    * ([[OrderedAtScale.RollGroup]]) whose boundary rows
     * re-aggregate with a [[FrameStats]] fold that is BIT-IDENTICAL to the
     * windowed aggregate — closing the last family that used to fall back
     * to a single-partition window. `windowedAgg` is the native aggregate
@@ -422,8 +439,8 @@ object ExprRegistry {
     val parts = strSeq(kw, "partition_by")
     require(parts.nonEmpty,
       s"'$fn': rollingByFrame reached with an empty partition_by — the global form MUST " +
-        "route through OrderedAtScale.globalRollingBy (value-range tail exchange), never " +
-        "a single-partition window. This is a registry bug: add the fn's global arm.")
+        "route through OrderedAtScale.applyLevel (a RollByGroup value-range tail exchange), " +
+        "never a single-partition window. This is a registry bug: add the fn's global arm.")
     val base = Window.partitionBy(parts.map(col): _*).orderBy(col(by))
     closed match {
       case "right" => base.rangeBetween(-(w - 1), 0) // (t-w, t]
@@ -435,7 +452,7 @@ object ExprRegistry {
 
   /** RANGE-framed rolling fn (`rolling_*_by`): per-key windowed with
     * `partition_by`; WITHOUT it, the value-range tail exchange
-    * ([[OrderedAtScale.globalRollingBy]]) — the last family that used to
+    * ([[OrderedAtScale.RollByGroup]]) — the last family that used to
     * fall back to a single-partition window. `boundary` recomputes a
     * boundary row's value from (tail values in range, own frame values,
     * within value); raw-frame re-aggregations use [[FrameStats]] folds so
@@ -681,8 +698,8 @@ object ExprRegistry {
       _ => count(lit(1)),
       (_, p, _, v) => coalesce(p, lit(0L)) + v),
     // positional shift family: per-key windowed lag with partition_by;
-    // global forms take the tail-exchange decomposition
-    // ([[OrderedAtScale.globalShift]]) — negative n = lead = the same
+    // global forms are k = |n|+1 raw-frame rolling units
+    // ([[OrderedAtScale.RollGroup]]) — negative n = lead = the same
     // machinery with the order direction flipped
     "shift" -> shiftLike("shift", (_, s) => s),
     "diff" -> shiftLike("diff", (x, s) => x - s),
@@ -698,12 +715,11 @@ object ExprRegistry {
     "is_duplicated" -> rw(kw => count(lit(1)).over(Window.partitionBy(c(kw))) > 1),
     "is_unique" -> rw(kw => count(lit(1)).over(Window.partitionBy(c(kw))) === 1),
 
-    // rolling windows (explicit order_by + window_size). The DECOMPOSABLE
-    // aggregates (sum/min/max + mean via a (sum,count) pair) take the
-    // tail-exchange decomposition in their GLOBAL form
-    // ([[OrderedAtScale.globalRolling]]); the moment/percentile family
-    // (std/var/median/quantile/skew/kurtosis) takes the raw-value
-    // head+tail exchange ([[OrderedAtScale.globalRollingFrame]]) whose
+    // rolling windows (explicit order_by + window_size). In their GLOBAL
+    // form every one — the decomposable aggregates (sum/min/max, mean via
+    // an exact (sum, count) fold) and the moment/percentile family
+    // (std/var/median/quantile/skew/kurtosis) — takes the raw-value
+    // head+tail exchange ([[OrderedAtScale.RollGroup]]) whose
     // boundary folds are BIT-IDENTICAL to the windowed aggregates
     // (FrameStats replicates CentralMomentAgg's sequential updates and
     // percentile's sorted-multiset interpolation exactly).
@@ -1438,9 +1454,11 @@ object ExprRegistry {
             throw new IllegalArgumentException(
               "interpolate_by: input frame already has internal shadow " +
                 s"column '$n' — rename it first"))
-          val staged = OrderedAtScale.applyGlobal(
-            OrderedAtScale.applyGlobal(df, "__ip_p", fillSpec(pack, ord, desc)),
-            "__ip_n", fillSpec(pack, ord, !desc))
+          def fill(d: Boolean, name: String) =
+            Seq(OrderedAtScale.Ordered(name, fillSpec(pack, ord, d)))
+          // the second level samples its cuts from `df` too (same key tuples)
+          val staged = OrderedAtScale.applyLevel(
+            OrderedAtScale.applyLevel(df, fill(desc, "__ip_p")), fill(!desc, "__ip_n"), Some(df))
           staged.withColumn(out, interp(
             col("__ip_p.pv"), col("__ip_p.px"),
             col("__ip_n.pv"), col("__ip_n.px")))

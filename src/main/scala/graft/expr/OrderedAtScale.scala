@@ -55,8 +55,8 @@ object OrderedAtScale {
   private val PriorTotCol = "__go_pt"
   private val PrefixCol = "__go_prefix"
 
-  /** Internal tie-break for the positional/row-frame decompositions
-    * (round-17 advisory fix): `xxhash64(orderKeys ++ valueExprs)` — a
+  /** Internal tie-break for the raw-frame rolling decomposition
+    * ([[RollGroup]], shifts included): `xxhash64(orderKeys ++ valueExprs)` — a
     * ROW-INTRINSIC total-order extension, deterministic across shuffle
     * re-reads (unlike partition iteration order), used consistently by
     * the within-bucket windows AND the exported head/tail struct sorts,
@@ -66,7 +66,6 @@ object OrderedAtScale {
     * residual 2^-64 hash-collision case is value-neutral. Ties never
     * span buckets (range partitioning is a function of the key alone),
     * so per-bucket tie order composes into a global total order. */
-  private val TieCol = "__go_tb"
   private def tieExpr(orderBy: Seq[String], values: Seq[Column]): Column = {
     // semantically-equal value exprs hash ONCE (round 19): a batch of
     // several fns over the SAME column (q164's rolling_sum + rolling_max
@@ -182,7 +181,7 @@ object OrderedAtScale {
     *        scan is column-pruned and cheap, where sampling a frozen
     *        prior level re-executes that level's whole post-shuffle
     *        stage once more per level) */
-  private[graft] def bucketize(
+  private def bucketize(
       df: DataFrame,
       orderBy: Seq[String],
       desc: Boolean,
@@ -232,80 +231,133 @@ object OrderedAtScale {
       p, BucketCol)
   }
 
-  /** Applies `spec` to `df`, adding the result as column `outName`. */
-  def applyGlobal(df: DataFrame, outName: String, spec: GlobalOrderedSpec): DataFrame =
-    applyGlobalMulti(df, Seq(outName -> spec))
+  /** Longest common prefix of two order keys. */
+  private[graft] def commonPrefix(a: Seq[String], b: Seq[String]): Seq[String] =
+    a.zip(b).takeWhile { case (x, y) => x == y }.map(_._1)
 
-  /** SEVERAL global ordered fns sharing one (orderBy, desc) in a single
-    * decomposition: one range exchange, ONE totals aggregation carrying
-    * every bucketAgg, one b² prefix join, one window — the batched form
-    * the derive stage uses for consecutive same-order entries (12 naive
-    * chained decompositions would be 12 range shuffles and ~3× optimizer
-    * cost per level; batched they are one). Round 20: a thin wrapper over
-    * [[applyFusedLevel]], which additionally fuses OTHER global families
-    * onto the same bucketized frame. */
-  def applyGlobalMulti(df: DataFrame, specs: Seq[(String, GlobalOrderedSpec)],
-      sampleFrom: Option[DataFrame] = None): DataFrame = {
-    require(specs.nonEmpty, "applyGlobalMulti needs at least one spec")
-    val ord0 = specs.head._2.orderBy
-    val desc0 = specs.head._2.desc
-    require(specs.forall(s => s._2.orderBy == ord0 && s._2.desc == desc0),
-      "applyGlobalMulti requires one shared (orderBy, desc) across the batch")
-    applyFusedLevel(df, ord0, desc0, specs, Nil, Nil, Nil, sampleFrom)
+  /** One unit of a fused level ([[applyLevel]]). The level buckets on the
+    * longest common prefix of its units' `key`s and runs in their shared
+    * `desc` direction. */
+  sealed trait LevelUnit {
+    def key: Seq[String]
+    def desc: Boolean
   }
 
-  /** A batch of raw-frame rolling fns sharing (orderBy, desc, k) — one
-    * head/tail export set and ONE tie hash over the batch's distinct value
-    * exprs, exactly the batch a single [[globalRollingFrameMulti]] call
-    * carries (the tie contract `xxhash64(orderKeys, values)` is
-    * per-BATCH, so fusion must not merge batches that were separate —
-    * the derive stage groups by pool adjacency to preserve it). */
+  /** A [[GlobalOrderedSpec]] writing `outName`. Every Ordered unit of a
+    * level shares ONE totals aggregation, ONE b² prefix join and ONE global
+    * total; per-unit windows differ only by their sort (same partitioning,
+    * never an extra exchange). */
+  final case class Ordered(outName: String, spec: GlobalOrderedSpec) extends LevelUnit {
+    def key: Seq[String] = spec.orderBy
+    def desc: Boolean = spec.desc
+  }
+
+  /** A batch of raw-frame rolling fns over the last `k` rows, sharing
+    * (orderBy, desc, k) — the head+tail exchange. Each part is
+    * (outName, x, rollingAgg, frameAgg). Interior rows (within-bucket row
+    * number ≥ k) take the within-bucket `rollingAgg`; each boundary row
+    * (first k−1 of a bucket, ≤ B·(k−1) rows in total) recomposes its
+    * frame's RAW values as (a slice of the prior buckets' exported
+    * (k−1)-row tails) ++ (its own bucket's first rows, from a (k−1)-row
+    * head export) and folds them with `frameAgg`, which [[FrameStats]]
+    * makes BIT-IDENTICAL to the windowed aggregate. A shift by n is the
+    * k = n+1 case whose `frameAgg` picks the frame's first element.
+    *
+    * A non-unique `orderBy` is safe: [[tieExpr]] over the batch's distinct
+    * value exprs extends it to one total order used by the within-bucket
+    * windows AND the head/tail struct sorts, so the recomposed frame is the
+    * windowed frame by construction. That hash is per BATCH, so fusion must
+    * not merge batches that were separate (the derive stage groups by pool
+    * adjacency). Caveat: rows tied on key AND value order arbitrarily but
+    * consistently. A value-symmetric `frameAgg` cannot see that, nor can a
+    * shift (its batch hashes its one column); a positional `frameAgg` over
+    * several columns would need a genuinely unique `orderBy`. */
   final case class RollGroup(
       orderBy: Seq[String],
       desc: Boolean,
       k: Int,
-      parts: Seq[(String, Column, WindowSpec => Column, Column => Column)])
+      parts: Seq[(String, Column, WindowSpec => Column, Column => Column)]) extends LevelUnit {
+    def key: Seq[String] = orderBy
+  }
 
-  /** A batch of range-framed rolling fns sharing (by, window, closed) —
-    * one value-range tail export (no tie: range frames are deterministic
-    * under tied `by` values). */
+  /** The `rolling_*_by` own-frame mode of a [[RollByGroup]] part:
+    * [[NoOwn]] (the native `within` value carries the own part —
+    * sum/min/max), [[OwnState]] (a constant-memory state window on the
+    * boundary branch — mean's (sum, count), the moments' (n, mean, M2)),
+    * or [[OwnRaw]] (a raw collect_list — percentiles only, where no
+    * decomposition exists — behind the same loud `maxTailRows` valve).
+    * Memory contract: a boundary row never materializes its raw frame as a
+    * per-row array when the aggregate decomposes — on a dense `by` axis
+    * that is O(density²) bytes (it OOM'd the x100 rehearsal). */
+  sealed trait OwnFrame
+  case object NoOwn extends OwnFrame
+  final case class OwnState(f: WindowSpec => Column) extends OwnFrame
+  case object OwnRaw extends OwnFrame
+
+  /** A batch of range-framed rolling fns (`rolling_*_by`) sharing
+    * (by, window, closed) — the value-range tail exchange, always
+    * ascending on the integer `by` axis. Each part is (outName, x,
+    * rangeAgg, own, boundaryValue): `rangeAgg` is the native aggregate
+    * over the within-bucket range frame; `boundaryValue(tailXsInRange,
+    * ownValue, withinValue)` recomposes a boundary row (frame lower bound
+    * below the bucket's min `by`) from the prior buckets' exported rows
+    * inside its range plus its own-bucket part. No tie hash: range frames
+    * are deterministic under tied `by` values.
+    *
+    * The export size is DATA-DEPENDENT (rows in a `window`-length slice),
+    * so the export and the merged prior-tail prefix both carry the loud
+    * `maxTailRows` valve (raise_error, never a silent drop). With TIED
+    * `by` values the in-frame order is engine-arbitrary for the windowed
+    * form too, so double moment recompositions may differ in the last ulp. */
   final case class RollByGroup(
       by: String,
       window: Long,
       closed: String,
       parts: Seq[(String, Column, WindowSpec => Column, OwnFrame,
         (Column, Column, Column) => Column)],
-      maxTailRows: Int = 1 << 20)
+      maxTailRows: Int = 1 << 20) extends LevelUnit {
+    def key: Seq[String] = Seq(by)
+    def desc: Boolean = false
+  }
 
-  /** One global run-id assignment (`rle_id`'s per-bucket runs + driver
-    * chain-merge), fusable onto a shared bucketized frame. */
+  /** A global run-id assignment: `outName` = 0-based run index along
+    * `orderBy`, a run being a maximal stretch of consecutive
+    * null-safe-equal `valueCol` values (the no-`partition_by` form of
+    * `rle`/`rle_id`). Runs can span buckets, so per-bucket run ids are
+    * chain-merged: one (first value, last value, run count) row per bucket
+    * is collected (≤ B rows, bounded by [[MaxRunIdBuckets]]) and
+    * prefix-chained into per-bucket offsets, decrementing once wherever
+    * the previous bucket's last value equals this bucket's first value
+    * under Spark's ordering — the `<=>` the within-bucket runs use. */
   final case class RunIdUnit(
       valueCol: String,
       orderBy: Seq[String],
       desc: Boolean,
-      outName: String,
-      maxBuckets: Int = 100000)
+      outName: String) extends LevelUnit {
+    def key: Seq[String] = orderBy
+  }
 
-  /** ONE fused decomposition level (round 20): every global ordered family
-    * — [[GlobalOrderedSpec]] batches, raw-frame rolling batches
-    * ([[RollGroup]]), range-framed rolling batches ([[RollByGroup]]) and
-    * run-id chains ([[RunIdUnit]]) — sharing a single bucketized frame:
-    * one cut-point sample job, one hash exchange, one plan freeze per
-    * LEVEL instead of per family (the r19 verdict's top item: chained
-    * q164 paid 5 eager exchanges + 5 sample collects where level count,
-    * not bytes, dominated).
+  /** Run-id chain-merges collect one row per bucket to the driver; more
+    * buckets than this is a misconfiguration, refused loudly. */
+  private val MaxRunIdBuckets = 100000
+
+  /** THE entry into the engine: ONE fused decomposition level. Every
+    * global ordered family — [[Ordered]] specs, raw-frame rolling batches
+    * and shifts ([[RollGroup]]), range-framed rolling batches
+    * ([[RollByGroup]]) and run-id chains ([[RunIdUnit]]) — shares a single
+    * bucketized frame: one cut-point sample job, one hash exchange, one
+    * plan freeze per LEVEL instead of per family.
     *
-    * Soundness of the shared bucket key: `bucketBy` must be a PREFIX of
-    * every unit's order key (and equal to a [[RollByGroup]]'s `by`).
-    * Bucketizing on a prefix preserves both properties every
-    * decomposition needs — (a) equal full keys are equal on the prefix,
-    * so tie groups still share a bucket, and (b) rows in an earlier
-    * bucket are strictly smaller on the prefix, hence earlier in any
-    * extension's total order, so bucket order IS global order for every
-    * unit. Each unit's within-bucket window still sorts by its OWN full
-    * key (+ its own tie hash for the positional rolling forms), so
+    * The bucket key is the units' longest common key prefix and the
+    * direction their shared `desc`. Bucketizing on a prefix preserves both
+    * properties every decomposition needs — (a) equal full keys are equal
+    * on the prefix, so tie groups still share a bucket, and (b) rows in an
+    * earlier bucket are strictly smaller on the prefix, hence earlier in
+    * any extension's total order, so bucket order IS global order for
+    * every unit. Each unit's within-bucket window still sorts by its OWN
+    * full key (+ its own tie hash for the positional rolling forms), so
     * per-unit semantics — including the per-batch tie contract — are
-    * bit-identical to the unfused levels.
+    * bit-identical to a level of that unit alone.
     *
     * Plan shape: side frames (ord totals/prefixes, rolling tail/head
     * exports, run-id chain rows) are all built off the bare bucketized
@@ -313,40 +365,39 @@ object OrderedAtScale {
     * recomputing the main stream's windows; the main stream applies
     * run-ids, then ordered combines, then the rolling branch split. The
     * single interior/boundary union is shared by every rolling group
-    * (per-group `when(boundary_g, recomposed).otherwise(within_g)`),
-    * where unfused levels paid one union each. */
-  def applyFusedLevel(
+    * (per-group `when(boundary_g, recomposed).otherwise(within_g)`).
+    *
+    * @param sampleFrom frame to draw the cut sample from (see
+    *        [[bucketize]]); `df` itself when absent */
+  def applyLevel(
       df: DataFrame,
-      bucketBy: Seq[String],
-      desc: Boolean,
-      ordSpecs: Seq[(String, GlobalOrderedSpec)],
-      rollGroups: Seq[RollGroup],
-      rollByGroups: Seq[RollByGroup],
-      runIds: Seq[RunIdUnit],
+      units: Seq[LevelUnit],
       sampleFrom: Option[DataFrame] = None): DataFrame = {
-    require(bucketBy.nonEmpty, "applyFusedLevel needs a non-empty bucket key")
-    require(ordSpecs.nonEmpty || rollGroups.nonEmpty || rollByGroups.nonEmpty ||
-      runIds.nonEmpty, "applyFusedLevel needs at least one unit")
-    def ext(k: Seq[String]): Boolean = k.startsWith(bucketBy)
-    require(ordSpecs.forall(s => ext(s._2.orderBy) && s._2.desc == desc),
-      "applyFusedLevel: every GlobalOrderedSpec's (orderBy, desc) must extend the bucket key")
-    require(rollGroups.forall(g => ext(g.orderBy) && g.desc == desc && g.k >= 2),
-      "applyFusedLevel: every RollGroup must extend the bucket key (k >= 2)")
-    require(rollByGroups.forall(g => Seq(g.by) == bucketBy && !desc && g.window > 0),
-      "applyFusedLevel: a RollByGroup requires bucketBy == Seq(by), asc order, window > 0")
-    require(runIds.forall(u => ext(u.orderBy) && u.desc == desc),
-      "applyFusedLevel: every RunIdUnit must extend the bucket key")
+    require(units.nonEmpty, "applyLevel needs at least one unit")
+    val desc = units.head.desc
+    require(units.forall(_.desc == desc),
+      "applyLevel: every unit must share one order direction (a RollByGroup is ascending)")
+    val bucketBy = units.map(_.key).reduce(commonPrefix)
+    require(bucketBy.nonEmpty,
+      s"applyLevel: the units' order keys share no prefix: ${units.map(_.key).distinct}")
+    val ordSpecs = units.collect { case Ordered(n, s) => n -> s }
+    val rollGroups = units.collect { case g: RollGroup => g }
+    val rollByGroups = units.collect { case g: RollByGroup => g }
+    val runIds = units.collect { case u: RunIdUnit => u }
+    require(rollGroups.forall(g => g.k >= 2 && g.parts.nonEmpty),
+      "applyLevel: a RollGroup needs parts and k >= 2 (a 1-row frame is the row itself)")
+    require(rollByGroups.forall(g => g.window > 0 && g.parts.nonEmpty),
+      "applyLevel: a RollByGroup needs parts and a positive window")
     df.columns.find(_.startsWith("__go_")).foreach(n =>
       throw new IllegalArgumentException(
         s"global ordered derive: input frame already has internal shadow column '$n' — " +
           "rename it first"))
     val p = partitionCount(df)
     val b = bucketCount(df)
-    // duplicate-key decorrelation for the cut sample (round-19 advisory
-    // fix: applyGlobalMulti used to pass Nil, so a heavy-multiplicity key
-    // whose single hash ranked low could fill the whole TakeOrdered
-    // sample and collapse the cuts): every unit's value inputs join the
-    // sample hash — they steer balance only, never values
+    // duplicate-key decorrelation for the cut sample: a heavy-multiplicity
+    // key whose single hash ranked low could otherwise fill the whole
+    // TakeOrdered sample and collapse the cuts, so every unit's value
+    // inputs join the sample hash — they steer balance only, never values
     val ordExtraNames = (ordSpecs.flatMap(s => refsOf(s._2.bucketAgg) -- s._2.orderBy) ++
       runIds.map(_.valueCol)).distinct
     val extras: Seq[Column] = ordExtraNames.map(col) ++
@@ -358,9 +409,10 @@ object OrderedAtScale {
     // ---- run ids (first: their chain-merge collect then never executes
     // the other families' windows) -----------------------------------------
     if (runIds.nonEmpty) {
-      runIds.foreach(u => require(b <= u.maxBuckets,
-        s"globalRunIds bucket count $b > ${u.maxBuckets} — the driver chain-merge collects " +
-          "one row per bucket; raise maxBuckets deliberately"))
+      require(b <= MaxRunIdBuckets,
+        s"rle_id: $b ordered buckets > $MaxRunIdBuckets — the driver chain-merge collects " +
+          "one row per bucket; lower spark.graft.orderedBuckets (default: 4x " +
+          "spark.sql.shuffle.partitions)")
       val ridCols = runIds.indices.map(i => s"__go_rid_$i")
       val staged = runIds.zipWithIndex.foldLeft(bucketed0) { case (acc, (u, i)) =>
         val ordCols = u.orderBy.map(n => if (u.desc) col(n).desc else col(n).asc)
@@ -392,22 +444,22 @@ object OrderedAtScale {
           .collect()
           .sortBy(_.getInt(0))
         // driver chain-merge over ≤ b rows: offset accumulation with a
-        // merge decrement whenever adjacent non-empty buckets share a run
+        // merge decrement whenever adjacent non-empty buckets share a run.
+        // "Share" is Spark's ordering equality, the `<=>` of the
+        // within-bucket runs — Scala `==` would split NaN runs and compare
+        // binary values by reference
+        val dts = Seq(frozen.select(x).schema.head.dataType)
+        val same = graft.sparkext.RangeBucketId.tupleOrdering(dts, desc = false)
+        def value(r: org.apache.spark.sql.Row, i: Int): Seq[Any] =
+          graft.sparkext.RangeBucketId.toCatalystCut(Seq(r.get(i)), dts)
         var running = 0L
-        var prevLast: Option[Any] = None
-        var havePrev = false
+        var prevLast: Option[Seq[Any]] = None
         val offsets = chain.map { r =>
-          val bId = r.getInt(0)
-          val firstV = if (r.isNullAt(1)) null else r.get(1)
-          val lastV = if (r.isNullAt(2)) null else r.get(2)
-          val runs = r.getLong(3)
-          val merged = havePrev && ((prevLast.orNull == null && firstV == null) ||
-            (prevLast.orNull != null && prevLast.orNull == firstV))
+          val merged = prevLast.exists(same.compare(_, value(r, 1)) == 0)
           val off = running - (if (merged) 1L else 0L)
-          running = off + runs
-          prevLast = Option(lastV)
-          havePrev = true
-          (bId, off)
+          running = off + r.getLong(3)
+          prevLast = Some(value(r, 2))
+          (r.getInt(0), off)
         }.toSeq
         import df.sparkSession.implicits._
         val offDf = offsets.toDF(BucketCol, "__go_off")
@@ -525,7 +577,7 @@ object OrderedAtScale {
           case "left" => (-g.window, -1L)
           case "none" => (-(g.window - 1), -1L)
           case other => throw new IllegalArgumentException(
-            s"globalRollingBy closed='$other' not in right/both/left/none")
+            s"rolling_*_by closed='$other' not in right/both/left/none")
         }
         val loOff: Long = offs._1
         val hiOff: Long = offs._2
@@ -541,7 +593,7 @@ object OrderedAtScale {
           frame.filter(
             when(size(col(arr)) > g.maxTailRows,
               raise_error(concat(
-                lit(s"globalRollingBy: $what exceeds maxTailRows=${g.maxTailRows} (got "),
+                lit(s"rolling_*_by: $what exceeds maxTailRows=${g.maxTailRows} (got "),
                 size(col(arr)).cast("string"),
                 lit(s") — the '${g.by}' axis is too dense for window=${g.window}; raise " +
                   "maxTailRows deliberately or shrink the window"))).cast("boolean"))
@@ -663,7 +715,7 @@ object OrderedAtScale {
               .filter(
                 when(isB && size(col(m.ownCs(pi))) > m.g.maxTailRows,
                   raise_error(concat(
-                    lit(s"globalRollingBy: a boundary row's own frame exceeds " +
+                    lit(s"rolling_*_by: a boundary row's own frame exceeds " +
                       s"maxTailRows=${m.g.maxTailRows} (got "),
                     size(col(m.ownCs(pi))).cast("string"),
                     lit(s") — the '${m.g.by}' axis is too dense for an exact rolling " +
@@ -687,250 +739,5 @@ object OrderedAtScale {
         rollByMetas.flatMap(_.ownCs)).distinct
       interior.drop(shadows: _*).unionByName(boundary.drop(shadows: _*))
     }
-  }
-
-  /** Global positional shift (lag) — the tail-exchange decomposition for
-    * `shift`/`diff`/`pct_change`/`lead` (direction-flipped) with no
-    * `partition_by`: within-bucket `lag(x, n)` covers every row except the
-    * first `n` of each bucket; those read from the PRIOR buckets' exported
-    * tails instead. Each bucket exports only its LAST `n` rows (filtered
-    * by a reversed within-bucket row_number — per-bucket state is O(n),
-    * never a whole-bucket collect), the ≤ B·n tail rows recombine through
-    * the same broadcast prior-bucket join as [[applyGlobal]], and the
-    * boundary read is one `element_at` on the ≤ n-element prefix array.
-    * A non-unique `order_by` is safe: the internal [[TieCol]] hash
-    * extends it to a consistent total order shared by the windows and
-    * the tail sorts. `post` wraps the shifted value row-wise (diff:
-    * `x - shifted`). */
-  def globalShift(
-      df: DataFrame,
-      x: Column,
-      n: Int,
-      orderBy: Seq[String],
-      desc: Boolean,
-      outName: String,
-      post: Column => Column = identity): DataFrame = {
-    require(n >= 1, s"globalShift offset must be >= 1, got $n (0/negative handled by caller)")
-    val shadows = Seq(BucketCol, TotCol, PriorBucketCol, PriorTotCol, PrefixCol, TieCol,
-      "__go_lg", "__go_rn", "__go_rne")
-    shadows.find(df.columns.contains).foreach(c0 =>
-      throw new IllegalArgumentException(
-        s"global shift: input frame already has internal shadow column '$c0' — rename it first"))
-    val ordCols = orderBy.map(nm => if (desc) col(nm).desc else col(nm).asc)
-    val revCols = orderBy.map(nm => if (desc) col(nm).asc else col(nm).desc)
-    // single-exchange key-derived bucketing (round 19, see [[bucketize]]):
-    // the tails subtree and the final join still see ONE bucketing (the
-    // bucket is a pure function of the key) and the within-bucket windows
-    // below need no second shuffle
-    val bucketed = bucketize(df, orderBy, desc, Seq(x))
-      .withColumn(TieCol, tieExpr(orderBy, Seq(x)))
-    val ordTie = ordCols :+ (if (desc) col(TieCol).desc else col(TieCol).asc)
-    val revTie = revCols :+ (if (desc) col(TieCol).asc else col(TieCol).desc)
-    val w = Window.partitionBy(col(BucketCol)).orderBy(ordTie: _*)
-    val wRev = Window.partitionBy(col(BucketCol)).orderBy(revTie: _*)
-    val staged = bucketed
-      .withColumn("__go_lg", lag(x, n).over(w))
-      .withColumn("__go_rn", row_number().over(w))
-      .withColumn("__go_rne", row_number().over(wRev))
-    // per-bucket tail: the last n (orderKey..., tb, x) rows, as structs
-    // whose field order makes the natural struct sort the window order
-    // (tb before x, so key ties resolve identically in both)
-    val tailStruct = struct(
-      (orderBy.zipWithIndex.map { case (o, i) => col(o).as(s"o$i") } ++
-        Seq(col(TieCol).as("tb"), x.as("x"))): _*)
-    val tails = staged.filter(col("__go_rne") <= n)
-      .groupBy(col(BucketCol)).agg(collect_list(tailStruct).as(TotCol))
-    // keep only the last n of the flattened prior tails (asc = !desc puts
-    // "later in order" last); guard the slice for short chains
-    def lastN(a: Column): Column = {
-      val s = sort_array(a, asc = !desc)
-      when(size(s) > n, slice(s, -n, n)).otherwise(s)
-    }
-    val prefixTails = tails
-      .join(
-        broadcast(tails.select(
-          col(BucketCol).as(PriorBucketCol), col(TotCol).as(PriorTotCol))),
-        col(PriorBucketCol) < col(BucketCol), "left")
-      .groupBy(col(BucketCol))
-      .agg(lastN(flatten(collect_list(col(PriorTotCol)))).as(PrefixCol))
-      .select(col(BucketCol), col(PrefixCol))
-    val rn = col("__go_rn").cast("long")
-    val p = col(PrefixCol)
-    val idx = (size(p) - (lit(n.toLong) - rn)).cast("int")
-    val fromPrev = when(p.isNotNull && idx >= 1, element_at(p, idx).getField("x"))
-    val shifted = when(rn > n, col("__go_lg")).otherwise(fromPrev)
-    staged
-      .join(broadcast(prefixTails), Seq(BucketCol), "left")
-      .withColumn(outName, post(shifted))
-      .drop(BucketCol, TieCol, "__go_lg", "__go_rn", "__go_rne", PrefixCol)
-  }
-
-
-  /** Global ROLLING window over the last `k` rows for a NON-decomposable
-    * aggregate (the moment/percentile family) — the raw-value head+tail
-    * exchange: interior rows (within-bucket row number ≥ k) take the plain
-    * within-bucket windowed aggregate; each boundary row (first k−1 of a
-    * bucket — ≤ B·(k−1) rows total) recomposes its frame's RAW values as
-    * (a slice of the prior buckets' exported (k−1)-row tails) ++ (its own
-    * bucket's first-rows slice, from a (k−1)-row head export) and
-    * re-aggregates with `frameAgg` — which [[FrameStats]] makes
-    * BIT-IDENTICAL to the windowed aggregate (same sequential
-    * central-moment updates in frame order / same sorted-multiset
-    * interpolation), so the recomposition has NO float-profile cost.
-    * Per-bucket exported state is O(k) structs, never a whole-bucket
-    * collect; the exports join only the ≤ B·(k−1)-row boundary branch
-    * (interior rows never carry an array), and the two branches reunite
-    * with `unionByName` off one frozen range exchange.
-    *
-    * A non-unique `orderBy` is safe (round-17 advisory fix): the
-    * internal [[TieCol]] hash extends it to a consistent total order
-    * used by BOTH the within-bucket windows and the head/tail struct
-    * sorts, so the recomposed frame is THE windowed frame by
-    * construction. CONTRACT CAVEAT (round 17 advice): that safety
-    * argument leans on value-neutrality — [[TieCol]] hashes only
-    * (orderKeys, value expr), so rows tied on key AND value order
-    * arbitrarily-but-consistently, which is invisible to the shipped
-    * commutative / value-symmetric `frameAgg`s ([[FrameStats]] moments,
-    * sorted-multiset quantiles). A future NON-symmetric frame
-    * aggregator (e.g. "first raw value", positional indexing into the
-    * frame) would silently inherit that arbitrary tie order — such a
-    * caller must supply a genuinely unique `orderBy` instead of relying
-    * on the hash extension. */
-  def globalRollingFrame(
-      df: DataFrame,
-      outName: String,
-      x: Column,
-      orderBy: Seq[String],
-      desc: Boolean,
-      k: Int,
-      rollingAgg: WindowSpec => Column,
-      frameAgg: Column => Column): DataFrame =
-    globalRollingFrameMulti(df, orderBy, desc, k, Seq((outName, x, rollingAgg, frameAgg)))
-
-  /** SEVERAL raw-frame rolling fns sharing one (orderBy, desc, k) in a
-    * single decomposition — one range exchange, one window set, one
-    * head/tail export carrying every part's value as a struct field, one
-    * boundary branch (the [[applyGlobalMulti]] batching argument: N naive
-    * chained decompositions are N range shuffles and ~3×-per-level
-    * optimizer cost; batched they are one). Each part is
-    * (outName, x, rollingAgg, frameAgg). */
-  def globalRollingFrameMulti(
-      df: DataFrame,
-      orderBy: Seq[String],
-      desc: Boolean,
-      k: Int,
-      parts: Seq[(String, Column, WindowSpec => Column, Column => Column)],
-      sampleFrom: Option[DataFrame] = None): DataFrame = {
-    require(parts.nonEmpty, "globalRollingFrameMulti needs at least one part")
-    require(k >= 2, s"globalRollingFrame window_size must be >= 2, got $k (1 is the row itself)")
-    applyFusedLevel(df, orderBy, desc, Nil,
-      Seq(RollGroup(orderBy, desc, k, parts)), Nil, Nil, sampleFrom)
-  }
-
-  /** Global RANGE-framed rolling window (the `rolling_*_by` family with no
-    * `partition_by`) — the value-range tail exchange: rows are
-    * range-bucketed by the integer `by` axis; each bucket exports only the
-    * rows inside the last `window`-length slice of its `by` range (so a
-    * later bucket can rebuild frames that reach back across the boundary),
-    * and BOUNDARY rows (frame lower bound below the bucket's min `by`)
-    * recompose their frame as (prior-tail elements inside the row's range)
-    * ++ (the within-bucket part). Interior rows take the plain
-    * within-bucket RANGE window.
-    *
-    * Unlike the row-count frames, the export size is DATA-DEPENDENT (how
-    * many rows fall in a `window`-length slice) — a dense axis or a huge
-    * `window` can make it explode, so the export and the per-bucket merged
-    * prefix both carry a loud `maxTailRows` valve (raise_error, never a
-    * silent drop). Bit-identity: `boundaryValue` implementations fold raw
-    * values in frame order ([[FrameStats]]), so recomposed rows match the
-    * windowed form exactly; with TIED `by` values the tie order inside a
-    * frame is engine-arbitrary for the windowed form too, so double-typed
-    * moment recompositions can differ in the last ulp (documented).
-    *
-    * Frame-containment note: a boundary row's own-bucket frame members are
-    * themselves boundary rows (s_by ≤ hi(t) ⇒ lo(s) ≤ hi(t)+loOff ≤
-    * t_by+loOff < bucketMin), so the boundary branch may filter FIRST and
-    * then run its own windows — interior rows never pay the raw-value
-    * collects.
-    *
-    * Memory contract (the x100 ladder found the violation): a boundary
-    * row's OWN-frame contribution must never materialize the raw frame as
-    * a per-row array when the aggregate decomposes — on a dense `by` axis
-    * (many rows per unit) per-row arrays are O(density²) bytes through
-    * the sink and OOM'd the x100 rehearsal. `own` therefore has three
-    * modes: [[NoOwn]] (the native `within` value carries the own part —
-    * sum/min/max), [[OwnState]] (a constant-memory state window computed
-    * on the boundary branch — mean's (sum, count), the moments' Chan
-    * (n, mean, M2)), and [[OwnRaw]] (a raw collect_list — percentiles
-    * only, where no decomposition exists — guarded by the SAME loud
-    * `maxTailRows` valve on the frame row count).
-    *
-    * @param rangeAgg      native aggregate over the within-bucket range
-    *                      frame (evaluated for ALL rows, pre-branch)
-    * @param own           boundary-branch own-frame mode (above)
-    * @param boundaryValue (tailXsInRange, ownValue, withinValue) →
-    *                      boundary output; `ownValue` is the OwnState
-    *                      state / the OwnRaw array / null under NoOwn */
-  sealed trait OwnFrame
-  case object NoOwn extends OwnFrame
-  final case class OwnState(f: WindowSpec => Column) extends OwnFrame
-  case object OwnRaw extends OwnFrame
-
-  def globalRollingBy(
-      df: DataFrame,
-      outName: String,
-      x: Column,
-      by: String,
-      window: Long,
-      closed: String,
-      rangeAgg: WindowSpec => Column,
-      own: OwnFrame,
-      boundaryValue: (Column, Column, Column) => Column,
-      maxTailRows: Int = 1 << 20): DataFrame =
-    globalRollingByMulti(df, by, window, closed,
-      Seq((outName, x, rangeAgg, own, boundaryValue)), maxTailRows)
-
-  /** SEVERAL range-framed rolling fns sharing one (by, window, closed) in
-    * a single decomposition — one range exchange, one bounds/tail export
-    * carrying every part's value as a struct field, one boundary branch.
-    * Each part is (outName, x, rangeAgg, own, boundaryValue). */
-  def globalRollingByMulti(
-      df: DataFrame,
-      by: String,
-      window: Long,
-      closed: String,
-      parts: Seq[(String, Column, WindowSpec => Column,
-        OwnFrame, (Column, Column, Column) => Column)],
-      maxTailRows: Int = 1 << 20,
-      sampleFrom: Option[DataFrame] = None): DataFrame = {
-    require(parts.nonEmpty, "globalRollingByMulti needs at least one part")
-    require(window > 0, s"globalRollingBy window must be positive, got $window")
-    applyFusedLevel(df, Seq(by), desc = false, Nil, Nil,
-      Seq(RollByGroup(by, window, closed, parts, maxTailRows)), Nil, sampleFrom)
-  }
-
-  /** Global run-id assignment — the frame-level primitive under the
-    * no-`partition_by` forms of `rle`/`rle_id`/`unique_counts`: adds
-    * `outName` = 0-based GLOBAL run index along `orderBy`, where a run is a
-    * maximal stretch of consecutive null-safe-equal `valueCol` values.
-    *
-    * Runs can span bucket boundaries, so per-bucket run ids need a
-    * chain-merge: per bucket, one hash-agg row carries (first key+value,
-    * last key+value, run count); the ≤ B rows are collected to the driver
-    * (bounded, loud — the `budgetSelect` house rule) and prefix-chained
-    * into per-bucket offsets, decrementing once for every boundary where
-    * the previous non-empty bucket's LAST value null-safe-equals this
-    * bucket's FIRST value (the two half-runs are one global run). The
-    * offsets broadcast back as a tiny join. */
-  def globalRunIds(
-      df: DataFrame,
-      valueCol: String,
-      orderBy: Seq[String],
-      outName: String,
-      desc: Boolean = false,
-      maxBuckets: Int = 100000): DataFrame = {
-    require(orderBy.nonEmpty, "globalRunIds requires an explicit order")
-    applyFusedLevel(df, orderBy, desc, Nil, Nil, Nil,
-      Seq(RunIdUnit(valueCol, orderBy, desc, outName, maxBuckets)))
   }
 }

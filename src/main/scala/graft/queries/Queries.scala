@@ -5108,7 +5108,7 @@ object Queries {
 
   /** GLOBAL `rle` builtin (length-changing run compression with no
     * partition keys): runs of `event_type` along the total (ts, event_id)
-    * order compress through [[graft.expr.OrderedAtScale.globalRunIds]] —
+    * order compress through a [[graft.expr.OrderedAtScale.RunIdUnit]] level —
     * per-bucket run ids + a driver chain-merge over ≤ B boundary rows, so
     * runs spanning range-bucket boundaries land ONE id and the plan
     * carries no single-partition window. */
@@ -5291,8 +5291,8 @@ object Queries {
   /** GLOBAL rolling moment/percentile fns + the rolling_*_by RANGE family
     * + cumulative_eval std/var with NO `partition_by` — the round-16
     * second tranche that closes the LAST single-partition-window
-    * fallbacks ([[graft.expr.OrderedAtScale.globalRollingFrame]] raw-value
-    * head+tail exchange, [[graft.expr.OrderedAtScale.globalRollingBy]]
+    * fallbacks ([[graft.expr.OrderedAtScale.RollGroup]] raw-value
+    * head+tail exchange, [[graft.expr.OrderedAtScale.RollByGroup]]
     * value-range tail exchange, Chan-merged cum moments). Parity recipe:
     * std round-4 / var round-2 (value²-magnitude statistics get fewer
     * decimals), +0.0 normalizes -0.0; median/quantile are EXACT both

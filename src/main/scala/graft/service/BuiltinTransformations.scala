@@ -1291,7 +1291,8 @@ object BuiltinTransformations {
     // (graft.expr.OrderedAtScale, round 16)
     val withRid =
       if (parts.isEmpty)
-        graft.expr.OrderedAtScale.globalRunIds(df, valCol, ord, "__rle_id")
+        graft.expr.OrderedAtScale.applyLevel(df,
+          Seq(graft.expr.OrderedAtScale.RunIdUnit(valCol, ord, desc = false, "__rle_id")))
       else {
         val ow = Window.partitionBy(parts.map(col): _*).orderBy(ord.map(col): _*)
         val chg = when(row_number().over(ow) === 1, lit(0L))
@@ -1338,13 +1339,14 @@ object BuiltinTransformations {
       .groupBy(col(reqStr(name, kw, "col")).as("value"))
       .agg(count(lit(1)).as("count"),
         min(struct(ord.map(col): _*)).as("__first_key"))
-    graft.expr.OrderedAtScale.applyGlobal(grouped, "first_seen",
-      graft.expr.OrderedAtScale.GlobalOrderedSpec(
+    import graft.expr.OrderedAtScale
+    OrderedAtScale.applyLevel(grouped, Seq(OrderedAtScale.Ordered("first_seen",
+      OrderedAtScale.GlobalOrderedSpec(
         Seq("__first_key"), desc = false,
         w => row_number().over(w).cast("long"),
         count(lit(1)),
         sum,
-        (p, _, v) => coalesce(p, lit(0L)) + v))
+        (p, _, v) => coalesce(p, lit(0L)) + v))))
       .drop("__first_key")
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.config.{DeriveSpec, RuleSpec}
-import graft.expr.{DTypes, ExprRegistry, RuleParser}
+import graft.expr.{DTypes, ExprRegistry, OrderedAtScale, RuleParser}
 
 /** The transformation-stage operators (SURVEY.md §2.1, S4-S5 and S9-S22).
   *
@@ -198,13 +198,13 @@ object Transforms {
         }.toSet
       // every input column a GlobalOrdered spec reads (combine is probed
       // with dummy placeholders, subtracted back out)
-      def goRefs(spec: graft.expr.OrderedAtScale.GlobalOrderedSpec): Set[String] = {
+      def goRefs(spec: OrderedAtScale.GlobalOrderedSpec): Set[String] = {
         import org.apache.spark.sql.expressions.Window
         val dummyW = Window.partitionBy(col("__go_probe_b")).orderBy(spec.orderBy.map(col): _*)
         val dummies = Set("__go_probe_b", "__go_probe_p", "__go_probe_t", "__go_probe_v")
         (refs(spec.bucketAgg) ++ refs(spec.within(dummyW)) ++
           refs(spec.combine(col("__go_probe_p"), col("__go_probe_t"), col("__go_probe_v"))) ++
-          spec.orderBy) -- dummies - graft.expr.OrderedAtScale.priorBucketName
+          spec.orderBy) -- dummies - OrderedAtScale.priorBucketName
       }
       // a pending whole-frame entry: plain aggregate-broadcast (rowFn =
       // None) or agg-then-row (Some(rowFn) — the 1-row agg result lands
@@ -260,20 +260,13 @@ object Transforms {
         else None
       // ---- round 20: the GLOBAL-FAMILY POOL --------------------------------
       // Independent global entries of EVERY family (ordered specs, raw-frame
-      // rollings, range rollings, run-id chains) accumulate in one pool; at
-      // flush time they cluster into FUSED decomposition levels
-      // (OrderedAtScale.applyFusedLevel) by (desc, shared key prefix) — one
+      // rollings and shifts, range rollings, run-id chains) accumulate in
+      // one pool; at flush time they cluster into FUSED decomposition levels
+      // (OrderedAtScale.applyLevel) by (desc, shared key prefix) — one
       // exchange + one cut sample + one freeze per level instead of per
       // family. q169's 3 same-key levels and q164's 5 become 1 and 2.
-      sealed trait PoolKind
-      case class KOrd(spec: graft.expr.OrderedAtScale.GlobalOrderedSpec) extends PoolKind
-      case class KRoll(r: ExprRegistry.GlobalRollingFrame) extends PoolKind
-      case class KRollBy(r: ExprRegistry.GlobalRollingBy) extends PoolKind
-      case class KRunId(r: ExprRegistry.GlobalRunId) extends PoolKind
       final case class PoolEntry(name: String, key: Seq[String], descFlag: Boolean,
-          refNames: Set[String], seq: Int, kind: PoolKind)
-      def lcp(a: Seq[String], b: Seq[String]): Seq[String] =
-        a.zip(b).takeWhile { case (x, y) => x == y }.map(_._1)
+          refNames: Set[String], seq: Int, d: ExprRegistry.Derived)
       def flushPool(acc0: DataFrame, pool: Vector[PoolEntry]): DataFrame =
         if (pool.isEmpty) acc0
         else {
@@ -284,6 +277,7 @@ object Transforms {
           // order for any extension of the prefix. A rolling_by unit needs
           // bucketKey == its (by); its key has length 1, so any non-empty
           // common prefix IS that key.
+          val lcp = OrderedAtScale.commonPrefix _
           var clusters = Vector.empty[(Seq[String], Boolean, Vector[PoolEntry])]
           for (e <- pool) {
             val i = clusters.indexWhere { case (bk, d0, _) =>
@@ -294,11 +288,12 @@ object Transforms {
               clusters = clusters.updated(i, (lcp(bk, e.key), d0, es :+ e))
             }
           }
-          clusters.foldLeft(acc0) { case (a, (bk, d0, es)) =>
+          clusters.foldLeft(acc0) { case (a, (bk, _, es)) =>
             val base =
               if (decomps == 0) a else org.apache.spark.sql.graftbridge.PlanBarrier.freeze(a)
             decomps += 1
-            val ordSpecs = es.collect { case PoolEntry(n0, _, _, _, _, KOrd(s)) => n0 -> s }
+            val ords = es.collect { case PoolEntry(n0, _, _, _, _, ExprRegistry.GlobalOrdered(s)) =>
+              OrderedAtScale.Ordered(n0, s) }
             // rolling batches group by POOL ADJACENCY (consecutive seq +
             // identical frame): the per-batch tie hash
             // xxhash64(orderKeys, batchValues) must match what the unfused
@@ -315,24 +310,25 @@ object Transforms {
                 }
               }
             val rollGroups = adjacentRuns(
-              es.collect { case e @ PoolEntry(_, _, _, _, _, KRoll(r)) => (e, r) },
+              es.collect { case e @ PoolEntry(_, _, _, _, _, r: ExprRegistry.GlobalRollingFrame) =>
+                (e, r) },
               (x: ExprRegistry.GlobalRollingFrame, y: ExprRegistry.GlobalRollingFrame) =>
-                x.orderBy == y.orderBy && x.desc == y.desc && x.k == y.k)
-              .map(run => graft.expr.OrderedAtScale.RollGroup(
+                x.orderBy == y.orderBy && x.desc == y.desc && x.k == y.k && x.tieOf == y.tieOf)
+              .map(run => OrderedAtScale.RollGroup(
                 run.head._2.orderBy, run.head._2.desc, run.head._2.k,
                 run.map { case (e, r) => (e.name, r.x, r.rollingAgg, r.frameAgg) }))
             val rollByGroups = adjacentRuns(
-              es.collect { case e @ PoolEntry(_, _, _, _, _, KRollBy(r)) => (e, r) },
+              es.collect { case e @ PoolEntry(_, _, _, _, _, r: ExprRegistry.GlobalRollingBy) =>
+                (e, r) },
               (x: ExprRegistry.GlobalRollingBy, y: ExprRegistry.GlobalRollingBy) =>
                 x.by == y.by && x.window == y.window && x.closed == y.closed)
-              .map(run => graft.expr.OrderedAtScale.RollByGroup(
+              .map(run => OrderedAtScale.RollByGroup(
                 run.head._2.by, run.head._2.window, run.head._2.closed,
                 run.map { case (e, r) => (e.name, r.x, r.rangeAgg, r.own, r.boundary) }))
-            val runIdUnits = es.collect { case PoolEntry(n0, _, _, _, _, KRunId(r)) =>
-              graft.expr.OrderedAtScale.RunIdUnit(r.valueCol, r.orderBy, r.desc, n0,
-                r.maxBuckets) }
-            graft.expr.OrderedAtScale.applyFusedLevel(base, bk, d0,
-              ordSpecs, rollGroups, rollByGroups, runIdUnits,
+            val runIdUnits = es.collect {
+              case PoolEntry(n0, _, _, _, _, r: ExprRegistry.GlobalRunId) =>
+                OrderedAtScale.RunIdUnit(r.valueCol, r.orderBy, r.desc, n0) }
+            OrderedAtScale.applyLevel(base, ords ++ rollGroups ++ rollByGroups ++ runIdUnits,
               sampleSrc(bk, producedAtPoolStart))
           }
         }
@@ -350,7 +346,7 @@ object Transforms {
         val dummyW = Window.partitionBy(col("__go_probe_b")).orderBy(col(r.by))
         val dummies = Set("__go_probe_b", "__go_probe_a", "__go_probe_o", "__go_probe_v")
         val ownRefs = r.own match {
-          case graft.expr.OrderedAtScale.OwnState(f) => refs(f(dummyW))
+          case OrderedAtScale.OwnState(f) => refs(f(dummyW))
           case _ => Set.empty[String]
         }
         (refs(r.x) ++ refs(r.rangeAgg(dummyW)) ++ ownRefs ++
@@ -408,17 +404,16 @@ object Transforms {
             acc = build(base, n)
           case ExprRegistry.GlobalOrdered(spec) =>
             acc = flush(acc, pending); pending = Nil
-            admitPool(PoolEntry(n, spec.orderBy, spec.desc, goRefs(spec), seq, KOrd(spec)))
+            admitPool(PoolEntry(n, spec.orderBy, spec.desc, goRefs(spec), seq, d0))
           case r: ExprRegistry.GlobalRollingFrame =>
             acc = flush(acc, pending); pending = Nil
-            admitPool(PoolEntry(n, r.orderBy, r.desc, grfRefs(r), seq, KRoll(r)))
+            admitPool(PoolEntry(n, r.orderBy, r.desc, grfRefs(r), seq, r))
           case r: ExprRegistry.GlobalRollingBy =>
             acc = flush(acc, pending); pending = Nil
-            admitPool(PoolEntry(n, Seq(r.by), false, grbRefs(r), seq, KRollBy(r)))
+            admitPool(PoolEntry(n, Seq(r.by), false, grbRefs(r), seq, r))
           case r: ExprRegistry.GlobalRunId =>
             acc = flush(acc, pending); pending = Nil
-            admitPool(PoolEntry(n, r.orderBy, r.desc,
-              r.orderBy.toSet + r.valueCol, seq, KRunId(r)))
+            admitPool(PoolEntry(n, r.orderBy, r.desc, r.orderBy.toSet + r.valueCol, seq, r))
         }
         produced += n
       }

@@ -235,13 +235,15 @@ class OrderedAtScaleSpec extends AnyFunSuite {
     assert(canon(gq) == canon(wq), "rolling_quantile_by: global != windowed")
   }
 
-  test("globalRollingBy: dense-axis tail valve is loud, not a silent drop") {
+  test("applyLevel: RollByGroup dense-axis tail valve is loud, not a silent drop") {
     val df = spark.range(200)
       .select(lit(5L).as("ts"), col("id").as("uid"), col("id").as("v"))
     val e = intercept[Exception] {
-      OrderedAtScale.globalRollingBy(df.toDF(), "out", col("v"), "ts", 10L, "right",
-        w => sum(col("v")).over(w), OrderedAtScale.NoOwn, (t, _, v) => v,
-        maxTailRows = 16).collect()
+      OrderedAtScale.applyLevel(df.toDF(), Seq(OrderedAtScale.RollByGroup("ts", 10L, "right",
+        Seq(("out", col("v"), w => sum(col("v")).over(w), OrderedAtScale.NoOwn,
+          (_: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column,
+            v: org.apache.spark.sql.Column) => v)),
+        maxTailRows = 16))).collect()
     }
     assert(e.getMessage.contains("maxTailRows"), s"wrong error: ${e.getMessage}")
   }
@@ -254,21 +256,36 @@ class OrderedAtScaleSpec extends AnyFunSuite {
           .otherwise(when(col("id") < 95, lit(null).cast("string"))
             .otherwise(when(col("id") < 210, lit("b")).otherwise(lit("c")))).as("s"))
       .repartition(5).withColumn("one", lit(1))
-    val g = derive("out" -> DeriveSpec("rle_id",
-      Map("col" -> "s", "order_by" -> Seq("t"))))(df)
-    val w = derive("out" -> DeriveSpec("rle_id",
-      Map("col" -> "s", "order_by" -> Seq("t"), "partition_by" -> Seq("one"))))(df)
-    def canon(d: DataFrame) =
-      d.select(col("t"), col("out")).orderBy("t").collect().toSeq
-    assert(canon(g) == canon(w))
-    assert(g.select(max(col("out"))).head().getLong(0) == 3L) // a, null, b, c
+    def rleIds(d: DataFrame, c: String, windowed: Boolean) = derive("out" -> DeriveSpec("rle_id",
+      Map("col" -> c, "order_by" -> Seq("t")) ++
+        (if (windowed) Map("partition_by" -> Seq("one")) else Map.empty)))(d)
+      .select(col("t"), col("out")).orderBy("t").collect().toSeq
+    val g = rleIds(df, "s", windowed = false)
+    assert(g == rleIds(df, "s", windowed = true))
+    assert(g.map(_.getLong(1)).max == 3L) // a, null, b, c
+    // a NaN run and a binary run across ~12 of the 16 buckets: adjacent
+    // buckets must chain-merge under `<=>` semantics (NaN <=> NaN, binary
+    // by content), not JVM equality
+    val hostile = spark.range(400)
+      .select(col("id").as("t"),
+        when(col("id").between(50, 350), lit(Double.NaN))
+          .otherwise(col("id").cast("double")).as("d"),
+        when(col("id").between(50, 350), lit(Array[Byte](7, 7)))
+          .otherwise(col("id").cast("string").cast("binary")).as("b"))
+      .repartition(5).withColumn("one", lit(1))
+    for (c <- Seq("d", "b")) {
+      val gh = rleIds(hostile, c, windowed = false)
+      assert(gh == rleIds(hostile, c, windowed = true), s"rle_id over a '$c' run")
+      assert(gh.map(_.getLong(1)).max == 99L, s"rle_id '$c': 50 + 1 + 49 runs")
+    }
   }
 
-  test("globalRunIds desc flips the chain direction") {
+  test("applyLevel: a desc RunIdUnit flips the chain direction") {
     val df = spark.range(100)
       .select(col("id").as("t"), (col("id") >= 50).cast("string").as("s"))
       .repartition(3)
-    val out = OrderedAtScale.globalRunIds(df, "s", Seq("t"), "rid", desc = true)
+    val out = OrderedAtScale.applyLevel(df,
+      Seq(OrderedAtScale.RunIdUnit("s", Seq("t"), desc = true, "rid")))
       .orderBy(col("t").desc).select("rid").as[Long].collect().toSeq
     assert(out == Seq.fill(50)(0L) ++ Seq.fill(50)(1L))
   }
@@ -294,7 +311,14 @@ class OrderedAtScaleSpec extends AnyFunSuite {
       "j" -> DeriveSpec("rolling_std",
         Map("col" -> "v", "order_by" -> Seq("t", "uid"), "window_size" -> 9)),
       "k" -> DeriveSpec("cumulative_eval",
-        Map("col" -> "v", "agg" -> "std", "order_by" -> Seq("t", "uid"))))
+        Map("col" -> "v", "agg" -> "std", "order_by" -> Seq("t", "uid"))),
+      "l" -> DeriveSpec("shift", Map("col" -> "v", "order_by" -> Seq("t", "uid"))),
+      "m" -> DeriveSpec("shift", Map("col" -> "v", "n" -> -2, "order_by" -> Seq("t", "uid"))),
+      "n" -> DeriveSpec("diff", Map("col" -> "v", "order_by" -> Seq("t", "uid"))),
+      "o" -> DeriveSpec("peak_max", Map("col" -> "v", "order_by" -> Seq("t", "uid"))),
+      "p" -> DeriveSpec("interpolate_by",
+        Map("col" -> "v", "by" -> "uid", "order_by" -> Seq("t", "uid"))),
+      "q" -> DeriveSpec("rolling_mean_by", Map("col" -> "v", "by" -> "t", "window_size" -> 5)))
     for ((n, s) <- specs) {
       val out = derive(n -> s)(df)
       out.collect() // finalize AQE so the real executed plan is inspectable
@@ -311,6 +335,32 @@ class OrderedAtScaleSpec extends AnyFunSuite {
     }
   }
 
+  test("LEVEL PIN: cum_sum + shift + diff on one order_by share one bucket exchange") {
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    // a range input has no exchange of its own, so every shuffle in the
+    // result's lineage (frozen levels included) is a level's __go_bucket
+    // hash exchange; the side frames ride broadcasts, outside the lineage
+    val df = spark.range(400)
+      .select((col("id") % 97).as("t"), col("id").as("uid"), (col("id") % 13).as("v"))
+    val ord = Seq("t", "uid")
+    val out = derive(
+      "cs" -> DeriveSpec("cum_sum", Map("col" -> "v", "order_by" -> ord)),
+      "sh" -> DeriveSpec("shift", Map("col" -> "v", "order_by" -> ord)),
+      "df" -> DeriveSpec("diff", Map("col" -> "v", "order_by" -> ord)))(df)
+    def shuffles(r: RDD[_], seen: collection.mutable.Set[Int]): Set[Int] =
+      if (!seen.add(r.id)) Set.empty
+      else r.dependencies.flatMap { d =>
+        (d match {
+          case s: ShuffleDependency[_, _, _] => Set(s.shuffleId)
+          case _ => Set.empty[Int]
+        }) ++ shuffles(d.rdd, seen)
+      }.toSet
+    val rdd = out.queryExecution.toRdd
+    assert(shuffles(rdd, collection.mutable.Set.empty).size == 1,
+      "cum_sum + shift + diff must fuse into ONE bucketing level")
+  }
+
   test("TIE SAFETY: non-unique order_by — boundary recomposition matches the windowed form " +
     "under the internal row-intrinsic tie-break (round-17 advisory)") {
     import org.apache.spark.sql.expressions.Window
@@ -319,14 +369,18 @@ class OrderedAtScaleSpec extends AnyFunSuite {
     // BOTH key and value would make any engine's assignment value-neutral
     val df = spark.range(400)
       .select((col("id") % 23).as("t"), col("id").as("uid"),
-        ((col("id") * 37) % 1009).as("v"))
+        ((col("id") * 37) % 1009).as("v"), ((col("id") * 53) % 997).as("x"))
       .repartition(7)
+    // the shift pools into one level with a same-k rolling_sum on ANOTHER
+    // column; each keeps its own tie hash (no shared batch)
     val g = derive(
       "rs" -> DeriveSpec("rolling_sum",
         Map("col" -> "v", "order_by" -> Seq("t"), "window_size" -> 5)),
       "sd" -> DeriveSpec("rolling_std",
         Map("col" -> "v", "order_by" -> Seq("t"), "window_size" -> 5)),
-      "sh" -> DeriveSpec("shift", Map("col" -> "v", "order_by" -> Seq("t"))))(df)
+      "sh" -> DeriveSpec("shift", Map("col" -> "v", "order_by" -> Seq("t"))),
+      "r2" -> DeriveSpec("rolling_sum",
+        Map("col" -> "x", "order_by" -> Seq("t"), "window_size" -> 2)))(df)
     // reference: ONE window over the total order (t, tb) where tb
     // replicates the internal tie-break hash exactly
     val tb = xxhash64(col("t"), col("v"))
@@ -335,10 +389,13 @@ class OrderedAtScaleSpec extends AnyFunSuite {
       .withColumn("rs_r", sum("v").over(w.rowsBetween(-4, 0)))
       .withColumn("sd_r", stddev_samp("v").over(w.rowsBetween(-4, 0)))
       .withColumn("sh_r", lag("v", 1).over(w))
-    val j = g.join(ref.select("uid", "rs_r", "sd_r", "sh_r"), Seq("uid"))
+      .withColumn("r2_r", sum("x").over(Window.partitionBy(lit(1))
+        .orderBy(col("t").asc, xxhash64(col("t"), col("x")).asc).rowsBetween(-1, 0)))
+    val j = g.join(ref.select("uid", "rs_r", "sd_r", "sh_r", "r2_r"), Seq("uid"))
     assert(j.filter(!(col("rs") <=> col("rs_r"))).count() == 0, "rolling_sum tie mismatch")
     assert(j.filter(!(col("sd") <=> col("sd_r"))).count() == 0, "rolling_std tie mismatch")
     assert(j.filter(!(col("sh") <=> col("sh_r"))).count() == 0, "shift tie mismatch")
+    assert(j.filter(!(col("r2") <=> col("r2_r"))).count() == 0, "rolling_sum k=2 tie mismatch")
     // desc flips both the key order and the tie-break direction
     val gd = derive("shd" -> DeriveSpec("shift",
       Map("col" -> "v", "order_by" -> Seq("t"), "desc" -> true)))(df)
@@ -361,7 +418,7 @@ class OrderedAtScaleSpec extends AnyFunSuite {
       graft.expr.ExprRegistry.rollingByFrame(
         Map("by" -> "t", "window_size" -> 5), "hypothetical_by_fn")
     }
-    assert(e2.getMessage.contains("globalRollingBy") && e2.getMessage.contains("registry bug"))
+    assert(e2.getMessage.contains("applyLevel") && e2.getMessage.contains("registry bug"))
   }
 
   test("buckets honor spark.graft.orderedBuckets; shadow-column collision is loud") {
