@@ -159,26 +159,6 @@ object Bench {
     spark.range(1).select(lit(res.guid).as("guid"))
   }
 
-  /** Pure-CPU calibration: one warm-up then min-of-3 of summing a 2e8
-    * range in a SINGLE partition — one task on one core, so the idle
-    * value is independent of `SPARK_GRAFT_CPUS` (a parallel range would
-    * read "contended" whenever the run uses fewer cores than the idle
-    * reference was measured with). Whole-stage-codegen loop, no IO, no
-    * shuffle: its runtime moves only with per-core CPU availability,
-    * which is exactly what box contention steals. */
-  private def calibrate(spark: SparkSession): Double =
-    graft.util.Calibration.singleLane(spark)
-
-  /** Parallel calibration lane (round 9): the same 2e8-per-task range sum,
-    * but `cpus` tasks AT ONCE. Idle-box wall time ≈ the single lane's
-    * (every task gets its own core); a partially contended box — the
-    * r8 blind spot, where one core was free but many were stolen — queues
-    * tasks and inflates this lane while leaving the single lane clean.
-    * Lane mechanics live in [[graft.util.Calibration]], shared with the
-    * scale rehearsal's per-query evidence stamps. */
-  private def calibratePar(spark: SparkSession, cpus: Int): Double =
-    graft.util.Calibration.parallelLane(spark, cpus)
-
   /** Per-query medians from a prior clean bench JSON (the full-precision
     * `SPARK_GRAFT_BENCH_OUT` file, the compact stdout line, or a
     * pretty-printed re-stamp — keys are normalized to the unique `qNN`
@@ -300,14 +280,14 @@ object Bench {
     // after adjudication, so `host_other_cores` is the average core count
     // other processes consumed across every measurement below.
     val hostStart = graft.util.HostStat.snapshot()
-    val calibrationSec = calibrate(spark)
+    val calibrationSec = graft.util.Calibration.singleLane(spark)
     val calibrationIdle =
       sys.env.getOrElse("SPARK_GRAFT_CALIBRATION_IDLE_SEC", "0.30").toDouble
     // idle ~0.75 s on this 32-vCPU box: ~2.8x the single lane because 32
     // concurrent tasks share 16 physical cores (SMT) and forgo the
     // single-task turbo clock — measured, which is why the lane carries
     // its own idle reference instead of reusing the single lane's
-    val calibrationParSec = calibratePar(spark, cpus.toInt)
+    val calibrationParSec = graft.util.Calibration.parallelLane(spark, cpus.toInt)
     val calibrationParIdle =
       sys.env.getOrElse("SPARK_GRAFT_CALIBRATION_PAR_IDLE_SEC", "0.75").toDouble
     val loadStartMax = loadStartMax0
@@ -514,7 +494,7 @@ object Bench {
     // drag the tick counters can't attribute)
     val hostEnd = graft.util.HostStat.snapshot()
     val hostDragEv = graft.util.HostStat.drag(hostStart, hostEnd)
-    val calibrationEndSec = calibrate(spark)
+    val calibrationEndSec = graft.util.Calibration.singleLane(spark)
     val hostOtherMax =
       sys.env.getOrElse("SPARK_GRAFT_HOST_OTHER_CORES_MAX", "1.0").toDouble
     // host_drag fires on run-integrated evidence: >1 core-average of

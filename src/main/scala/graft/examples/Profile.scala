@@ -6,6 +6,12 @@ import graft.queries.Queries
 
 /** Ad-hoc profiling harness: run named queries N times in one JVM.
   *   sbt "runMain graft.examples.Profile q26_dedup_ngram_jaccard 3 [sfDir]"
+  *
+  * Environment (A/B probing only — Bench never sets them):
+  *   - `GRAFT_CONF="k1=v1;k2=v2"` sets session confs before the first rep,
+  *     e.g. `GRAFT_CONF="spark.graft.orderedBuckets=64"`;
+  *   - `GRAFT_EXPLAIN=1` prints each query's formatted physical plan after
+  *     the timed reps (diff two runs' output to compare plans).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -19,9 +25,6 @@ object Profile {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // A/B harness knobs (probing only — Bench never sets them)
-    sys.env.get("GRAFT_ORDERED_BUCKETS")
-      .foreach(b => spark.conf.set("spark.graft.orderedBuckets", b))
     sys.env.get("GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty).foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)

@@ -3,6 +3,7 @@ package graft.expr
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.references
 
 /** Range-bucketed two-level decomposition for GLOBAL (no `partition_by`)
   * ordered derive functions — the scale-safe replacement for
@@ -138,11 +139,6 @@ object OrderedAtScale {
   private def partitionCount(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
 
-  private def refsOf(c: Column): Set[String] =
-    org.apache.spark.sql.graftbridge.ColumnBridge.expression(c).collect {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => u.name
-    }.toSet
-
   /** Shared round-19 bucketing preamble — ONE full-data exchange where the
     * round-16 original paid two.
     *
@@ -199,7 +195,7 @@ object OrderedAtScale {
     // only decorrelate duplicate keys in the sample, never affect values
     val srcCols = sampleSrc.columns.toSet
     val extras = sampleExtra.filter(c =>
-      refsOf(c).forall(srcCols.contains))
+      references(c).forall(srcCols.contains))
     val sampled = sampleSrc
       .select((keyCols :+ xxhash64((keyCols ++ extras): _*).as("__go_h")): _*)
       .orderBy(col("__go_h").asc)
@@ -398,7 +394,7 @@ object OrderedAtScale {
     // key whose single hash ranked low could otherwise fill the whole
     // TakeOrdered sample and collapse the cuts, so every unit's value
     // inputs join the sample hash — they steer balance only, never values
-    val ordExtraNames = (ordSpecs.flatMap(s => refsOf(s._2.bucketAgg) -- s._2.orderBy) ++
+    val ordExtraNames = (ordSpecs.flatMap(s => references(s._2.bucketAgg) -- s._2.orderBy) ++
       runIds.map(_.valueCol)).distinct
     val extras: Seq[Column] = ordExtraNames.map(col) ++
       rollGroups.flatMap(_.parts.map(_._2)) ++ rollByGroups.flatMap(_.parts.map(_._2))
@@ -643,20 +639,20 @@ object OrderedAtScale {
             acc2.withColumn(m.withinCs(pi), rangeAgg(wb))
         }.withColumn(m.bminC, min(m.byC).over(wBucket))
       }
-      // The interior/boundary split evaluates `staged` TWICE (two stages of
-      // the union read the same shuffle, each recomputing everything above
-      // it). A single-family level keeps that shape — it's the r19 cost,
-      // one window set recomputed, cheaper than materializing. But a FUSED
-      // level stacks every family's sorts and windows above the one leaf,
-      // so the double evaluation compounds (measured: fused q169 3× SLOWER
-      // than its 3 chained levels, which implicitly materialized each
-      // level into the next one's exchange) — re-materialize through one
-      // bucket-keyed exchange so both branches read computed rows.
+      // The interior/boundary union reads `staged` in two branches and
+      // nothing materializes it: each branch's tasks evaluate the level's
+      // windows over the one bucket shuffle. A FUSED level (more than one
+      // family, or any ordered/run-id unit) freezes `staged`
+      // hash-clustered on the bucket before the split. No exchange is
+      // planned for it — the windows keep the bucketized leaf's
+      // `HashPartitioning(bucket, p)` — so the freeze is a plan barrier
+      // only; it stays because fused q169 measured 3× slower without one
+      // (OPTIMIZATION_r20.md, "Measured pitfall").
       val fusedAbove = ordSpecs.nonEmpty || runIds.nonEmpty ||
         (rollGroups.length + rollByGroups.length) > 1
       if (fusedAbove)
         staged = org.apache.spark.sql.graftbridge.PlanBarrier.freezeHashClustered(
-          staged.repartition(p, col(BucketCol)), p, BucketCol)
+          staged, p, BucketCol)
       def rollPred(m: RM): Column = col(m.rnC) <= m.n
       def rollByPred(m: BM): Column = (m.byC + lit(m.loOff)) < col(m.bminC)
       val anyB = (rollMetas.map(rollPred) ++ rollByMetas.map(rollByPred)).reduce(_ || _)

@@ -91,7 +91,8 @@ object Similarity {
     * inside the torrent-broadcast task binary).
     *
     * The default is 0 — ALWAYS the matrix form — because the cliff was
-    * measured, not guessed (CliffProbe, sf0.1 embeddings, dim 64):
+    * measured, not guessed (BASELINE.md "Round-14 quantizer default
+    * flip", sf0.1 embeddings, dim 64):
     * plan-fixed cost (2k rows) literal/matrix = 3.0x at k=4 rising to
     * 89x at k=1024 (13.4 s of pure analysis+setup); per-ROW cost (2M
     * rows) = 3.6x at k=8, 6.2x at k=32, 8.7x at k=128. The literal form
@@ -842,7 +843,8 @@ object Similarity {
     * matrix is collected (LOUD `maxDim` guard — the k-centroid house
     * rule); the power rounds run on the driver over that matrix, and the
     * per-row projection is a [[dot]] against the returned literal.
-    * Measured (PcaProbe, local[8]): fold beats explode at EVERY real dim —
+    * Measured (BASELINE.md "Round 15: PCA covariance explode-vs-fold",
+    * local[8]): fold beats explode at EVERY real dim —
     * 10.9× at dim=64, 44.8× at 256, 74.1× at 768, per-row-flat — so the
     * default folds from dim > 32 up; the explode path stays as the
     * declarative cross-check the bit-identity spec pins against.

@@ -712,8 +712,9 @@ object BuiltinTransformations {
     * trainer ([[Bpe.trainFromCorpusLocal]]: one corpus scan to the
     * vocab, driver-side incremental merge loop) is BIT-IDENTICAL to
     * `distributed` ([[Bpe.trainFromCorpus]]: one Spark job per merge)
-    * and 13.6x faster at 64 merges (BpeProbe) — a 200-merge default on
-    * the distributed form is 200 sequential jobs. */
+    * and 13.6x faster at 64 merges (BASELINE.md, "Round-14 second half")
+    * — a 200-merge default on the distributed form is 200 sequential
+    * jobs. */
   private def bpeTokenize: CustomFn = (df, kw) => {
     val name = "bpe_tokenize"
     val textCol = reqStr(name, kw, "text_col")

@@ -2,6 +2,7 @@ package graft.stages
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.{references => refs}
 import org.apache.spark.sql.types._
 
 import graft.config.{DeriveSpec, RuleSpec}
@@ -192,10 +193,6 @@ object Transforms {
       // shuffles). A row-wise entry — or any entry referencing a name a
       // pending batch will produce — flushes first so successors see its
       // columns.
-      def refs(c: Column): Set[String] =
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c).collect {
-          case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => u.name
-        }.toSet
       // every input column a GlobalOrdered spec reads (combine is probed
       // with dummy placeholders, subtracted back out)
       def goRefs(spec: OrderedAtScale.GlobalOrderedSpec): Set[String] = {
@@ -232,12 +229,6 @@ object Transforms {
             case (a, _) => a
           }
         }
-      // Chained decompositions re-analyze the whole accumulated tree and
-      // grow optimizer cost ~3× per level (measured via ChainProbe); a
-      // zero-copy plan barrier between levels keeps it linear. The FIRST
-      // decomposition never pays it, so single-decomposition plans keep
-      // their pushdown/plan-pin shape.
-      var decomps = 0
       // Output names produced by entries processed so far — the
       // overwrite-hazard guard on base-frame sampling (round-19 advisory,
       // closed round 20): with_columns semantics let a chain REDEFINE an
@@ -289,9 +280,6 @@ object Transforms {
             }
           }
           clusters.foldLeft(acc0) { case (a, (bk, _, es)) =>
-            val base =
-              if (decomps == 0) a else org.apache.spark.sql.graftbridge.PlanBarrier.freeze(a)
-            decomps += 1
             val ords = es.collect { case PoolEntry(n0, _, _, _, _, ExprRegistry.GlobalOrdered(s)) =>
               OrderedAtScale.Ordered(n0, s) }
             // rolling batches group by POOL ADJACENCY (consecutive seq +
@@ -328,7 +316,7 @@ object Transforms {
             val runIdUnits = es.collect {
               case PoolEntry(n0, _, _, _, _, r: ExprRegistry.GlobalRunId) =>
                 OrderedAtScale.RunIdUnit(r.valueCol, r.orderBy, r.desc, n0) }
-            OrderedAtScale.applyLevel(base, ords ++ rollGroups ++ rollByGroups ++ runIdUnits,
+            OrderedAtScale.applyLevel(a, ords ++ rollGroups ++ rollByGroups ++ runIdUnits,
               sampleSrc(bk, producedAtPoolStart))
           }
         }
@@ -398,10 +386,7 @@ object Transforms {
             acc = acc.withColumn(n, c0)
           case ExprRegistry.FrameLevel(build) =>
             acc = flushPool(flush(acc, pending), pool); pending = Nil; pool = Vector.empty
-            val base =
-              if (decomps == 0) acc else org.apache.spark.sql.graftbridge.PlanBarrier.freeze(acc)
-            decomps += 1
-            acc = build(base, n)
+            acc = build(acc, n)
           case ExprRegistry.GlobalOrdered(spec) =>
             acc = flush(acc, pending); pending = Nil
             admitPool(PoolEntry(n, spec.orderBy, spec.desc, goRefs(spec), seq, d0))

@@ -73,9 +73,10 @@ class NearestCentroidSpec extends AnyFunSuite {
   }
 
   test("default is the matrix form at every k; literal form needs an explicit threshold") {
-    // measured (CliffProbe): matrix wins 3-9x per-row at every k, so the
-    // default threshold is 0 — the plan must carry the nearest_centroid
-    // node, and the literal form appears only when explicitly requested
+    // measured (BASELINE.md "Round-14 quantizer default flip"): matrix
+    // wins 3-9x per-row at every k, so the default threshold is 0 — the
+    // plan must carry the nearest_centroid node, and the literal form
+    // appears only when explicitly requested
     val default_ = vecsDf.select(Similarity.ivfCell($"v", centroids).as("cell"))
     assert(default_.queryExecution.analyzed.toString.contains("nearest_centroid"))
     val literal = vecsDf.select(Similarity.ivfCell($"v", centroids, Int.MaxValue).as("cell"))

@@ -405,6 +405,82 @@ class OrderedAtScaleSpec extends AnyFunSuite {
     assert(jd.filter(!(col("shd") <=> col("shd_r"))).count() == 0, "desc shift tie mismatch")
   }
 
+  /** The entries in ONE derive call vs one call per entry: the sequential
+    * with_columns semantics the pooling must keep. */
+  private def assertInOrder(df: DataFrame, specs: (String, DeriveSpec)*): Unit = {
+    val together = derive(specs: _*)(df)
+    val oneByOne = specs.foldLeft(df)((acc, s) => derive(s)(acc))
+    val names = specs.map(_._1).distinct
+    def canon(d: DataFrame) =
+      d.select((col("uid") +: names.map(col)): _*).orderBy("uid").collect().toSeq
+    assert(canon(together) == canon(oneByOne),
+      s"${specs.map(s => s"${s._1}: ${s._2.fnName}").mkString(", ")} != entries in order")
+  }
+
+  test("REFS: a global entry reading an earlier global output runs in a later level") {
+    val df = fixture(1000)
+    val ord = Seq("t", "uid")
+    // v is overwritten; w must read the NEW v
+    assertInOrder(df,
+      "v" -> DeriveSpec("cum_sum", Map("col" -> "v", "order_by" -> ord)),
+      "w" -> DeriveSpec("cum_sum", Map("col" -> "v", "order_by" -> ord)))
+    val fams = Seq(
+      "shift" -> Map.empty[String, Any],
+      "rolling_max" -> Map[String, Any]("window_size" -> 3),
+      "cum_sum" -> Map.empty[String, Any])
+    for ((f, fk) <- fams; (g, gk) <- fams if f != g)
+      assertInOrder(df,
+        "a" -> DeriveSpec(f, fk ++ Map("col" -> "v", "order_by" -> ord)),
+        "b" -> DeriveSpec(g, gk ++ Map("col" -> "a", "order_by" -> ord)))
+  }
+
+  test("REFS: a global entry over a row-wise column derived earlier samples its cuts " +
+    "without it") {
+    // the cut sample reads the stage's input frame, which lacks x; x must
+    // drop out of the sample hash instead of failing to resolve
+    val df = fixture(1000)
+    val x = "x" -> DeriveSpec("mul", Map("col" -> "v", "value" -> 2))
+    assertInOrder(df, x, "o" -> DeriveSpec("rolling_sum",
+      Map("col" -> "x", "order_by" -> Seq("t", "uid"), "window_size" -> 5)))
+    assertInOrder(df, x, "o" -> DeriveSpec("rolling_mean_by",
+      Map("col" -> "x", "by" -> "t", "window_size" -> 5)))
+    assertInOrder(df, x, "o" -> DeriveSpec("rle_id",
+      Map("col" -> "x", "order_by" -> Seq("t", "uid"))))
+  }
+
+  test("CHAIN PIN: every dependent level hides the ones before it behind one barrier") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => WindowNode}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.expressions.Window
+    val df = fixture(1000)
+    val ord = Seq("t", "uid")
+    // c_i reads c_{i-1}: every entry is its own level
+    def chain(n: Int) = derive((1 to n).map { i =>
+      val src = if (i == 1) "v" else s"c${i - 1}"
+      s"c$i" -> (if (i % 2 == 1) DeriveSpec("shift", Map("col" -> src, "order_by" -> ord))
+        else DeriveSpec("rolling_max",
+          Map("col" -> src, "order_by" -> ord, "window_size" -> 3)))
+    }: _*)(df)
+    def counts(p: LogicalPlan) = (
+      p.collect { case w: WindowNode => w }.size,
+      p.collect { case r: LogicalRDD => r }.size)
+    val (short, long) = (chain(2), chain(8))
+    assert(counts(short.queryExecution.optimizedPlan) ==
+      counts(long.queryExecution.optimizedPlan),
+      "the final plan must not grow with chain depth")
+    // values: the same chain as single-partition windows
+    val w = Window.partitionBy(lit(1)).orderBy(ord.map(col): _*)
+    val ref = (1 to 8).foldLeft(df) { (acc, i) =>
+      val src = col(if (i == 1) "v" else s"c${i - 1}")
+      acc.withColumn(s"c$i",
+        if (i % 2 == 1) lag(src, 1).over(w) else max(src).over(w.rowsBetween(-2, 0)))
+    }
+    val names = (1 to 8).map(i => s"c$i")
+    def canon(d: DataFrame) =
+      d.select((col("uid") +: names.map(col)): _*).orderBy("uid").collect().toSeq
+    assert(canon(long) == canon(ref), "8-level chain != single-partition windows")
+  }
+
   test("FORECLOSURE: orderedWindow/rollingByFrame with empty partition_by are structural errors") {
     // Round 17: the single-partition arms are gone — a FUTURE registry fn
     // that routes here without a global decomposition fails loudly at

@@ -96,6 +96,29 @@ class TransformsSpec extends AnyFunSuite {
     assert(rows(0).getAs[Double]("v") == 11.0, "overwrite applied")
   }
 
+  test("ColumnBridge.references sees through opaque column nodes") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.graftbridge.ColumnBridge.references
+    assert(references(col("a") + col("b.c")) == Set("a", "b"))
+    assert(references(sum(col("x")).over(Window.partitionBy(col("p")).orderBy(col("o")))) ==
+      Set("x", "p", "o"))
+    // lambda variables are not columns
+    assert(references(transform(col("arr"), e => e + col("k"))) == Set("arr", "k"))
+    // a custom expression's children are opaque nodes of their own
+    assert(references(graft.sparkext.RangeBucketId(Seq(col("t"), col("u") * 2),
+      Seq(Seq(1L, 2L)), desc = false)) == Set("t", "u"))
+  }
+
+  test("derive: an aggregate over an earlier aggregate's output runs after it") {
+    // batched into one agg pass, max(m) would read the alias m inside the
+    // same aggregate (LATERAL_COLUMN_ALIAS_IN_AGGREGATE_FUNC)
+    val df = Seq(1, 2, 3, 4).toDF("v")
+    val out = Transforms.deriveNewCols(Seq(
+      "m" -> DeriveSpec("mean", Map("col" -> "v")),
+      "mm" -> DeriveSpec("max", Map("col" -> "m"))))(df)
+    assert(out.select("m", "mm").distinct().collect().toSeq == Seq(Row(2.5, 2.5)))
+  }
+
   test("derive: whole-frame aggregate may overwrite an existing column") {
     val df = Seq((1, 10.0), (2, 20.0)).toDF("id", "v")
     val out = Transforms.deriveNewCols(Seq(
