@@ -654,7 +654,10 @@ object OrderedAtScale {
         staged = org.apache.spark.sql.graftbridge.PlanBarrier.freezeHashClustered(
           staged, p, BucketCol)
       def rollPred(m: RM): Column = col(m.rnC) <= m.n
-      def rollByPred(m: BM): Column = (m.byC + lit(m.loOff)) < col(m.bminC)
+      // a null `by` is never a boundary row (its range frame is the
+      // bucket's null rows); without the coalesce it fell out of both
+      // branches of the union
+      def rollByPred(m: BM): Column = coalesce((m.byC + lit(m.loOff)) < col(m.bminC), lit(false))
       val anyB = (rollMetas.map(rollPred) ++ rollByMetas.map(rollByPred)).reduce(_ || _)
       // interior branch: every group's plain within value
       var interior = staged.filter(!anyB)

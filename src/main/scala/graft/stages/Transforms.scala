@@ -342,9 +342,9 @@ object Transforms {
           r.by) -- dummies
       }
       // The fold: aggs batch with aggs (as before); every GLOBAL family
-      // entry joins the pool unless it reads a pooled output or would
-      // overwrite one (then the pool flushes first — sequential
-      // with_columns semantics). Aggs and the pool flush each other on
+      // entry joins the pool unless it reads a pooled output, would
+      // overwrite one, or would overwrite a column a pooled entry reads
+      // (then the pool flushes first — sequential with_columns semantics). Aggs and the pool flush each other on
       // family change, preserving the r19 ordering exactly; the pool
       // itself only widens what can share one exchange.
       var acc = df
@@ -352,8 +352,8 @@ object Transforms {
       var pool = Vector.empty[PoolEntry]
       def admitPool(e: PoolEntry): Unit = {
         val poolOuts = pool.map(_.name).toSet
-        if (pool.nonEmpty &&
-          (e.refNames.exists(poolOuts.contains) || poolOuts.contains(e.name))) {
+        if (pool.nonEmpty && (e.refNames.exists(poolOuts.contains) ||
+            poolOuts.contains(e.name) || pool.exists(_.refNames.contains(e.name)))) {
           acc = flushPool(acc, pool)
           pool = Vector.empty
         }

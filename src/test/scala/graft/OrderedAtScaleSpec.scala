@@ -448,6 +448,30 @@ class OrderedAtScaleSpec extends AnyFunSuite {
       Map("col" -> "x", "order_by" -> Seq("t", "uid"))))
   }
 
+  test("REFS: an entry overwriting a column an earlier pooled entry reads runs after it") {
+    // o reads v; the later v entry shares a level key with a, whose level
+    // is applied first, so pooling v with them let o read the NEW v
+    val df = fixture(1000)
+    assertInOrder(df,
+      "a" -> DeriveSpec("rolling_max_by", Map("col" -> "uid", "by" -> "t", "window_size" -> 3)),
+      "o" -> DeriveSpec("rolling_sum",
+        Map("col" -> "v", "order_by" -> Seq("uid"), "window_size" -> 5)),
+      "v" -> DeriveSpec("rolling_sum_by", Map("col" -> "v", "by" -> "t", "window_size" -> 2)))
+  }
+
+  test("NULL BY: global rolling_*_by keeps the rows whose by value is null") {
+    // a null by is no boundary row: its range frame is the other null rows
+    val df = fixture().withColumn("t", when(col("uid") % 5 === 0, lit(null)).otherwise(col("t")))
+      .withColumn("one", lit(1))
+    val kw = Map[String, Any]("col" -> "v", "by" -> "t", "window_size" -> 3)
+    val global = derive("out" -> DeriveSpec("rolling_sum_by", kw))(df)
+    val windowed = derive("out" -> DeriveSpec("rolling_sum_by",
+      kw + ("partition_by" -> Seq("one"))))(df)
+    def canon(d: DataFrame) = d.select("uid", "out").orderBy("uid").collect().toSeq
+    assert(global.count() == 400, "rows with a null by were dropped")
+    assert(canon(global) == canon(windowed))
+  }
+
   test("CHAIN PIN: every dependent level hides the ones before it behind one barrier") {
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => WindowNode}
     import org.apache.spark.sql.execution.LogicalRDD
