@@ -3,7 +3,7 @@ package graft.expr
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge.references
+import org.apache.spark.sql.graftbridge.ColumnBridge.{references, tree}
 
 /** Range-bucketed two-level decomposition for GLOBAL (no `partition_by`)
   * ordered derive functions — the scale-safe replacement for
@@ -75,15 +75,10 @@ object OrderedAtScale {
     // dedup, batching changed the hash (value repeated per part) and the
     // tie ORDER under non-unique keys silently depended on how many
     // same-column fns happened to share the level
-    // Column/expression equality is unusable for this (Spark 4 wraps every
-    // Column in a ColumnNodeExpression whose Origin embeds the creation
-    // stack trace, so two col("v") calls never compare equal, canonicalized
-    // or not) — the textual form is stable and a false NEGATIVE only hashes
-    // a value twice, which is the pre-dedup behavior
-    val distinctVals = values.foldLeft(Vector.empty[Column]) { (acc, v) =>
-      if (acc.exists(_.toString == v.toString)) acc else acc :+ v
-    }
-    xxhash64((orderBy.map(col) ++ distinctVals): _*)
+    // Equality is on the converted Catalyst trees: the textual form would
+    // merge different expressions that print alike (two UDFs over one
+    // column), dropping one from the hash
+    xxhash64((orderBy.map(col) ++ values.distinctBy(tree)): _*)
   }
   private val TotalCol = "__go_total"
   private val WithinCol = "__go_within"

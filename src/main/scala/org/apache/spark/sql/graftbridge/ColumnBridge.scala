@@ -19,6 +19,16 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `c` as a plain Catalyst tree. Two columns built by separate calls
+    * compare equal iff they compute the same expression, where the
+    * opaque [[expression]] wrapper never does: its origin embeds the
+    * creation stack trace. Columns that merely print alike (two UDFs over
+    * one input) stay distinct. */
+  def tree(c: Column): Expression = expression(c) match {
+    case ColumnNodeExpression(node) => ColumnNodeToExpressionConverter(node)
+    case e => e
+  }
+
   /** Top-level column names `c` reads (a struct-field access `a.b` reads
     * `a`). [[expression]] wraps a plain `Column` in an opaque
     * `ColumnNodeExpression` with no children, so a walk over it sees no

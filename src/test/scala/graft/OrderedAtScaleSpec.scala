@@ -405,6 +405,35 @@ class OrderedAtScaleSpec extends AnyFunSuite {
     assert(jd.filter(!(col("shd") <=> col("shd_r"))).count() == 0, "desc shift tie mismatch")
   }
 
+  test("TIE SAFETY: a batch over two value expressions that print alike hashes both") {
+    import org.apache.spark.sql.expressions.Window
+    // both UDF columns print as "UDF(v)"; the batch tie-break must still
+    // hash each of them, or rows tied on (t, v % 2) order arbitrarily
+    val parity = udf((v: Long) => v % 2)
+    val same = udf((v: Long) => v)
+    assert(parity(col("v")).toString == same(col("v")).toString)
+    val df = spark.range(400)
+      .select((col("id") % 23).as("t"), col("id").as("uid"), ((col("id") * 37) % 1009).as("v"))
+      .repartition(7)
+    val sumOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+      xs => aggregate(xs, lit(0L), (acc, e) => acc + e)
+    val parts = Seq("p" -> parity(col("v")), "s" -> same(col("v"))).map { case (n, x) =>
+      (n, x, (w: org.apache.spark.sql.expressions.WindowSpec) => sum(x).over(w.rowsBetween(-2, 0)),
+        sumOf)
+    }
+    val out = OrderedAtScale.applyLevel(df,
+      Seq(OrderedAtScale.RollGroup(Seq("t"), desc = false, 3, parts)))
+    val w = Window.partitionBy(lit(1))
+      .orderBy(col("t"), xxhash64(col("t"), parity(col("v")), same(col("v"))))
+      .rowsBetween(-2, 0)
+    val ref = df.select(col("uid"), sum(parity(col("v"))).over(w).as("p_r"),
+      sum(same(col("v"))).over(w).as("s_r"))
+    val j = out.join(ref, Seq("uid"))
+    assert(j.count() == 400)
+    assert(j.filter(!(col("p") <=> col("p_r")) || !(col("s") <=> col("s_r"))).count() == 0,
+      "a value expression was dropped from the batch tie-break")
+  }
+
   /** The entries in ONE derive call vs one call per entry: the sequential
     * with_columns semantics the pooling must keep. */
   private def assertInOrder(df: DataFrame, specs: (String, DeriveSpec)*): Unit = {
