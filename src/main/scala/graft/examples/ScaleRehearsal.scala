@@ -68,6 +68,9 @@ import graft.operators.{Curation, Dedup, Similarity, TextAnalysis, TimeSeries}
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_SCALE_MULTS=10,100 \
   *   sbt "runMain graft.examples.ScaleRehearsal"
   * Prints one JSON line per query with per-scale times and both exponents.
+  * `SPARK_GRAFT_SCALE_ONLY=ordered_level` runs only the fixed-size
+  * engine-vs-plain rung ([[orderedLevelRung]]), which a full run times
+  * first.
   */
 object ScaleRehearsal {
 
@@ -137,6 +140,11 @@ object ScaleRehearsal {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").map(_.trim).toSet)
+    // the engine-vs-plain rung needs no synthesized corpus
+    if (only.forall(_.contains(OrderedLevel))) orderedLevelRung(spark)
+    if (only.contains(Set(OrderedLevel))) { spark.stop(); return }
+
     val dirs = mults.map { m =>
       val d = s"target/scale_rehearsal/x$m"
       synthesize(spark, baseDir, d, m)
@@ -192,11 +200,10 @@ object ScaleRehearsal {
         "cc_chain_2hop_scaled" -> ccChainAtScale(hops = 2))
     // targeted runs (round 13): time only the named rows — a full ladder
     // is ~15 min, and adding one rehearsal shouldn't cost re-timing all
-    val rehearsals = sys.env.get("SPARK_GRAFT_SCALE_ONLY") match {
+    val rehearsals = only match {
       case None => allRehearsals
-      case Some(csv) =>
-        val want = csv.split(",").map(_.trim).toSet
-        val unknown = want -- allRehearsals.map(_._1).toSet
+      case Some(want) =>
+        val unknown = want -- allRehearsals.map(_._1).toSet - OrderedLevel
         require(unknown.isEmpty,
           s"SPARK_GRAFT_SCALE_ONLY names unknown rehearsals: ${unknown.toSeq.sorted.mkString(",")}")
         allRehearsals.filter(r => want(r._1))
@@ -269,6 +276,62 @@ object ScaleRehearsal {
     val nSuspect = results.count(_._3)
     println(f"""{"metric":"max_marginal_exponent","query":"${worst._1}","value":${worst._2}%.2f,"suspect_queries":$nSuspect}""")
     spark.stop()
+  }
+
+  private val OrderedLevel = "ordered_level"
+
+  /** Engine-vs-plain rung `ordered_level`: one fused global level —
+    * cum_sum + rolling_sum(5) + shift over `t` — against the same three
+    * fns as single-partition `Window.orderBy(t)`s, at 2M and 8M rows.
+    * Input: `range(n)` with t = id·7919 mod n (a permutation, so `t` is a
+    * unique order key) and v = id mod 13, written once to
+    * target/scale_rehearsal. Each form runs three times in one JVM into
+    * the noop sink, plan build included (the engine samples cuts and
+    * gathers its side data while building); rounds 2-3 are the warm
+    * times. One JSON line per size also stamps the engine's shuffle
+    * write and read. */
+  private def orderedLevelRung(spark: SparkSession): Unit = {
+    import graft.config.DeriveSpec
+    import org.apache.spark.sql.expressions.Window
+    val mem = graft.util.StageMetrics.attach(spark)
+    for (n <- Seq(2000000L, 8000000L)) {
+      val path = s"target/scale_rehearsal/ordered_level_$n"
+      if (!new java.io.File(path).exists())
+        spark.range(n).select((col("id") * 7919 % n).as("t"), (col("id") % 13).as("v"))
+          .write.mode("overwrite").parquet(path)
+      val ord = Map[String, Any]("order_by" -> Seq("t"), "col" -> "v")
+      def engine(): DataFrame = graft.stages.Transforms.deriveNewCols(Seq(
+        "cs" -> DeriveSpec("cum_sum", ord),
+        "rs" -> DeriveSpec("rolling_sum", ord + ("window_size" -> 5)),
+        "sh" -> DeriveSpec("shift", ord)))(spark.read.parquet(path))
+      def plain(): DataFrame = {
+        val w = Window.orderBy("t")
+        spark.read.parquet(path)
+          .withColumn("cs", sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0)))
+          .withColumn("rs", sum("v").over(w.rowsBetween(-4, 0)))
+          .withColumn("sh", lag("v", 1).over(w))
+      }
+      // (seconds per round, last round's shuffle write and read bytes)
+      def rounds(form: () => DataFrame): (Seq[Double], Long, Long) = {
+        val runs = (1 to 3).map { _ =>
+          mem.reset()
+          val t0 = System.nanoTime()
+          form().write.format("noop").mode("overwrite").save()
+          val sec = (System.nanoTime() - t0) / 1e9
+          val (w, r, _, _) = mem.snapshot()
+          (sec, w, r)
+        }
+        (runs.map(_._1), runs.last._2, runs.last._3)
+      }
+      val (eng, engW, engR) = rounds(() => engine())
+      val (pl, _, _) = rounds(() => plain())
+      def secs(ts: Seq[Double]) = ts.map(t => f"$t%.2f").mkString("[", ",", "]")
+      def mb(b: Long) = f"${b / 1048576.0}%.1f"
+      println(s"""{"query":"$OrderedLevel","rows":$n,"engine_s":${secs(eng)},""" +
+        s""""plain_s":${secs(pl)},"engine_shuffle_write_mb":${mb(engW)},""" +
+        s""""engine_shuffle_read_mb":${mb(engR)}}""")
+    }
+    mem.close()
   }
 
   /** Semantic dedup at constant cluster size (the k ∝ n contract): q93's
@@ -393,9 +456,9 @@ object ScaleRehearsal {
     * range-bucketed two-level decomposition with a GROWS-WITH-CORPUS
     * frame — global cum_sum + rank + row_number over the Mx events corpus
     * (no partition_by anywhere: the exact shape that was a single-task
-    * window before this round). Expected ~linear in M: two parallel
-    * full-data shuffles (range + bucket hash), per-bucket totals, a ≤B²
-    * broadcast prefix join. Batched into ONE decomposition per order key
+    * window before this round). Expected ~linear in M: one parallel
+    * full-data bucket shuffle, per-bucket totals and a prefix fold over
+    * ≤ B rows. Batched into ONE decomposition per order key
     * (cum_sum/rank share the ts order; row_number adds the unique
     * tie-break). */
   private def globalOrderedAtScale: (SparkSession, String) => DataFrame = (s, dir) => {
@@ -416,9 +479,9 @@ object ScaleRehearsal {
     * (raw-value head+tail exchange — interior rows ride the bucketed
     * window, ≤ B·(k−1) boundary rows re-fold raw frames) plus a global
     * RANGE-framed rolling mean (value-range tail exchange) over the Mx
-    * events corpus. Expected ~linear: one frozen range shuffle feeding
-    * bucket-parallel windows, an O(B·k) head/tail exchange, and a
-    * boundary branch whose size is corpus-independent. */
+    * events corpus. Expected ~linear: one frozen bucket shuffle feeding
+    * bucket-parallel windows, an O(B·k) head/tail exchange, and boundary
+    * rows whose count is corpus-independent. */
   private def globalRollingMomentsAtScale: (SparkSession, String) => DataFrame = (s, dir) => {
     val raw = s.read.parquet(s"$dir/events.parquet")
     val ev = raw.select(col("event_id"), tsSeconds(raw).as("t"),

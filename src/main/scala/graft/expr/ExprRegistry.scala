@@ -290,7 +290,7 @@ object ExprRegistry {
     * so several same-(order, k) decomposable rollings share one head+tail
     * export (q164's rolling_sum + rolling_max), also with any
     * moment-family entries of the same frame.
-    * The boundary branch folds the raw frame values with `tailCombine` in
+    * A boundary row folds the raw frame values with `tailCombine` in
     * frame order — for the decomposable aggregates that is the exact
     * windowed value (sum/min/max over the same multiset; null-skipping
     * fold mirrors the aggregate's null handling, empty/all-null → null). */
@@ -1621,8 +1621,8 @@ object ExprRegistry {
         RowWise(sum(flag).over(orderedWindow(kw, "rle_id")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       } else {
-        // global form: range-bucketed run ids + driver chain-merge over
-        // <= B bucket boundary rows (never a single-partition window);
+        // global form: range-bucketed run ids chain-merged over <= B
+        // per-bucket side rows (never a single-partition window);
         // first-class so the derive stage can fuse it with same-order
         // globals onto one bucketized frame (round 20)
         val (ord, desc) = ordAndDesc(kw, "rle_id")

@@ -3,7 +3,10 @@ package graft.expr
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge.{references, tree}
+import org.apache.spark.sql.graftbridge.ColumnBridge.{aggregatesOver, references, tree}
+
+import scala.collection.immutable.ListMap
+import scala.collection.mutable.ArrayBuffer
 
 /** Range-bucketed two-level decomposition for GLOBAL (no `partition_by`)
   * ordered derive functions — the scale-safe replacement for
@@ -22,16 +25,18 @@ import org.apache.spark.sql.graftbridge.ColumnBridge.{references, tree}
   *      then moves the data (layout preserved through the plan freeze),
   *      where the round-16 original paid a range exchange here plus a
   *      second full hash exchange at the window.
-  *   2. one hash aggregation computes a per-bucket total (≤ B rows);
-  *   3. each bucket's PREFIX (the aggregate over all earlier buckets) comes
-  *      from a broadcast self-join of the tiny totals frame on
-  *      `prior.bucket < bucket` re-aggregated with the same combine — ≤ B²
-  *      intermediate rows, all arithmetic inside Spark expressions (no
-  *      driver math, so sums/products keep their engine semantics), and no
-  *      single-partition WindowExec anywhere in the plan;
-  *   4. the within-bucket windowed value (`Window.partitionBy(bucket)
-  *      .orderBy(keys)` — B-way parallel) is combined with the broadcast
-  *      prefix per row.
+  *   2. ONE side pass: an aggregate groups the bucketized frame by bucket
+  *      and computes every unit's per-bucket data (totals, head and tail
+  *      rows, run boundaries) — ≤ B rows;
+  *   3. each bucket's PREFIX (the aggregate over all earlier buckets) folds
+  *      over those ≤ B rows with a window ordered by bucket, the same
+  *      combine re-aggregating the prior totals — all arithmetic inside
+  *      Spark expressions (no driver math, so sums/products keep their
+  *      engine semantics); the folded rows are gathered on the driver;
+  *   4. ONE output pass: the within-bucket windowed value
+  *      (`Window.partitionBy(bucket).orderBy(keys)` — B-way parallel) is
+  *      combined per row with its bucket's broadcast prefix. No
+  *      single-partition WindowExec touches the data.
   *
   * Cost vs the single-partition window: the same data volume moves through
   * ONE parallel shuffle (round 19 — the round-16 original paid two, range
@@ -51,10 +56,7 @@ object OrderedAtScale {
 
   /** Internal shadow columns staged on the frame while decomposing. */
   private val BucketCol = "__go_bucket"
-  private val TotCol = "__go_tot"
   private val PriorBucketCol = "__go_pb"
-  private val PriorTotCol = "__go_pt"
-  private val PrefixCol = "__go_prefix"
 
   /** Internal tie-break for the raw-frame rolling decomposition
     * ([[RollGroup]], shifts included): `xxhash64(orderKeys ++ valueExprs)` — a
@@ -80,8 +82,6 @@ object OrderedAtScale {
     // column), dropping one from the hash
     xxhash64((orderBy.map(col) ++ values.distinctBy(tree)): _*)
   }
-  private val TotalCol = "__go_total"
-  private val WithinCol = "__go_within"
 
   /** One global ordered computation, decomposed.
     *
@@ -123,8 +123,8 @@ object OrderedAtScale {
     * balanced (Poisson smoothing of the hash collisions — with B ==
     * partitions, ~37% of partitions would be empty and others would hold
     * 3-4 buckets). B only sizes driver-adjacent metadata (the ≤ B-row
-    * totals frame, the O(B²) distributed prefix re-aggregation, the
-    * O(B·k) tail exports), so 4x the partition count is cheap. */
+    * side frame and its folds, the O(B·k) tail exports), so 4x the
+    * partition count is cheap. */
   private def bucketCount(df: DataFrame): Int = {
     val conf = df.sparkSession.conf
     conf.getOption("spark.graft.orderedBuckets").map(_.toInt)
@@ -151,9 +151,8 @@ object OrderedAtScale {
     * once, and [[org.apache.spark.sql.graftbridge.PlanBarrier
     * .freezeHashClustered]] pins both the shuffle (map outputs shared by
     * every consumer job, the same sharing the old freeze provided) AND its
-    * `HashPartitioning(bucket, p)`, so the totals aggregation, the prefix
-    * re-aggregation, and the within-bucket window all run with ZERO
-    * further data movement.
+    * `HashPartitioning(bucket, p)`, so the side aggregate and the
+    * within-bucket windows all run with ZERO further data movement.
     *
     * Correctness is unchanged by construction: bucket order is key order
     * and equal keys share a bucket (the two properties the prefix
@@ -234,10 +233,10 @@ object OrderedAtScale {
     def desc: Boolean
   }
 
-  /** A [[GlobalOrderedSpec]] writing `outName`. Every Ordered unit of a
-    * level shares ONE totals aggregation, ONE b² prefix join and ONE global
-    * total; per-unit windows differ only by their sort (same partitioning,
-    * never an extra exchange). */
+  /** A [[GlobalOrderedSpec]] writing `outName`. Its bucket total rides the
+    * level's one side aggregate, its prefix and global total the one fold;
+    * per-unit windows differ only by their sort (same partitioning, never
+    * an extra exchange). */
   final case class Ordered(outName: String, spec: GlobalOrderedSpec) extends LevelUnit {
     def key: Seq[String] = spec.orderBy
     def desc: Boolean = spec.desc
@@ -273,10 +272,11 @@ object OrderedAtScale {
 
   /** The `rolling_*_by` own-frame mode of a [[RollByGroup]] part:
     * [[NoOwn]] (the native `within` value carries the own part —
-    * sum/min/max), [[OwnState]] (a constant-memory state window on the
-    * boundary branch — mean's (sum, count), the moments' (n, mean, M2)),
-    * or [[OwnRaw]] (a raw collect_list — percentiles only, where no
-    * decomposition exists — behind the same loud `maxTailRows` valve).
+    * sum/min/max), [[OwnState]] (a constant-memory state window — mean's
+    * (sum, count), the moments' (n, mean, M2)), or [[OwnRaw]] (a raw
+    * collect_list — percentiles only, where no decomposition exists —
+    * behind the same loud `maxTailRows` valve). Own frames are computed on
+    * every row of the output pass and read on boundary rows only.
     * Memory contract: a boundary row never materializes its raw frame as a
     * per-row array when the aggregate decomposes — on a dense `by` axis
     * that is O(density²) bytes (it OOM'd the x100 rehearsal). */
@@ -315,11 +315,11 @@ object OrderedAtScale {
     * `orderBy`, a run being a maximal stretch of consecutive
     * null-safe-equal `valueCol` values (the no-`partition_by` form of
     * `rle`/`rle_id`). Runs can span buckets, so per-bucket run ids are
-    * chain-merged: one (first value, last value, run count) row per bucket
-    * is collected (≤ B rows, bounded by [[MaxRunIdBuckets]]) and
-    * prefix-chained into per-bucket offsets, decrementing once wherever
-    * the previous bucket's last value equals this bucket's first value
-    * under Spark's ordering — the `<=>` the within-bucket runs use. */
+    * chain-merged: the side pass yields one (first value, last value, run
+    * count) row per bucket, and a window over those rows folds them into
+    * per-bucket offsets, decrementing once wherever the previous non-empty
+    * bucket's last value `<=>` this bucket's first value — the equality
+    * the within-bucket runs use. */
   final case class RunIdUnit(
       valueCol: String,
       orderBy: Seq[String],
@@ -328,9 +328,9 @@ object OrderedAtScale {
     def key: Seq[String] = orderBy
   }
 
-  /** Run-id chain-merges collect one row per bucket to the driver; more
-    * buckets than this is a misconfiguration, refused loudly. */
-  private val MaxRunIdBuckets = 100000
+  /** Every level gathers its side data (≤ one row per bucket) on the
+    * driver; more buckets than this is a misconfiguration, refused loudly. */
+  private val MaxBuckets = 100000
 
   /** THE entry into the engine: ONE fused decomposition level. Every
     * global ordered family — [[Ordered]] specs, raw-frame rolling batches
@@ -350,13 +350,20 @@ object OrderedAtScale {
     * per-unit semantics — including the per-batch tie contract — are
     * bit-identical to a level of that unit alone.
     *
-    * Plan shape: side frames (ord totals/prefixes, rolling tail/head
-    * exports, run-id chain rows) are all built off the bare bucketized
-    * leaf, so their broadcast jobs re-read the one shuffle without
-    * recomputing the main stream's windows; the main stream applies
-    * run-ids, then ordered combines, then the rolling branch split. The
-    * single interior/boundary union is shared by every rolling group
-    * (per-group `when(boundary_g, recomposed).otherwise(within_g)`).
+    * Plan shape: the bucketized leaf is read twice.
+    *  - Side pass: ONE aggregate groups the leaf by bucket and computes
+    *    every unit's per-bucket data at once (ordered totals, rolling head
+    *    and tail rows, `rolling_*_by` tails and minimum, run-id first/last
+    *    values and run count): ≤ b rows. Prefixes, global totals, prior
+    *    tails and run-id offsets fold over those rows with windows ordered
+    *    by bucket (engine arithmetic; the bucket is aliased to `__go_pb`
+    *    for recency recombines). The folded frame is gathered on the
+    *    driver and re-enters the plan as a local relation.
+    *  - Output pass: one stream computes every unit's within-bucket
+    *    windows, broadcast-joins the per-bucket scalars (prefixes, totals,
+    *    offsets, `by` minima) to every row and the per-bucket arrays (head
+    *    and tail rows) to boundary rows only, and writes each output as
+    *    `when(boundary, recomposed).otherwise(within)`.
     *
     * @param sampleFrom frame to draw the cut sample from (see
     *        [[bucketize]]); `df` itself when absent */
@@ -383,8 +390,11 @@ object OrderedAtScale {
       throw new IllegalArgumentException(
         s"global ordered derive: input frame already has internal shadow column '$n' — " +
           "rename it first"))
-    val p = partitionCount(df)
     val b = bucketCount(df)
+    require(b <= MaxBuckets,
+      s"global ordered derive: $b ordered buckets > $MaxBuckets — each level gathers one " +
+        "side-data row per bucket on the driver; lower spark.graft.orderedBuckets (default: " +
+        "4x spark.sql.shuffle.partitions)")
     // duplicate-key decorrelation for the cut sample: a heavy-multiplicity
     // key whose single hash ranked low could otherwise fill the whole
     // TakeOrdered sample and collapse the cuts, so every unit's value
@@ -393,345 +403,199 @@ object OrderedAtScale {
       runIds.map(_.valueCol)).distinct
     val extras: Seq[Column] = ordExtraNames.map(col) ++
       rollGroups.flatMap(_.parts.map(_._2)) ++ rollByGroups.flatMap(_.parts.map(_._2))
-    val bucketed0 = bucketize(df, bucketBy, desc, extras, sampleFrom)
+    val bucketed = bucketize(df, bucketBy, desc, extras, sampleFrom)
 
-    var stream = bucketed0
+    // Each unit adds to: the side pass (window columns, then per-bucket
+    // aggregates), the fold over the bucket-ordered side rows (recombines
+    // and plain window columns), the side columns the output pass joins
+    // (scalars to every row, arrays to boundary rows), and the output pass
+    // (window columns, boundary predicates, outputs).
+    val sideCols = ArrayBuffer.empty[(String, Column)]
+    val sideAggs = ArrayBuffer.empty[Column]
+    val prefixAggs = ArrayBuffer.empty[(String, Column)]
+    val totalAggs = ArrayBuffer.empty[(String, Column)]
+    val folds = ArrayBuffer.empty[(String, Column)]
+    val scalars = ArrayBuffer.empty[String]
+    val arrays = ArrayBuffer.empty[String]
+    val mainCols = ArrayBuffer.empty[(String, Column)]
+    val boundaries = ArrayBuffer.empty[Column]
+    val outs = ArrayBuffer.empty[(String, Column)]
+    val bucketW = Window.partitionBy(col(BucketCol))
+    val byBucket = Window.orderBy(col(BucketCol))
+    def dir(c: Column): Column = if (desc) c.desc else c.asc
+    def orderOf(keys: Seq[String]): Seq[Column] = keys.map(n => dir(col(n)))
 
-    // ---- run ids (first: their chain-merge collect then never executes
-    // the other families' windows) -----------------------------------------
-    if (runIds.nonEmpty) {
-      require(b <= MaxRunIdBuckets,
-        s"rle_id: $b ordered buckets > $MaxRunIdBuckets — the driver chain-merge collects " +
-          "one row per bucket; lower spark.graft.orderedBuckets (default: 4x " +
-          "spark.sql.shuffle.partitions)")
-      val ridCols = runIds.indices.map(i => s"__go_rid_$i")
-      val staged = runIds.zipWithIndex.foldLeft(bucketed0) { case (acc, (u, i)) =>
-        val ordCols = u.orderBy.map(n => if (u.desc) col(n).desc else col(n).asc)
-        val w = Window.partitionBy(col(BucketCol)).orderBy(ordCols: _*)
-        val x = col(u.valueCol)
-        val chg = when(row_number().over(w) === 1, lit(0L))
-          .otherwise((!(x <=> lag(x, 1).over(w))).cast("long"))
-        acc.withColumn(ridCols(i),
-          sum(chg).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      }
-      // one hash-clustered barrier for ALL chain collects + the rest of
-      // the level (the old plain freeze lost the partitioning declaration
-      // — a fused level continues above this leaf and must not re-shuffle)
-      val frozen = org.apache.spark.sql.graftbridge.PlanBarrier
-        .freezeHashClustered(staged, p, BucketCol)
-      stream = frozen
-      for ((u, i) <- runIds.zipWithIndex) {
-        val x = col(u.valueCol)
-        val key = struct(u.orderBy.map(col): _*)
-        val firstAgg =
-          if (u.desc) max_by(struct(x.as("v")), key) else min_by(struct(x.as("v")), key)
-        val lastAgg =
-          if (u.desc) min_by(struct(x.as("v")), key) else max_by(struct(x.as("v")), key)
-        val chain = frozen.groupBy(col(BucketCol)).agg(
-          firstAgg.as("__go_first"), lastAgg.as("__go_last"),
-          (max(col(ridCols(i))) + 1L).as("__go_runs"))
-          .select(col(BucketCol), col("__go_first.v").as("firstV"),
-            col("__go_last.v").as("lastV"), col("__go_runs"))
-          .collect()
-          .sortBy(_.getInt(0))
-        // driver chain-merge over ≤ b rows: offset accumulation with a
-        // merge decrement whenever adjacent non-empty buckets share a run.
-        // "Share" is Spark's ordering equality, the `<=>` of the
-        // within-bucket runs — Scala `==` would split NaN runs and compare
-        // binary values by reference
-        val dts = Seq(frozen.select(x).schema.head.dataType)
-        val same = graft.sparkext.RangeBucketId.tupleOrdering(dts, desc = false)
-        def value(r: org.apache.spark.sql.Row, i: Int): Seq[Any] =
-          graft.sparkext.RangeBucketId.toCatalystCut(Seq(r.get(i)), dts)
-        var running = 0L
-        var prevLast: Option[Seq[Any]] = None
-        val offsets = chain.map { r =>
-          val merged = prevLast.exists(same.compare(_, value(r, 1)) == 0)
-          val off = running - (if (merged) 1L else 0L)
-          running = off + r.getLong(3)
-          prevLast = Some(value(r, 2))
-          (r.getInt(0), off)
-        }.toSeq
-        import df.sparkSession.implicits._
-        val offDf = offsets.toDF(BucketCol, "__go_off")
-        stream = stream.join(broadcast(offDf), Seq(BucketCol), "left")
-          .withColumn(u.outName, col("__go_off") + col(ridCols(i)))
-          .drop(ridCols(i), "__go_off")
+    for (((outName, s), i) <- ordSpecs.zipWithIndex) {
+      val (tot, pfx, total, within) =
+        (s"__go_tot$i", s"__go_prefix$i", s"__go_total$i", s"__go_within$i")
+      sideAggs += s.bucketAgg.as(tot)
+      prefixAggs += pfx -> s.recombine(col(tot))
+      totalAggs += total -> s.recombine(col(tot))
+      scalars ++= Seq(pfx, total)
+      mainCols += within -> s.within(bucketW.orderBy(orderOf(s.orderBy): _*))
+      outs += outName -> s.combine(col(pfx), col(total), col(within))
+    }
+
+    for ((u, i) <- runIds.zipWithIndex) {
+      val (chgC, firstC, lastC, runsC, mergedC, offC, ridC) = (s"__go_chg$i", s"__go_first$i",
+        s"__go_last$i", s"__go_runs$i", s"__go_merged$i", s"__go_off$i", s"__go_rid$i")
+      val w = bucketW.orderBy(orderOf(u.orderBy): _*)
+      val x = col(u.valueCol)
+      val chg = when(row_number().over(w) === 1, lit(0L))
+        .otherwise((!(x <=> lag(x, 1).over(w))).cast("long"))
+      val key = struct(u.orderBy.map(col): _*)
+      val v = struct(x.as("v")) // a null value still makes a non-null struct
+      sideCols += chgC -> chg
+      sideAggs ++= Seq((if (desc) max_by(v, key) else min_by(v, key)).as(firstC),
+        (if (desc) min_by(v, key) else max_by(v, key)).as(lastC),
+        (sum(col(chgC)) + 1L).as(runsC))
+      // a run continues into the next non-empty bucket when the previous
+      // last value equals this first one under `<=>`, the within-bucket
+      // runs' equality (NaN <=> NaN, binary by content)
+      folds += mergedC -> (lag(col(lastC), 1).over(byBucket) <=> col(firstC)).cast("long")
+      folds += offC -> (coalesce(sum(col(runsC) - col(mergedC))
+        .over(byBucket.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)) - col(mergedC))
+      scalars += offC
+      mainCols += ridC -> sum(chg).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+      outs += u.outName -> (col(offC) + col(ridC))
+    }
+
+    for ((g, gi) <- rollGroups.zipWithIndex) {
+      val n = g.k - 1
+      val (tieC, rnC, headC, tailsC, pfxC) =
+        (s"__go_tb$gi", s"__go_rn$gi", s"__go_head$gi", s"__go_tails$gi", s"__go_ptail$gi")
+      val tie = tieExpr(g.orderBy, g.parts.map(_._2))
+      val w = bucketW.orderBy(orderOf(g.orderBy) :+ dir(col(tieC)): _*)
+      // head/tail rows sort as the window does: tb sits between the order
+      // keys and the values
+      val row = struct((g.orderBy.zipWithIndex.map { case (o, j) => col(o).as(s"o$j") } ++
+        Seq(col(tieC).as("tb")) ++
+        g.parts.zipWithIndex.map { case ((_, x, _, _), j) => x.as(s"x$j") }): _*)
+      sideCols ++= Seq(tieC -> tie, headC -> (row_number().over(w) <= n),
+        tailsC -> lead(lit(1), n).over(w).isNull)
+      sideAggs ++= Seq(sort_array(collect_list(when(col(headC), row)), asc = !desc).as(headC),
+        collect_list(when(col(tailsC), row)).as(tailsC))
+      // every side row is a non-empty bucket holding ≥ 1 tail row, so the
+      // n prior rows hold the last n rows before this bucket
+      val prior = sort_array(flatten(collect_list(col(tailsC)).over(byBucket.rowsBetween(-n, -1))),
+        asc = !desc)
+      folds += pfxC -> when(size(prior) > n, slice(prior, -n, n)).otherwise(prior)
+      arrays ++= Seq(pfxC, headC)
+      mainCols += tieC -> tie
+      mainCols ++= g.parts.zipWithIndex.map { case ((_, _, rollingAgg, _), pi) =>
+        s"__go_roll${gi}_$pi" -> rollingAgg(w) }
+      mainCols += rnC -> row_number().over(w)
+      val isB = col(rnC) <= n
+      boundaries += isB
+      // a boundary row's frame: the last k - rn prior-bucket tail rows,
+      // then its own bucket's first rn rows
+      val rn = col(rnC).cast("long")
+      val p0 = col(pfxC)
+      val want = lit(g.k.toLong) - rn
+      val cnt = least(size(p0).cast("long"), want).cast("int")
+      val tailSlice = when(p0.isNotNull && cnt > 0,
+        slice(p0, greatest(lit(1), size(p0) - want.cast("int") + 1), cnt))
+      val ownSlice = slice(col(headC), lit(1), col(rnC))
+      for (((outName, _, _, frameAgg), pi) <- g.parts.zipWithIndex) {
+        val ownXs = transform(ownSlice, _.getField(s"x$pi"))
+        val frameVals = when(tailSlice.isNull, ownXs)
+          .otherwise(concat(transform(tailSlice, _.getField(s"x$pi")), ownXs))
+        outs += outName -> when(isB, frameAgg(frameVals)).otherwise(col(s"__go_roll${gi}_$pi"))
       }
     }
 
-    // ---- ordered specs: ONE totals agg + ONE b² prefix join + ONE global
-    // total across every batch; per-spec windows (same partitioning, so
-    // extra orderings cost a sort, never an exchange) ----------------------
-    if (ordSpecs.nonEmpty) {
-      val idx = ordSpecs.indices
-      // per-bucket totals (≤ b rows; map-side partial agg, tiny shuffle)
-      val totAgg = idx.map(i => ordSpecs(i)._2.bucketAgg.as(s"${TotCol}_$i"))
-      val totals = bucketed0.groupBy(col(BucketCol)).agg(totAgg.head, totAgg.tail: _*)
-      // global totals (1 row) — for fns that need N (percent_rank, ntile).
-      // The bucket id is aliased to the prior-bucket name so recency-based
-      // recombines (forward fill's "latest non-null bucket") resolve here
-      // too — the total is then the whole-frame prefix.
-      val gtAgg = idx.map(i =>
-        ordSpecs(i)._2.recombine(col(s"${TotCol}_$i")).as(s"${TotalCol}_$i"))
-      val globalTotal = totals
-        .select(col(BucketCol).as(PriorBucketCol) +: idx.map(i => col(s"${TotCol}_$i")): _*)
-        .agg(gtAgg.head, gtAgg.tail: _*)
-      // per-bucket prefixes: broadcast b² self-join + the same re-aggregates
-      val prior = totals.select(
-        col(BucketCol).as(PriorBucketCol) +:
-          idx.map(i => col(s"${TotCol}_$i").as(s"${PriorTotCol}_$i")): _*)
-      val pfxAgg = idx.map(i =>
-        ordSpecs(i)._2.recombine(col(s"${PriorTotCol}_$i")).as(s"${PrefixCol}_$i"))
-      val prefixes = totals
-        .join(broadcast(prior), col(PriorBucketCol) < col(BucketCol), "left")
-        .groupBy(col(BucketCol))
-        .agg(pfxAgg.head, pfxAgg.tail: _*)
-        .select(col(BucketCol) +: idx.map(i => col(s"${PrefixCol}_$i")): _*)
-      val joined = stream
-        .join(broadcast(prefixes), Seq(BucketCol), "left")
-        .crossJoin(broadcast(globalTotal))
-      val withWithins = joined.withColumns(
-        idx.map { i =>
-          val s = ordSpecs(i)._2
-          val ordCols = s.orderBy.map(n => if (desc) col(n).desc else col(n).asc)
-          val w = Window.partitionBy(col(BucketCol)).orderBy(ordCols: _*)
-          s"${WithinCol}_$i" -> s.within(w)
-        }.toMap)
-      stream = withWithins.withColumns(
-        idx.map(i => ordSpecs(i)._1 -> ordSpecs(i)._2.combine(
-          col(s"${PrefixCol}_$i"), col(s"${TotalCol}_$i"), col(s"${WithinCol}_$i"))).toMap)
-        .drop(idx.flatMap(i =>
-          Seq(s"${PrefixCol}_$i", s"${TotalCol}_$i", s"${WithinCol}_$i")): _*)
-    }
-
-    // ---- rolling families: per-group windows on the main stream, exports
-    // off the bare bucketized leaf, ONE shared interior/boundary union ----
-    if (rollGroups.isEmpty && rollByGroups.isEmpty) stream.drop(BucketCol)
-    else {
-      // raw-frame (row-count) groups
-      case class RM(g: RollGroup, gi: Int) {
-        val n: Int = g.k - 1
-        val ordCols = g.orderBy.map(nm => if (desc) col(nm).desc else col(nm).asc)
-        val revCols = g.orderBy.map(nm => if (desc) col(nm).asc else col(nm).desc)
-        val tieC = s"__go_tb_r$gi"
-        val ordTie = ordCols :+ (if (desc) col(tieC).desc else col(tieC).asc)
-        val revTie = revCols :+ (if (desc) col(tieC).asc else col(tieC).desc)
-        val rnC = s"__go_rn_r$gi"
-        val rollCs = g.parts.indices.map(pi => s"__go_roll_${gi}_$pi")
-        val pfxC = s"__go_pt_r$gi"
-        val headC = s"__go_head_r$gi"
-        def tie: Column = tieExpr(g.orderBy, g.parts.map(_._2))
-        def tailStruct: Column = struct(
-          (g.orderBy.zipWithIndex.map { case (o, i2) => col(o).as(s"o$i2") } ++
-            Seq(col(tieC).as("tb")) ++
-            g.parts.zipWithIndex.map { case ((_, x, _, _), i2) => x.as(s"x$i2") }): _*)
-        def lastN(a: Column): Column = {
-          val s0 = sort_array(a, asc = !desc)
-          when(size(s0) > n, slice(s0, -n, n)).otherwise(s0)
-        }
+    for ((g, bi) <- rollByGroups.zipWithIndex) {
+      val byC = col(g.by)
+      val (loOff, hiOff) = g.closed match {
+        case "right" => (-(g.window - 1), 0L)
+        case "both" => (-g.window, 0L)
+        case "left" => (-g.window, -1L)
+        case "none" => (-(g.window - 1), -1L)
+        case other => throw new IllegalArgumentException(
+          s"rolling_*_by closed='$other' not in right/both/left/none")
       }
-      val rollMetas = rollGroups.zipWithIndex.map { case (g, gi) => RM(g, gi) }
-      // per-group side frames (broadcast): prior-bucket tails + own heads;
-      // built off the bare leaf so their jobs re-read the shuffle without
-      // recomputing the main stream's windows
-      val rollSides = rollMetas.map { m =>
-        val src = bucketed0.withColumn(m.tieC, m.tie)
-        val wRev = Window.partitionBy(col(BucketCol)).orderBy(m.revTie: _*)
-        val wFwd = Window.partitionBy(col(BucketCol)).orderBy(m.ordTie: _*)
-        val tails = src.withColumn("__go_rne", row_number().over(wRev))
-          .filter(col("__go_rne") <= m.n)
-          .groupBy(col(BucketCol)).agg(collect_list(m.tailStruct).as(TotCol))
-        val prefixTails = tails
-          .join(
-            broadcast(tails.select(
-              col(BucketCol).as(PriorBucketCol), col(TotCol).as(PriorTotCol))),
-            col(PriorBucketCol) < col(BucketCol), "left")
-          .groupBy(col(BucketCol))
-          .agg(m.lastN(flatten(collect_list(col(PriorTotCol)))).as(m.pfxC))
-          .select(col(BucketCol), col(m.pfxC))
-        // head export: the bucket's first k−1 rows in frame order (struct
-        // sort == window order by construction: tb sits between the order
-        // keys and the values)
-        val heads = src.withColumn("__go_rn", row_number().over(wFwd))
-          .filter(col("__go_rn") <= m.n)
-          .groupBy(col(BucketCol))
-          .agg(sort_array(collect_list(m.tailStruct), asc = !desc).as(m.headC))
-        (m, prefixTails, heads)
-      }
-      // range-framed groups
-      case class BM(g: RollByGroup, hi: Int) {
-        val byC: Column = col(g.by)
-        val offs: (Long, Long) = g.closed match {
-          case "right" => (-(g.window - 1), 0L)
-          case "both" => (-g.window, 0L)
-          case "left" => (-g.window, -1L)
-          case "none" => (-(g.window - 1), -1L)
-          case other => throw new IllegalArgumentException(
-            s"rolling_*_by closed='$other' not in right/both/left/none")
-        }
-        val loOff: Long = offs._1
-        val hiOff: Long = offs._2
-        val withinCs = g.parts.indices.map(pi => s"__go_wb_${hi}_$pi")
-        val ownCs = g.parts.indices.map(pi => s"__go_ownxs_${hi}_$pi")
-        val bminC = s"__go_bmin_$hi"
-        val bmaxC = s"__go_bmax_$hi"
-        val pfxC = s"__go_pbt_$hi"
-        def tailStruct: Column = struct(
-          (byC.as("b") +: g.parts.zipWithIndex.map {
-            case ((_, x, _, _, _), i2) => x.as(s"x$i2") }): _*)
-        def capped(frame: DataFrame, arr: String, what: String): DataFrame =
-          frame.filter(
-            when(size(col(arr)) > g.maxTailRows,
-              raise_error(concat(
-                lit(s"rolling_*_by: $what exceeds maxTailRows=${g.maxTailRows} (got "),
-                size(col(arr)).cast("string"),
-                lit(s") — the '${g.by}' axis is too dense for window=${g.window}; raise " +
-                  "maxTailRows deliberately or shrink the window"))).cast("boolean"))
-              .otherwise(lit(true)))
-      }
-      val rollByMetas = rollByGroups.zipWithIndex.map { case (g, hi) => BM(g, hi) }
-      val rollBySides = rollByMetas.map { m =>
-        val wBucket = Window.partitionBy(col(BucketCol))
-        val src = bucketed0.withColumn(m.bmaxC, max(m.byC).over(wBucket))
-        // export: rows within the last `window` of the bucket's by-range
-        // (superset of what any later row can reach)
-        val tails = m.capped(
-          src.filter(m.byC >= col(m.bmaxC) - lit(m.g.window - 1))
-            .groupBy(col(BucketCol)).agg(collect_list(m.tailStruct).as(TotCol)),
-          TotCol, "a bucket's tail export")
-        val bounds = bucketed0.groupBy(col(BucketCol)).agg(min(m.byC).as("__go_pbmin"))
-        val prefixTails = m.capped(
-          bounds
-            .join(
-              broadcast(tails.select(
-                col(BucketCol).as(PriorBucketCol), col(TotCol).as(PriorTotCol))),
-              col(PriorBucketCol) < col(BucketCol), "left")
-            .groupBy(col(BucketCol), col("__go_pbmin"))
-            .agg(flatten(collect_list(col(PriorTotCol))).as(PriorTotCol))
-            .select(col(BucketCol),
-              sort_array(filter(col(PriorTotCol),
-                e => e.getField("b") >= col("__go_pbmin") + lit(m.loOff))).as(m.pfxC)),
-          m.pfxC, "a bucket's merged prior-tail prefix")
-        (m, prefixTails)
-      }
-      // main-stream window columns (every group shares the one exchange;
-      // extra orderings are sorts within the same partitioning)
-      var staged = stream
-      for (m <- rollMetas) {
-        staged = staged.withColumn(m.tieC, m.tie)
-        val w = Window.partitionBy(col(BucketCol)).orderBy(m.ordTie: _*)
-        staged = m.g.parts.zipWithIndex.foldLeft(staged) {
-          case (acc2, ((_, _, rollingAgg, _), pi)) =>
-            acc2.withColumn(m.rollCs(pi), rollingAgg(w))
-        }.withColumn(m.rnC, row_number().over(w))
-      }
-      for (m <- rollByMetas) {
-        val wBucket = Window.partitionBy(col(BucketCol))
-        val wb = wBucket.orderBy(m.byC).rangeBetween(m.loOff, m.hiOff)
-        staged = m.g.parts.zipWithIndex.foldLeft(staged) {
-          case (acc2, ((_, _, rangeAgg, _, _), pi)) =>
-            acc2.withColumn(m.withinCs(pi), rangeAgg(wb))
-        }.withColumn(m.bminC, min(m.byC).over(wBucket))
-      }
-      // The interior/boundary union reads `staged` in two branches and
-      // nothing materializes it: each branch's tasks evaluate the level's
-      // windows over the one bucket shuffle. A FUSED level (more than one
-      // family, or any ordered/run-id unit) freezes `staged`
-      // hash-clustered on the bucket before the split. No exchange is
-      // planned for it — the windows keep the bucketized leaf's
-      // `HashPartitioning(bucket, p)` — so the freeze is a plan barrier
-      // only; it stays because fused q169 measured 3× slower without one
-      // (OPTIMIZATION_r20.md, "Measured pitfall").
-      val fusedAbove = ordSpecs.nonEmpty || runIds.nonEmpty ||
-        (rollGroups.length + rollByGroups.length) > 1
-      if (fusedAbove)
-        staged = org.apache.spark.sql.graftbridge.PlanBarrier.freezeHashClustered(
-          staged, p, BucketCol)
-      def rollPred(m: RM): Column = col(m.rnC) <= m.n
-      // a null `by` is never a boundary row (its range frame is the
-      // bucket's null rows); without the coalesce it fell out of both
-      // branches of the union
-      def rollByPred(m: BM): Column = coalesce((m.byC + lit(m.loOff)) < col(m.bminC), lit(false))
-      val anyB = (rollMetas.map(rollPred) ++ rollByMetas.map(rollByPred)).reduce(_ || _)
-      // interior branch: every group's plain within value
-      var interior = staged.filter(!anyB)
-      for (m <- rollMetas; ((outName, _, _, _), pi) <- m.g.parts.zipWithIndex)
-        interior = interior.withColumn(outName, col(m.rollCs(pi)))
-      for (m <- rollByMetas; ((outName, _, _, _, _), pi) <- m.g.parts.zipWithIndex)
-        interior = interior.withColumn(outName, col(m.withinCs(pi)))
-      // boundary branch: rows boundary for ANY group; each group's output
-      // recomposes only where ITS predicate holds (frame-containment keeps
-      // the branch self-sufficient: all of a boundary row's frame members
-      // are boundary rows of the same group, so the superset branch adds
-      // no pollution and misses nothing)
-      var boundary = staged.filter(anyB)
-      for ((m, prefixTails, heads) <- rollSides)
-        boundary = boundary
-          .join(broadcast(prefixTails), Seq(BucketCol), "left")
-          .join(broadcast(heads), Seq(BucketCol), "left")
-      for ((m, prefixTails) <- rollBySides)
-        boundary = boundary.join(broadcast(prefixTails), Seq(BucketCol), "left")
-      for (m <- rollMetas) {
-        val isB = rollPred(m)
-        val rn = col(m.rnC).cast("long")
-        val p0 = col(m.pfxC)
-        val want = lit(m.g.k.toLong) - rn
-        val start = greatest(lit(1), size(p0) - want.cast("int") + 1)
-        val cnt = least(size(p0).cast("long"), want).cast("int")
-        val tailSlice = when(p0.isNotNull && cnt > 0, slice(p0, start, cnt))
-        val ownSlice = slice(col(m.headC), lit(1), col(m.rnC))
-        for (((outName, _, _, frameAgg), pi) <- m.g.parts.zipWithIndex) {
-          val ownXs = transform(ownSlice, _.getField(s"x$pi"))
-          val frameVals = when(tailSlice.isNull, ownXs)
-            .otherwise(concat(transform(tailSlice, _.getField(s"x$pi")), ownXs))
-          boundary = boundary.withColumn(outName,
-            when(!isB, col(m.rollCs(pi))).otherwise(frameAgg(frameVals)))
-        }
-      }
-      for (m <- rollByMetas) {
-        val isB = rollByPred(m)
-        val wb = Window.partitionBy(col(BucketCol)).orderBy(m.byC)
-          .rangeBetween(m.loOff, m.hiOff)
-        for (((_, x, _, own, _), pi) <- m.g.parts.zipWithIndex) own match {
-          case NoOwn =>
-            boundary = boundary.withColumn(m.ownCs(pi), lit(null).cast("array<double>"))
+      val (bmaxC, bminC, tailsC, pfxC) =
+        (s"__go_bmax$bi", s"__go_bmin$bi", s"__go_btails$bi", s"__go_pbt$bi")
+      def capped(arr: Column, what: String): Column =
+        when(size(arr) > g.maxTailRows, raise_error(concat(
+          lit(s"rolling_*_by: $what exceeds maxTailRows=${g.maxTailRows} (got "),
+          size(arr).cast("string"),
+          lit(s") — the '${g.by}' axis is too dense for window=${g.window}; raise " +
+            "maxTailRows deliberately or shrink the window")))).otherwise(arr)
+      // export: rows within the last `window` of the bucket's by-range (a
+      // superset of what any later row can reach)
+      sideCols += bmaxC -> max(byC).over(bucketW)
+      sideAggs ++= Seq(collect_list(when(byC >= col(bmaxC) - lit(g.window - 1),
+        struct((byC.as("b") +: g.parts.zipWithIndex.map { case ((_, x, _, _, _), j) =>
+          x.as(s"x$j") }): _*))).as(tailsC),
+        min(byC).as(bminC))
+      folds += tailsC -> capped(col(tailsC), "a bucket's tail export")
+      folds += pfxC -> capped(sort_array(filter(
+        flatten(collect_list(col(tailsC)).over(byBucket.rowsBetween(Window.unboundedPreceding, -1))),
+        e => e.getField("b") >= col(bminC) + lit(loOff))), "a bucket's merged prior-tail prefix")
+      scalars += bminC
+      arrays += pfxC
+      val wb = bucketW.orderBy(byC).rangeBetween(loOff, hiOff)
+      // a null `by` is never a boundary row: its range frame is the
+      // bucket's other null rows
+      val isB = coalesce((byC + lit(loOff)) < col(bminC), lit(false))
+      boundaries += isB
+      val lo = byC + lit(loOff)
+      val hi = byC + lit(hiOff)
+      val inRange = when(col(pfxC).isNotNull,
+        filter(col(pfxC), e => e.getField("b") >= lo && e.getField("b") <= hi))
+      for (((outName, x, rangeAgg, own, boundaryValue), pi) <- g.parts.zipWithIndex) {
+        val (withinC, ownC) = (s"__go_wb${bi}_$pi", s"__go_own${bi}_$pi")
+        mainCols += withinC -> rangeAgg(wb)
+        val ownXs = own match {
+          case NoOwn => lit(null).cast("array<double>")
           case OwnState(f) =>
-            boundary = boundary.withColumn(m.ownCs(pi), f(wb))
+            mainCols += ownC -> f(wb)
+            col(ownC)
           case OwnRaw =>
             // raw own frames (percentiles — no decomposition exists): the
-            // frame row count rides the SAME loud valve as the tail
-            // export, GUARDED on this group's own boundary predicate (the
-            // shared branch holds other groups' boundary rows whose
-            // unused own arrays must not trip it)
-            boundary = boundary
-              .withColumn(m.ownCs(pi), collect_list(x).over(wb))
-              .filter(
-                when(isB && size(col(m.ownCs(pi))) > m.g.maxTailRows,
-                  raise_error(concat(
-                    lit(s"rolling_*_by: a boundary row's own frame exceeds " +
-                      s"maxTailRows=${m.g.maxTailRows} (got "),
-                    size(col(m.ownCs(pi))).cast("string"),
-                    lit(s") — the '${m.g.by}' axis is too dense for an exact rolling " +
-                      s"percentile at window=${m.g.window}; pass partition_by, shrink " +
-                      "the window, or raise maxTailRows deliberately"))).cast("boolean"))
-                  .otherwise(lit(true)))
+            // frame row count rides the same loud valve as the tail export,
+            // on this group's boundary rows only
+            mainCols += ownC -> collect_list(x).over(wb)
+            when(isB && size(col(ownC)) > g.maxTailRows, raise_error(concat(
+              lit(s"rolling_*_by: a boundary row's own frame exceeds " +
+                s"maxTailRows=${g.maxTailRows} (got "),
+              size(col(ownC)).cast("string"),
+              lit(s") — the '${g.by}' axis is too dense for an exact rolling " +
+                s"percentile at window=${g.window}; pass partition_by, shrink " +
+                "the window, or raise maxTailRows deliberately")))).otherwise(col(ownC))
         }
-        val lo = m.byC + lit(m.loOff)
-        val hi = m.byC + lit(m.hiOff)
-        val inRange = when(col(m.pfxC).isNotNull,
-          filter(col(m.pfxC), e => e.getField("b") >= lo && e.getField("b") <= hi))
-        for (((outName, _, _, _, boundaryValue), pi) <- m.g.parts.zipWithIndex)
-          boundary = boundary.withColumn(outName,
-            when(!isB, col(m.withinCs(pi)))
-              .otherwise(boundaryValue(transform(inRange, _.getField(s"x$pi")),
-                col(m.ownCs(pi)), col(m.withinCs(pi)))))
+        outs += outName -> when(isB,
+          boundaryValue(transform(inRange, _.getField(s"x$pi")), ownXs, col(withinC)))
+          .otherwise(col(withinC))
       }
-      val shadows = (staged.columns.filter(_.startsWith("__go_")) ++
-        rollSides.flatMap { case (m, _, _) => Seq(m.pfxC, m.headC) } ++
-        rollBySides.map { case (m, _) => m.pfxC } ++
-        rollByMetas.flatMap(_.ownCs)).distinct
-      interior.drop(shadows: _*).unionByName(boundary.drop(shadows: _*))
     }
+
+    // ---- side pass: one aggregate, one fold, gathered on the driver -----
+    val perBucket = sideCols.foldLeft(bucketed) { case (f, (n, c)) => f.withColumn(n, c) }
+      .groupBy(col(BucketCol)).agg(sideAggs.head, sideAggs.tail.toSeq: _*)
+      .withColumn(PriorBucketCol, col(BucketCol))
+    val recombined = Seq(
+      prefixAggs -> byBucket.rowsBetween(Window.unboundedPreceding, -1),
+      totalAggs -> byBucket.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+      .foldLeft(perBucket) { case (f, (aggs, w)) =>
+        if (aggs.isEmpty) f else aggregatesOver(f, aggs.toSeq, w) }
+    val folded = folds.foldLeft(recombined) { case (f, (n, c)) => f.withColumn(n, c) }
+      .select((col(BucketCol) +: (scalars ++ arrays).map(col)).toSeq: _*)
+    val side = df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(folded.collect(): _*), folded.schema)
+
+    // ---- output pass: one stream, every row once ----------------------
+    val staged = mainCols.foldLeft(bucketed) { case (f, (n, c)) => f.withColumn(n, c) }
+    val withScalars =
+      if (scalars.isEmpty) staged
+      else staged.join(broadcast(side.select((col(BucketCol) +: scalars.map(col)).toSeq: _*)),
+        Seq(BucketCol), "left")
+    val joined = boundaries.reduceOption(_ || _).fold(withScalars) { anyB =>
+      val arr = side.select((col(BucketCol).as("__go_ab") +: arrays.map(col)).toSeq: _*)
+      withScalars.join(broadcast(arr), col(BucketCol) === col("__go_ab") && anyB, "left")
+    }
+    val out = joined.withColumns(ListMap(outs.toSeq: _*))
+    out.drop(out.columns.filter(_.startsWith("__go_")).toSeq: _*)
   }
 }

@@ -5109,7 +5109,7 @@ object Queries {
   /** GLOBAL `rle` builtin (length-changing run compression with no
     * partition keys): runs of `event_type` along the total (ts, event_id)
     * order compress through a [[graft.expr.OrderedAtScale.RunIdUnit]] level —
-    * per-bucket run ids + a driver chain-merge over ≤ B boundary rows, so
+    * per-bucket run ids chain-merged over ≤ B per-bucket side rows, so
     * runs spanning range-bucket boundaries land ONE id and the plan
     * carries no single-partition window. */
   val q165: QueryFn = (s, d) =>

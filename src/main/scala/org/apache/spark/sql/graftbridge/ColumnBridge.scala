@@ -1,10 +1,15 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, NamedExpression,
+  WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project, Window => WindowNode}
 import org.apache.spark.sql.classic.{ColumnNodeExpression, ColumnNodeToExpressionConverter,
-  ExpressionUtils}
+  Dataset, ExpressionUtils}
+import org.apache.spark.sql.expressions.WindowSpec
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Column <-> Catalyst Expression interop for custom expressions.
   *
@@ -41,5 +46,27 @@ object ColumnBridge {
       case other => other.children.iterator.flatMap(walk).toSet
     }
     walk(expression(c))
+  }
+
+  /** `df` plus one column per `(name, agg)`, where `agg` is an aggregate
+    * expression (aggregate functions, possibly nested inside other
+    * expressions, as `groupBy().agg` accepts) evaluated over `window` on
+    * every row: each aggregate function inside becomes a window function
+    * over that frame. The `Column` API can only window a whole aggregate,
+    * not `aggregate(sort_array(collect_list(x)), ...)`. */
+  def aggregatesOver(df: DataFrame, aggs: Seq[(String, Column)], window: WindowSpec): DataFrame = {
+    val ds = df.asInstanceOf[Dataset[Row]]
+    val spec = ds.select(count(lit(1)).over(window)).queryExecution.analyzed.collectFirst {
+      case w: WindowNode => w.windowExpressions.head.collectFirst {
+        case e: WindowExpression => e.windowSpec
+      }.get
+    }.get
+    val named = aggs.map { case (n, a) => a.as(n) }
+    val agg = ds.agg(named.head, named.tail: _*).queryExecution.analyzed
+      .collectFirst { case a: Aggregate => a }.get
+    val windowed = agg.aggregateExpressions.map(_.transformUp {
+      case ae: AggregateExpression => WindowExpression(ae, spec)
+    }.asInstanceOf[NamedExpression])
+    Dataset.ofRows(ds.sparkSession, Project(agg.child.output ++ windowed, agg.child))
   }
 }

@@ -324,12 +324,9 @@ class OrderedAtScaleSpec extends AnyFunSuite {
       out.collect() // finalize AQE so the real executed plan is inspectable
       val windows = flatten(out.queryExecution.executedPlan)
         .collect { case w: WindowExec => w }
-      // rle_id ("h") freezes its bucketed plan for the driver chain-merge,
-      // so its window lives behind the barrier — for everything else the
-      // bucketed window must be visible, and NOWHERE may one be
+      // the bucketed window must be visible, and NOWHERE may one be
       // single-partition
-      if (n != "h")
-        assert(windows.nonEmpty, s"$n: expected a bucketed window in the plan")
+      assert(windows.nonEmpty, s"$n: expected a bucketed window in the plan")
       windows.foreach(w => assert(w.partitionSpec.nonEmpty,
         s"$n: found a single-partition WindowExec — the scale cliff is back:\n$w"))
     }
@@ -359,6 +356,56 @@ class OrderedAtScaleSpec extends AnyFunSuite {
     val rdd = out.queryExecution.toRdd
     assert(shuffles(rdd, collection.mutable.Set.empty).size == 1,
       "cum_sum + shift + diff must fuse into ONE bucketing level")
+  }
+
+  test("SHUFFLE PIN: a fused level reads its bucket shuffle once for side data, once for output") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    // per completed stage: (shuffle bytes read, shuffle bytes written)
+    val stages = java.util.Collections.synchronizedList(new java.util.ArrayList[(Long, Long)]())
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        stages.add((m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten))
+      }
+    }
+    def settled(): Int = { // listener events arrive asynchronously
+      var (prev, same) = (-1, 0)
+      while (same < 3) {
+        Thread.sleep(100)
+        val now = stages.size
+        same = if (now == prev) same + 1 else 0
+        prev = now
+      }
+      prev
+    }
+    val n = 20000L
+    val df = spark.range(n).select((col("id") * 7919 % n).as("t"), (col("id") % 13).as("v"),
+      (col("id") % 5).as("r"))
+    val ord = Map[String, Any]("order_by" -> Seq("t"))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      settled()
+      stages.clear()
+      val out = derive(
+        "cs" -> DeriveSpec("cum_sum", ord + ("col" -> "v")),
+        "rs" -> DeriveSpec("rolling_sum", ord ++ Map("col" -> "v", "window_size" -> 5)),
+        "ri" -> DeriveSpec("rle_id", ord + ("col" -> "r")),
+        "sh" -> DeriveSpec("shift", ord + ("col" -> "v")))(df)
+      val built = settled()
+      out.write.format("noop").mode("overwrite").save()
+      settled()
+      import scala.jdk.CollectionConverters._
+      val all = stages.asScala.toVector
+      val (read, written) = (all.map(_._1).sum, all.map(_._2).sum)
+      assert(read <= 2 * written, s"shuffle read $read > 2 x written $written")
+      // the bucket exchange is the level's one large shuffle; the stages
+      // that read at least half of it are the side pass (while the level
+      // builds) and the output pass (while the result is written)
+      val bucket = all.map(_._2).max
+      val readers = all.zipWithIndex.collect { case ((r, _), i) if 2 * r >= bucket => i < built }
+      assert(readers == Vector(true, false),
+        s"stages reading the bucket shuffle (true = during the build): $readers")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("TIE SAFETY: non-unique order_by — boundary recomposition matches the windowed form " +
