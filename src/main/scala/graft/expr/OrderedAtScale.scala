@@ -421,7 +421,11 @@ object OrderedAtScale {
     val boundaries = ArrayBuffer.empty[Column]
     val outs = ArrayBuffer.empty[(String, Column)]
     val bucketW = Window.partitionBy(col(BucketCol))
-    val byBucket = Window.orderBy(col(BucketCol))
+    // the ≤ b side rows fold in ONE partition; naming it (a constant key,
+    // hash-partitioned into one partition below) keeps Spark's
+    // single-partition window warning, meant for data-sized windows, out
+    // of every level's log
+    val byBucket = Window.partitionBy(lit(0)).orderBy(col(BucketCol))
     def dir(c: Column): Column = if (desc) c.desc else c.asc
     def orderOf(keys: Seq[String]): Seq[Column] = keys.map(n => dir(col(n)))
 
@@ -574,6 +578,7 @@ object OrderedAtScale {
     // ---- side pass: one aggregate, one fold, gathered on the driver -----
     val perBucket = sideCols.foldLeft(bucketed) { case (f, (n, c)) => f.withColumn(n, c) }
       .groupBy(col(BucketCol)).agg(sideAggs.head, sideAggs.tail.toSeq: _*)
+      .repartition(1, lit(0))
       .withColumn(PriorBucketCol, col(BucketCol))
     val recombined = Seq(
       prefixAggs -> byBucket.rowsBetween(Window.unboundedPreceding, -1),
