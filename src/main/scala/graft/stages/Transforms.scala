@@ -344,9 +344,10 @@ object Transforms {
       // The fold: aggs batch with aggs (as before); every GLOBAL family
       // entry joins the pool unless it reads a pooled output, would
       // overwrite one, or would overwrite a column a pooled entry reads
-      // (then the pool flushes first — sequential with_columns semantics). Aggs and the pool flush each other on
-      // family change, preserving the r19 ordering exactly; the pool
-      // itself only widens what can share one exchange.
+      // (then the pool flushes first — sequential with_columns semantics).
+      // Aggs and the pool flush each other on family change, preserving
+      // the r19 ordering exactly; the pool itself only widens what can
+      // share one exchange.
       var acc = df
       var pending: Pending = Nil
       var pool = Vector.empty[PoolEntry]
