@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * aggregates broadcast to rows (`mean`, `sum`, ... with no kwargs beyond
   * `col`) are NOT implemented as an empty-partition window — that collapses
   * the frame to one partition and is a cliff at 100 TB. They return
-  * [[ExprRegistry.WholeFrameAgg]] and the derive stage computes ALL of them
+  * [[ExprRegistry.AggThenRow]] and the derive stage computes ALL of them
   * in one distributed `df.agg(...)` pass, then broadcast-cross-joins the
   * 1-row result back — two scans, zero single-partition stages.
   *
@@ -50,63 +50,24 @@ object ExprRegistry {
   sealed trait Derived
   /** A row-wise column (may internally contain a window). */
   final case class RowWise(col: Column) extends Derived
-  /** A whole-frame scalar aggregate to broadcast onto every row. */
-  final case class WholeFrameAgg(agg: Column) extends Derived
-  /** A whole-frame aggregate feeding a row-wise post-expression (`qcut`:
-    * quantile breakpoints → per-row bin label). The derive stage computes
+  /** A whole-frame aggregate, written through a row-wise post-expression
+    * (`qcut`: quantile breakpoints → per-row bin label; identity for a
+    * plain aggregate broadcast onto every row). The derive stage computes
     * `agg` in a distributed pass, broadcast-cross-joins the 1-row result
-    * under a temp name, applies `row` to it, and drops the temp — same
-    * two-scan shape as [[WholeFrameAgg]], zero single-partition stages. */
-  final case class AggThenRow(agg: Column, row: Column => Column) extends Derived
-  /** A GLOBAL ordered fn (no `partition_by`): the derive stage routes it
-    * as an [[OrderedAtScale.Ordered]] unit through
-    * [[OrderedAtScale.applyLevel]]'s range-bucketed two-level
-    * decomposition, so no config can compile to a single-partition
-    * WindowExec (round-16: the last scale cliff, closed). */
-  final case class GlobalOrdered(spec: OrderedAtScale.GlobalOrderedSpec) extends Derived
+    * under a temp name, applies `row` to it, and drops the temp — two
+    * scans, zero single-partition stages. */
+  final case class AggThenRow(agg: Column, row: Column => Column = identity) extends Derived
+  /** A GLOBAL ordered fn (no `partition_by`): the [[OrderedAtScale]] level
+    * unit writing the given output name. The derive stage pools these and
+    * runs them through [[OrderedAtScale.levels]] and
+    * [[OrderedAtScale.applyLevel]]'s range-bucketed decomposition, so no
+    * config can compile to a single-partition WindowExec. */
+  final case class Global(unit: String => OrderedAtScale.LevelUnit) extends Derived
   /** A frame-level rewrite for global fns that need BOTH order directions
     * (`peak_*`, `interpolate_by`: one [[OrderedAtScale.applyLevel]] per
     * direction): the derive stage calls `build(frame, outName)`. */
   final case class FrameLevel(build: (org.apache.spark.sql.DataFrame, String) =>
     org.apache.spark.sql.DataFrame) extends Derived
-  /** A batchable GLOBAL raw-frame rolling fn (the rolling family and the
-    * shift family): consecutive entries sharing (orderBy, desc, k, tieOf)
-    * fuse into ONE [[OrderedAtScale.RollGroup]] (a 6-statistic config is
-    * one head+tail export, not six). `tieOf` is set for shift-family
-    * entries (the column's text): a shift batches only with shifts of the
-    * same column, so its tie hash stays the per-call `xxhash64(order_by,
-    * x)` whatever rolling fns sit next to it. */
-  final case class GlobalRollingFrame(
-      orderBy: Seq[String],
-      desc: Boolean,
-      k: Int,
-      x: Column,
-      rollingAgg: org.apache.spark.sql.expressions.WindowSpec => Column,
-      frameAgg: Column => Column,
-      tieOf: Option[String] = None) extends Derived {
-    /** This entry alone as a level unit writing `outName`. */
-    def unit(outName: String): OrderedAtScale.RollGroup =
-      OrderedAtScale.RollGroup(orderBy, desc, k, Seq((outName, x, rollingAgg, frameAgg)))
-  }
-  /** The RANGE-framed twin of [[GlobalRollingFrame]]: consecutive entries
-    * sharing (by, window, closed) fuse into ONE
-    * [[OrderedAtScale.RollByGroup]]. */
-  final case class GlobalRollingBy(
-      by: String,
-      window: Long,
-      closed: String,
-      x: Column,
-      rangeAgg: org.apache.spark.sql.expressions.WindowSpec => Column,
-      own: OrderedAtScale.OwnFrame,
-      boundary: (Column, Column, Column) => Column) extends Derived
-  /** A global run-id chain (`rle_id` with no `partition_by`), pooled into a
-    * FUSED level ([[OrderedAtScale.applyLevel]], an
-    * [[OrderedAtScale.RunIdUnit]]) with other same-order globals instead
-    * of paying its own exchange + cut sample. */
-  final case class GlobalRunId(
-      valueCol: String,
-      orderBy: Seq[String],
-      desc: Boolean) extends Derived
 
   type DeriveFn = Map[String, Any] => Derived
 
@@ -212,8 +173,7 @@ object ExprRegistry {
       RowWise(aggF(c(kw)).over(runningFrame(kw, fn)))
     else {
       val (ord, desc) = ordAndDesc(kw, fn)
-      GlobalOrdered(OrderedAtScale.GlobalOrderedSpec(
-        ord, desc,
+      Global(OrderedAtScale.Ordered(_, ord, desc,
         w => aggF(c(kw)).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
         aggF(c(kw)),
         recombine,
@@ -223,7 +183,7 @@ object ExprRegistry {
 
   /** Shift family (`shift`/`diff`/`pct_change`, and `lead` via a negated
     * offset): per-key windowed lag with `partition_by`; the global form is
-    * a [[GlobalRollingFrame]] with k = |n|+1 ([[shiftFrame]]), so it pools
+    * a raw-frame rolling unit with k = |n|+1 ([[shiftFrame]]), so it pools
     * into the fused level with the other same-order globals. `post` wraps
     * the shifted value (diff: `x - shifted`). Offset 0 is the column
     * itself; negative offsets flip the order direction (lead(n) == lag(n)
@@ -238,7 +198,7 @@ object ExprRegistry {
       RowWise(post(x, x))
     } else {
       val (ord, desc) = ordAndDesc(kw, fn)
-      shiftFrame(ord, if (n < 0) !desc else desc, math.abs(n), x, post)
+      Global(shiftFrame(ord, if (n < 0) !desc else desc, math.abs(n), x, post))
     }
   }
 
@@ -246,13 +206,21 @@ object ExprRegistry {
     * rows: interior rows take the within-bucket `lag(x, n)`; a boundary
     * row (within-bucket row number ≤ n) recomposes its frame from the
     * prior buckets' tails, and the row n back is the frame's first element
-    * when the frame is full (a shorter frame means the global start: null). */
+    * when the frame is full (a shorter frame means the global start: null).
+    * `tieOf` keeps it from batching with anything but shifts of `x`. */
   private def shiftFrame(ord: Seq[String], desc: Boolean, n: Int, x: Column,
-      post: (Column, Column) => Column): GlobalRollingFrame =
-    GlobalRollingFrame(ord, desc, n + 1, x,
-      w => post(x, lag(x, n).over(w)),
-      xs => post(x, when(size(xs) === n + 1, element_at(xs, 1))),
+      post: (Column, Column) => Column)(out: String): OrderedAtScale.RollGroup =
+    OrderedAtScale.RollGroup(ord, desc, n + 1, Seq((out, x,
+      (w: WindowSpec) => post(x, lag(x, n).over(w)),
+      (xs: Column) => post(x, when(size(xs) === n + 1, element_at(xs, 1))))),
       tieOf = Some(x.toString))
+
+  /** A one-part raw-frame rolling unit ([[OrderedAtScale.RollGroup]]) as a
+    * global derive: `rollingAgg` within buckets, `frameAgg` over a
+    * boundary row's raw frame values. */
+  private def rollingUnit(ord: Seq[String], desc: Boolean, k: Int, x: Column,
+      rollingAgg: WindowSpec => Column, frameAgg: Column => Column): Derived =
+    Global(out => OrderedAtScale.RollGroup(ord, desc, k, Seq((out, x, rollingAgg, frameAgg))))
 
   /** peak_max/peak_min: strict neighbor comparison in both directions.
     * Global forms stage prev/next with one [[shiftFrame]] level per
@@ -270,7 +238,7 @@ object ExprRegistry {
           throw new IllegalArgumentException(
             s"$fn: input frame already has internal shadow column '$n' — rename it first"))
         def neighbor(d: Boolean, name: String) =
-          Seq(shiftFrame(ord, d, 1, x, (_, s) => s).unit(name))
+          Seq(shiftFrame(ord, d, 1, x, (_, s) => s)(name))
         // the second level samples its cuts from `df` too: same key tuples,
         // without re-running the first level
         val staged = OrderedAtScale.applyLevel(
@@ -286,7 +254,7 @@ object ExprRegistry {
 
   /** Decomposable rolling aggregate (sum/min/max): per-key windowed with
     * `partition_by`. The global form rides the BATCHABLE raw-frame
-    * decomposition ([[GlobalRollingFrame]] → [[OrderedAtScale.RollGroup]]),
+    * decomposition ([[OrderedAtScale.RollGroup]]),
     * so several same-(order, k) decomposable rollings share one head+tail
     * export (q164's rolling_sum + rolling_max), also with any
     * moment-family entries of the same frame.
@@ -308,7 +276,7 @@ object ExprRegistry {
       require(k > 0, s"'$fn' requires a positive 'window_size' kwarg")
       val x = c(kw)
       if (k == 1) RowWise(x) // a 1-row frame is the row itself
-      else GlobalRollingFrame(ord, desc, k, x,
+      else rollingUnit(ord, desc, k, x,
         w => aggF(x).over(w.rowsBetween(-(k.toLong - 1), Window.currentRow)),
         // `zeroWiden` sets the FOLD's accumulator type: rolling_sum widens
         // via `+ 0L` so an int column's boundary fold accumulates in long
@@ -340,24 +308,23 @@ object ExprRegistry {
       require(k > 0, s"'$fn' requires a positive 'window_size' kwarg")
       val x = c(kw)
       if (k == 1) RowWise(frameAgg(kw)(array(x))) // 1-row frame: the row itself
-      else GlobalRollingFrame(ord, desc, k, x,
+      else rollingUnit(ord, desc, k, x,
         w => windowedAgg(kw).over(w.rowsBetween(-(k.toLong - 1), Window.currentRow)),
         frameAgg(kw))
     }
   }
 
-  /** Two-level spec for a GLOBAL ordered fill: within-bucket
+  /** Two-level unit for a GLOBAL ordered fill: within-bucket
     * last-non-null running value patched with the latest non-null value of
     * any PRIOR bucket (selected by bucket recency via min_by/max_by on the
     * order key — per-bucket state is ONE value). `value` may be a struct
     * (interpolate_by packs (v, x)); pass it pre-nulled (`when(valid, …)`)
     * so ignoreNulls skips invalid rows. Flip `desc` for backward fill. */
-  private def fillSpec(value: Column, ord: Seq[String], desc: Boolean)
-    : OrderedAtScale.GlobalOrderedSpec = {
+  private def fill(value: Column, ord: Seq[String], desc: Boolean)(out: String)
+    : OrderedAtScale.Ordered = {
     val key = struct(ord.map(col): _*)
     val keyWhenValid = when(value.isNotNull, key)
-    OrderedAtScale.GlobalOrderedSpec(
-      ord, desc,
+    OrderedAtScale.Ordered(out, ord, desc,
       w => last(value, ignoreNulls = true)
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
       // bucket total: the bucket's LAST (in order) non-null value —
@@ -384,8 +351,7 @@ object ExprRegistry {
       RowWise(windowed(kw, orderedWindow(kw, fn)))
     else {
       val (ord, desc) = ordAndDesc(kw, fn)
-      GlobalOrdered(OrderedAtScale.GlobalOrderedSpec(
-        ord, desc,
+      Global(OrderedAtScale.Ordered(_, ord, desc,
         w => within(kw, w),
         bucketAgg(kw),
         sum,
@@ -467,8 +433,8 @@ object ExprRegistry {
       RowWise(windowedAgg(kw).over(rollingByFrame(kw, fn)))
     else {
       val (w, closed) = rollingByParams(kw, fn)
-      GlobalRollingBy(str(kw, "by"), w, closed, c(kw),
-        ws => windowedAgg(kw).over(ws), own(kw), boundary(kw))
+      Global(out => OrderedAtScale.RollByGroup(str(kw, "by"), w, closed,
+        Seq((out, c(kw), (ws: WindowSpec) => windowedAgg(kw).over(ws), own(kw), boundary(kw)))))
     }
   }
 
@@ -495,7 +461,7 @@ object ExprRegistry {
     when(t.isNull, o).otherwise(concat(t, o))
 
   private def rw(f: Map[String, Any] => Column): DeriveFn = kw => RowWise(f(kw))
-  private def agg(f: Map[String, Any] => Column): DeriveFn = kw => WholeFrameAgg(f(kw))
+  private def agg(f: Map[String, Any] => Column): DeriveFn = kw => AggThenRow(f(kw))
 
   /** Aggregate with polars `.over(keys)` semantics: with a `partition_by`
     * kwarg the aggregate broadcasts per key (an unordered window — one
@@ -512,7 +478,7 @@ object ExprRegistry {
   private def aggOrOverEach(build: (Map[String, Any], Column => Column) => Column): DeriveFn =
     kw => {
       val parts = strSeq(kw, "partition_by")
-      if (parts.isEmpty) WholeFrameAgg(build(kw, identity))
+      if (parts.isEmpty) AggThenRow(build(kw, identity))
       else {
         val w = Window.partitionBy(parts.map(col): _*)
         RowWise(build(kw, a => a.over(w)))
@@ -521,7 +487,7 @@ object ExprRegistry {
 
   private def aggOrOver(f: Map[String, Any] => Column): DeriveFn = kw => {
     val parts = strSeq(kw, "partition_by")
-    if (parts.isEmpty) WholeFrameAgg(f(kw))
+    if (parts.isEmpty) AggThenRow(f(kw))
     else RowWise(f(kw).over(Window.partitionBy(parts.map(col): _*)))
   }
 
@@ -635,7 +601,7 @@ object ExprRegistry {
     // counts a collected set instead (bounded by per-key cardinality)
     "n_unique" -> (kw => {
       val parts = strSeq(kw, "partition_by")
-      if (parts.isEmpty) WholeFrameAgg(countDistinct(c(kw)))
+      if (parts.isEmpty) AggThenRow(countDistinct(c(kw)))
       // cast long: both paths must agree on the result dtype
       else RowWise(size(collect_set(c(kw)).over(Window.partitionBy(parts.map(col): _*)))
         .cast("long"))
@@ -648,7 +614,7 @@ object ExprRegistry {
       val scale = intVal(kw, "scale", 6)
       val parts = strSeq(kw, "partition_by")
       if (parts.isEmpty)
-        WholeFrameAgg(graft.sparkext.DoubleToScaled.exactSum(c(kw), scale))
+        AggThenRow(graft.sparkext.DoubleToScaled.exactSum(c(kw), scale))
       else {
         val w = Window.partitionBy(parts.map(col): _*)
         val v = graft.sparkext.DoubleToScaled.scaled(c(kw), scale)
@@ -736,7 +702,7 @@ object ExprRegistry {
         // note): boundary = exact (sum, count) over the raw frame values
         // then one divide — the same arithmetic the old dedicated
         // tail-exchange boundary produced
-        else GlobalRollingFrame(ord, desc, k, x,
+        else rollingUnit(ord, desc, k, x,
           w => avg(x).over(w.rowsBetween(-(k.toLong - 1), Window.currentRow)),
           xs0 => {
             val xs = filter(xs0, v => v.isNotNull)
@@ -822,8 +788,7 @@ object ExprRegistry {
           val x = c(kw)
           def pair(wrap: Column => Column): Column =
             struct(wrap(sum(x)).as("s"), wrap(count(x)).as("n"))
-          GlobalOrdered(OrderedAtScale.GlobalOrderedSpec(
-            ord, desc,
+          Global(OrderedAtScale.Ordered(_, ord, desc,
             w => pair(_.over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))),
             pair(identity),
             t => struct(sum(t.getField("s")).as("s"), sum(t.getField("n")).as("n")),
@@ -855,8 +820,7 @@ object ExprRegistry {
             struct(n.cast("double").as("n"), m.cast("double").as("m"),
               when(n >= 2L, v * (n.cast("double") - lit(1.0))).otherwise(lit(0.0)).as("m2"))
           }
-          GlobalOrdered(OrderedAtScale.GlobalOrderedSpec(
-            ord, desc,
+          Global(OrderedAtScale.Ordered(_, ord, desc,
             w => mstate(_.over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))),
             mstate(identity),
             t => {
@@ -1204,7 +1168,7 @@ object ExprRegistry {
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       else {
         val (ord, desc) = ordAndDesc(kw, "forward_fill")
-        GlobalOrdered(fillSpec(c(kw), ord, desc))
+        Global(fill(c(kw), ord, desc))
       }
     },
     "backward_fill" -> { kw =>
@@ -1214,7 +1178,7 @@ object ExprRegistry {
             .rowsBetween(Window.currentRow, Window.unboundedFollowing)))
       else {
         val (ord, desc) = ordAndDesc(kw, "backward_fill")
-        GlobalOrdered(fillSpec(c(kw), ord, !desc))
+        Global(fill(c(kw), ord, !desc))
       }
     },
 
@@ -1454,11 +1418,10 @@ object ExprRegistry {
             throw new IllegalArgumentException(
               "interpolate_by: input frame already has internal shadow " +
                 s"column '$n' — rename it first"))
-          def fill(d: Boolean, name: String) =
-            Seq(OrderedAtScale.Ordered(name, fillSpec(pack, ord, d)))
           // the second level samples its cuts from `df` too (same key tuples)
           val staged = OrderedAtScale.applyLevel(
-            OrderedAtScale.applyLevel(df, fill(desc, "__ip_p")), fill(!desc, "__ip_n"), Some(df))
+            OrderedAtScale.applyLevel(df, Seq(fill(pack, ord, desc)("__ip_p"))),
+            Seq(fill(pack, ord, !desc)("__ip_n")), Some(df))
           staged.withColumn(out, interp(
             col("__ip_p.pv"), col("__ip_p.px"),
             col("__ip_n.pv"), col("__ip_n.px")))
@@ -1626,7 +1589,7 @@ object ExprRegistry {
         // first-class so the derive stage can fuse it with same-order
         // globals onto one bucketized frame (round 20)
         val (ord, desc) = ordAndDesc(kw, "rle_id")
-        GlobalRunId(str(kw, "col"), ord, desc)
+        Global(OrderedAtScale.RunIdUnit(str(kw, "col"), ord, desc, _))
       }
     },
     // peak_max/peak_min: strictly greater/less than both neighbors;
@@ -1647,7 +1610,7 @@ object ExprRegistry {
       val x = c(kw).cast("double")
       val parts = strSeq(kw, "partition_by")
       if (parts.isEmpty)
-        WholeFrameAgg(log(sum(x)) - sum(x * log(x)) / sum(x))
+        AggThenRow(log(sum(x)) - sum(x * log(x)) / sum(x))
       else {
         val pw = Window.partitionBy(parts.map(col): _*)
         RowWise(log(sum(x).over(pw)) - sum(x * log(x)).over(pw) / sum(x).over(pw))
@@ -1675,8 +1638,7 @@ object ExprRegistry {
         RowWise(rank().over(orderedWindow(kw, "avg_rank")).cast("double") + half)
       else {
         val desc = kw.get("desc").exists(_.toString.toBoolean)
-        GlobalOrdered(OrderedAtScale.GlobalOrderedSpec(
-          ord, desc,
+        Global(OrderedAtScale.Ordered(_, ord, desc,
           w => rank().over(w).cast("double") + half,
           count(lit(1)),
           sum,

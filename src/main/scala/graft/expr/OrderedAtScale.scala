@@ -83,39 +83,9 @@ object OrderedAtScale {
     xxhash64((orderBy.map(col) ++ values.distinctBy(tree)): _*)
   }
 
-  /** One global ordered computation, decomposed.
-    *
-    * @param orderBy   order-key column names (include a unique tie-break
-    *                  for positional fns — same contract as the windowed
-    *                  forms)
-    * @param desc      reverse the order
-    * @param within    the within-bucket windowed value, given the bucket
-    *                  window `Window.partitionBy(bucket).orderBy(keys)`
-    *                  (may be a struct when the combine needs several
-    *                  running values)
-    * @param bucketAgg per-bucket total — an aggregate expression evaluated
-    *                  once per bucket (may be a struct)
-    * @param recombine aggregate over PRIOR buckets' totals (receives the
-    *                  totals column; may also reference
-    *                  `col("__go_pb")` — the prior bucket id — for
-    *                  latest-bucket selections like forward-fill)
-    * @param combine   (prefix, globalTotal, withinValue) => output; prefix
-    *                  and total are NULL for the first bucket / empty frame
-    */
-  final case class GlobalOrderedSpec(
-      orderBy: Seq[String],
-      desc: Boolean,
-      within: WindowSpec => Column,
-      bucketAgg: Column,
-      recombine: Column => Column,
-      combine: (Column, Column, Column) => Column)
-
-  /** Prior-bucket-id column, for `recombine`s that need recency. */
+  /** Prior-bucket-id column, for an [[Ordered]] `recombine` that needs
+    * recency. */
   def priorBucket: Column = col(PriorBucketCol)
-
-  /** Its name — the derive stage's ref-extraction must not mistake it for
-    * a data column. */
-  private[graft] val priorBucketName: String = PriorBucketCol
 
   /** Bucket count B (distinct bucket ids), DECOUPLED from the partition
     * count since round 19: buckets hash into `spark.sql.shuffle.partitions`
@@ -222,24 +192,66 @@ object OrderedAtScale {
   }
 
   /** Longest common prefix of two order keys. */
-  private[graft] def commonPrefix(a: Seq[String], b: Seq[String]): Seq[String] =
+  private def commonPrefix(a: Seq[String], b: Seq[String]): Seq[String] =
     a.zip(b).takeWhile { case (x, y) => x == y }.map(_._1)
+
+  /** The key a level buckets on: its units' longest common key prefix. */
+  def bucketKey(units: Seq[LevelUnit]): Seq[String] = units.map(_.key).reduce(commonPrefix)
+
+  // Placeholders a unit's `reads` probe passes for the values the engine
+  // supplies (bucket windows, prefixes, frame arrays); like every engine
+  // name they start with `__go_`, and `reads` drops those names.
+  private val probe = col("__go_probe")
+  private def probeW(keys: Seq[String]): WindowSpec =
+    Window.partitionBy(probe).orderBy(keys.map(col): _*)
+  private def readsOf(cs: Column*): Set[String] =
+    cs.flatMap(references).filterNot(_.startsWith("__go_")).toSet
 
   /** One unit of a fused level ([[applyLevel]]). The level buckets on the
     * longest common prefix of its units' `key`s and runs in their shared
-    * `desc` direction. */
+    * `desc` direction. `outs` are the columns the unit writes, `reads` the
+    * input columns it reads (order keys included). */
   sealed trait LevelUnit {
     def key: Seq[String]
     def desc: Boolean
+    def outs: Seq[String]
+    def reads: Set[String]
   }
 
-  /** A [[GlobalOrderedSpec]] writing `outName`. Its bucket total rides the
-    * level's one side aggregate, its prefix and global total the one fold;
-    * per-unit windows differ only by their sort (same partitioning, never
-    * an extra exchange). */
-  final case class Ordered(outName: String, spec: GlobalOrderedSpec) extends LevelUnit {
-    def key: Seq[String] = spec.orderBy
-    def desc: Boolean = spec.desc
+  /** One global ordered computation writing `outName`, decomposed. Its
+    * bucket total rides the level's one side aggregate, its prefix and
+    * global total the one fold; per-unit windows differ only by their sort
+    * (same partitioning, never an extra exchange).
+    *
+    * @param orderBy   order-key column names (include a unique tie-break
+    *                  for positional fns — same contract as the windowed
+    *                  forms)
+    * @param desc      reverse the order
+    * @param within    the within-bucket windowed value, given the bucket
+    *                  window `Window.partitionBy(bucket).orderBy(keys)`
+    *                  (may be a struct when the combine needs several
+    *                  running values)
+    * @param bucketAgg per-bucket total — an aggregate expression evaluated
+    *                  once per bucket (may be a struct)
+    * @param recombine aggregate over PRIOR buckets' totals (receives the
+    *                  totals column; may also reference [[priorBucket]] —
+    *                  the prior bucket id — for latest-bucket selections
+    *                  like forward-fill)
+    * @param combine   (prefix, globalTotal, withinValue) => output; prefix
+    *                  and total are NULL for the first bucket / empty frame
+    */
+  final case class Ordered(
+      outName: String,
+      orderBy: Seq[String],
+      desc: Boolean,
+      within: WindowSpec => Column,
+      bucketAgg: Column,
+      recombine: Column => Column,
+      combine: (Column, Column, Column) => Column) extends LevelUnit {
+    def key: Seq[String] = orderBy
+    def outs: Seq[String] = Seq(outName)
+    lazy val reads: Set[String] =
+      readsOf(bucketAgg, within(probeW(orderBy)), combine(probe, probe, probe)) ++ orderBy
   }
 
   /** A batch of raw-frame rolling fns over the last `k` rows, sharing
@@ -257,8 +269,11 @@ object OrderedAtScale {
     * value exprs extends it to one total order used by the within-bucket
     * windows AND the head/tail struct sorts, so the recomposed frame is the
     * windowed frame by construction. That hash is per BATCH, so fusion must
-    * not merge batches that were separate (the derive stage groups by pool
-    * adjacency). Caveat: rows tied on key AND value order arbitrarily but
+    * not merge batches that were separate ([[levels]] merges adjacent
+    * batches only). `tieOf` is set for the shift family (the shifted
+    * column's text): a shift batches only with shifts of the same column,
+    * so its tie hash stays `xxhash64(orderBy, x)` whatever rolling fns sit
+    * next to it. Caveat: rows tied on key AND value order arbitrarily but
     * consistently. A value-symmetric `frameAgg` cannot see that, nor can a
     * shift (its batch hashes its one column); a positional `frameAgg` over
     * several columns would need a genuinely unique `orderBy`. */
@@ -266,8 +281,12 @@ object OrderedAtScale {
       orderBy: Seq[String],
       desc: Boolean,
       k: Int,
-      parts: Seq[(String, Column, WindowSpec => Column, Column => Column)]) extends LevelUnit {
+      parts: Seq[(String, Column, WindowSpec => Column, Column => Column)],
+      tieOf: Option[String] = None) extends LevelUnit {
     def key: Seq[String] = orderBy
+    def outs: Seq[String] = parts.map(_._1)
+    lazy val reads: Set[String] = parts.flatMap { case (_, x, rollingAgg, frameAgg) =>
+      readsOf(x, rollingAgg(probeW(orderBy)), frameAgg(probe)) }.toSet ++ orderBy
   }
 
   /** The `rolling_*_by` own-frame mode of a [[RollByGroup]] part:
@@ -309,6 +328,14 @@ object OrderedAtScale {
       maxTailRows: Int = 1 << 20) extends LevelUnit {
     def key: Seq[String] = Seq(by)
     def desc: Boolean = false
+    def outs: Seq[String] = parts.map(_._1)
+    lazy val reads: Set[String] = parts.flatMap { case (_, x, rangeAgg, own, boundaryValue) =>
+      val w = probeW(Seq(by))
+      readsOf(x, rangeAgg(w), boundaryValue(probe, probe, probe)) ++ (own match {
+        case OwnState(f) => readsOf(f(w))
+        case _ => Set.empty[String]
+      })
+    }.toSet + by
   }
 
   /** A global run-id assignment: `outName` = 0-based run index along
@@ -326,6 +353,42 @@ object OrderedAtScale {
       desc: Boolean,
       outName: String) extends LevelUnit {
     def key: Seq[String] = orderBy
+    def outs: Seq[String] = Seq(outName)
+    def reads: Set[String] = orderBy.toSet + valueCol
+  }
+
+  /** The fusion policy: a pool of units, in derive order, as the levels to
+    * apply, in order.
+    *  1. Batches next to each other in pool order merge: [[RollGroup]]s
+    *     sharing (orderBy, desc, k, tieOf) and [[RollByGroup]]s sharing
+    *     (by, window, closed, maxTailRows). Only adjacent ones: a batch's
+    *     tie hash covers its value columns, so joining two batches that
+    *     another unit separates would change the tie order under
+    *     non-unique keys.
+    *  2. Units cluster into levels by `desc` and a non-empty common key
+    *     prefix: each joins the first level, in order of first appearance,
+    *     that it fits. Bucketing on the common prefix is sound for every
+    *     extension (see [[applyLevel]]); a [[RollByGroup]]'s key has length
+    *     1, so a prefix it shares IS its `by`. */
+  def levels(units: Seq[LevelUnit]): Seq[Seq[LevelUnit]] = {
+    val batched = units.foldLeft(Vector.empty[LevelUnit]) { (acc, u) =>
+      (acc.lastOption, u) match {
+        case (Some(a: RollGroup), b: RollGroup)
+            if (a.orderBy, a.desc, a.k, a.tieOf) == ((b.orderBy, b.desc, b.k, b.tieOf)) =>
+          acc.init :+ a.copy(parts = a.parts ++ b.parts)
+        case (Some(a: RollByGroup), b: RollByGroup) if (a.by, a.window, a.closed,
+            a.maxTailRows) == ((b.by, b.window, b.closed, b.maxTailRows)) =>
+          acc.init :+ a.copy(parts = a.parts ++ b.parts)
+        case _ => acc :+ u
+      }
+    }
+    batched.foldLeft(Vector.empty[(Seq[String], Vector[LevelUnit])]) { (ls, u) =>
+      ls.indexWhere { case (bk, us) =>
+        us.head.desc == u.desc && commonPrefix(bk, u.key).nonEmpty } match {
+        case -1 => ls :+ (u.key -> Vector(u))
+        case i => ls.updated(i, (commonPrefix(ls(i)._1, u.key), ls(i)._2 :+ u))
+      }
+    }.map(_._2)
   }
 
   /** Every level gathers its side data (≤ one row per bucket) on the
@@ -337,7 +400,8 @@ object OrderedAtScale {
     * and shifts ([[RollGroup]]), range-framed rolling batches
     * ([[RollByGroup]]) and run-id chains ([[RunIdUnit]]) — shares a single
     * bucketized frame: one cut-point sample job, one hash exchange, one
-    * plan freeze per LEVEL instead of per family.
+    * plan freeze per LEVEL instead of per family. [[levels]] decides which
+    * units share a level.
     *
     * The bucket key is the units' longest common key prefix and the
     * direction their shared `desc`. Bucketizing on a prefix preserves both
@@ -375,10 +439,10 @@ object OrderedAtScale {
     val desc = units.head.desc
     require(units.forall(_.desc == desc),
       "applyLevel: every unit must share one order direction (a RollByGroup is ascending)")
-    val bucketBy = units.map(_.key).reduce(commonPrefix)
+    val bucketBy = bucketKey(units)
     require(bucketBy.nonEmpty,
       s"applyLevel: the units' order keys share no prefix: ${units.map(_.key).distinct}")
-    val ordSpecs = units.collect { case Ordered(n, s) => n -> s }
+    val ordered = units.collect { case o: Ordered => o }
     val rollGroups = units.collect { case g: RollGroup => g }
     val rollByGroups = units.collect { case g: RollByGroup => g }
     val runIds = units.collect { case u: RunIdUnit => u }
@@ -399,7 +463,7 @@ object OrderedAtScale {
     // key whose single hash ranked low could otherwise fill the whole
     // TakeOrdered sample and collapse the cuts, so every unit's value
     // inputs join the sample hash — they steer balance only, never values
-    val ordExtraNames = (ordSpecs.flatMap(s => references(s._2.bucketAgg) -- s._2.orderBy) ++
+    val ordExtraNames = (ordered.flatMap(o => references(o.bucketAgg) -- o.orderBy) ++
       runIds.map(_.valueCol)).distinct
     val extras: Seq[Column] = ordExtraNames.map(col) ++
       rollGroups.flatMap(_.parts.map(_._2)) ++ rollByGroups.flatMap(_.parts.map(_._2))
@@ -429,7 +493,7 @@ object OrderedAtScale {
     def dir(c: Column): Column = if (desc) c.desc else c.asc
     def orderOf(keys: Seq[String]): Seq[Column] = keys.map(n => dir(col(n)))
 
-    for (((outName, s), i) <- ordSpecs.zipWithIndex) {
+    for ((s, i) <- ordered.zipWithIndex) {
       val (tot, pfx, total, within) =
         (s"__go_tot$i", s"__go_prefix$i", s"__go_total$i", s"__go_within$i")
       sideAggs += s.bucketAgg.as(tot)
@@ -437,7 +501,7 @@ object OrderedAtScale {
       totalAggs += total -> s.recombine(col(tot))
       scalars ++= Seq(pfx, total)
       mainCols += within -> s.within(bucketW.orderBy(orderOf(s.orderBy): _*))
-      outs += outName -> s.combine(col(pfx), col(total), col(within))
+      outs += s.outName -> s.combine(col(pfx), col(total), col(within))
     }
 
     for ((u, i) <- runIds.zipWithIndex) {

@@ -1342,12 +1342,11 @@ object BuiltinTransformations {
         min(struct(ord.map(col): _*)).as("__first_key"))
     import graft.expr.OrderedAtScale
     OrderedAtScale.applyLevel(grouped, Seq(OrderedAtScale.Ordered("first_seen",
-      OrderedAtScale.GlobalOrderedSpec(
-        Seq("__first_key"), desc = false,
-        w => row_number().over(w).cast("long"),
-        count(lit(1)),
-        sum,
-        (p, _, v) => coalesce(p, lit(0L)) + v))))
+      Seq("__first_key"), desc = false,
+      w => row_number().over(w).cast("long"),
+      count(lit(1)),
+      sum,
+      (p, _, v) => coalesce(p, lit(0L)) + v)))
       .drop("__first_key")
   }
 

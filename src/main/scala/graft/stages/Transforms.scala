@@ -171,11 +171,20 @@ object Transforms {
   /** Derived columns from the expression registry (reference:
     * core/transform.py:251-293).
     *
-    * Row-wise entries are applied sequentially (later entries may reference
-    * earlier ones). Whole-frame scalar aggregates are batched into ONE
-    * distributed `df.agg(...)` pass and broadcast-cross-joined back — the
-    * scalable rewrite of Polars' aggregate-broadcast behavior
-    * (SURVEY.md §2.3-4, §7.4-4); no single-partition window anywhere.
+    * Entries apply with sequential `with_columns` semantics: each sees
+    * every earlier output, an overwritten column included. Within that
+    * contract consecutive entries batch:
+    *  - whole-frame aggregates ([[ExprRegistry.AggThenRow]]) share ONE
+    *    distributed `df.agg(...)` pass, broadcast-cross-joined back — the
+    *    scalable rewrite of Polars' aggregate-broadcast behavior
+    *    (SURVEY.md §2.3-4, §7.4-4); no single-partition window anywhere;
+    *  - global ordered entries ([[ExprRegistry.Global]]) pool their level
+    *    units; [[OrderedAtScale.levels]] fuses the pool into levels, each
+    *    one [[OrderedAtScale.applyLevel]] call.
+    * An aggregate that reads or rewrites a pending output, or a global
+    * entry that reads or overwrites a pooled output or overwrites a column
+    * a pooled unit reads, flushes its batch first; a row-wise or
+    * frame-level entry flushes both.
     */
   def deriveNewCols(newColMap: Seq[(String, DeriveSpec)])(df: DataFrame): DataFrame =
     if (newColMap.isEmpty) df
@@ -183,233 +192,69 @@ object Transforms {
       val resolved: Seq[(String, ExprRegistry.Derived)] = newColMap.map { case (name, spec) =>
         name -> ExprRegistry.resolve(spec.fnName)(spec.kwargs)
       }
-      // Sequential semantics (later entries may reference earlier ones,
-      // including aggregates over derived columns) while still batching:
-      // CONSECUTIVE INDEPENDENT whole-frame aggregates share one
-      // distributed agg pass + broadcast cross join, and CONSECUTIVE
-      // INDEPENDENT same-(order_by, desc) global ordered fns share ONE
-      // two-level decomposition (one range exchange, one totals agg, one
-      // window — 12 naive chained decompositions would be 12 range
-      // shuffles). A row-wise entry — or any entry referencing a name a
-      // pending batch will produce — flushes first so successors see its
-      // columns.
-      // every input column a GlobalOrdered spec reads (combine is probed
-      // with dummy placeholders, subtracted back out)
-      def goRefs(spec: OrderedAtScale.GlobalOrderedSpec): Set[String] = {
-        import org.apache.spark.sql.expressions.Window
-        val dummyW = Window.partitionBy(col("__go_probe_b")).orderBy(spec.orderBy.map(col): _*)
-        val dummies = Set("__go_probe_b", "__go_probe_p", "__go_probe_t", "__go_probe_v")
-        (refs(spec.bucketAgg) ++ refs(spec.within(dummyW)) ++
-          refs(spec.combine(col("__go_probe_p"), col("__go_probe_t"), col("__go_probe_v"))) ++
-          spec.orderBy) -- dummies - OrderedAtScale.priorBucketName
-      }
-      // a pending whole-frame entry: plain aggregate-broadcast (rowFn =
-      // None) or agg-then-row (Some(rowFn) — the 1-row agg result lands
-      // under a temp name the row-wise post-expression consumes, qcut's
-      // breakpoints → bin label). Round 19: BOTH share one distributed agg
-      // pass — consecutive AggThenRow entries (q107's two qcuts) used to
-      // flush one agg job each.
-      type Pending = Seq[(String, Column, Option[Column => Column])]
-      def flush(acc: DataFrame, pending: Pending): DataFrame =
-        if (pending.isEmpty) acc
-        else {
-          def tmp(n: String) = s"__agg_then_row_$n"
-          val aggRow = acc.agg(
-            pending.head._2.as(pending.head._3.fold(pending.head._1)(_ => tmp(pending.head._1))),
-            pending.tail.map { case (n, a, rf) => a.as(rf.fold(n)(_ => tmp(n))) }: _*)
-          // an aggregate derive may OVERWRITE an existing column (polars
-          // with_columns semantics): aggregate over the pre-drop frame,
-          // then drop the original so the join doesn't duplicate the name
-          val colliding = pending.collect {
-            case (n, _, None) if acc.columns.contains(n) => n
-          }
-          val joined = acc.drop(colliding: _*).crossJoin(broadcast(aggRow))
-          pending.foldLeft(joined) {
-            case (a, (n, _, Some(rowFn))) => a.withColumn(n, rowFn(col(tmp(n)))).drop(tmp(n))
-            case (a, _) => a
-          }
-        }
-      // Output names produced by entries processed so far — the
-      // overwrite-hazard guard on base-frame sampling (round-19 advisory,
-      // closed round 20): with_columns semantics let a chain REDEFINE an
-      // order-key column; a later global level must then NOT sample cut
-      // points from the ORIGINAL frame's stale distribution (values would
-      // stay exact — placement-independent — but balance could collapse).
+      var acc = df
+      var pending = Vector.empty[(String, ExprRegistry.AggThenRow)]
+      var pool = Vector.empty[OrderedAtScale.LevelUnit]
+      // every output written so far, and those written before the pool began
       var produced = Set.empty[String]
       var producedAtPoolStart = Set.empty[String]
-      // Cut-point sampling source (round 19): when a level's order keys
-      // all exist UNCHANGED on the ORIGINAL stage input, the bucketize
-      // sample runs against that (a column-pruned base scan) instead of
-      // the chained frozen accumulator — sampling the accumulator
-      // re-executes every prior level's post-shuffle stage once per
-      // level. Sound because derive levels only add columns (rows are
-      // never added, dropped or filtered), so the key-tuple multiset is
-      // identical on both frames — UNLESS an earlier entry overwrote a
-      // key (the `producedBefore` guard falls back to the accumulator).
-      def sampleSrc(keys: Seq[String], producedBefore: Set[String]): Option[DataFrame] =
-        if (keys.forall(df.columns.contains) && !keys.exists(producedBefore.contains)) Some(df)
-        else None
-      // ---- round 20: the GLOBAL-FAMILY POOL --------------------------------
-      // Independent global entries of EVERY family (ordered specs, raw-frame
-      // rollings and shifts, range rollings, run-id chains) accumulate in
-      // one pool; at flush time they cluster into FUSED decomposition levels
-      // (OrderedAtScale.applyLevel) by (desc, shared key prefix) — one
-      // exchange + one cut sample + one freeze per level instead of per
-      // family. q169's 3 same-key levels and q164's 5 become 1 and 2.
-      final case class PoolEntry(name: String, key: Seq[String], descFlag: Boolean,
-          refNames: Set[String], seq: Int, d: ExprRegistry.Derived)
-      def flushPool(acc0: DataFrame, pool: Vector[PoolEntry]): DataFrame =
-        if (pool.isEmpty) acc0
-        else {
-          // cluster into fused levels: same desc + a non-empty common key
-          // prefix. Bucketing on the common prefix is sound for every
-          // extension — equal full keys are equal on the prefix (tie
-          // groups still share a bucket) and bucket order is still global
-          // order for any extension of the prefix. A rolling_by unit needs
-          // bucketKey == its (by); its key has length 1, so any non-empty
-          // common prefix IS that key.
-          val lcp = OrderedAtScale.commonPrefix _
-          var clusters = Vector.empty[(Seq[String], Boolean, Vector[PoolEntry])]
-          for (e <- pool) {
-            val i = clusters.indexWhere { case (bk, d0, _) =>
-              d0 == e.descFlag && lcp(bk, e.key).nonEmpty }
-            if (i < 0) clusters = clusters :+ ((e.key, e.descFlag, Vector(e)))
-            else {
-              val (bk, d0, es) = clusters(i)
-              clusters = clusters.updated(i, (lcp(bk, e.key), d0, es :+ e))
-            }
-          }
-          clusters.foldLeft(acc0) { case (a, (bk, _, es)) =>
-            val ords = es.collect { case PoolEntry(n0, _, _, _, _, ExprRegistry.GlobalOrdered(s)) =>
-              OrderedAtScale.Ordered(n0, s) }
-            // rolling batches group by POOL ADJACENCY (consecutive seq +
-            // identical frame): the per-batch tie hash
-            // xxhash64(orderKeys, batchValues) must match what the unfused
-            // flush order produced — entries another family separated stay
-            // separate batches (same tie inputs as before the fusion)
-            // while still sharing this level's single exchange
-            def adjacentRuns[T](items: Vector[(PoolEntry, T)], same: (T, T) => Boolean)
-              : Vector[Vector[(PoolEntry, T)]] =
-              items.foldLeft(Vector.empty[Vector[(PoolEntry, T)]]) { (runs, it) =>
-                runs.lastOption match {
-                  case Some(run) if run.last._1.seq + 1 == it._1.seq &&
-                      same(run.last._2, it._2) => runs.init :+ (run :+ it)
-                  case _ => runs :+ Vector(it)
-                }
-              }
-            val rollGroups = adjacentRuns(
-              es.collect { case e @ PoolEntry(_, _, _, _, _, r: ExprRegistry.GlobalRollingFrame) =>
-                (e, r) },
-              (x: ExprRegistry.GlobalRollingFrame, y: ExprRegistry.GlobalRollingFrame) =>
-                x.orderBy == y.orderBy && x.desc == y.desc && x.k == y.k && x.tieOf == y.tieOf)
-              .map(run => OrderedAtScale.RollGroup(
-                run.head._2.orderBy, run.head._2.desc, run.head._2.k,
-                run.map { case (e, r) => (e.name, r.x, r.rollingAgg, r.frameAgg) }))
-            val rollByGroups = adjacentRuns(
-              es.collect { case e @ PoolEntry(_, _, _, _, _, r: ExprRegistry.GlobalRollingBy) =>
-                (e, r) },
-              (x: ExprRegistry.GlobalRollingBy, y: ExprRegistry.GlobalRollingBy) =>
-                x.by == y.by && x.window == y.window && x.closed == y.closed)
-              .map(run => OrderedAtScale.RollByGroup(
-                run.head._2.by, run.head._2.window, run.head._2.closed,
-                run.map { case (e, r) => (e.name, r.x, r.rangeAgg, r.own, r.boundary) }))
-            val runIdUnits = es.collect {
-              case PoolEntry(n0, _, _, _, _, r: ExprRegistry.GlobalRunId) =>
-                OrderedAtScale.RunIdUnit(r.valueCol, r.orderBy, r.desc, n0) }
-            OrderedAtScale.applyLevel(a, ords ++ rollGroups ++ rollByGroups ++ runIdUnits,
-              sampleSrc(bk, producedAtPoolStart))
-          }
-        }
-      // input columns a GlobalRollingFrame reads (frameAgg probed with a
-      // dummy array column, subtracted back out)
-      def grfRefs(r: ExprRegistry.GlobalRollingFrame): Set[String] = {
-        import org.apache.spark.sql.expressions.Window
-        val dummyW = Window.partitionBy(col("__go_probe_b")).orderBy(r.orderBy.map(col): _*)
-        val dummies = Set("__go_probe_b", "__go_probe_a")
-        (refs(r.x) ++ refs(r.rollingAgg(dummyW)) ++
-          refs(r.frameAgg(col("__go_probe_a"))) ++ r.orderBy) -- dummies
+      // each 1-row agg result lands under a temp name; `row` of it writes
+      // the output in place (an overwritten column keeps its position)
+      def tmp(n: String) = s"__agg_then_row_$n"
+      def flushAggs(): Unit = if (pending.nonEmpty) {
+        val aggs = pending.map { case (n, a) => a.agg.as(tmp(n)) }
+        val joined = acc.crossJoin(broadcast(acc.agg(aggs.head, aggs.tail: _*)))
+        acc = pending.foldLeft(joined) { case (f, (n, a)) =>
+          f.withColumn(n, a.row(col(tmp(n)))).drop(tmp(n)) }
+        pending = Vector.empty
       }
-      def grbRefs(r: ExprRegistry.GlobalRollingBy): Set[String] = {
-        import org.apache.spark.sql.expressions.Window
-        val dummyW = Window.partitionBy(col("__go_probe_b")).orderBy(col(r.by))
-        val dummies = Set("__go_probe_b", "__go_probe_a", "__go_probe_o", "__go_probe_v")
-        val ownRefs = r.own match {
-          case OrderedAtScale.OwnState(f) => refs(f(dummyW))
-          case _ => Set.empty[String]
+      // A level's cut sample reads the ORIGINAL stage input (a
+      // column-pruned base scan) when its bucket key exists there
+      // unchanged, instead of the accumulator, whose sample would re-run
+      // every earlier level. Sound because derive levels only add columns,
+      // so both frames hold the same key tuples — unless an entry before
+      // the pool overwrote a key: then it samples the accumulator (values
+      // stay exact either way; the stale sample would only skew balance).
+      def flushPool(): Unit = {
+        acc = OrderedAtScale.levels(pool).foldLeft(acc) { (a, level) =>
+          val bk = OrderedAtScale.bucketKey(level)
+          val fresh = bk.forall(df.columns.contains) && !bk.exists(producedAtPoolStart.contains)
+          OrderedAtScale.applyLevel(a, level, if (fresh) Some(df) else None)
         }
-        (refs(r.x) ++ refs(r.rangeAgg(dummyW)) ++ ownRefs ++
-          refs(r.boundary(col("__go_probe_a"), col("__go_probe_o"), col("__go_probe_v"))) +
-          r.by) -- dummies
+        pool = Vector.empty
       }
-      // The fold: aggs batch with aggs (as before); every GLOBAL family
-      // entry joins the pool unless it reads a pooled output, would
-      // overwrite one, or would overwrite a column a pooled entry reads
-      // (then the pool flushes first — sequential with_columns semantics).
-      // Aggs and the pool flush each other on family change, preserving
-      // the r19 ordering exactly; the pool itself only widens what can
-      // share one exchange.
-      var acc = df
-      var pending: Pending = Nil
-      var pool = Vector.empty[PoolEntry]
-      def admitPool(e: PoolEntry): Unit = {
-        val poolOuts = pool.map(_.name).toSet
-        if (pool.nonEmpty && (e.refNames.exists(poolOuts.contains) ||
-            poolOuts.contains(e.name) || pool.exists(_.refNames.contains(e.name)))) {
-          acc = flushPool(acc, pool)
-          pool = Vector.empty
-        }
-        if (pool.isEmpty) producedAtPoolStart = produced
-        pool = pool :+ e
-      }
-      for (((n, d0), seq) <- resolved.zipWithIndex) {
-        d0 match {
-          case ExprRegistry.WholeFrameAgg(a) =>
-            acc = flushPool(acc, pool); pool = Vector.empty
+      for ((n, d) <- resolved) {
+        d match {
+          case a: ExprRegistry.AggThenRow =>
+            flushPool()
+            val reads = refs(a.agg) ++ (refs(a.row(col("__agg_probe"))) - "__agg_probe")
             val pendingNames = pending.map(_._1).toSet
-            if (refs(a).exists(pendingNames.contains)) { // depends on the batch
-              acc = flush(acc, pending); pending = Seq((n, a, None))
-            } else pending = pending :+ ((n, a, None))
-          case ExprRegistry.AggThenRow(a, rowFn) =>
-            // one agg pass + broadcast join shared with the WholeFrameAgg
-            // batch; the 1-row agg result lands under a temp name that the
-            // row-wise post-expression consumes (qcut: breakpoints -> bin
-            // label). The post-expression is row-wise over the joined
-            // frame, so its refs (the binned data column) count for the
-            // depends-on-the-batch check too.
-            acc = flushPool(acc, pool); pool = Vector.empty
-            val pendingNames = pending.map(_._1).toSet
-            val atrRefs = refs(a) ++ (refs(rowFn(col("__atr_probe"))) - "__atr_probe")
-            if (atrRefs.exists(pendingNames.contains)) {
-              acc = flush(acc, pending); pending = Seq((n, a, Some(rowFn)))
-            } else pending = pending :+ ((n, a, Some(rowFn)))
+            if ((reads + n).exists(pendingNames.contains)) flushAggs()
+            pending :+= n -> a
+          case ExprRegistry.Global(unit) =>
+            flushAggs()
+            val u = unit(n)
+            val poolOuts = pool.flatMap(_.outs).toSet
+            if (u.reads.exists(poolOuts.contains) || poolOuts.contains(n) ||
+                pool.exists(_.reads.contains(n))) flushPool()
+            if (pool.isEmpty) producedAtPoolStart = produced
+            pool :+= u
           case ExprRegistry.RowWise(c0) =>
-            acc = flushPool(flush(acc, pending), pool); pending = Nil; pool = Vector.empty
+            flushAggs(); flushPool()
             acc = acc.withColumn(n, c0)
           case ExprRegistry.FrameLevel(build) =>
-            acc = flushPool(flush(acc, pending), pool); pending = Nil; pool = Vector.empty
+            flushAggs(); flushPool()
             acc = build(acc, n)
-          case ExprRegistry.GlobalOrdered(spec) =>
-            acc = flush(acc, pending); pending = Nil
-            admitPool(PoolEntry(n, spec.orderBy, spec.desc, goRefs(spec), seq, d0))
-          case r: ExprRegistry.GlobalRollingFrame =>
-            acc = flush(acc, pending); pending = Nil
-            admitPool(PoolEntry(n, r.orderBy, r.desc, grfRefs(r), seq, r))
-          case r: ExprRegistry.GlobalRollingBy =>
-            acc = flush(acc, pending); pending = Nil
-            admitPool(PoolEntry(n, Seq(r.by), false, grbRefs(r), seq, r))
-          case r: ExprRegistry.GlobalRunId =>
-            acc = flush(acc, pending); pending = Nil
-            admitPool(PoolEntry(n, r.orderBy, r.desc, r.orderBy.toSet + r.valueCol, seq, r))
         }
         produced += n
       }
-      val derived = flushPool(flush(acc, pending), pool)
+      flushAggs(); flushPool()
       // restore declared column order (cross joins append agg columns out
       // of order); a derive overwriting an existing column keeps its
       // original position and must not be projected twice
       val ordered =
         (df.columns.toSeq ++ newColMap.map(_._1).filterNot(df.columns.contains)).distinct
-      derived.select(ordered.map(n => col(s"`$n`")): _*)
+      acc.select(ordered.map(n => col(s"`$n`")): _*)
     }
 
   // S17 -----------------------------------------------------------------

@@ -145,8 +145,8 @@ class OrderedAtScaleSpec extends AnyFunSuite {
 
   test("rolling moment BATCH: same-frame fns fuse into one decomposition, values == windowed") {
     // six same-(order, k) entries + a different-k straggler in ONE derive
-    // call: the first six share one head+tail decomposition (the
-    // GlobalOrdered batching rule), the straggler flushes into its own —
+    // call: the first six share one head+tail batch (the adjacent-batch
+    // rule of OrderedAtScale.levels), the straggler forms its own —
     // values must be bitwise the windowed forms either way
     val df = fixture().withColumn("one", lit(1))
     val base = Map("col" -> "v", "order_by" -> Seq("t", "uid"), "window_size" -> 20)
@@ -533,6 +533,51 @@ class OrderedAtScaleSpec extends AnyFunSuite {
       "o" -> DeriveSpec("rolling_sum",
         Map("col" -> "v", "order_by" -> Seq("uid"), "window_size" -> 5)),
       "v" -> DeriveSpec("rolling_sum_by", Map("col" -> "v", "by" -> "t", "window_size" -> 2)))
+  }
+
+  test("FUSION PIN: levels merges adjacent batches, then clusters by direction and key prefix") {
+    // `levels` is pure: it reads the units' shapes and runs no Spark job
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.expressions.WindowSpec
+    import OrderedAtScale.{levels, bucketKey, LevelUnit, NoOwn, Ordered, RollByGroup, RollGroup,
+      RunIdUnit}
+    def roll(out: String, ord: Seq[String] = Seq("t"), k: Int = 3, desc: Boolean = false,
+        tieOf: Option[String] = None) =
+      RollGroup(ord, desc, k, Seq((out, col("v"), (w: WindowSpec) => sum(col("v")).over(w),
+        (xs: Column) => xs)), tieOf)
+    def shift(out: String, x: String) = roll(out, k = 2, tieOf = Some(x))
+    def rollBy(out: String, window: Long = 10L) =
+      RollByGroup("t", window, "right", Seq((out, col("v"), (w: WindowSpec) => sum(col("v")).over(w),
+        NoOwn, (_: Column, _: Column, v: Column) => v)))
+    def ordered(out: String, keys: Seq[String], desc: Boolean = false) =
+      Ordered(out, keys, desc, w => row_number().over(w), count(lit(1)), sum,
+        (p, _, v) => coalesce(p, lit(0L)) + v)
+    def outs(ls: Seq[Seq[LevelUnit]]): Seq[Seq[Seq[String]]] = ls.map(_.map(_.outs))
+
+    // adjacent compatible batches merge; a unit of another family between
+    // two batches, or another frame, keeps them apart
+    assert(outs(levels(Seq(roll("a"), roll("b"), ordered("o", Seq("t")), roll("c"),
+      roll("k5", k = 5), rollBy("p"), rollBy("q"), RunIdUnit("v", Seq("t"), desc = false, "r"),
+      rollBy("s"), rollBy("w", window = 20L)))) ==
+      Seq(Seq(Seq("a", "b"), Seq("o"), Seq("c"), Seq("k5"), Seq("p", "q"), Seq("r"), Seq("s"),
+        Seq("w"))))
+    // a shift merges only with shifts of the same column, never with a
+    // rolling fn of the same frame length
+    val sh = levels(Seq(shift("s1", "x"), shift("s2", "x"), roll("r", k = 2), roll("r2", k = 2),
+      shift("s3", "y"), shift("s4", "x")))
+    assert(outs(sh) == Seq(Seq(Seq("s1", "s2"), Seq("r", "r2"), Seq("s3"), Seq("s4"))))
+    assert(sh.head.collect { case g: RollGroup => (g.k, g.tieOf) } ==
+      Seq((2, Some("x")), (2, None), (2, Some("y")), (2, Some("x"))))
+    // levels split by direction and by an empty common key prefix; a unit
+    // joins the first level it fits, and levels keep first-appearance order
+    val ls = levels(Seq(ordered("a", Seq("u")), ordered("b", Seq("t", "uid")),
+      roll("c", desc = true), ordered("d", Seq("t", "x")), rollBy("e"),
+      ordered("f", Seq("u", "t")), RunIdUnit("v", Seq("t"), desc = true, "g")))
+    assert(outs(ls) == Seq(Seq(Seq("a"), Seq("f")), Seq(Seq("b"), Seq("d"), Seq("e")),
+      Seq(Seq("c"), Seq("g"))))
+    assert(ls.map(bucketKey) == Seq(Seq("u"), Seq("t"), Seq("t")))
+    assert(ls.map(_.head.desc) == Seq(false, false, true))
+    assert(levels(Nil).isEmpty)
   }
 
   test("NULL BY: global rolling_*_by keeps the rows whose by value is null") {

@@ -21,12 +21,14 @@ import graft.stages.Transforms
   * all-equal, reverse-ordered, string and binary. Every chain runs under
   * one of `spark.graft.orderedBuckets` ∈ {1, 2, 7, 257} with AQE on and
   * off, so bucket counts far above the row count (empty buckets) and a
-  * single bucket are both covered.
+  * single bucket are both covered. About one input in six is empty.
   *
   * Two chain modes:
   *  - unique: positional fns order by (key, uid), so the windowed form is
   *    deterministic; entries may read an earlier entry's output, and may
-  *    overwrite the value column `v` that later entries read.
+  *    overwrite the value column `v` or the order key `k` that later
+  *    entries read (a level after a key overwrite samples its cut points
+  *    from the derived frame, not the stage input).
   *  - tie: rolling fns and shifts order by the NON-unique key alone; the
   *    reference orders by the engine's documented tie-break
   *    `xxhash64(key, value)` (rolling fns all read `x`, shifts read `y`,
@@ -83,10 +85,10 @@ class OrderedDifferentialSpec extends AnyFunSuite {
     * the tie-mode values), `r` (runs with nulls for rle_id), `b` (an
     * integer axis with ties and nulls), `one` (the reference's constant
     * partition). */
-  private def frame(kind: KeyKind, seed: Long): DataFrame = {
+  private def frame(kind: KeyKind, seed: Long, empty: Boolean): DataFrame = {
     val id = col("id")
     val mix = (id * 7919 + seed) % Rows
-    spark.range(Rows.toLong)
+    val df = spark.range(Rows.toLong)
       .select(
         kind.key(mix).as("k"),
         id.as("uid"),
@@ -98,6 +100,8 @@ class OrderedDifferentialSpec extends AnyFunSuite {
         when(mix % 23 === 0, lit(null).cast("long")).otherwise((mix / 3).cast("long")).as("b"),
         lit(1).as("one"))
       .repartition(3)
+    // a filter the optimizer cannot fold away: the plan still scans
+    if (empty) df.filter(col("uid") < 0) else df
   }
 
   /** One chain entry: its derive spec, its reference (the frame holding
@@ -200,7 +204,10 @@ class OrderedDifferentialSpec extends AnyFunSuite {
   }
 
   /** A chain of 3-6 entries; in unique mode an entry may read any earlier
-    * long output, and about one chain in four overwrites `v`. */
+    * long output, and after the first one about one entry in six
+    * overwrites `v` and one in six the order key `k`. A key is only
+    * overwritten by a long output, so it stays a valid `rolling_*_by`
+    * axis. */
   private def chainGen(tie: Boolean, byCol: String): Gen[Vector[Entry]] = for {
     len <- Gen.choose(3, 6)
     chainDesc <- Gen.oneOf(false, true)
@@ -208,22 +215,27 @@ class OrderedDifferentialSpec extends AnyFunSuite {
       (0 until len).foldLeft(Gen.const(Vector.empty[Entry])) { (g, i) =>
         g.flatMap { acc =>
           val longCols = Seq("v", "x", "y") ++ acc.filter(_.longOut).map(_.name)
-          Gen.oneOf(true, false, false, false).flatMap { overwrite =>
-            val name = if (!tie && overwrite && i > 0) "v" else s"o$i"
-            entryGen(name, tie, chainDesc, byCol, longCols).map(acc :+ _)
+          Gen.frequency(1 -> "v", 1 -> "k", 4 -> "").flatMap { target =>
+            val name = if (!tie && target.nonEmpty && i > 0) target else s"o$i"
+            entryGen(name, tie, chainDesc, byCol, longCols).flatMap { e =>
+              if (name == "k" && !e.longOut) entryGen(s"o$i", tie, chainDesc, byCol, longCols)
+              else Gen.const(e)
+            }.map(acc :+ _)
           }
         }
       }
     }
   } yield chain
 
-  private final case class Case(kind: KeyKind, tie: Boolean, seed: Long, chain: Vector[Entry])
+  private final case class Case(kind: KeyKind, tie: Boolean, seed: Long, empty: Boolean,
+      chain: Vector[Entry])
 
   private def caseGen(tie: Boolean): Gen[Case] = for {
     kind <- Gen.oneOf(kinds)
     seed <- Gen.choose(0L, 10000L)
+    empty <- Gen.frequency(1 -> true, 5 -> false)
     chain <- chainGen(tie, if (kind.integral) "k" else "b")
-  } yield Case(kind, tie, seed, chain)
+  } yield Case(kind, tie, seed, empty, chain)
 
   private def same(a: Any, b: Any): Boolean = (a, b) match {
     case (x: Double, y: Double) =>
@@ -235,7 +247,7 @@ class OrderedDifferentialSpec extends AnyFunSuite {
   /** None when the fused chain equals the one-at-a-time reference; else a
     * description of the first differing rows. */
   private def mismatch(c: Case): Option[String] = {
-    val df = frame(c.kind, c.seed)
+    val df = frame(c.kind, c.seed, c.empty)
     val fused = Transforms.deriveNewCols(c.chain.map(e => e.name -> e.spec))(df)
     val ref = c.chain.foldLeft(df)((acc, e) => e.ref(acc))
     val names = c.chain.map(_.name).distinct
@@ -246,7 +258,7 @@ class OrderedDifferentialSpec extends AnyFunSuite {
       (0 until g.length).exists(i => !same(g.get(i), w.get(i)))
     }
     if (got.length == want.length && bad.isEmpty) None
-    else Some(s"${c.kind} tie=${c.tie} seed=${c.seed} chain=[${c.chain.mkString("; ")}]: " +
+    else Some(s"${c.kind} tie=${c.tie} seed=${c.seed} empty=${c.empty} chain=[${c.chain.mkString("; ")}]: " +
       s"${bad.length} of ${want.length} rows differ, e.g. " +
       bad.take(3).map { case (g, w) => s"got $g want $w" }.mkString("; "))
   }

@@ -127,6 +127,20 @@ class TransformsSpec extends AnyFunSuite {
     assert(out.select("v").collect().map(_.getDouble(0)).toSeq == Seq(15.0, 15.0))
   }
 
+  test("derive: an aggregate overwriting the column an earlier winsorize clips runs after it") {
+    // both entries share one agg pass; the clip reads the OLD v
+    val df = (1 to 10).map(i => (i, i.toDouble)).toDF("id", "v")
+    val entries = Seq(
+      "w" -> DeriveSpec("winsorize", Map("col" -> "v", "lower" -> 0.1, "upper" -> 0.9)),
+      "v" -> DeriveSpec("mean", Map("col" -> "v")))
+    val fused = Transforms.deriveNewCols(entries)(df)
+    val inOrder = entries.foldLeft(df)((acc, e) => Transforms.deriveNewCols(Seq(e))(acc))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "v", "w").orderBy("id").collect().toSeq
+    assert(rows(fused) == rows(inOrder))
+    assert(fused.columns.toSeq == Seq("id", "v", "w"))
+  }
+
   test("filterRows AND-folds rules; dedupe subsets") {
     val df = Seq((1, "a"), (2, "a"), (5, "b")).toDF("v", "g")
     val f = Transforms.filterRows(Seq(
