@@ -194,10 +194,8 @@ object ScaleRehearsal {
         // round 18 (judge item 7): CC driver-round latency on a DIAMETER-
         // stressed chain — the adversarial shape for the driver-
         // coordinated loop (q77/q88's near-dup stars converge in ~3
-        // rounds and never feel it). Rounds print to stderr per run; the
-        // 2hop row folds a second pointer jump into each round's job.
-        "cc_chain_scaled" -> ccChainAtScale(hops = 1),
-        "cc_chain_2hop_scaled" -> ccChainAtScale(hops = 2))
+        // rounds and never feel it). Rounds print to stderr per run.
+        "cc_chain_scaled" -> ccChainAtScale)
     // targeted runs (round 13): time only the named rows — a full ladder
     // is ~15 min, and adding one rehearsal shouldn't cost re-timing all
     val rehearsals = only match {
@@ -710,16 +708,16 @@ object ScaleRehearsal {
     * two fixed Spark actions (snapshot + changed-count) no matter how
     * small the data. Rounds grow ~log(diameter) under pointer jumping,
     * so the ladder isolates exactly the term the judge asked about: is
-    * wall time rounds-bound (fixed cost dominates → batch hops) or
+    * wall time rounds-bound (fixed per-round cost dominates) or
     * data-bound? The per-run round count prints to stderr so BASELINE
     * can quote it next to the times. */
-  private def ccChainAtScale(hops: Int)(s: SparkSession, d: String): DataFrame = {
+  private def ccChainAtScale(s: SparkSession, d: String): DataFrame = {
     val n = s.read.parquet(s"$d/documents.parquet").count()
     val chain = s.range(n - 1)
       .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
     val (labels, rounds) = graft.operators.Dedup.connectedComponentsStats(
-      chain, "id_a", "id_b", maxIters = 64, hops = hops)
-    System.err.println(s"[ladder] cc_chain hops=$hops n=$n rounds=$rounds")
+      chain, "id_a", "id_b", maxIters = 64)
+    System.err.println(s"[ladder] cc_chain n=$n rounds=$rounds")
     labels.agg(count(lit(1)).as("n_nodes"),
       countDistinct(col("label")).as("n_components"))
   }

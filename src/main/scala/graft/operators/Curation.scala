@@ -227,32 +227,6 @@ object Curation {
       (start % lit(budget)).as("bin_offset"))
   }
 
-  /** Domain-mixture sampling: cut a training mix to integer weight ratios
-    * under a global token budget — "spend half the corpus' tokens, 40% of
-    * them on en, 15% on each of zh/fr/de/es" — the source-mixing step
-    * every pretraining data recipe runs after curation.
-    *
-    * Per-domain budget: `b_d = totalTokens * budgetNumer * w_d DIV
-    * (budgetDenom * Σw)` — ALL integer arithmetic (long DIV), because at
-    * corpus scale `totalTokens * weight` exceeds a double's 2^53 exact-int
-    * range and a float budget boundary would flip membership between
-    * engines. Docs are taken WHOLE in (md5(id), id) order — the same
-    * content-derived unbiased shuffle [[packSequences]] uses — until the
-    * first doc whose preceding cumulative tokens reaches the budget;
-    * domains absent from `weights` are dropped (weight 0).
-    *
-    * Scale shape: one 1-row total aggregate broadcast to every task plus
-    * one shuffle on the domain column for the per-domain running sum. A
-    * domain is processed by ONE task here; at 100 TB per-domain token
-    * counts are ~10^12, so shard the running sum the q86 way (sub-shard
-    * key + two-level cumsum) if a single sorted run per domain stalls —
-    * for mixtures of ≤ dozens of domains the straggler bound is the
-    * largest domain's doc count, same as any per-domain window.
-    *
-    * Overflow guard: requires `budgetNumer * Σw ≤ 10^6`, bounding the
-    * budget product at `totalTokens * 10^6` — safe through 9·10^12 total
-    * tokens; raise deliberately (with wider decimals both sides) past
-    * that. */
   /** Temperature-smoothed mixture weights (the multilingual-pretraining
     * standard — exponentially smoothed sampling, mT5/XLM-R shape:
     * `q_d ∝ p_d^α` with `p_d = n_d / N` and temperature `α ∈ (0, 1]`;
@@ -298,6 +272,32 @@ object Curation {
     }.toMap
   }
 
+  /** Domain-mixture sampling: cut a training mix to integer weight ratios
+    * under a global token budget — "spend half the corpus' tokens, 40% of
+    * them on en, 15% on each of zh/fr/de/es" — the source-mixing step
+    * every pretraining data recipe runs after curation.
+    *
+    * Per-domain budget: `b_d = totalTokens * budgetNumer * w_d DIV
+    * (budgetDenom * Σw)` — ALL integer arithmetic (long DIV), because at
+    * corpus scale `totalTokens * weight` exceeds a double's 2^53 exact-int
+    * range and a float budget boundary would flip membership between
+    * engines. Docs are taken WHOLE in (md5(id), id) order — the same
+    * content-derived unbiased shuffle [[packSequences]] uses — until the
+    * first doc whose preceding cumulative tokens reaches the budget;
+    * domains absent from `weights` are dropped (weight 0).
+    *
+    * Scale shape: one 1-row total aggregate broadcast to every task plus
+    * one shuffle on the domain column for the per-domain running sum. A
+    * domain is processed by ONE task here; at 100 TB per-domain token
+    * counts are ~10^12, so shard the running sum the q86 way (sub-shard
+    * key + two-level cumsum) if a single sorted run per domain stalls —
+    * for mixtures of ≤ dozens of domains the straggler bound is the
+    * largest domain's doc count, same as any per-domain window.
+    *
+    * Overflow guard: requires `budgetNumer * Σw ≤ 10^6`, bounding the
+    * budget product at `totalTokens * 10^6` — safe through 9·10^12 total
+    * tokens; raise deliberately (with wider decimals both sides) past
+    * that. */
   def mixtureSample(
       df: DataFrame,
       idCol: String,
@@ -428,12 +428,10 @@ object Curation {
       labelCol: String,
       featureCols: Seq[String],
       iters: Int = 30,
-      lr: Double = 1.0,
-      tol: Double = 0.0
+      lr: Double = 1.0
   ): LogisticModel = {
     require(featureCols.nonEmpty, "at least one feature column required")
     require(iters > 0 && lr > 0, s"iters/lr must be positive, got $iters/$lr")
-    require(tol >= 0.0, s"tol must be >= 0, got $tol")
     val exactSum = graft.sparkext.DoubleToScaled.exactSum(_: Column, 6)
     // iters+2 jobs scan this frame — persist for the fit, release after
     val clean = df.filter(col(labelCol).isNotNull &&
@@ -459,16 +457,7 @@ object Curation {
     val z = featureCols.indices.map(i =>
       (col(featureCols(i)).cast("double") - means(i)) / stds(i))
     var w = Vector.fill(featureCols.size + 1)(0.0)
-    // early-exit knob (round 19, judge item 6 — each GD step is one full
-    // agg job + driver barrier; at cluster scale the step count IS the
-    // latency): stop once every weight update's magnitude falls below
-    // `tol`. The default 0.0 keeps the exact legacy schedule (updates
-    // are never strictly < 0), so existing oracle fits are bit-identical;
-    // a non-zero tol is deterministic too — the gradient rides exact
-    // decimal sums, so the exit step is partition-independent.
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
+    (1 to iters).foreach { _ =>
       val margin = z.zipWithIndex.foldLeft(lit(w(0))) { case (acc, (zi, i)) =>
         acc + zi * w(i + 1)
       }
@@ -477,10 +466,7 @@ object Curation {
         exactSum(err).as("g0"),
         z.zipWithIndex.map { case (zi, i) => exactSum(err * zi).as(s"g${i + 1}") }: _*
       ).head()
-      val steps = w.indices.map(i => lr * g.getDouble(i) / n)
-      w = w.indices.map(i => w(i) + steps(i)).toVector
-      converged = steps.forall(s => math.abs(s) < tol)
-      it += 1
+      w = w.indices.map(i => w(i) + lr * g.getDouble(i) / n).toVector
     }
     clean.unpersist()
     LogisticModel(featureCols, means, stds, w)
@@ -599,12 +585,8 @@ object Curation {
     // buckets from the filtered batch (signatures are per-doc) but
     // without re-paying the shingle explode
     val freshBk = bk.join(hits, Seq(idCol), "left_anti")
-    val pairs = Dedup.lshPairsFromBuckets(freshBk, idCol, maxBucket)
-    val clusters = Dedup.connectedComponents(pairs, "id_a", "id_b")
-    val dups = clusters.filter(col("node") =!= col("label"))
-      .select(col("node").as(idCol))
-    batch.join(hits, Seq(idCol), "left_anti")
-      .join(dups, Seq(idCol), "left_anti")
+    Dedup.dropClusterDups(batch.join(hits, Seq(idCol), "left_anti"),
+      Dedup.lshPairsFromBuckets(freshBk, idCol, maxBucket), idCol)
   }
 
   /** Cross-batch (incremental) MULTIMODAL novelty filter (round 19,
@@ -948,10 +930,7 @@ object Curation {
         val include = above <= m
         // sever the (small) boundary eagerly so unpersisting `keys` below
         // cannot force its lineage to recompute at result materialization
-        val band = {
-          val b = boundary.withColumn("__in_band", lit(true))
-          b.sparkSession.createDataFrame(b.localCheckpoint(true).rdd, b.schema)
-        }
+        val band = Dedup.severLineage(boundary.withColumn("__in_band", lit(true)))._1
         // coalesce: a null gumbel_key (null/overflowing weight) must yield
         // selected = false, matching the TakeOrdered form's left-antijoin
         // semantics — the two forms select IDENTICAL rows by contract

@@ -174,22 +174,38 @@ object Dedup {
       buckets: DataFrame,
       idCol: String,
       maxBucket: Int = 10000
+  ): DataFrame =
+    bucketSelfJoin(buckets, idCol, Seq("band", "digest"), maxBucket).distinct()
+
+  /** The capped bucket self-join every near-dup candidate stage shares
+    * ([[lshPairsFromBuckets]], [[embeddingNearDupPairs]],
+    * [[hammingNearDupPairs]]): rows of `buckets` that agree on every
+    * `keys` column pair up as `(id_a, id_b)` with `id_a < id_b`, plus
+    * `<c>_a`/`<c>_b` for each `carry` column. Not distinct — a pair that
+    * shares several buckets appears once per bucket.
+    *
+    * Bounded width: ONE shuffle on the keys the pair join needs anyway —
+    * a window count per bucket, then filter (an agg+join formulation
+    * costs a second shuffle per consumer). Buckets wider than `maxBucket`
+    * are dropped, capping one bucket's contribution at maxBucket² pairs
+    * (their widths stay observable via [[lshOverfullBucketsFrom]]).
+    * SINGLETON buckets are dropped too: a 1-member bucket has no
+    * `a.id < b.id` partner, and on a mostly-unique corpus singletons are
+    * the overwhelming majority of bucket rows, so the prune shrinks the
+    * persisted frame and both join inputs for zero output change. The
+    * capped frame feeds BOTH self-join sides, so it is persisted —
+    * otherwise each side re-runs the width window (measured 2x on the
+    * sf0.1 bench). Rows with a null id or null key count toward their
+    * bucket's width but never pair. */
+  private[graft] def bucketSelfJoin(
+      buckets: DataFrame,
+      idCol: String,
+      keys: Seq[String],
+      maxBucket: Int,
+      carry: Seq[String] = Nil
   ): DataFrame = {
     require(maxBucket > 1, "maxBucket must allow at least a pair")
-    // bounded width: ONE shuffle on the (band, digest) keys the pair join
-    // needs anyway — a window count per bucket, then filter (an agg+join
-    // formulation costs a second shuffle per consumer). The capped frame
-    // feeds BOTH self-join sides, so persist it — otherwise each side
-    // re-runs the width computation (measured 2x on the sf0.1 bench); it
-    // is #docs x bands short rows.
-    //
-    // Round 20 (guide §3 — shrink the join's inputs): SINGLETON buckets
-    // (__bn = 1) are also dropped. A 1-member bucket cannot produce a pair
-    // (the join needs two members agreeing on (band, digest)), and on a
-    // mostly-unique corpus singletons are the overwhelming majority of
-    // bucket rows — dropping them shrinks the persisted frame and both
-    // self-join inputs by that fraction for exactly zero output change.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("digest"))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
     val bounded = buckets
       .withColumn("__bn", count(lit(1)).over(w))
       .filter(col("__bn") >= 2 && col("__bn") <= maxBucket)
@@ -198,11 +214,10 @@ object Dedup {
     val a = bounded.as("a")
     val b = bounded.as("b")
     a.join(b,
-        col("a.band") === col("b.band") &&
-          col("a.digest") === col("b.digest") &&
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
           col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
+      .select(col(s"a.$idCol").as("id_a") +: col(s"b.$idCol").as("id_b") +:
+        carry.flatMap(c => Seq(col(s"a.$c").as(s"${c}_a"), col(s"b.$c").as(s"${c}_b"))): _*)
   }
 
   /** SimHash fingerprint over `bits` bits (max 32, drawn from the first 8
@@ -376,8 +391,8 @@ object Dedup {
     * `maxIters` — a silent partial result would split real clusters.
     * The returned frame is eagerly local-checkpointed (tiny: one row per
     * node appearing in `edges`); its blocks free when the frame is GC'd.
-    */
-  /** @param checkpointDir when set, per-round snapshots use RELIABLE
+    *
+    * @param checkpointDir when set, per-round snapshots use RELIABLE
     *   checkpoints written under this directory (HDFS/object store on a
     *   cluster) instead of `localCheckpoint`: local checkpoint blocks live
     *   on executors, so one lost executor kills the whole iterative job at
@@ -391,35 +406,14 @@ object Dedup {
     *   store without limit. Only the FINAL labels' checkpoint survives (the
     *   returned frame reads from it); it lives under `checkpointDir`, which
     *   the caller owns and can remove once done with the result. */
-  /** @param hops extra pointer jumps folded into EACH round (round 18,
-    *   judge item 7): every driver round costs two fixed actions (the
-    *   snapshot job + the changed-count job) regardless of data size, so
-    *   on DIAMETER-stressed graphs — long chains, not the shallow
-    *   near-dup stars q77/q88 produce — the driver round-trip dominates.
-    *   Each extra hop adds one more label→label self-join inside the
-    *   same job (intermediates persisted, so the doubled plan reference
-    *   is computed once), multiplying propagation distance per round:
-    *   rounds fall from ~log2(diameter) to ~log(2·2^hops)… at the cost
-    *   of one join + one persist per hop per round. Measured on the
-    *   chain ladder (BASELINE.md round 18): hops=2 cuts rounds 19→11 on
-    *   the 500k chain but wall time only 33.3→31.4 s at x100 — and is
-    *   SLOWER at x1/x10 — because local[32] per-round fixed cost is
-    *   small next to the extra join work. The default therefore stays 1.
-    *   The knob earns its keep where each round pays real scheduler +
-    *   network latency (a 1000-executor cluster's driver barrier is
-    *   10-100× this box's) AND the graph is genuinely deep; shallow
-    *   near-dup stars (q77/q88, ~3 rounds) never feel it. Labels are
-    *   identical for any hops value (propagation speed, not semantics —
-    *   q77/q88 stay oracle-green either way). */
   def connectedComponents(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       maxIters: Int = 20,
-      checkpointDir: Option[String] = None,
-      hops: Int = 1
+      checkpointDir: Option[String] = None
   ): DataFrame =
-    connectedComponentsStats(edges, srcCol, dstCol, maxIters, checkpointDir, hops)._1
+    connectedComponentsStats(edges, srcCol, dstCol, maxIters, checkpointDir)._1
 
   /** [[connectedComponents]] plus the DRIVER ROUND COUNT it took to
     * converge — the observable the round-latency ladder measures. */
@@ -428,10 +422,8 @@ object Dedup {
       srcCol: String,
       dstCol: String,
       maxIters: Int = 20,
-      checkpointDir: Option[String] = None,
-      hops: Int = 1
+      checkpointDir: Option[String] = None
   ): (DataFrame, Int) = {
-    require(hops >= 1, s"hops must be >= 1, got $hops")
     import org.apache.spark.storage.StorageLevel
     val sc = edges.sparkSession.sparkContext
     val prevCheckpointDir = sc.getCheckpointDir
@@ -448,22 +440,13 @@ object Dedup {
     val sym = fwd.union(fwd.select(col("b"), col("a")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Iterative frames are EAGERLY snapshotted each round: persist() alone
-    // leaves the growing join lineage inside every new plan and each round
-    // partially recomputes it — measured 40s for a 3-round loop at sf0.1
-    // vs ~4s snapshotted. localCheckpoint is not enough on its own: it
-    // carries the origin plan's constraints (with stale attribute ids)
-    // into the next round's self-union and trips constraint rewriting, so
-    // the plan is fully severed via createDataFrame over the checkpointed
-    // RDD. With `checkpointDir` set the snapshot is a reliable checkpoint
-    // instead — same shape, survives executor loss.
-    def snapshot(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val cp = if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-      val rdd = cp.rdd
-      (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
-    }
-    var (labels, labelsRdd) = snapshot(
-      sym.select(col("a").as("node")).distinct().withColumn("label", col("node")))
+    // Iterative frames are EAGERLY snapshotted each round (see
+    // [[severLineage]]): persist() alone leaves the growing join lineage
+    // inside every new plan and each round partially recomputes it —
+    // measured 40s for a 3-round loop at sf0.1 vs ~4s snapshotted.
+    val reliable = checkpointDir.isDefined
+    var (labels, labelsRdd) = severLineage(
+      sym.select(col("a").as("node")).distinct().withColumn("label", col("node")), reliable)
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
@@ -480,27 +463,14 @@ object Dedup {
       // node id, so one extra self-join doubles the propagation distance
       // per round — O(log diameter) rounds instead of O(diameter), which
       // is what bounds the driver loop (each round is a full Spark job).
-      // `hops` folds further jumps into the SAME job; each hop's input is
-      // persisted so its doubled plan reference computes once (without
-      // it the plan would reference minNeighbor 2^hops times).
-      var cur = minNeighbor
-      val hopCaches = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.DataFrame]
-      var h = 0
-      while (h < hops) {
-        if (h > 0) { cur = cur.persist(StorageLevel.MEMORY_AND_DISK); hopCaches += cur }
-        val jumped = cur.as("x")
-          .join(cur.select(col("node").as("label"), col("label").as("jumped")),
-            Seq("label"))
-          .select(col("node"), col("jumped").as("label"))
-        cur = jumped
-        h += 1
-      }
-      val (next, nextRdd) = snapshot(cur)
-      hopCaches.foreach(_.unpersist(blocking = false))
+      val jumped = minNeighbor.as("x")
+        .join(minNeighbor.select(col("node").as("label"), col("label").as("jumped")),
+          Seq("label"))
+        .select(col("node"), col("jumped").as("label"))
+      val (next, nextRdd) = severLineage(jumped, reliable)
       // Round-19 negative result, measured so it stays un-retried:
       // carrying each node's previous label THROUGH the round (union
-      // branch + hop self-joins + checkpoint) to replace this join with a
+      // branch + jump self-join + checkpoint) to replace this join with a
       // plain filter over the snapshot read 10-19% SLOWER on q77/q123/
       // q124 at sf0.1 — the extra column rides every corpus-of-nodes row
       // through the round's heaviest operators to save one tiny-graph
@@ -520,12 +490,38 @@ object Dedup {
     }
     sym.unpersist()
     // restore the session-global checkpoint dir we overrode
-    if (checkpointDir.isDefined) prevCheckpointDir.foreach(sc.setCheckpointDir)
+    if (reliable) prevCheckpointDir.foreach(sc.setCheckpointDir)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents: labels not stable after $maxIters iterations " +
           "(a component's diameter exceeds maxIters) — raise maxIters")
     (labels, i)
+  }
+
+  /** Eager lineage sever: checkpoint `df` (reliable when `reliable`, into
+    * the context's checkpoint dir; local otherwise) and rebuild it as a
+    * fresh frame over the checkpointed RDD. A checkpoint alone is not
+    * enough: it carries the origin plan's constraints (with stale
+    * attribute ids) into a later self-union and trips constraint
+    * rewriting, so the plan is fully severed via `createDataFrame`.
+    * Returns the RDD too, so a superseded snapshot can be unpersisted
+    * deterministically instead of waiting for GC. */
+  private[graft] def severLineage(
+      df: DataFrame,
+      reliable: Boolean = false
+  ): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
+    val rdd = (if (reliable) df.checkpoint(true) else df.localCheckpoint(true)).rdd
+    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
+  }
+
+  /** Keep exactly the MINIMUM id of every near-dup cluster: connected
+    * components over `pairs` (`id_a`, `id_b`), then one anti-join of the
+    * non-exemplar nodes back to `df`. Rows outside every pair survive. */
+  private[graft] def dropClusterDups(df: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
+    val dups = connectedComponents(pairs, "id_a", "id_b")
+      .filter(col("node") =!= col("label"))
+      .select(col("node").as(idCol))
+    df.join(dups, Seq(idCol), "left_anti")
   }
 
   /** End-to-end fuzzy dedup: MinHash-LSH candidate pairs -> connected
@@ -546,13 +542,9 @@ object Dedup {
       numHashes: Int = 8,
       bands: Int = 4,
       maxBucket: Int = 10000
-  ): DataFrame = {
-    val pairs = minHashLshPairs(df, idCol, textCol, shingleK, numHashes, bands, maxBucket)
-    val clusters = connectedComponents(pairs, "id_a", "id_b")
-    val dups = clusters.filter(col("node") =!= col("label"))
-      .select(col("node").as(idCol))
-    df.join(dups, Seq(idCol), "left_anti")
-  }
+  ): DataFrame =
+    dropClusterDups(df,
+      minHashLshPairs(df, idCol, textCol, shingleK, numHashes, bands, maxBucket), idCol)
 
   /** [[fuzzyDedup]] with QUALITY-PRIORITY representative selection: keep
     * per near-dup cluster the row MAXIMIZING `scoreCol` (ties → smallest
@@ -617,29 +609,13 @@ object Dedup {
       planeSets: Seq[Seq[Seq[Double]]],
       maxBucket: Int = 10000
   ): DataFrame = {
-    require(maxBucket > 1, "maxBucket must allow at least a pair")
     val bandCols = planeSets.zipWithIndex.map { case (planes, b) =>
       struct(lit(b).as("band"), Similarity.lshBucket(col(vecCol), planes).as("bucket"))
     }
     val bucketed = df
       .select(col(idCol), explode(array(bandCols: _*)).as("bk"))
       .select(col(idCol), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
-    // same single-shuffle window cap + singleton prune + both-sides
-    // persist as minHashLshPairs (a 1-member bucket cannot pair)
-    val wcap = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bucket"))
-    val bounded = bucketed
-      .withColumn("__bn", count(lit(1)).over(wcap))
-      .filter(col("__bn") >= 2 && col("__bn") <= maxBucket)
-      .drop("__bn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = bounded.as("a")
-    val b = bounded.as("b")
-    val candidates = a
-      .join(b,
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
+    val candidates = bucketSelfJoin(bucketed, idCol, Seq("band", "bucket"), maxBucket).distinct()
     val vecs = df.select(col(idCol), col(vecCol))
     candidates
       .join(vecs.select(col(idCol).as("id_a"), col(vecCol).as("__va")), "id_a")
@@ -649,22 +625,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
 
-  /** Hamming near-duplicate pairs over a 64-bit fingerprint column
-    * (perceptual image hashes — [[graft.operators.Multimodal.imageHashes]]
-    * — or any simhash-style signature): candidate generation by the
-    * PIGEONHOLE segment trick the [[simHash]] scaladoc sketches — the 64
-    * bits split into `maxHamming + 1` contiguous segments, so any pair
-    * within `maxHamming` flips must agree EXACTLY on at least one segment;
-    * candidates come from a hash-partitioned equi-join on
-    * (segment index, segment value) — never an all-pairs comparison —
-    * and are verified with the exact popcount of the XOR.
-    *
-    * `maxBucket` is the same f² valve as [[embeddingNearDupPairs]]'s: a
-    * mass-duplicated image puts f rows in one (segment, value) bucket and
-    * the self-join emits f² candidates; over-wide buckets are dropped
-    * (members can still pair via their other segments, and identical
-    * hashes agree on EVERY segment, so a duplicate class only goes
-    * unreported when all its segments are over the cap). */
   /** The pigeonhole segment key array of a 64-bit hash: `maxHamming + 1`
     * contiguous segments as `struct(seg, segv)` — any two hashes within
     * `maxHamming` flips agree EXACTLY on at least one segment. Shared by
@@ -683,6 +643,22 @@ object Dedup {
     }: _*)
   }
 
+  /** Hamming near-duplicate pairs over a 64-bit fingerprint column
+    * (perceptual image hashes — [[graft.operators.Multimodal.imageHashes]]
+    * — or any simhash-style signature): candidate generation by the
+    * PIGEONHOLE segment trick the [[simHash]] scaladoc sketches — the 64
+    * bits split into `maxHamming + 1` contiguous segments, so any pair
+    * within `maxHamming` flips must agree EXACTLY on at least one segment;
+    * candidates come from a hash-partitioned equi-join on
+    * (segment index, segment value) — never an all-pairs comparison —
+    * and are verified with the exact popcount of the XOR.
+    *
+    * `maxBucket` is the same f² valve as [[embeddingNearDupPairs]]'s: a
+    * mass-duplicated image puts f rows in one (segment, value) bucket and
+    * the self-join emits f² candidates; over-wide buckets are dropped
+    * (members can still pair via their other segments, and identical
+    * hashes agree on EVERY segment, so a duplicate class only goes
+    * unreported when all its segments are over the cap). */
   def hammingNearDupPairs(
       df: DataFrame,
       idCol: String,
@@ -692,24 +668,13 @@ object Dedup {
   ): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 16,
       s"maxHamming must be in [0, 16], got $maxHamming (segments get too short above)")
-    require(maxBucket > 1, "maxBucket must allow at least a pair")
     val h = col(hashCol).cast("long")
     val bucketed = df
       .select(col(idCol), h.as("__h"), explode(hammingSegmentKeys(h, maxHamming)).as("sk"))
       .select(col(idCol), col("__h"), col("sk.seg").as("seg"), col("sk.segv").as("segv"))
-    val wcap = org.apache.spark.sql.expressions.Window.partitionBy(col("seg"), col("segv"))
-    val bounded = bucketed
-      .withColumn("__bn", count(lit(1)).over(wcap))
-      .filter(col("__bn") <= maxBucket)
-      .drop("__bn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = bounded.as("a")
-    val b = bounded.as("b")
-    a.join(b,
-        col("a.seg") === col("b.seg") && col("a.segv") === col("b.segv") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        bit_count(col("a.__h").bitwiseXOR(col("b.__h"))).cast("int").as("hamming"))
+    bucketSelfJoin(bucketed, idCol, Seq("seg", "segv"), maxBucket, carry = Seq("__h"))
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("__h_a").bitwiseXOR(col("__h_b"))).cast("int").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
@@ -962,24 +927,6 @@ object Dedup {
           .otherwise(array_join(kept, " ")).as(outCol))
   }
 
-  /** Cross-document PARAGRAPH/LINE dedup (the RefinedWeb recipe — Penedo
-    * et al. 2023, "line-wise deduplication"; DISTINCT granularity from
-    * [[duplicateSpans]]'s token shingles): segments whose trimmed form
-    * occurs more than `maxDf` times across the corpus are EXCISED from
-    * every document — except, with `keepFirst`, the canonical
-    * minimum-(doc, position) occurrence — and documents reassemble in
-    * segment order. Boilerplate (nav bars, cookie banners, repeated
-    * footers) disappears corpus-wide in one pass.
-    *
-    * Scale shape: one posexplode + THREE hash aggregations (fingerprint
-    * df + keeper in ONE combined pass — the [[removeDuplicateSpans]]
-    * rule; per-doc totals; per-doc reassembly) and a fingerprint-keyed
-    * equi-join that only carries fingerprints with df > maxDf. No
-    * windows, no self-joins; per-doc reassembly state is bounded by the
-    * document itself. The canonical keeper is `min(struct(id, idx))` —
-    * the same type-safe struct ordering [[removeDuplicateSpans]] uses —
-    * so any orderable id type (long, string, UUID) works, with no
-    * segment-count cap and no numeric-overflow hazard. */
   /** Variable-length exact-substring duplicate spans via a MULTI-K
     * ladder (round 19, judge item 8 — the suffix-array-free
     * approximation of Lee, Ippolito et al. 2021's any-length-≥-threshold
@@ -1033,6 +980,24 @@ object Dedup {
         (col("span_end") - col("span_start") + 1).cast("int"))
   }
 
+  /** Cross-document PARAGRAPH/LINE dedup (the RefinedWeb recipe — Penedo
+    * et al. 2023, "line-wise deduplication"; DISTINCT granularity from
+    * [[duplicateSpans]]'s token shingles): segments whose trimmed form
+    * occurs more than `maxDf` times across the corpus are EXCISED from
+    * every document — except, with `keepFirst`, the canonical
+    * minimum-(doc, position) occurrence — and documents reassemble in
+    * segment order. Boilerplate (nav bars, cookie banners, repeated
+    * footers) disappears corpus-wide in one pass.
+    *
+    * Scale shape: one posexplode + THREE hash aggregations (fingerprint
+    * df + keeper in ONE combined pass — the [[removeDuplicateSpans]]
+    * rule; per-doc totals; per-doc reassembly) and a fingerprint-keyed
+    * equi-join that only carries fingerprints with df > maxDf. No
+    * windows, no self-joins; per-doc reassembly state is bounded by the
+    * document itself. The canonical keeper is `min(struct(id, idx))` —
+    * the same type-safe struct ordering [[removeDuplicateSpans]] uses —
+    * so any orderable id type (long, string, UUID) works, with no
+    * segment-count cap and no numeric-overflow hazard. */
   def paragraphDedup(
       df: DataFrame,
       idCol: String,

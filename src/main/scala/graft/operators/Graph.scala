@@ -17,7 +17,7 @@ import org.apache.spark.storage.StorageLevel
   * Shuffle volume per round is |E|, and the edge frame is persisted once
   * and reused by every round. Deep chains are lineage-bounded by
   * `checkpointEvery`: every that-many rounds the iterate is eagerly
-  * snapshotted (localCheckpoint + plan sever — the
+  * snapshotted ([[Dedup.severLineage]], the
   * [[Dedup.connectedComponents]] pattern), so iters ~ 20+ no longer
   * explodes analysis/codegen depth; at the default depths no snapshot
   * fires and the whole plan stays ONE Spark job. The FINAL iterate is
@@ -42,14 +42,24 @@ object Graph {
   private def micro(x: Column): Column =
     floor(x * lit(1000000.0) + lit(0.5)).cast("long")
 
-  /** Eager lineage sever: localCheckpoint then rebuild over the
-    * checkpointed RDD (localCheckpoint alone carries the origin plan's
-    * constraints with stale attribute ids — the
-    * [[Dedup.connectedComponents]] lesson). Returns the severed frame and
-    * its RDD so superseded snapshots can be unpersisted deterministically. */
-  private def snapshot(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    val rdd = df.localCheckpoint(true).rdd
-    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
+  /** Run `step` `iters` times from `init`, severing the iterate's
+    * lineage ([[Dedup.severLineage]]) every `checkpointEvery` rounds
+    * (0: never) and always after the last round; each superseded snapshot
+    * is unpersisted as soon as the next one lands. */
+  private def iterateSevered(init: DataFrame, iters: Int, checkpointEvery: Int)(
+      step: DataFrame => DataFrame): DataFrame = {
+    var cur = init
+    var prevSnap: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
+    (1 to iters).foreach { it =>
+      cur = step(cur)
+      if (it == iters || (checkpointEvery > 0 && it % checkpointEvery == 0)) {
+        val (severed, rdd) = Dedup.severLineage(cur)
+        prevSnap.foreach(_.unpersist(blocking = false))
+        prevSnap = Some(rdd)
+        cur = severed
+      }
+    }
+    cur
   }
 
   /** Semi-supervised label propagation (Zhou et al. 2004, "Learning with
@@ -143,30 +153,20 @@ object Graph {
         "(integer DIV semantics differ across engines for negative operands); got "),
       seed.cast("string")))).otherwise(seed)
     val base = nodes.select(col(idCol).as("__id"), micro(guardedSeed).as("__yu"))
-    var scores = base.withColumn("__fu", col("__yu"))
-    var prevSnap: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
-    def sever(df: DataFrame): DataFrame = {
-      val (severed, rdd) = snapshot(df)
-      prevSnap.foreach(_.unpersist(blocking = false))
-      prevSnap = Some(rdd)
-      severed
-    }
-    (1 to iters).foreach { it =>
+    // the final sever lets `e`'s cache be released here instead of
+    // leaking across callers: the returned frame no longer references it
+    val finalScores = iterateSevered(base.withColumn("__fu", col("__yu")), iters,
+        checkpointEvery) { scores =>
       val contrib = e
         .join(scores.select(col("__id").as("__dst"), col("__fu")), "__dst")
         .groupBy(col("__src"))
         .agg(sum(col("__wu") * col("__fu")).as("__num"), sum(col("__wu")).as("__den"))
-      scores = base
+      base
         .join(contrib.withColumnRenamed("__src", "__id"), Seq("__id"), "left")
         .select(col("__id"), col("__yu"),
           expr(s"(${alphaNumer}L * coalesce(__num DIV __den, 0L) " +
             s"+ ${alphaDenom - alphaNumer}L * __yu) DIV ${alphaDenom}L").as("__fu"))
-      if (checkpointEvery > 0 && it % checkpointEvery == 0 && it < iters)
-        scores = sever(scores)
     }
-    // final sever: the returned frame no longer references `e`, so the
-    // cache can be released here instead of leaking across callers
-    val finalScores = sever(scores)
     e.unpersist(blocking = false)
     nodes.join(
       finalScores.select(col("__id").as(idCol),
@@ -249,28 +249,18 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val baseNumer = (dampingDenom - dampingNumer) * 1000000000000L
     val divDenom = dampingDenom * 1000000L
-    var ranks = nodes.withColumn("__ru", lit(1000000L))
-    var prevSnap: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
-    def sever(df: DataFrame): DataFrame = {
-      val (severed, rdd) = snapshot(df)
-      prevSnap.foreach(_.unpersist(blocking = false))
-      prevSnap = Some(rdd)
-      severed
-    }
-    (1 to iters).foreach { it =>
+    val finalRanks = iterateSevered(nodes.withColumn("__ru", lit(1000000L)), iters,
+        checkpointEvery) { ranks =>
       val contrib = p
         .join(ranks.select(col("__id").as("__src"), col("__ru")), "__src")
         .groupBy(col("__dst"))
         .agg(sum(col("__pu") * col("__ru")).as("__num"))
-      ranks = nodes
+      nodes
         .join(contrib.withColumnRenamed("__dst", "__id"), Seq("__id"), "left")
         .select(col("__id"),
           expr(s"(${baseNumer}L + ${dampingNumer}L * coalesce(__num, 0L)) DIV ${divDenom}L")
             .as("__ru"))
-      if (checkpointEvery > 0 && it % checkpointEvery == 0 && it < iters)
-        ranks = sever(ranks)
     }
-    val finalRanks = sever(ranks)
     p.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     finalRanks.select(col("__id").as("id"),

@@ -196,10 +196,8 @@ object TextAnalysis {
       buckets: Int = 32,
       iters: Int = 12,
       lr: Double = 1.0,
-      maxLangs: Int = 64,
-      tol: Double = 0.0
+      maxLangs: Int = 64
   ): Seq[(String, Curation.LogisticModel)] = {
-    require(tol >= 0.0, s"tol must be >= 0, got $tol")
     import graft.sparkext.DoubleToScaled
     val langs = labeled.select(col(langCol).cast("string").as("l"))
       .filter(col("l").isNotNull).distinct()
@@ -243,12 +241,7 @@ object TextAnalysis {
       val width = buckets + 1
       val LoMask = (1L << 20) - 1
       var w = Array.fill(k, width)(0.0)
-      // early-exit knob, the logisticFit rule verbatim: stop once every
-      // class's every weight update falls below `tol` in magnitude;
-      // default 0.0 = the exact legacy schedule (round 19, judge item 6)
-      var it = 0
-      var converged = false
-      while (it < iters && !converged) {
+      (1 to iters).foreach { _ =>
         val wB = w.map(_.clone()) // stable snapshot into the closure
         val (gHi, gLo) = rows.mapPartitions { it =>
           val hi = new Array[Long](k * width)
@@ -281,12 +274,8 @@ object TextAnalysis {
           while (i < a._1.length) { a._1(i) += b._1(i); a._2(i) += b._2(i); i += 1 }
           a
         }, depth = 2)
-        val steps = Array.tabulate(k, width)((c, j) =>
-          lr * DoubleToScaled.hiLoToDouble(
-            gHi(c * width + j), gLo(c * width + j)) / nRows)
-        w = Array.tabulate(k, width)((c, j) => w(c)(j) + steps(c)(j))
-        converged = steps.forall(_.forall(s => math.abs(s) < tol))
-        it += 1
+        w = Array.tabulate(k, width)((c, j) => w(c)(j) + lr * DoubleToScaled.hiLoToDouble(
+          gHi(c * width + j), gLo(c * width + j)) / nRows)
       }
       rows.unpersist(blocking = false)
       langs.zipWithIndex.map { case (l, c) =>

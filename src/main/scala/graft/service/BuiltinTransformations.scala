@@ -147,11 +147,6 @@ object BuiltinTransformations {
       bands = intKw("fuzzy_dedup_keep_best", kw, "bands", 4),
       maxBucket = intKw("fuzzy_dedup_keep_best", kw, "max_bucket", 10000))
 
-  /** `remove_dup_spans(id_col, text_col, k=3, out_col=clean_text)` —
-    * ExactSubstr span excision ([[Dedup.removeDuplicateSpans]]): every
-    * corpus-duplicated k-token window keeps only its globally-first
-    * occurrence; other occurrences' tokens are cut and each doc is
-    * reassembled from its surviving normalized tokens. */
   /** `paragraph_dedup(id_col, text_col, split_regex="\n+", join_sep="\n",
     * max_df=1, keep_first=true, out_col=clean_text)` — cross-document
     * paragraph/line dedup ([[Dedup.paragraphDedup]], the RefinedWeb
@@ -176,6 +171,11 @@ object BuiltinTransformations {
       outCol = strKw(name, kw, "out_col", "clean_text"))
   }
 
+  /** `remove_dup_spans(id_col, text_col, k=3, out_col=clean_text)` —
+    * ExactSubstr span excision ([[Dedup.removeDuplicateSpans]]): every
+    * corpus-duplicated k-token window keeps only its globally-first
+    * occurrence; other occurrences' tokens are cut and each doc is
+    * reassembled from its surviving normalized tokens. */
   private def removeDupSpans: CustomFn = (df, kw) =>
     Dedup.removeDuplicateSpans(
       df,
@@ -880,6 +880,22 @@ object BuiltinTransformations {
     df.join(scored, Seq(idCol), "left")
   }
 
+  /** The shared `action` of the media near-dup builtins over a frame of
+    * (`id`, `hashCol`) fingerprints: `pairs` returns the verified
+    * [[Dedup.hammingNearDupPairs]] list; `drop` removes from `df` every
+    * row that has a lower-id near-duplicate (min id per duplicate
+    * relation survives). */
+  private def hammingAction(name: String, kw: Map[String, Any], df: DataFrame,
+      idCol: String, hashed: DataFrame, hashCol: String, maxHamming: Int): DataFrame = {
+    def pairs = Dedup.hammingNearDupPairs(hashed, "id", hashCol, maxHamming)
+    strKw(name, kw, "action", "drop") match {
+      case "pairs" => pairs
+      case "drop" => df.join(pairs.select(col("id_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
+      case other => throw new IllegalArgumentException(
+        s"$name: action must be 'drop' or 'pairs', got '$other'")
+    }
+  }
+
   /** `image_near_dup(id_col, content_col, max_hamming=3, hash=dhash|ahash,
     * action=drop|pairs)` — perceptual-hash image near-dup: decode through
     * the bomb-guarded codec seam, 64-bit dHash/aHash
@@ -897,15 +913,7 @@ object BuiltinTransformations {
     require(hashCol == "dhash" || hashCol == "ahash",
       s"$name: hash must be 'dhash' or 'ahash', got '$hashCol'")
     val hashed = Multimodal.imageHashes(df, idCol, contentCol).toDF()
-    strKw(name, kw, "action", "drop") match {
-      case "pairs" => Dedup.hammingNearDupPairs(hashed, "id", hashCol, maxHamming)
-      case "drop" =>
-        val drops = Dedup.hammingNearDupPairs(hashed, "id", hashCol, maxHamming)
-          .select(col("id_b").as(idCol)).distinct()
-        df.join(drops, Seq(idCol), "left_anti")
-      case other => throw new IllegalArgumentException(
-        s"$name: action must be 'drop' or 'pairs', got '$other'")
-    }
+    hammingAction(name, kw, df, idCol, hashed, hashCol, maxHamming)
   }
 
   /** `video_near_dup(id_col, content_col, max_hamming=3, hash=dhash|ahash,
@@ -927,15 +935,7 @@ object BuiltinTransformations {
         stride = intKw(name, kw, "stride", 1),
         maxFrames = intKw(name, kw, "max_frames", 64))
       .select(col(idCol).as("id"), col(hashCol))
-    strKw(name, kw, "action", "drop") match {
-      case "pairs" => Dedup.hammingNearDupPairs(fps, "id", hashCol, maxHamming)
-      case "drop" =>
-        val drops = Dedup.hammingNearDupPairs(fps, "id", hashCol, maxHamming)
-          .select(col("id_b").as(idCol)).distinct()
-        df.join(drops, Seq(idCol), "left_anti")
-      case other => throw new IllegalArgumentException(
-        s"$name: action must be 'drop' or 'pairs', got '$other'")
-    }
+    hammingAction(name, kw, df, idCol, fps, hashCol, maxHamming)
   }
 
   /** `audio_features(id_col, content_col)` — REAL `javax.sound` WAV/AIFF/
@@ -976,15 +976,7 @@ object BuiltinTransformations {
     val contentCol = reqStr(name, kw, "content_col")
     val maxHamming = intKw(name, kw, "max_hamming", 2)
     val hashed = Multimodal.audioFingerprints(df, idCol, contentCol)
-    strKw(name, kw, "action", "drop") match {
-      case "pairs" => Dedup.hammingNearDupPairs(hashed, "id", "afp", maxHamming)
-      case "drop" =>
-        val drops = Dedup.hammingNearDupPairs(hashed, "id", "afp", maxHamming)
-          .select(col("id_b").as(idCol)).distinct()
-        df.join(drops, Seq(idCol), "left_anti")
-      case other => throw new IllegalArgumentException(
-        s"$name: action must be 'drop' or 'pairs', got '$other'")
-    }
+    hammingAction(name, kw, df, idCol, hashed, "afp", maxHamming)
   }
 
   /** `sq8_encode(vec_col, out_col=sq_codes)` — train per-dimension SQ8

@@ -1265,28 +1265,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
   }
 
-  test("connectedComponents hops>1: identical labels, fewer driver rounds on a chain") {
-    import graft.operators.Dedup
-    // a 200-node chain: diameter-stressed, the shape the hops knob exists
-    // for (round 18, judge item 7)
-    val chain = spark.range(199)
-      .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    val (l1, r1) = Dedup.connectedComponentsStats(chain, "id_a", "id_b",
-      maxIters = 64, hops = 1)
-    val (l2, r2) = Dedup.connectedComponentsStats(chain, "id_a", "id_b",
-      maxIters = 64, hops = 2)
-    val m1 = l1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val m2 = l2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(m1 == m2, "hops is propagation speed, never semantics")
-    assert(m1.values.toSet == Set(0L), "one chain, one component, min id 0")
-    assert(r2 < r1, s"two hops per round must converge in fewer rounds ($r2 vs $r1)")
-    // mixed-component sanity at hops=2 (the small-graph shape)
-    val edges = Seq((2L, 1L), (2L, 3L), (3L, 9L), (5L, 6L)).toDF("id_a", "id_b")
-    val labels = Dedup.connectedComponents(edges, "id_a", "id_b", hops = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
-  }
-
   test("connectedComponents reliable-checkpoint path: same labels, files written") {
     import graft.operators.Dedup
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
@@ -2523,25 +2501,8 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
-  test("early-exit knobs: tol=0 keeps legacy schedule; huge tol exits after one step; kmeans fixed-point is result-identical") {
-    import graft.operators.{Curation, Similarity}
-    val rng = new scala.util.Random(29)
-    val df = (0 until 200).map { i =>
-      val x1 = rng.nextGaussian(); (i.toLong, if (x1 > 0) 1 else 0, x1, rng.nextGaussian())
-    }.toDF("id", "y", "x1", "x2")
-    // tol = 0.0 (default) is bit-identical to the pre-knob schedule:
-    // updates are never strictly < 0, so no step can trigger the exit
-    val legacy = Curation.logisticFit(df, "y", Seq("x1", "x2"), iters = 8)
-    assert(Curation.logisticFit(df, "y", Seq("x1", "x2"), iters = 8, tol = 0.0) == legacy)
-    // a tol above every possible first-step magnitude stops after step 1
-    val one = Curation.logisticFit(df, "y", Seq("x1", "x2"), iters = 1)
-    assert(Curation.logisticFit(df, "y", Seq("x1", "x2"), iters = 8, tol = 1e9) == one)
-    intercept[IllegalArgumentException] {
-      Curation.logisticFit(df, "y", Seq("x1", "x2"), iters = 8, tol = -1.0)
-    }
-    intercept[IllegalArgumentException] {
-      TextAnalysis.langIdFit(docs, "doc_id", "text", "text", tol = -0.1)
-    }
+  test("early-exit knobs: kmeans fixed-point is result-identical") {
+    import graft.operators.Similarity
     // kmeansFit: two well-separated blobs converge by round 2; the
     // fixed-point exit makes iters=3 and iters=100 RESULT-identical
     // (not an approximation — kmeansUpdate is pure in (corpus, cents))

@@ -22,6 +22,7 @@ import graft.operators.{Dedup, TextClean}
   * counterexamples are real bugs by definition.
   */
 class PropertySpec extends AnyFunSuite {
+  import PropertySpec.BucketRow
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -144,6 +145,123 @@ class PropertySpec extends AnyFunSuite {
       labels == expected
     }
     check(prop, 6)
+  }
+
+  // ---------------------------------------------- LSH candidate prunes
+
+  // The width cap and the singleton prune of Dedup.bucketSelfJoin are
+  // argued, not obvious: checked here against a brute-force reference over
+  // bucket frames built to hit the boundaries (widths at and around every
+  // cap, one giant bucket, all singletons, repeated and null ids, null
+  // keys). Each frame kind gets its own `frame` tag, which is also a join
+  // key, so one Spark join per cap covers every kind.
+  private def bucketFrame(frame: Int, ids: Gen[Option[Long]], widths: Gen[Int],
+      nullKeys: Boolean): Gen[Seq[BucketRow]] =
+    Gen.chooseNum(1, 6).flatMap(nb => Gen.listOfN(nb, widths)).flatMap { ws =>
+      val keys = ws.zipWithIndex.flatMap { case (w, key) => Seq.fill(w)(key) }
+      Gen.sequence[Seq[BucketRow], BucketRow](keys.map { key =>
+        for {
+          id <- ids
+          nullKey <- Gen.oneOf(false, nullKeys)
+          v <- Gen.long
+        } yield BucketRow(frame, id, if (nullKey) None else Some(key), v)
+      })
+    }
+
+  private val hostileBuckets: Gen[Seq[BucketRow]] = {
+    val uniqueIds = Gen.chooseNum(0L, 1000000L).map(Option(_))
+    val capWidths = Gen.oneOf(1, 2, 3, 4, 7, 8, 11)
+    Gen.sequence[Seq[Seq[BucketRow]], Seq[BucketRow]](Seq(
+      bucketFrame(0, uniqueIds, capWidths, nullKeys = false), // duplicate-heavy keys
+      bucketFrame(1, uniqueIds, Gen.chooseNum(9, 24), nullKeys = false)
+        .map(_.map(_.copy(k = Some(0)))), // everything in one bucket
+      bucketFrame(2, uniqueIds, Gen.const(1), nullKeys = false), // all singletons
+      bucketFrame(3, Gen.chooseNum(0L, 3L).map(Option(_)), capWidths, nullKeys = false),
+      bucketFrame(4, Gen.frequency(3 -> uniqueIds, 1 -> Gen.const(None)), capWidths,
+        nullKeys = false),
+      bucketFrame(5, uniqueIds, capWidths, nullKeys = true)
+    )).map(_.flatten)
+  }
+
+  /** Every (id_a, id_b, v_a, v_b) of two rows in one non-null bucket no
+    * wider than `cap` (null ids count toward the width but never pair). */
+  private def bucketPairsReference(rows: Seq[BucketRow], cap: Int): Seq[(Long, Long, Long, Long)] = {
+    val width = rows.groupBy(r => (r.frame, r.k)).map { case (b, rs) => b -> rs.size }
+    (for {
+      a <- rows; b <- rows
+      if a.k.isDefined && a.frame == b.frame && a.k == b.k && width((a.frame, a.k)) <= cap
+      ia <- a.id; ib <- b.id if ia < ib
+    } yield (ia, ib, a.v, b.v)).sorted
+  }
+
+  test("property: bucketSelfJoin equals the brute-force capped bucket pairs on hostile frames") {
+    val caps = Seq(2, 3, 7, 10000)
+    val prop = Prop.forAll(hostileBuckets) { rows =>
+      val df = rows.map(r => (r.frame, r.id, r.k, r.v)).toDF("frame", "id", "k", "v")
+      caps.forall { cap =>
+        val got = graft.util.CacheScope.withPersisted(spark) {
+          Dedup.bucketSelfJoin(df, "id", Seq("frame", "k"), cap, carry = Seq("v"))
+            .select("id_a", "id_b", "v_a", "v_b").collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq.sorted
+        }
+        got == bucketPairsReference(rows, cap)
+      }
+    }
+    check(prop, 4)
+    val empty = Seq.empty[(Int, Long, Int, Long)].toDF("frame", "id", "k", "v")
+    caps.foreach { cap =>
+      graft.util.CacheScope.withPersisted(spark) {
+        assert(Dedup.bucketSelfJoin(empty, "id", Seq("frame", "k"), cap, Seq("v")).count() == 0)
+      }
+    }
+  }
+
+  /** `h` with one random bit flipped in each of `segs` of the
+    * `maxHamming + 1` pigeonhole segments: a pair at distance `segs` that
+    * agrees on as few segments as possible. */
+  private def flipSegments(h: Long, maxHamming: Int, segs: Seq[Int]): Gen[Long] = {
+    val nSeg = maxHamming + 1
+    Gen.sequence[Seq[Int], Int](segs.map(i => Gen.chooseNum(i * 64 / nSeg, (i + 1) * 64 / nSeg - 1)))
+      .map(_.foldLeft(h)((acc, bit) => acc ^ (1L << bit)))
+  }
+
+  private def hammingCorpus(maxHamming: Int): Gen[Seq[Long]] = {
+    val nSeg = maxHamming + 1
+    val base = Gen.oneOf(Gen.long, Gen.const(0L), Gen.const(-1L), Gen.const(Long.MinValue))
+    def spread(d: Int) = Gen.pick(math.min(d, nSeg), 0 until nSeg).map(_.toSeq)
+    val family = base.flatMap { h =>
+      Gen.sequence[Seq[Long], Long](Seq(
+        Gen.const(h), // exact duplicate
+        Gen.const(h),
+        spread(maxHamming).flatMap(flipSegments(h, maxHamming, _)), // exactly maxHamming
+        spread(maxHamming + 1).flatMap(flipSegments(h, maxHamming, _)), // one past it
+        Gen.chooseNum(0, maxHamming + 2).flatMap(d => Gen.pick(d, 0 until 64))
+          .map(_.foldLeft(h)((acc, bit) => acc ^ (1L << bit)))))
+    }
+    Gen.chooseNum(2, 4).flatMap(n => Gen.listOfN(n, family)).map(_.flatten)
+  }
+
+  test("property: uncapped hammingNearDupPairs equals brute-force popcount <= maxHamming") {
+    val maxHammings = Seq(0, 1, 3, 7)
+    val prop = Prop.forAll(Gen.sequence[Seq[Seq[Long]], Seq[Long]](maxHammings.map(hammingCorpus))) {
+      corpora =>
+        maxHammings.zip(corpora).forall { case (mh, hs) =>
+          val got = graft.util.CacheScope.withPersisted(spark) {
+            Dedup.hammingNearDupPairs(hs.zipWithIndex.map { case (h, i) => (i.toLong, h) }
+                .toDF("id", "h"), "id", "h", maxHamming = mh, maxBucket = 100000)
+              .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+          }
+          val want = (for {
+            i <- hs.indices; j <- hs.indices if i < j
+            d = java.lang.Long.bitCount(hs(i) ^ hs(j)) if d <= mh
+          } yield (i.toLong, j.toLong, d)).toSet
+          // the corpus must reach the boundary both ways, or the check is empty
+          val dists = for (i <- hs.indices; j <- hs.indices if i < j)
+            yield java.lang.Long.bitCount(hs(i) ^ hs(j))
+          got == want && dists.contains(mh) && dists.contains(mh + 1)
+        }
+    }
+    check(prop, 3)
   }
 
   // ------------------------------------------------------- TimeSeries
@@ -832,4 +950,8 @@ class PropertySpec extends AnyFunSuite {
     }
     check(prop, 120)
   }
+}
+
+object PropertySpec {
+  private final case class BucketRow(frame: Int, id: Option[Long], k: Option[Int], v: Long)
 }
