@@ -365,16 +365,6 @@ object ExprRegistry {
     orderedWindow(kw, fn).rowsBetween(-(k.toLong - 1), Window.currentRow)
   }
 
-  /** TIME-windowed rolling frame (polars `rolling_*_by`): the frame spans
-    * an interval of the `by` axis ending at the current row, not a row
-    * count — a RANGE frame, so tied `by` values share one deterministic
-    * frame and no tie-break is needed. `by` must be an INTEGER column
-    * (epoch seconds/micros — the `dt_epoch_*` derive fns produce one):
-    * the closed-bound arithmetic shifts range endpoints by ±1 unit, which
-    * only means "exclusive" on an integer grid. `window_size` is either a
-    * plain integer in `by`'s own units or a `"<n>s|m|h|d"` duration
-    * string (which assumes `by` is epoch SECONDS). `closed` ∈ right
-    * (default, polars') | both | left | none. */
   /** (window length in `by` units, closed mode) — shared by the windowed
     * frame builder and the global value-range tail exchange. */
   private def rollingByParams(kw: Map[String, Any], fn: String): (Long, String) = {
@@ -399,6 +389,16 @@ object ExprRegistry {
     (w, closed)
   }
 
+  /** TIME-windowed rolling frame (polars `rolling_*_by`): the frame spans
+    * an interval of the `by` axis ending at the current row, not a row
+    * count — a RANGE frame, so tied `by` values share one deterministic
+    * frame and no tie-break is needed. `by` must be an INTEGER column
+    * (epoch seconds/micros — the `dt_epoch_*` derive fns produce one):
+    * the closed-bound arithmetic shifts range endpoints by ±1 unit, which
+    * only means "exclusive" on an integer grid. `window_size` is either a
+    * plain integer in `by`'s own units or a `"<n>s|m|h|d"` duration
+    * string (which assumes `by` is epoch SECONDS). `closed` ∈ right
+    * (default, polars') | both | left | none. */
   private[graft] def rollingByFrame(kw: Map[String, Any], fn: String): WindowSpec = {
     val by = str(kw, "by")
     val (w, closed) = rollingByParams(kw, fn)
@@ -463,10 +463,6 @@ object ExprRegistry {
   private def rw(f: Map[String, Any] => Column): DeriveFn = kw => RowWise(f(kw))
   private def agg(f: Map[String, Any] => Column): DeriveFn = kw => AggThenRow(f(kw))
 
-  /** Aggregate with polars `.over(keys)` semantics: with a `partition_by`
-    * kwarg the aggregate broadcasts per key (an unordered window — one
-    * hash shuffle on the keys, fine at scale when keys are numerous);
-    * without it, the whole-frame agg+broadcast-join path. */
   /** Like [[aggOrOver]] for fns whose aggregate(s) sit INSIDE
     * post-processing (slice over collect_list, compares, when-chains):
     * `build` receives a wrapper applied to EACH aggregate — identity in
@@ -485,6 +481,10 @@ object ExprRegistry {
       }
     }
 
+  /** Aggregate with polars `.over(keys)` semantics: with a `partition_by`
+    * kwarg the aggregate broadcasts per key (an unordered window — one
+    * hash shuffle on the keys, fine at scale when keys are numerous);
+    * without it, the whole-frame agg+broadcast-join path. */
   private def aggOrOver(f: Map[String, Any] => Column): DeriveFn = kw => {
     val parts = strSeq(kw, "partition_by")
     if (parts.isEmpty) AggThenRow(f(kw))
@@ -1656,12 +1656,6 @@ object ExprRegistry {
     "implode" -> agg(kw => sort_array(collect_list(c(kw))))
   )
 
-  /** Names that exist in the engine but as FRAME-LEVEL builtins
-    * (`custom_transformations` stage), not derive fns — the two documented
-    * spelling traps for configs ported from the reference's reflective
-    * `pl.Expr` surface (see the header's DELIBERATE EXCLUSIONS). Kept as a
-    * literal here (graft.service depends on this package, not vice versa);
-    * ExprRegistrySpec pins it against `BuiltinTransformations.registry`. */
   /** Pinned inventory of Polars 1.34's public top-level `pl.Expr` METHODS
     * (what the reference's reflective registry exposes — `inspect
     * .getmembers(pl.Expr, isfunction)` minus underscore names and its own
@@ -1786,6 +1780,12 @@ object ExprRegistry {
     "bitwise_trailing_ones" -> "no codegen-native Spark spelling; niche",
     "bitwise_trailing_zeros" -> "no codegen-native Spark spelling; niche")
 
+  /** Names that exist in the engine but as FRAME-LEVEL builtins
+    * (`custom_transformations` stage), not derive fns — the
+    * spelling traps for configs ported from the reference's reflective
+    * `pl.Expr` surface (see the header's DELIBERATE EXCLUSIONS). Kept as a
+    * literal here (graft.service depends on this package, not vice versa);
+    * ExprRegistrySpec pins it against `BuiltinTransformations.registry`. */
   private[graft] val builtinSpellings: Set[String] = Set(
     "exact_dedup", "fuzzy_dedup", "minhash_near_dup", "semantic_dedup",
     "quality_filter", "quality_classifier", "clean_text", "decontaminate", "incremental_dedup",

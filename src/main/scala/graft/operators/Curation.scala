@@ -645,13 +645,9 @@ object Curation {
     val storeSeg = seenFps.select(sh.as("__sh")).distinct()
       .select(col("__sh"), explode(Dedup.hammingSegmentKeys(col("__sh"), maxHamming)).as("sk"))
       .select(col("__sh"), col("sk.seg").as("seg"), col("sk.segv").as("segv"))
-    val wcap = org.apache.spark.sql.expressions.Window.partitionBy(col("seg"), col("segv"))
-    def bounded(df: DataFrame): DataFrame = df
-      .withColumn("__bn", count(lit(1)).over(wcap))
-      .filter(col("__bn") <= maxBucket)
-      .drop("__bn")
-    val seen = bounded(batchSeg)
-      .join(bounded(storeSeg), Seq("seg", "segv"))
+    val segKeys = Seq("seg", "segv")
+    val seen = Similarity.capWidth(batchSeg, segKeys, maxBucket)
+      .join(Similarity.capWidth(storeSeg, segKeys, maxBucket), segKeys)
       .filter(bit_count(col("__h").bitwiseXOR(col("__sh"))) <= maxHamming)
       .select(col(idCol)).distinct()
     val freshKeyed = keyed.join(seen, Seq(idCol), "left_anti")

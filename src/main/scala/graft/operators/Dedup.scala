@@ -205,11 +205,7 @@ object Dedup {
       carry: Seq[String] = Nil
   ): DataFrame = {
     require(maxBucket > 1, "maxBucket must allow at least a pair")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-    val bounded = buckets
-      .withColumn("__bn", count(lit(1)).over(w))
-      .filter(col("__bn") >= 2 && col("__bn") <= maxBucket)
-      .drop("__bn")
+    val bounded = Similarity.capWidth(buckets, keys, maxBucket, lo = 2)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = bounded.as("a")
     val b = bounded.as("b")
@@ -745,12 +741,8 @@ object Dedup {
     require(maxCluster > 1, "maxCluster must allow at least a pair")
     val assigned = dfWithCell
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val wcap = org.apache.spark.sql.expressions.Window.partitionBy(col("cell"))
-    val bounded = assigned
-      .select(col(idCol), col("cell"), col(vecCol).as("__v"))
-      .withColumn("__cn", count(lit(1)).over(wcap))
-      .filter(col("__cn") <= maxCluster)
-      .drop("__cn")
+    val bounded = Similarity.capWidth(
+      assigned.select(col(idCol), col("cell"), col(vecCol).as("__v")), Seq("cell"), maxCluster)
     val drops = bounded.select(col(idCol).as("__id_keep"), col("cell"), col("__v").as("__va"))
       .join(bounded.select(col(idCol).as("__id_drop"), col("cell"), col("__v").as("__vb")),
         Seq("cell"))

@@ -391,21 +391,6 @@ object Multimodal {
       }
   }
 
-  /** Deterministic PATTERNED-PNG fixture generator — the near-dup twin of
-    * [[synthesizeGrayPngs]] (whose constant-intensity images all share
-    * the all-zero perceptual hash and so cannot exercise near-dup
-    * clustering). Image for `id`: 36×32 gray — 9×8 blocks of 4×4 pixels,
-    * mapping 1:1 onto the dHash grid — whose horizontal GRADIENT SIGNS
-    * encode `pk = id % patterns` as an 8-bit extended-parity codeword
-    * replicated down all 8 rows: adjacent blocks step ±15 by the
-    * codeword's bits, so dHash(pk) IS the codeword ×8 and distinct
-    * patterns sit at hamming distance ≥ 16 BY CONSTRUCTION (parity makes
-    * word distance ≥ 2). A per-id brightness jitter
-    * ((id / patterns) % 20, intensities stay < 256) gives same-pk images
-    * DIFFERENT bytes (exact dedup misses them) but IDENTICAL perceptual
-    * hashes (both hashes are brightness-shift invariant) — near-dup
-    * ground truth is id-arithmetic a SQL oracle can predict: clusters =
-    * id mod patterns, byte-identical repeats = id mod (patterns·20). */
   /** The 36×32 gray pattern raster behind [[synthesizePatternPngs]] and
     * [[synthesizeMjpegAvis]]: 9 block columns whose ±15 gradient signs
     * encode `pk = id % patterns` as an extended-parity codeword (see the
@@ -445,6 +430,21 @@ object Multimodal {
     img
   }
 
+  /** Deterministic PATTERNED-PNG fixture generator — the near-dup twin of
+    * [[synthesizeGrayPngs]] (whose constant-intensity images all share
+    * the all-zero perceptual hash and so cannot exercise near-dup
+    * clustering). Image for `id`: 36×32 gray — 9×8 blocks of 4×4 pixels,
+    * mapping 1:1 onto the dHash grid — whose horizontal GRADIENT SIGNS
+    * encode `pk = id % patterns` as an 8-bit extended-parity codeword
+    * replicated down all 8 rows: adjacent blocks step ±15 by the
+    * codeword's bits, so dHash(pk) IS the codeword ×8 and distinct
+    * patterns sit at hamming distance ≥ 16 BY CONSTRUCTION (parity makes
+    * word distance ≥ 2). A per-id brightness jitter
+    * ((id / patterns) % 20, intensities stay < 256) gives same-pk images
+    * DIFFERENT bytes (exact dedup misses them) but IDENTICAL perceptual
+    * hashes (both hashes are brightness-shift invariant) — near-dup
+    * ground truth is id-arithmetic a SQL oracle can predict: clusters =
+    * id mod patterns, byte-identical repeats = id mod (patterns·20). */
   def synthesizePatternPngs(df: DataFrame, idCol: String, patterns: Int = 25): DataFrame = {
     require(patterns >= 1 && patterns <= 128, s"patterns must be in [1,128], got $patterns")
     val spark = df.sparkSession

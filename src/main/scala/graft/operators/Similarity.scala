@@ -4,22 +4,27 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Approximate-nearest-neighbor search over an embedding column
-  * (`array<float>` / `array<double>`).
+/** Nearest-neighbor search over an embedding column (`array<float>` /
+  * `array<double>`), with the quantizers, PCA and index upkeep it uses.
   *
-  * Two paths:
-  *  - [[bruteForceTopK]]: exact cosine top-k — the correctness baseline.
-  *    Queries are broadcast (a handful of vectors), so the "cross join" is
-  *    a map-side nested loop with NO shuffle of the corpus; top-k is a
-  *    per-query window. Linear scan — right up to ~10^7 corpus rows/query.
-  *  - [[lshTopK]]: random-hyperplane LSH — the 100 TB path. Vectors land in
-  *    sign-pattern buckets; a query only scans its own bucket. Bucket
-  *    assignment is a per-row projection (no shuffle); the candidate join is
-  *    hash-partitioned on the bucket id.
+  * Search paths, each ranked on round-6 cosine with the corpus id as the
+  * tie-break, so the kept set is deterministic:
+  *  - [[bruteForceTopK]]: exact top-k against a broadcast query set — the
+  *    correctness baseline; a map-side nested loop, no corpus shuffle;
+  *  - [[lshTopK]]: random-hyperplane buckets; a query scans its own bucket;
+  *  - [[ivfTopK]]: a query scans its `nProbe` nearest coarse-quantizer cells;
+  *  - [[pqTopK]] / [[sqTopK]]: scans of PQ / SQ8 codes, queries uncompressed;
+  *  - [[ivfPqTopK]]: IVF cells holding PQ codes, an ADC shortlist, then an
+  *    exact re-rank;
+  *  - [[knnGraph]] / [[hardNegatives]]: corpus-sized self-joins on the cell id.
   *
-  * All vector math is `functions.aggregate`/`zip_with` fold expressions —
-  * sequential left-to-right accumulation, which makes results bit-identical
-  * to any engine folding in the same order (the DuckDB oracle does).
+  * They share four private pieces: `rankTopK` (the per-group top-k tail),
+  * `probeCells` (the cells a row scans), `adcCosine` (the PQ asymmetric
+  * cosine) and [[capWidth]] (the bounded group width, which also caps the
+  * bucket self-joins of [[Dedup]] and [[Curation]]).
+  *
+  * Dot products are the native [[graft.sparkext.DotProduct]], which sums
+  * sequentially, in the order the DuckDB oracle sums.
   */
 object Similarity {
 
@@ -36,6 +41,34 @@ object Similarity {
     val d = dot(a, b)
     val n = norm(a) * norm(b)
     when(n === 0.0, lit(0.0)).otherwise(d / n)
+  }
+
+  /** The top-k tail of every search here: within each `group`, rows ranked
+    * by (`score` DESC, `tieId` ASC) into `rankCol` (1-based), ranks above
+    * `k` dropped. The id tie-break keeps the kept set deterministic when
+    * round-6 scores tie. */
+  private def rankTopK(
+      df: DataFrame,
+      group: Seq[Column],
+      score: Column,
+      tieId: Column,
+      k: Int,
+      rankCol: String
+  ): DataFrame =
+    df.withColumn(rankCol,
+        row_number().over(Window.partitionBy(group: _*).orderBy(score.desc, tieId.asc)))
+      .filter(col(rankCol) <= k)
+
+  /** Keeps the rows whose group on `keys` has `lo` to `hi` rows: one window
+    * count on the keys the following join shuffles on anyway. A group wider
+    * than `hi` is dropped whole, never truncated. The one width cap of the
+    * cell self-joins here and of the bucket joins in [[Dedup]] and
+    * [[Curation]]. */
+  private[graft] def capWidth(df: DataFrame, keys: Seq[String], hi: Int, lo: Int = 1): DataFrame = {
+    val n = col("__width")
+    df.withColumn("__width", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(if (lo > 1) n >= lo && n <= hi else n <= hi)
+      .drop("__width")
   }
 
   /** Exact cosine top-k: for every query row, the k nearest corpus rows.
@@ -55,25 +88,25 @@ object Similarity {
       k: Int
   ): DataFrame = {
     val joined = corpus.crossJoin(broadcast(queries))
-    val sim = round(cosine(col(corpusVec), col(queryVec)), 6)
-    val w = Window.partitionBy(col(queryId)).orderBy(sim.desc, col(corpusId).asc)
-    joined
-      .withColumn("cosine", sim)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .withColumn("cosine", round(cosine(col(corpusVec), col(queryVec)), 6))
+    rankTopK(joined, Seq(col(queryId)), col("cosine"), col(corpusId), k, "rk")
       .select(col(queryId), col(corpusId), col("cosine"), col("rk"))
   }
 
   /** Random-hyperplane LSH bucket id: bit i = [dot(vec, plane_i) > 0].
     * `planes` are deterministic literals baked into codegen — no state, no
-    * shuffle; two vectors within angle θ collide with prob (1 - θ/π)^bits. */
-  def lshBucket(vec: Column, planes: Seq[Seq[Double]]): Column =
+    * shuffle; two vectors within angle θ collide with prob (1 - θ/π)^bits.
+    * 1 to 64 planes: the id is a 64-bit mask, one bit per plane. */
+  def lshBucket(vec: Column, planes: Seq[Seq[Double]]): Column = {
+    require(planes.nonEmpty && planes.size <= 64,
+      s"lshBucket needs 1 to 64 planes (one bit each of a long bucket id), got ${planes.size}")
     planes.zipWithIndex
       .map { case (plane, i) =>
         val planeCol = array(plane.map(lit): _*)
         when(dot(vec, planeCol) > 0.0, lit(1L << i)).otherwise(lit(0L))
       }
       .reduce(_ + _)
+  }
 
   /** Deterministic pseudo-random hyperplanes from a fixed seed (driver-side
     * constant; same values every run/build). */
@@ -159,6 +192,17 @@ object Similarity {
     }
   }
 
+  /** The cells a row scans: at `nProbe` = 1 its own cell (`own` when the
+    * row already holds it, so the quantizer runs once per row), otherwise
+    * one row per cell of its `nProbe` nearest ([[ivfCells]], exploded). */
+  private def probeCells(
+      vec: Column,
+      centroids: Seq[(Int, Seq[Double])],
+      nProbe: Int,
+      own: Option[Column] = None): Column =
+    if (nProbe == 1) own.getOrElse(ivfCell(vec, centroids))
+    else explode(ivfCells(vec, centroids, nProbe))
+
   /** IVF (inverted-file) ANN top-k: corpus rows are assigned to their
     * nearest coarse-quantizer centroid; a query scans its `nProbe` nearest
     * cells (the standard recall knob — nProbe=1 misses neighbors that sit
@@ -181,16 +225,10 @@ object Similarity {
       nProbe: Int = 1
   ): DataFrame = {
     val cb = corpus.withColumn("cell", ivfCell(col(corpusVec), centroids))
-    val qb =
-      if (nProbe == 1) queries.withColumn("cell", ivfCell(col(queryVec), centroids))
-      else queries.withColumn("cell", explode(ivfCells(col(queryVec), centroids, nProbe)))
+    val qb = queries.withColumn("cell", probeCells(col(queryVec), centroids, nProbe))
     val joined = cb.join(broadcast(qb), "cell")
-    val sim = round(cosine(col(corpusVec), col(queryVec)), 6)
-    val w = Window.partitionBy(col(queryId)).orderBy(sim.desc, col(corpusId).asc)
-    joined
-      .withColumn("cosine", sim)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .withColumn("cosine", round(cosine(col(corpusVec), col(queryVec)), 6))
+    rankTopK(joined, Seq(col(queryId)), col("cosine"), col(corpusId), k, "rk")
       .select(col(queryId), col(corpusId), col("cosine"), col("rk"))
   }
 
@@ -306,12 +344,8 @@ object Similarity {
     val cb = corpus.withColumn("bucket", lshBucket(col(corpusVec), planes))
     val qb = queries.withColumn("bucket", lshBucket(col(queryVec), planes))
     val joined = cb.join(broadcast(qb), "bucket")
-    val sim = round(cosine(col(corpusVec), col(queryVec)), 6)
-    val w = Window.partitionBy(col(queryId)).orderBy(sim.desc, col(corpusId).asc)
-    joined
-      .withColumn("cosine", sim)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .withColumn("cosine", round(cosine(col(corpusVec), col(queryVec)), 6))
+    rankTopK(joined, Seq(col(queryId)), col("cosine"), col(corpusId), k, "rk")
       .select(col(queryId), col(corpusId), col("cosine"), col("rk"))
   }
 
@@ -454,6 +488,20 @@ object Similarity {
     df.withColumn(outCol, codes)
   }
 
+  /** PQ asymmetric (ADC) cosine between an uncompressed `queryVec` and the
+    * reconstruction its `codes` decode to, assembled per subspace from
+    * codebook lookups without materializing the reconstruction:
+    * Σ_s q_s·c_s / (|q| · sqrt(Σ_s |c_s|²)), round-6, 0 on a zero norm. */
+  private def adcCosine(codes: Column, queryVec: Column, codebook: Seq[Seq[Seq[Double]]]): Column = {
+    val subDim = codebook.head.head.size
+    val parts = codebook.zipWithIndex.map { case (cents, s) =>
+      val cvec = element_at(typedLit(cents), element_at(codes, s + 1) + 1)
+      (dot(slice(queryVec, s * subDim + 1, subDim), cvec), dot(cvec, cvec))
+    }
+    val denom = norm(queryVec) * sqrt(parts.map(_._2).reduce(_ + _))
+    round(when(denom === 0.0, lit(0.0)).otherwise(parts.map(_._1).reduce(_ + _) / denom), 6)
+  }
+
   /** PQ-ADC approximate cosine top-k: queries stay UNCOMPRESSED
     * (asymmetric distance computation); each corpus row contributes only
     * its codes, reconstructed per subspace via literal-codebook lookup.
@@ -481,22 +529,9 @@ object Similarity {
       k: Int,
       codesCol: String = "pq_codes"
   ): DataFrame = {
-    val subDim = codebook.head.head.size
     val joined = corpusCodes.crossJoin(broadcast(queries))
-    val parts = codebook.zipWithIndex.map { case (cents, s) =>
-      val cvec = element_at(typedLit(cents), element_at(col(codesCol), s + 1) + 1)
-      val qs = slice(col(queryVec), s * subDim + 1, subDim)
-      (dot(qs, cvec), dot(cvec, cvec))
-    }
-    val adot = parts.map(_._1).reduce(_ + _)
-    val anorm2 = parts.map(_._2).reduce(_ + _)
-    val denom = norm(col(queryVec)) * sqrt(anorm2)
-    val sim = round(when(denom === 0.0, lit(0.0)).otherwise(adot / denom), 6)
-    val w = Window.partitionBy(col(queryId)).orderBy(sim.desc, col(corpusId).asc)
-    joined
-      .withColumn("pq_cosine", sim)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .withColumn("pq_cosine", adcCosine(col(codesCol), col(queryVec), codebook))
+    rankTopK(joined, Seq(col(queryId)), col("pq_cosine"), col(corpusId), k, "rk")
       .select(col(queryId), col(corpusId), col("pq_cosine"), col("rk"))
   }
 
@@ -588,12 +623,8 @@ object Similarity {
       codesCol: String = "sq_codes"
   ): DataFrame = {
     val joined = corpusCodes.crossJoin(broadcast(queries))
-    val sim = round(cosine(sqDecode(col(codesCol), ranges), col(queryVec)), 6)
-    val w = Window.partitionBy(col(queryId)).orderBy(sim.desc, col(corpusId).asc)
-    joined
-      .withColumn("sq_cosine", sim)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .withColumn("sq_cosine", round(cosine(sqDecode(col(codesCol), ranges), col(queryVec)), 6))
+    rankTopK(joined, Seq(col(queryId)), col("sq_cosine"), col(corpusId), k, "rk")
       .select(col(queryId), col(corpusId), col("sq_cosine"), col("rk"))
   }
 
@@ -1174,10 +1205,9 @@ object Similarity {
     val assigned = corpus
       .select(col(idCol), col(vecCol))
       .withColumn("cell", ivfCell(col(vecCol), centroids))
-    val probes =
-      (if (nProbe == 1) assigned.withColumn("pcell", col("cell"))
-       else assigned.withColumn("pcell", explode(ivfCells(col(vecCol), centroids, nProbe))))
-        .select(col(idCol).as("src"), col(vecCol).as("__sv"), col("pcell").as("cell"))
+    val probes = assigned
+      .withColumn("pcell", probeCells(col(vecCol), centroids, nProbe, Some(col("cell"))))
+      .select(col(idCol).as("src"), col(vecCol).as("__sv"), col("pcell").as("cell"))
     knnGraphImpl(assigned, probes, idCol, vecCol, k, maxCell)
   }
 
@@ -1211,18 +1241,12 @@ object Similarity {
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxCell > 1, "maxCell must allow at least a pair")
-    val wcap = Window.partitionBy(col("cell"))
-    val members = assigned
-      .withColumn("__cn", count(lit(1)).over(wcap))
-      .filter(col("__cn") <= maxCell)
+    val members = capWidth(assigned, Seq("cell"), maxCell)
       .select(col(idCol).as("dst"), col(vecCol).as("__dv"), col("cell"))
-    val sim = round(cosine(col("__sv"), col("__dv")), 6)
-    val w = Window.partitionBy(col("src")).orderBy(col("cosine").desc, col("dst").asc)
-    probes.join(members, "cell")
+    val pairs = probes.join(members, "cell")
       .filter(col("src") =!= col("dst"))
-      .withColumn("cosine", sim)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .withColumn("cosine", round(cosine(col("__sv"), col("__dv")), 6))
+    rankTopK(pairs, Seq(col("src")), col("cosine"), col("dst"), k, "rk")
       .select(col("src"), col("dst"), col("cosine"), col("rk"))
   }
 
@@ -1259,25 +1283,18 @@ object Similarity {
     require(maxCell > 1, "maxCell must allow at least a pair")
     val base = corpus.select(col(idCol), col(vecCol), col(labelCol))
       .withColumn("cell", ivfCell(col(vecCol), centroids))
-    val wcap = Window.partitionBy(col("cell"))
-    val members = base
-      .withColumn("__cn", count(lit(1)).over(wcap))
-      .filter(col("__cn") <= maxCell)
+    val members = capWidth(base, Seq("cell"), maxCell)
       .select(col(idCol).as("dst"), col(vecCol).as("__dv"),
         col(labelCol).as("__dl"), col("cell"))
-    val probes =
-      (if (nProbe == 1) base
-       else base.withColumn("cell", explode(ivfCells(col(vecCol), centroids, nProbe))))
-        .select(col(idCol).as("src"), col(vecCol).as("__sv"),
-          col(labelCol).as("__sl"), col("cell"))
-    val w = Window.partitionBy(col("src"), col("__same"))
-      .orderBy(col("cosine").desc, col("dst").asc)
-    val top = probes.join(members, "cell")
+    val probes = base
+      .withColumn("cell", probeCells(col(vecCol), centroids, nProbe, Some(col("cell"))))
+      .select(col(idCol).as("src"), col(vecCol).as("__sv"),
+        col(labelCol).as("__sl"), col("cell"))
+    val pairs = probes.join(members, "cell")
       .filter(col("src") =!= col("dst"))
       .withColumn("cosine", round(cosine(col("__sv"), col("__dv")), 6))
       .withColumn("__same", col("__sl") <=> col("__dl"))
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") === 1)
+    val top = rankTopK(pairs, Seq(col("src"), col("__same")), col("cosine"), col("dst"), 1, "__rk")
     // at most ONE row per (src, __same) after the rk=1 cut, so the
     // conditional mins below just route each side into its column
     val agg = top.groupBy(col("src")).agg(
@@ -1318,32 +1335,14 @@ object Similarity {
       rerankDepth: Int = 100
   ): DataFrame = {
     require(rerankDepth >= k, s"rerankDepth=$rerankDepth must cover k=$k")
-    val subDim = codebook.head.head.size
     val cb = pqEncode(corpus, corpusVec, codebook)
       .withColumn("cell", ivfCell(col(corpusVec), centroids))
-    val qb =
-      if (nProbe == 1) queries.withColumn("cell", ivfCell(col(queryVec), centroids))
-      else queries.withColumn("cell", explode(ivfCells(col(queryVec), centroids, nProbe)))
+    val qb = queries.withColumn("cell", probeCells(col(queryVec), centroids, nProbe))
     val joined = cb.join(broadcast(qb), "cell")
-    val parts = codebook.zipWithIndex.map { case (cents, s) =>
-      val cvec = element_at(typedLit(cents), element_at(col("pq_codes"), s + 1) + 1)
-      val qs = slice(col(queryVec), s * subDim + 1, subDim)
-      (dot(qs, cvec), dot(cvec, cvec))
-    }
-    val adot = parts.map(_._1).reduce(_ + _)
-    val anorm2 = parts.map(_._2).reduce(_ + _)
-    val denom = norm(col(queryVec)) * sqrt(anorm2)
-    val adc = round(when(denom === 0.0, lit(0.0)).otherwise(adot / denom), 6)
-    val wAdc = Window.partitionBy(col(queryId)).orderBy(adc.desc, col(corpusId).asc)
-    val shortlist = joined
-      .withColumn("adc_rk", row_number().over(wAdc))
-      .filter(col("adc_rk") <= rerankDepth)
-    val sim = round(cosine(col(corpusVec), col(queryVec)), 6)
-    val wExact = Window.partitionBy(col(queryId)).orderBy(sim.desc, col(corpusId).asc)
-    shortlist
-      .withColumn("cosine", sim)
-      .withColumn("rk", row_number().over(wExact))
-      .filter(col("rk") <= k)
+    val adc = adcCosine(col("pq_codes"), col(queryVec), codebook)
+    val shortlist = rankTopK(joined, Seq(col(queryId)), adc, col(corpusId), rerankDepth, "adc_rk")
+      .withColumn("cosine", round(cosine(col(corpusVec), col(queryVec)), 6))
+    rankTopK(shortlist, Seq(col(queryId)), col("cosine"), col(corpusId), k, "rk")
       .select(col(queryId), col(corpusId), col("cosine"), col("rk"))
   }
 }

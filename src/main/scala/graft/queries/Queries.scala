@@ -9,6 +9,15 @@ import graft.operators.{Bpe, Curation, Dedup, Multimodal, Similarity, Skew, Temp
 import graft.stages.{Transforms, Validation}
 import graft.expr.RuleParser
 
+/** Typed row for the Dataset[T] catalog query (q79) — top-level so the
+  * case-class Encoder derives cleanly. Numerics are Options: the parquet
+  * columns are nullable, and a primitive field would crash deserialization
+  * on a null row where the SQL oracle's WHERE just filters it. */
+final case class OrderSlice(
+    o_orderkey: Option[Long],
+    o_totalprice: Option[Double],
+    o_orderpriority: String)
+
 /** The driver-facing query catalog: one entry per implemented operator from
   * SURVEY.md §2 plus the LLM-data-pipeline operators, each paired with
   * equivalent ANSI SQL the driver runs in DuckDB as the correctness oracle.
@@ -25,15 +34,6 @@ import graft.expr.RuleParser
   *  - computed integer columns are cast to the same width on both sides
   *    (Spark int <-> DuckDB INTEGER, long <-> BIGINT).
   */
-/** Typed row for the Dataset[T] catalog query (q79) — top-level so the
-  * case-class Encoder derives cleanly. Numerics are Options: the parquet
-  * columns are nullable, and a primitive field would crash deserialization
-  * on a null row where the SQL oracle's WHERE just filters it. */
-final case class OrderSlice(
-    o_orderkey: Option[Long],
-    o_totalprice: Option[Double],
-    o_orderpriority: String)
-
 object Queries {
 
   /** Scratch-layout cache key for the layout queries (q76/q116/q119/
@@ -576,8 +576,6 @@ object Queries {
     Dedup.minHashLshPairs(tbl(s, d, "documents"), "doc_id", "text",
       shingleK = 3, numHashes = 8, bands = 4)
 
-  /** Shared CTE chain ending in `pairs` (MinHash LSH candidate pairs) —
-    * used by both the pair query (q24) and near-dup removal (q63). */
   /** CTE chain through the per-doc LSH band digests (shared by the pair
     * CTE below and q124's store/batch split, which needs bands WITHOUT the
     * all-docs pair join). */
@@ -592,6 +590,8 @@ object Queries {
        |  FROM sig, (VALUES (0),(1),(2),(3)) b(band))""".stripMargin
   }
 
+  /** Shared CTE chain ending in `pairs` (MinHash LSH candidate pairs) —
+    * used by both the pair query (q24) and near-dup removal (q63). */
   private val minhashPairsCtes: String =
     s"""$minhashBandsCtes,
        |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -4423,14 +4423,6 @@ object Queries {
       |  row_number() OVER (ORDER BY gumbel_key DESC, doc_id) AS rn FROM k)
       |SELECT doc_id, log_weight, gumbel_key, rn <= 100 AS selected FROM r""".stripMargin
 
-  /** Semi-supervised label propagation ([[graft.operators.Graph.labelPropagate]],
-    * Zhou et al. 2004) over the q139 KNN similarity graph: every 5th
-    * embedding seeds its (scaled) class label, two diffusion rounds blend
-    * each row's neighbors' weighted-mean score with its own seed — the
-    * few-labels-to-corpus-score expansion every quality-labeling pipeline
-    * runs. Per round: ONE |E|-row hash join + ONE aggregation, all sums
-    * in exact µ-unit longs (order/partitioning-independent); FULL hash
-    * oracle — DuckDB rebuilds the graph and unrolls both rounds. */
   /** The q139 KNN graph as PERSISTED table state (the q124 store pattern):
     * in deployment the graph is materialized once — by the q139 workload
     * itself or a prior pipeline step — and the graph ANALYSES (q149 label
@@ -4453,6 +4445,14 @@ object Queries {
     s.read.parquet(store)
   }
 
+  /** Semi-supervised label propagation ([[graft.operators.Graph.labelPropagate]],
+    * Zhou et al. 2004) over the q139 KNN similarity graph: every 5th
+    * embedding seeds its (scaled) class label, two diffusion rounds blend
+    * each row's neighbors' weighted-mean score with its own seed — the
+    * few-labels-to-corpus-score expansion every quality-labeling pipeline
+    * runs. Per round: ONE |E|-row hash join + ONE aggregation, all sums
+    * in exact µ-unit longs (order/partitioning-independent); FULL hash
+    * oracle — DuckDB rebuilds the graph and unrolls both rounds. */
   val q149: QueryFn = (s, d) => {
     val edges = knnEdgesScratch(s, d)
     val nodes = tbl(s, d, "embeddings").select(col("vec_id"),
@@ -6069,6 +6069,27 @@ object Queries {
       |LEFT JOIN w USING (doc_id) LEFT JOIN s2 USING (doc_id)
       |LEFT JOIN h USING (doc_id) LEFT JOIN g USING (doc_id), m1""".stripMargin
 
+  /** The deterministic URL fixture shared by q182/q184: host pool cycles
+    * the full PSL case surface; ports/utm/fragments exercise the
+    * normalizer; everything a closed-form function of the id. Block-mode
+    * keeps ids with `id % 12 ∉ {0, 2, 3, 9, 10}` (example.com and
+    * foo.github.io rows blocked) — the oracle's closed form. */
+  private def fixtureUrl(id: Column): Column = {
+    val hostPool = array(Seq(
+      "example.com", "news.example.co.uk", "blog.foo.github.io",
+      "WWW.Example.COM", "shop.foo.ck", "www.ck", "example.unknowntld",
+      "com", "192.168.0.1", "sub.a.b.example.com", "example.com.",
+      "ec2.s3.amazonaws.com").map(lit): _*)
+    val scheme = when(id % 2 === 0, "https").otherwise("http")
+    concat(
+      scheme, lit("://"), element_at(hostPool, (id % 12 + 1).cast("int")),
+      when(id % 3 === 0, when(id % 2 === 0, ":443").otherwise(":80")).otherwise(""),
+      lit("/P/"), id,
+      when(id % 4 === 0, concat(lit("?utm_source=x&id="), id))
+        .otherwise(concat(lit("?id="), id)),
+      when(id % 5 === 0, "#Sec").otherwise(""))
+  }
+
   /** URL/domain curation (round 18 — the C4/RefinedWeb pre-filter step:
     * [[graft.operators.Url]] + [[graft.sparkext.RegistrableDomain]]).
     * Documents carry no URL column, so one is SYNTHESIZED
@@ -6092,27 +6113,6 @@ object Queries {
     * — the conservative block-mode reading), pinning row membership of
     * [[Url.filterByDomainList]]'s broadcast anti join on top of the
     * scalar columns. */
-  /** The deterministic URL fixture shared by q182/q184: host pool cycles
-    * the full PSL case surface; ports/utm/fragments exercise the
-    * normalizer; everything a closed-form function of the id. Block-mode
-    * keeps ids with `id % 12 ∉ {0, 2, 3, 9, 10}` (example.com and
-    * foo.github.io rows blocked) — the oracle's closed form. */
-  private def fixtureUrl(id: Column): Column = {
-    val hostPool = array(Seq(
-      "example.com", "news.example.co.uk", "blog.foo.github.io",
-      "WWW.Example.COM", "shop.foo.ck", "www.ck", "example.unknowntld",
-      "com", "192.168.0.1", "sub.a.b.example.com", "example.com.",
-      "ec2.s3.amazonaws.com").map(lit): _*)
-    val scheme = when(id % 2 === 0, "https").otherwise("http")
-    concat(
-      scheme, lit("://"), element_at(hostPool, (id % 12 + 1).cast("int")),
-      when(id % 3 === 0, when(id % 2 === 0, ":443").otherwise(":80")).otherwise(""),
-      lit("/P/"), id,
-      when(id % 4 === 0, concat(lit("?utm_source=x&id="), id))
-        .otherwise(concat(lit("?id="), id)),
-      when(id % 5 === 0, "#Sec").otherwise(""))
-  }
-
   val q182: QueryFn = (s, d) => {
     import s.implicits._
     val id = col("doc_id")

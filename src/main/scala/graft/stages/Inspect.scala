@@ -24,14 +24,6 @@ object Inspect {
 
   type StatFn = String => Column
 
-  /** Custom stats beyond describe's core set (reference: inspect.py:19-26).
-    * `n_unique` is the fixed-memory `approx_count_distinct` sketch BY
-    * DEFAULT (round 16): one exact `countDistinct` per column in a single
-    * agg pass makes Catalyst Expand the scan — one duplicated input row
-    * per distinct aggregate, a wide-table cost multiplier — and exact
-    * distinct is itself an executor-OOM path at 100 TB cardinality.
-    * [[exactCustomStats]] restores the exact count where small-data
-    * exactness matters (tests, oracles). */
   /** `null_proportion` guards its divisor: describing an EMPTY frame (a
     * no-new-files incremental run's sinks) must yield null, not an ANSI
     * DIVIDE_BY_ZERO. */
@@ -40,6 +32,14 @@ object Inspect {
     when(n > 0, (n - count(col(c))).cast(DoubleType) / n)
   }
 
+  /** Custom stats beyond describe's core set (reference: inspect.py:19-26).
+    * `n_unique` is the fixed-memory `approx_count_distinct` sketch BY
+    * DEFAULT (round 16): one exact `countDistinct` per column in a single
+    * agg pass makes Catalyst Expand the scan — one duplicated input row
+    * per distinct aggregate, a wide-table cost multiplier — and exact
+    * distinct is itself an executor-OOM path at 100 TB cardinality.
+    * [[exactCustomStats]] restores the exact count where small-data
+    * exactness matters (tests, oracles). */
   val defaultCustomStats: Seq[(String, StatFn)] = Seq(
     "null_proportion" -> (c => nullProportion(c)),
     "n_unique" -> (c => approx_count_distinct(col(c)))

@@ -261,6 +261,18 @@ class OperatorsSpec extends AnyFunSuite {
     val hits = Similarity.lshTopK(vecs, q, "vec_id", "qid", "v", "qv", 5, planes)
       .select("vec_id").as[Long].collect().toSet
     assert(hits.contains(0L) && hits.contains(1L))
+    // the bucket id is a long, one bit per plane: 0 planes give no id and a
+    // 65th plane would alias onto bit 0, so lshBucket and the banded
+    // near-dup join that calls it reject both
+    vecs.select(Similarity.lshBucket($"v", Similarity.deterministicPlanes(64, 3))).collect()
+    Seq(Nil, Similarity.deterministicPlanes(65, 3)).foreach { bad =>
+      Seq(() => Similarity.lshBucket($"v", bad),
+          () => Dedup.embeddingNearDupPairs(vecs, "vec_id", "v", 0.9, Seq(planes, bad)))
+        .foreach { call =>
+          val e = intercept[IllegalArgumentException](call())
+          assert(e.getMessage.contains("1 to 64 planes"), e.getMessage)
+        }
+    }
   }
 
   test("multi-band embedding near-dup finds identical vectors and filters by threshold") {

@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.{YamlEmit, YamlParse}
-import graft.operators.{Dedup, TextClean}
+import graft.operators.{Dedup, Similarity, TextClean}
 
 /** Property-based tests (ScalaCheck) for the invariants example-based specs
   * can't pin: generated inputs hit the corners nobody writes fixtures for
@@ -22,7 +23,7 @@ import graft.operators.{Dedup, TextClean}
   * counterexamples are real bugs by definition.
   */
 class PropertySpec extends AnyFunSuite {
-  import PropertySpec.BucketRow
+  import PropertySpec.{AnnCase, BucketRow}
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -260,6 +261,123 @@ class PropertySpec extends AnyFunSuite {
             yield java.lang.Long.bitCount(hs(i) ^ hs(j))
           got == want && dists.contains(mh) && dists.contains(mh + 1)
         }
+    }
+    check(prop, 3)
+  }
+
+  // ------------------------------------------------- ANN candidate paths
+
+  // The IVF paths agree with brute force by an argument: every corpus row
+  // sits in exactly one cell, so probing every cell reaches every candidate
+  // once. Checked here at exhaustive settings against a ranking done on the
+  // driver over the engine's own round-6 cosines, so the check is about
+  // candidates, ranks and ties, not float parity. Points are small integer
+  // vectors (exact duplicates and scalar multiples tie on cosine, zero
+  // vectors score 0 against everything); ids are shuffled so input order
+  // never stands in for the id tie-break. Each case runs over its first
+  // centroid alone (a single-cell corpus) and over all 2 to 4.
+  private val annPoint: Gen[Seq[Double]] = Gen.frequency(
+    6 -> Gen.listOfN(4, Gen.chooseNum(-3, 3).map(_.toDouble)),
+    1 -> Gen.const(Seq.fill(4)(0.0)))
+
+  private val annCase: Gen[AnnCase] = for {
+    base <- Gen.chooseNum(10, 20).flatMap(Gen.listOfN(_, annPoint))
+    dups <- Gen.listOfN(base.size / 2, Gen.oneOf(base))
+    scaled <- Gen.listOfN(3, Gen.oneOf(base)).map(_.map(_.map(_ * 2.0)))
+    vecs = base ++ dups ++ scaled
+    labels <- Gen.listOfN(vecs.size, Gen.oneOf(Some("a"), Some("b"), None))
+    order <- Gen.long.map(seed => new scala.util.Random(seed).shuffle(vecs.indices.toList))
+    qs <- Gen.listOfN(4, annPoint)
+    qCopies <- Gen.listOfN(2, Gen.oneOf(vecs))
+    nCells <- Gen.oneOf(2, 3, 4)
+    cents <- Gen.listOfN(nCells, annPoint)
+    codebook <- Gen.listOfN(2, Gen.listOfN(3, Gen.listOfN(2, Gen.chooseNum(-3, 3).map(_.toDouble))))
+  } yield AnnCase(
+    order.map(i => (i * 7L + 3, vecs(i), labels(i))),
+    (qs ++ qCopies :+ Seq.fill(4)(0.0)).zipWithIndex.map { case (v, i) => (i.toLong, v) },
+    cents.zipWithIndex.map { case (v, i) => (i * 5 + 1, v) },
+    codebook)
+
+  /** `(left id, right id) -> round(cosine, 6)` for every pair, from Spark. */
+  private def annScores(left: Seq[(Long, Seq[Double])], right: Seq[(Long, Seq[Double])])
+      : Map[(Long, Long), Double] =
+    left.toDF("l", "lv").crossJoin(right.toDF("r", "rv"))
+      .select(col("l"), col("r"), round(Similarity.cosine(col("lv"), col("rv")), 6))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+
+  /** Driver-side top-k: per group, candidates by (cosine DESC, id ASC). */
+  private def rankedReference(cands: Seq[(Long, Long, Double)], k: Int): Set[(Long, Long, Double, Int)] =
+    cands.groupBy(_._1).values.flatMap(
+      _.sortBy(c => (-c._3, c._2)).take(k).zipWithIndex.map { case ((g, id, s), i) => (g, id, s, i + 1) }
+    ).toSet
+
+  private def topKRows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double, Int)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+
+  test("property: exhaustive ivfTopK and ivfPqTopK equal bruteForceTopK on hostile vectors") {
+    val prop = Prop.forAll(annCase) { c =>
+      val corpus = c.corpus.map(r => (r._1, r._2)).toDF("id", "v")
+      val queries = c.queries.toDF("qid", "qv")
+      val scores = annScores(c.queries, c.corpus.map(r => (r._1, r._2)))
+      val cands = scores.toSeq.map { case ((q, id), s) => (q, id, s) }
+      Prop.all(Seq(3, c.corpus.size + 5).flatMap { k =>
+        val want = rankedReference(cands, k)
+        val brute = topKRows(Similarity.bruteForceTopK(corpus, queries, "id", "qid", "v", "qv", k))
+        ((brute == want) :| s"brute k=$k") +: Seq(c.centroids.take(1), c.centroids).map { cents =>
+          val ivf = topKRows(Similarity.ivfTopK(corpus, queries, "id", "qid", "v", "qv", k,
+            cents, nProbe = cents.size))
+          val ivfPq = topKRows(Similarity.ivfPqTopK(corpus, queries, "id", "qid", "v", "qv", k,
+            cents, c.codebook, nProbe = cents.size, rerankDepth = math.max(k, c.corpus.size)))
+          (ivf == want) :| s"ivf k=$k cells=${cents.size}" &&
+            (ivfPq == want) :| s"ivfPq k=$k cells=${cents.size}"
+        }
+      }: _*)
+    }
+    check(prop, 3)
+  }
+
+  test("property: exhaustive knnGraph and hardNegatives equal brute force; maxCell drops whole cells") {
+    val prop = Prop.forAll(annCase) { c =>
+      val corpus = c.corpus.toDF("id", "v", "label")
+      val vecs = c.corpus.map(r => (r._1, r._2))
+      val label = c.corpus.map(r => r._1 -> r._3).toMap
+      val pairs = annScores(vecs, vecs).toSeq.collect { case ((a, b), s) if a != b => (a, b, s) }
+      val n = c.corpus.size
+      def top1(same: Boolean) = rankedReference(
+        pairs.filter(p => (label(p._1) == label(p._2)) == same), 1)
+        .map(t => t._1 -> (t._2, t._3)).toMap
+      val pos = top1(same = true)
+      val neg = top1(same = false)
+      val wantHn = c.corpus.map { case (id, _, l) =>
+        (id, l, pos.get(id).map(_._1), pos.get(id).map(_._2), neg.get(id).map(_._1), neg.get(id).map(_._2))
+      }.toSet
+      Prop.all(Seq(c.centroids.take(1), c.centroids).map { cents =>
+        val all = cents.size
+        val cell = corpus.select(col("id"), Similarity.ivfCell(col("v"), cents))
+          .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+        val widths = cell.values.groupBy(identity).map { case (k, m) => k -> m.size }
+        val largest = widths.values.max
+        def graph(k: Int, nProbe: Int, maxCell: Int) =
+          topKRows(Similarity.knnGraph(corpus, "id", "v", k, cents, nProbe, maxCell))
+        val knn = Prop.all(Seq(2, n + 5).map { k =>
+          (graph(k, all, n) == rankedReference(pairs, k)) :| s"knn k=$k cells=$all"
+        }: _*)
+        // one maxCell below the largest cell: its members are never a
+        // neighbor, and at nProbe = 1 they probe nothing, so emit no edges
+        val kept = pairs.filter(p => widths(cell(p._2)) < largest)
+        val capped = (graph(n, all, largest - 1) == rankedReference(kept, n)) :|
+          s"capped, all cells probed, cells=$all" &&
+          (graph(n, 1, largest - 1) == rankedReference(kept.filter(p => cell(p._1) == cell(p._2)), n)) :|
+          s"capped, own cell probed, cells=$all"
+        val gotHn = Similarity.hardNegatives(corpus, "id", "v", "label", cents, all, n)
+          .select("id", "label", "pos_id", "pos_cosine", "neg_id", "neg_cosine").collect()
+          .map(r => (r.getLong(0), Option(r.getString(1)),
+            Option(r.getAs[java.lang.Long](2)).map(_.longValue),
+            Option(r.getAs[java.lang.Double](3)).map(_.doubleValue),
+            Option(r.getAs[java.lang.Long](4)).map(_.longValue),
+            Option(r.getAs[java.lang.Double](5)).map(_.doubleValue))).toSet
+        knn && capped && (gotHn == wantHn) :| s"hardNegatives cells=$all"
+      }: _*)
     }
     check(prop, 3)
   }
@@ -954,4 +1072,9 @@ class PropertySpec extends AnyFunSuite {
 
 object PropertySpec {
   private final case class BucketRow(frame: Int, id: Option[Long], k: Option[Int], v: Long)
+  private final case class AnnCase(
+      corpus: Seq[(Long, Seq[Double], Option[String])],
+      queries: Seq[(Long, Seq[Double])],
+      centroids: Seq[(Int, Seq[Double])],
+      codebook: Seq[Seq[Seq[Double]]])
 }
