@@ -425,7 +425,7 @@ object ScaleRehearsal {
     * (a rolling ingestion's digest store grows with history), batch = ids
     * >= 250 within each copy. Copy tokens are `_i`-suffixed, so store
     * hits and in-batch pairs stay within-copy — workload scales by
-    * exactly M. Expected ~linear: one shingle explode per side, one
+    * exactly M. Expected ~linear: one signature pass per side, one
     * (band, digest) semi join, CC on the per-copy-sized pair graph. */
   private def incrementalFuzzyAtScale(docStride: Long): (SparkSession, String) => DataFrame =
     (s, dir) => {
@@ -705,20 +705,22 @@ object ScaleRehearsal {
   /** CC round-latency rehearsal (round 18, judge item 7): a chain of
     * N = |documents at Mx| nodes (edges i→i+1) has diameter N — the
     * worst case for a driver-coordinated loop whose per-round cost is
-    * two fixed Spark actions (snapshot + changed-count) no matter how
+    * two fixed Spark actions (snapshot + frontier count) no matter how
     * small the data. Rounds grow ~log(diameter) under pointer jumping,
     * so the ladder isolates exactly the term the judge asked about: is
     * wall time rounds-bound (fixed per-round cost dominates) or
-    * data-bound? The per-run round count prints to stderr so BASELINE
-    * can quote it next to the times. */
+    * data-bound? Each run prints its round count, the path that ran
+    * (driver, loop or hybrid) and the edges union-found on the driver to
+    * stderr, so BASELINE can quote them next to the times. */
   private def ccChainAtScale(s: SparkSession, d: String): DataFrame = {
     val n = s.read.parquet(s"$d/documents.parquet").count()
     val chain = s.range(n - 1)
       .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    val (labels, rounds) = graft.operators.Dedup.connectedComponentsStats(
+    val run = graft.operators.Dedup.connectedComponentsRun(
       chain, "id_a", "id_b", maxIters = 64)
-    System.err.println(s"[ladder] cc_chain n=$n rounds=$rounds")
-    labels.agg(count(lit(1)).as("n_nodes"),
+    System.err.println(s"[ladder] cc_chain n=$n rounds=${run.rounds} path=${run.path} " +
+      s"driver_edges=${run.driverEdges}")
+    run.labels.agg(count(lit(1)).as("n_nodes"),
       countDistinct(col("label")).as("n_components"))
   }
 }

@@ -558,12 +558,12 @@ object Curation {
     * dedup would apply against the prior corpus, with the prior corpus
     * compressed to bands·1 digests per doc instead of its text.
     *
-    * Scale shape: the batch's shingle explode runs ONCE (the bucket frame
+    * Scale shape: the batch's signature pass runs ONCE (the bucket frame
     * is persisted and feeds both the store probe and the in-batch pair
     * join — release via [[graft.util.CacheScope.withPersisted]] like the
     * other dedup frames); the store is probed with one left-semi
-    * equi-join on (band, digest) and never collected, and the CC loop
-    * runs on the fresh subset's pair graph only. */
+    * equi-join on (band, digest) and never collected, and CC runs on
+    * the fresh subset's pair graph only. */
   def novelAgainstFuzzy(
       batch: DataFrame,
       seenDigests: DataFrame,
@@ -583,7 +583,7 @@ object Curation {
     // bucket frame restricted to fresh docs — the width cap inside the
     // pair join then counts FRESH members only, same as rebuilding the
     // buckets from the filtered batch (signatures are per-doc) but
-    // without re-paying the shingle explode
+    // without re-paying the signature pass
     val freshBk = bk.join(hits, Seq(idCol), "left_anti")
     Dedup.dropClusterDups(batch.join(hits, Seq(idCol), "left_anti"),
       Dedup.lshPairsFromBuckets(freshBk, idCol, maxBucket), idCol)

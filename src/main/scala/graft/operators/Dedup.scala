@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType,
+  StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact, MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -65,23 +70,27 @@ object Dedup {
   /** MinHash signature columns `mh0..mh{numHashes-1}` per document:
     * mh_i = MIN over shingles of md5(i || '|' || shingle).
     *
-    * One explode + one groupBy(doc) with numHashes min-aggregates —
-    * map-side partial aggregation keeps the shuffle proportional to
-    * #docs × numHashes, independent of document length.
+    * One per-row expression ([[graft.sparkext.MinHashSignature]]) over the
+    * [[TextAnalysis.tokens]] array: it walks the tokens once, hashes each
+    * [[shingles]] window with a reused digest and keeps the N minima over
+    * raw digest bytes, so no shingle ever becomes a row. A `groupBy(id)`
+    * with N `min`s follows; it moves #docs rows, not #shingles, and keeps
+    * the merge of rows that share an id (null text gives N nulls, which a
+    * non-null row of the same id overrides). The values equal the exploded
+    * form's (`shingleRows` → `groupBy(id)` of N `min(md5(...))`), pinned by
+    * a bit-identity spec.
     *
     * Round-19 negative result, measured so it stays un-retried: a
-    * shuffle-free per-doc projection (`array_min(transform(shingles,
-    * md5(...)))` per hash index) computes the same values with ZERO
-    * exchanges — and is 2-5× SLOWER wall-clock at sf0.1 (n=8: 1.7 s
-    * exploded vs 9.3 s projected; n=64: 8.7 vs 18.2; the composed
-    * pipeline's 64-hash fuzzy_dedup regressed 15 s → 37 s before the
-    * revert). Higher-order functions are NOT whole-stage-codegen'd:
-    * every `transform` element evaluates the md5 expression tree
-    * interpreted, with per-element boxing, and the shingle array is
-    * re-walked once per hash index — while the exploded form runs every
-    * md5 inside one generated tight loop. The exchange the projection
-    * saves is the cheapest part of this stage (guide §1.2: the per-task
-    * work is the bottleneck here, not the shuffle). */
+    * shuffle-free per-doc projection built from higher-order functions
+    * (`array_min(transform(shingles, md5(...)))` per hash index) computes
+    * the same values and is 2-5× SLOWER than the explode at sf0.1 (n=8:
+    * 1.7 s exploded vs 9.3 s projected; n=64: 8.7 vs 18.2). HOF lambdas are
+    * not whole-stage-codegen'd: every `transform` element evaluates the md5
+    * expression tree interpreted, with per-element boxing, and the shingle
+    * array is re-walked once per hash index. The expression above is a
+    * different form: one compiled loop per row over the token array, no
+    * shingle strings, no hex per digest, no boxing — the per-shingle work
+    * the explode did, minus the rows it made. */
   def minHashSignatures(
       df: DataFrame,
       idCol: String,
@@ -89,17 +98,18 @@ object Dedup {
       shingleK: Int = 3,
       numHashes: Int = 8
   ): DataFrame = {
-    val exploded = shingleRows(df, idCol, textCol, shingleK)
-    val aggs = (0 until numHashes).map(i =>
-      min(md5(concat(lit(s"$i|"), col("shingle")))).as(s"mh$i"))
-    exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+    val sig = df.select(col(idCol),
+      graft.sparkext.MinHashSignature(TextAnalysis.tokens(col(textCol)), shingleK, numHashes)
+        .as("__mh"))
+    val aggs = (0 until numHashes).map(i => min(col("__mh").getItem(i)).as(s"mh$i"))
+    sig.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
   /** (id, band, digest) LSH bucket membership rows — the shared candidate
     * stage behind [[minHashLshPairs]] and [[lshOverfullBucketsFrom]]. The
     * signature frame (#docs × numHashes digests — tiny relative to the
     * corpus) is persisted so the downstream self-join doesn't recompute the
-    * whole shingle explode + aggregate pipeline per branch. */
+    * whole signature pass + aggregate per branch. */
   def lshBuckets(
       df: DataFrame,
       idCol: String,
@@ -127,7 +137,7 @@ object Dedup {
     * pair join drops. Pipelines applying a cap should count/log this frame
     * so truncation is never silent. Takes the bucket FRAME rather than the
     * corpus on purpose: build [[lshBuckets]] once and feed both this and
-    * the pair join, so the corpus-sized shingle explode runs a single time
+    * the pair join, so the corpus-sized signature pass runs a single time
     * (a corpus-taking convenience overload existed and was removed — it
     * silently doubled the most expensive stage for exactly the users who
     * needed the diagnostic). */
@@ -167,7 +177,7 @@ object Dedup {
 
   /** The capped self-join stage of [[minHashLshPairs]], over an
     * already-built [[lshBuckets]] frame — exposed so callers that ALREADY
-    * paid the shingle explode (e.g. a batch probed against a digest store
+    * paid the signature pass (e.g. a batch probed against a digest store
     * first, [[graft.operators.Curation.novelAgainstFuzzy]]) can pair the
     * surviving subset without recomputing signatures. */
   def lshPairsFromBuckets(
@@ -373,20 +383,49 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** Connected components over an undirected pair list by iterative
-    * min-label propagation — the cluster step of near-dup dedup (every doc
-    * in a component shares the component's minimum id as its cluster).
+  /** Connected components over an undirected pair list: every node that
+    * appears in `edges` gets its component's MINIMUM id as `label` — the
+    * cluster step of near-dup dedup. Returns `(node, label)`.
     *
-    * Scale shape: each iteration is one equi-join + one min-aggregation —
-    * all hash-partitioned on node id, no driver-side graph. Converges in
-    * O(component diameter) iterations (near-dup clusters are shallow);
-    * the driver loop only checks a changed-count, never collects labels.
-    * The same algorithm GraphX's connectedComponents runs, on DataFrames.
+    * Three paths, picked by size; none of them truncates:
     *
-    * Throws IllegalStateException if labels have not stabilized after
-    * `maxIters` — a silent partial result would split real clusters.
-    * The returned frame is eagerly local-checkpointed (tiny: one row per
-    * node appearing in `edges`); its blocks free when the frame is GC'd.
+    *  - driver: one `take(cap + 1)` of the edges. If they fit under the
+    *    cap, union-find runs on the driver, linking every root to the
+    *    smaller id, and the labels come back as a local relation (over
+    *    `parallelize` past 10k nodes). Zero rounds. Near-dup pair graphs
+    *    are tiny next to their corpus, so this is the common case: perfbench
+    *    `curation_docs` spent about 40 jobs of loop rounds on a 260-pair,
+    *    240-node graph before this path existed.
+    *  - loop: above the cap, rounds of min-label propagation with a
+    *    pointer jump (one equi-join, one min-aggregation and one self-join
+    *    per round, all hash-partitioned on node id — the algorithm GraphX's
+    *    connectedComponents runs, on DataFrames), O(log diameter) rounds.
+    *    After each round one count of the FRONTIER — the edges whose
+    *    endpoint labels still differ, each endpoint mapped to its label —
+    *    decides what happens next: empty means converged.
+    *  - hybrid: once the frontier fits under the cap, it is collected (it
+    *    is the contracted graph; its nodes are labels), union-found on the
+    *    driver, and the label map is joined back. This is the "contract,
+    *    then finish in memory" shape of Kiveris et al., Connected
+    *    Components in MapReduce and Beyond (SoCC 2014), and Łącki et al.
+    *    (arXiv:1807.10727).
+    *
+    * The cap is [[defaultDriverEdgeCap]]: an eighth of the driver's max
+    * heap at ~512 bytes per edge. No option or conf sets it.
+    *
+    * Id types: integral ids (byte, short, int, long) are compared as
+    * `Long`s; string ids (binary collation) as UTF8String bytes, Spark's
+    * own order — not `String.compareTo`, which disagrees with it between
+    * surrogate pairs and U+E000–U+FFFF. Any other id type (decimal,
+    * double, binary, a collated string, ...) always runs the loop to an
+    * empty frontier.
+    *
+    * Null endpoints are dropped: a null id is not a node. Throws
+    * IllegalStateException when the loop has not finished (empty
+    * frontier, or one under the cap) after `maxIters` rounds — a silent
+    * partial result would split real clusters. The loop's labels are
+    * eagerly local-checkpointed (one row per node); their blocks free when
+    * the frame is GC'd.
     *
     * @param checkpointDir when set, per-round snapshots use RELIABLE
     *   checkpoints written under this directory (HDFS/object store on a
@@ -394,14 +433,16 @@ object Dedup {
     *   on executors, so one lost executor kills the whole iterative job at
     *   the round it died in; reliable checkpoints survive executor loss at
     *   the cost of a filesystem write per round. Local remains the default
-    *   for single-machine / test runs. The context's previous checkpoint
-    *   dir is restored on exit (setCheckpointDir is session-global), and
-    *   each superseded round's checkpoint FILES are deleted as soon as the
-    *   next round has consumed them — Spark never cleans reliable
-    *   checkpoints itself, so an unbounded loop would otherwise grow the
-    *   store without limit. Only the FINAL labels' checkpoint survives (the
-    *   returned frame reads from it); it lives under `checkpointDir`, which
-    *   the caller owns and can remove once done with the result. */
+    *   for single-machine / test runs. The driver path runs no rounds and
+    *   writes nothing. The context's previous checkpoint dir is restored
+    *   on every exit, a failed round included (setCheckpointDir is
+    *   session-global), and each superseded round's checkpoint FILES are
+    *   deleted as soon as the next round has consumed them — Spark never
+    *   cleans reliable checkpoints itself, so an unbounded loop would
+    *   otherwise grow the store without limit. Only the FINAL labels'
+    *   checkpoint survives (the returned frame reads from it); it lives
+    *   under `checkpointDir`, which the caller owns and can remove once
+    *   done with the result. */
   def connectedComponents(
       edges: DataFrame,
       srcCol: String,
@@ -409,10 +450,10 @@ object Dedup {
       maxIters: Int = 20,
       checkpointDir: Option[String] = None
   ): DataFrame =
-    connectedComponentsStats(edges, srcCol, dstCol, maxIters, checkpointDir)._1
+    connectedComponentsRun(edges, srcCol, dstCol, maxIters, checkpointDir).labels
 
-  /** [[connectedComponents]] plus the DRIVER ROUND COUNT it took to
-    * converge — the observable the round-latency ladder measures. */
+  /** [[connectedComponents]] plus the number of distributed rounds it ran
+    * (0 when the driver path ran). */
   def connectedComponentsStats(
       edges: DataFrame,
       srcCol: String,
@@ -420,32 +461,102 @@ object Dedup {
       maxIters: Int = 20,
       checkpointDir: Option[String] = None
   ): (DataFrame, Int) = {
+    val run = connectedComponentsRun(edges, srcCol, dstCol, maxIters, checkpointDir)
+    (run.labels, run.rounds)
+  }
+
+  /** One [[connectedComponents]] call as structured data: the labels, the
+    * distributed rounds, which path ran ("driver", "loop" or "hybrid"),
+    * and how many edges union-find took on the driver (the fetched edges,
+    * the collected frontier, or 0 for the loop). */
+  private[graft] final case class CcRun(
+      labels: DataFrame, rounds: Int, path: String, driverEdges: Long)
+
+  /** Edges [[connectedComponents]] will union-find on the driver: an
+    * eighth of the max heap at ~512 bytes per collected edge (two boxed
+    * ids in a Row, plus a union-find slot per node). */
+  private[graft] def defaultDriverEdgeCap: Int =
+    math.min(Int.MaxValue - 1L, Runtime.getRuntime.maxMemory / 8 / 512).toInt
+
+  /** [[connectedComponents]] with its path made visible; `driverCap` is
+    * only passed by tests and the ladder (0 forces the loop). */
+  private[graft] def connectedComponentsRun(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      maxIters: Int = 20,
+      checkpointDir: Option[String] = None,
+      driverCap: Int = defaultDriverEdgeCap
+  ): CcRun = {
     import org.apache.spark.storage.StorageLevel
-    val sc = edges.sparkSession.sparkContext
+    require(driverCap >= 0 && driverCap < Int.MaxValue,
+      s"driverCap must be in [0, Int.MaxValue), got $driverCap")
+    val spark = edges.sparkSession
+    val sc = spark.sparkContext
+    // persisted once: the driver fetch and, above the cap, the loop's
+    // symmetric edge set both read it, so the pair pipeline runs once
+    val fwd = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = fwd.union(fwd.select(col("b"), col("a"))).distinct()
+    val nodes = sym.select(col("a").as("node")).distinct().withColumn("label", col("node"))
+    val idType = sym.schema("a").dataType
+    val ids = ccIds(idType)
     val prevCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir)
+    val reliable = checkpointDir.isDefined
+    try {
+      val fetched = ids.map(_ =>
+        fwd.select(col("a").cast(idType), col("b").cast(idType)).take(driverCap + 1))
+      fetched match {
+        case Some(got) if got.length <= driverCap =>
+          CcRun(localFrame(spark, nodes.schema, minLabels(got, ids.get)), 0, "driver", got.length)
+        case _ =>
+          sym.persist(StorageLevel.MEMORY_AND_DISK)
+          checkpointDir.foreach(sc.setCheckpointDir)
+          contractThenFinish(sym, nodes, ids, maxIters, reliable, driverCap)
+      }
+    } finally {
+      sym.unpersist()
+      fwd.unpersist()
+      // restore the session-global checkpoint dir we overrode
+      if (reliable) prevCheckpointDir.foreach(sc.setCheckpointDir)
+    }
+  }
+
+  /** The loop and hybrid paths of [[connectedComponentsRun]] over the
+    * persisted symmetric edge set `sym` (`a`, `b`). */
+  private def contractThenFinish(
+      sym: DataFrame,
+      nodes: DataFrame,
+      ids: Option[CcIds],
+      maxIters: Int,
+      reliable: Boolean,
+      driverCap: Int
+  ): CcRun = {
+    val sc = sym.sparkSession.sparkContext
     def deleteCheckpointFiles(rdd: org.apache.spark.rdd.RDD[_]): Unit =
       rdd.getCheckpointFile.foreach { f =>
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
       }
-    // null endpoints are meaningless edges — exclude them explicitly
-    // (they would otherwise silently vanish in the pointer-jump join)
-    val fwd = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-    val sym = fwd.union(fwd.select(col("b"), col("a")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the contracted graph: edges whose endpoint labels differ, each
+    // endpoint mapped to its label, one orientation per pair
+    def frontierOf(labels: DataFrame): DataFrame =
+      sym.join(labels.select(col("node").as("a"), col("label").as("la")), "a")
+        .join(labels.select(col("node").as("b"), col("label").as("lb")), "b")
+        .filter(col("la") < col("lb"))
+        .select(col("la").as("a"), col("lb").as("b"))
     // Iterative frames are EAGERLY snapshotted each round (see
     // [[severLineage]]): persist() alone leaves the growing join lineage
     // inside every new plan and each round partially recomputes it —
     // measured 40s for a 3-round loop at sf0.1 vs ~4s snapshotted.
-    val reliable = checkpointDir.isDefined
-    var (labels, labelsRdd) = severLineage(
-      sym.select(col("a").as("node")).distinct().withColumn("label", col("node")), reliable)
-    var converged = false
+    var (labels, labelsRdd) = severLineage(nodes, reliable)
+    // the first round always runs: the driver fetch already found more
+    // than driverCap edges, or the id type has no driver path
+    var frontier = -1L
+    def finished = frontier == 0 || frontier > 0 && ids.isDefined && frontier <= driverCap
     var i = 0
-    while (!converged && i < maxIters) {
+    while (!finished && i < maxIters) {
       // each node proposes min(own label, neighbors' labels) ...
       // re-alias (fresh exprIds): unioning a checkpointed frame with a
       // derivation of itself otherwise shares attribute ids across union
@@ -464,35 +575,97 @@ object Dedup {
           Seq("label"))
         .select(col("node"), col("jumped").as("label"))
       val (next, nextRdd) = severLineage(jumped, reliable)
-      // Round-19 negative result, measured so it stays un-retried:
-      // carrying each node's previous label THROUGH the round (union
-      // branch + jump self-join + checkpoint) to replace this join with a
-      // plain filter over the snapshot read 10-19% SLOWER on q77/q123/
-      // q124 at sf0.1 — the extra column rides every corpus-of-nodes row
-      // through the round's heaviest operators to save one tiny-graph
-      // join. On a real cluster the saved per-round job latency may win;
-      // locally it does not, and the bench is the arbiter here.
-      val changed = next.join(labels.withColumnRenamed("label", "old"), "node")
-        .filter(col("label") < col("old")).count()
       // the superseded round's checkpoint blocks AND files are dead once
-      // `changed` has consumed them — free deterministically, don't wait
-      // for GC (reliable checkpoint files are never cleaned by Spark)
+      // the snapshot above has consumed them — free deterministically,
+      // don't wait for GC (reliable checkpoint files are never cleaned by
+      // Spark)
       labelsRdd.unpersist(blocking = false)
       deleteCheckpointFiles(labelsRdd)
       labels = next
       labelsRdd = nextRdd
-      converged = changed == 0
+      frontier = frontierOf(labels).count()
       i += 1
     }
-    sym.unpersist()
-    // restore the session-global checkpoint dir we overrode
-    if (reliable) prevCheckpointDir.foreach(sc.setCheckpointDir)
-    if (!converged)
+    if (!finished)
       throw new IllegalStateException(
         s"connectedComponents: labels not stable after $maxIters iterations " +
           "(a component's diameter exceeds maxIters) — raise maxIters")
-    (labels, i)
+    if (frontier == 0) CcRun(labels, i, "loop", 0L)
+    else {
+      val contracted = frontierOf(labels).collect()
+      val remapSchema = StructType(Seq(
+        labels.schema("label"), labels.schema("label").copy(name = "__final")))
+      val remap = localFrame(sym.sparkSession, remapSchema, minLabels(contracted, ids.get))
+      val relabeled = labels.join(remap, Seq("label"), "left")
+        .select(col("node"), coalesce(col("__final"), col("label")).as("label"))
+      CcRun(relabeled, i, "hybrid", contracted.length.toLong)
+    }
   }
+
+  /** How [[connectedComponents]] handles one id type on the driver: a
+    * collected id's union-find key, the key order (Spark's), and the key
+    * back as a Row value. */
+  private final case class CcIds(key: Any => Any, lt: (Any, Any) => Boolean, out: Any => Any)
+
+  private def ccIds(t: DataType): Option[CcIds] = t match {
+    case ByteType | ShortType | IntegerType | LongType =>
+      val out: Any => Any = t match {
+        case ByteType => k => k.asInstanceOf[Long].toByte
+        case ShortType => k => k.asInstanceOf[Long].toShort
+        case IntegerType => k => k.asInstanceOf[Long].toInt
+        case _ => k => k
+      }
+      Some(CcIds(_.asInstanceOf[Number].longValue,
+        (a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long], out))
+    case StringType =>
+      Some(CcIds(v => UTF8String.fromString(v.asInstanceOf[String]),
+        (a, b) => a.asInstanceOf[UTF8String].binaryCompare(b.asInstanceOf[UTF8String]) < 0,
+        _.toString))
+    case _ => None
+  }
+
+  /** Union-find over `(a, b)` rows, every root linked to the smaller id:
+    * one `Row(node, label)` per node, label = its component's minimum. */
+  private def minLabels(edges: Array[Row], ids: CcIds): Seq[Row] = {
+    val index = new java.util.HashMap[Any, Integer]()
+    val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var parent = new Array[Int](16)
+    def slot(k: Any): Int = {
+      val known = index.get(k)
+      if (known != null) known.intValue
+      else {
+        val i = keys.length
+        index.put(k, i)
+        keys += k
+        if (i == parent.length) parent = java.util.Arrays.copyOf(parent, 2 * i)
+        parent(i) = i
+        i
+      }
+    }
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) {
+        parent(i) = parent(parent(i))
+        i = parent(i)
+      }
+      i
+    }
+    edges.foreach { e =>
+      val ra = find(slot(ids.key(e.get(0))))
+      val rb = find(slot(ids.key(e.get(1))))
+      if (ra != rb) {
+        if (ids.lt(keys(ra), keys(rb))) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    keys.indices.map(i => Row(ids.out(keys(i)), ids.out(keys(find(i)))))
+  }
+
+  /** `rows` as a frame: a local relation, or `parallelize` past 10k rows
+    * so a large label map does not ride inside every plan. */
+  private def localFrame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    if (rows.size <= 10000) spark.createDataFrame(rows.asJava, schema)
+    else spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, spark.sparkContext.defaultParallelism), schema)
 
   /** Eager lineage sever: checkpoint `df` (reliable when `reliable`, into
     * the context's checkpoint dir; local otherwise) and rebuild it as a
@@ -527,9 +700,10 @@ object Dedup {
     * drop (q63's apply step) removes `id_b` of every pair, which
     * over-removes on chains (a~b, b~c drops both b and c even though c
     * only resembles b); clustering first keeps precisely one exemplar per
-    * transitive group. Cost: the CC label-propagation loop on the PAIR
-    * GRAPH only (near-dup pairs are a tiny fraction of the corpus), then
-    * one anti-join back to the full corpus. */
+    * transitive group. Cost: [[connectedComponents]] on the PAIR GRAPH
+    * only (near-dup pairs are a tiny fraction of the corpus, so it is
+    * usually union-found on the driver), then one anti-join back to the
+    * full corpus. */
   def fuzzyDedup(
       df: DataFrame,
       idCol: String,

@@ -1282,16 +1282,58 @@ class OperatorsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
     try {
       val edges = Seq((2L, 1L), (2L, 3L), (3L, 9L), (5L, 6L)).toDF("id_a", "id_b")
-      val labels = Dedup.connectedComponents(edges, "id_a", "id_b",
-          checkpointDir = Some(dir))
+      // driverCap = 0 keeps this 4-edge graph on the loop, the only path
+      // that checkpoints
+      val labels = Dedup.connectedComponentsRun(edges, "id_a", "id_b",
+          checkpointDir = Some(dir), driverCap = 0).labels
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
       // checkpoint data actually landed in the reliable dir
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(wrote > 0, "reliable checkpoint must write files")
+      // the default path (the driver, at this size) gives the same labels
+      val viaDefault = Dedup.connectedComponents(edges, "id_a", "id_b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(viaDefault == labels)
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  test("connectedComponents restores the checkpoint dir on every exit") {
+    import graft.operators.Dedup
+    val sc = spark.sparkContext
+    val outer = java.nio.file.Files.createTempDirectory("graft_cc_outer").toString
+    val inner = java.nio.file.Files.createTempDirectory("graft_cc_inner").toString
+    val prev = sc.getCheckpointDir
+    try {
+      sc.setCheckpointDir(outer)
+      val before = sc.getCheckpointDir
+      def assertRestored(exit: String): Unit =
+        assert(sc.getCheckpointDir.exists(_.startsWith(before.get)),
+          s"$exit: checkpoint dir left at ${sc.getCheckpointDir}, expected under ${before.get}")
+      // maxIters: a 64-node chain cannot converge in one round
+      val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      intercept[IllegalStateException] {
+        Dedup.connectedComponentsRun(chain, "id_a", "id_b", maxIters = 1,
+          checkpointDir = Some(inner), driverCap = 0)
+      }
+      assertRestored("maxIters")
+      // a failed Spark job inside the loop: double ids have no driver
+      // path, so the first job that evaluates the edges is the loop's
+      val boom = udf((x: Double) => if (x >= 0) throw new IllegalArgumentException("boom") else x)
+      val failing = spark.range(4)
+        .select(boom(col("id").cast("double")).as("id_a"), lit(1.0).as("id_b"))
+      val err = intercept[Exception] {
+        Dedup.connectedComponentsRun(failing, "id_a", "id_b", checkpointDir = Some(inner))
+      }
+      assert(!err.isInstanceOf[IllegalStateException], s"expected the job failure, got $err")
+      assertRestored("failed job")
+    } finally {
+      prev.foreach(sc.setCheckpointDir)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(outer))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(inner))
     }
   }
 

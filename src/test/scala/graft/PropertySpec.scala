@@ -148,6 +148,139 @@ class PropertySpec extends AnyFunSuite {
     check(prop, 6)
   }
 
+  // ------------------------------------ CC: driver, loop and hybrid
+
+  // Brute-force closure: BFS per component over the non-null edges; every
+  // member's label is the component minimum under `lt`.
+  private def closureLabels[K](edges: Seq[(K, K)], lt: (K, K) => Boolean): Map[Any, Any] = {
+    val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    val out = scala.collection.mutable.Map.empty[Any, Any]
+    adj.keys.foreach { start =>
+      if (!out.contains(start)) {
+        val seen = scala.collection.mutable.LinkedHashSet(start)
+        val queue = scala.collection.mutable.Queue(start)
+        while (queue.nonEmpty) adj(queue.dequeue()).foreach(n => if (seen.add(n)) queue.enqueue(n))
+        val m = seen.reduce((x, y) => if (lt(y, x)) y else x)
+        seen.foreach(out(_) = m)
+      }
+    }
+    out.toMap
+  }
+
+  // Runs CC with the driver cap at 0 (the loop), unbounded (the driver) and
+  // `middle` (the hybrid, once the frontier fits under it): every run must
+  // equal the closure with the same column types. Returns the paths taken.
+  private def ccAllCaps(edges: org.apache.spark.sql.DataFrame, expected: Map[Any, Any],
+      middle: Int): Seq[String] = {
+    val runs = Seq(0, Int.MaxValue - 1, middle).map { cap =>
+      val run = Dedup.connectedComponentsRun(edges, "id_a", "id_b", maxIters = 64,
+        driverCap = cap)
+      val got = run.labels.collect().map(r => r.get(0) -> r.get(1)).toMap
+      val wrong = (got.keySet ++ expected.keySet)
+        .filter(n => got.get(n) != expected.get(n)).take(5)
+        .map(n => s"$n: got ${got.get(n)}, want ${expected.get(n)}")
+      assert(wrong.isEmpty, s"cap=$cap path=${run.path} rounds=${run.rounds}: $wrong")
+      run
+    }
+    val types = runs.map(_.labels.schema.map(f => f.name -> f.dataType))
+    assert(types.distinct.size == 1, s"label schemas differ by path: $types")
+    runs.map(_.path)
+  }
+
+  private val longLt: (Long, Long) => Boolean = _ < _
+  // Spark's string order is UTF-8 byte order
+  private val utf8Lt: (String, String) => Boolean = (a, b) =>
+    java.util.Arrays.compareUnsigned(
+      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
+
+  test("CC differential: driver, loop and hybrid equal the closure on long ids") {
+    val chain = (0L until 9999L).map(i => (i, i + 1))
+    val star = (1L to 50L).map(i => if (i % 2 == 0) (100000L + i, 100000L) else (100000L, 100000L + i))
+    val clique = for { a <- 200000L to 200009L; b <- 200000L to 200009L if a != b } yield (a, b)
+    val selfLoops = Seq((300000L, 300000L), (300001L, 300001L), (300001L, 300002L))
+    val dupReversed = Seq((400001L, 400000L), (400000L, 400001L), (400000L, 400001L),
+      (400001L, 400000L), (400002L, 400001L))
+    val extremes = Seq((Long.MaxValue, Long.MaxValue - 1), (Long.MaxValue - 2, Long.MaxValue),
+      (Long.MinValue + 1, -5L), (-5L, -3L), (-3L, -9L), (-1L, Long.MinValue))
+    val real = chain ++ star ++ clique ++ selfLoops ++ dupReversed ++ extremes ++
+      Seq((500000L, 500002L))
+    val nulls = Seq[(Option[Long], Option[Long])](
+      (None, Some(500000L)), (Some(500001L), None), (None, None))
+    val edges = (real.map { case (a, b) => (Option(a), Option(b)) } ++ nulls)
+      .toDF("id_a", "id_b").repartition(3)
+    val paths = ccAllCaps(edges, closureLabels(real, longLt), middle = 4000)
+    assert(paths == Seq("loop", "driver", "hybrid"), s"paths: $paths")
+  }
+
+  test("CC differential: string ids in Spark's byte order, int ids, empty edge set") {
+    val emoji = "\uD83D\uDE00" // U+1F600, a surrogate pair in UTF-16
+    val clef = "\uD834\uDD1E"  // U+1D11E
+    val chain = (0 until 30).map(i => (f"s$i%02d", f"s${i + 1}%02d"))
+    val real = chain ++ Seq(
+      (emoji, "\uE000"), ("\uFFFD", clef), (clef, "x" + emoji), ("x" + emoji, "x\uFF21"),
+      ("über", "uber"), ("uber", "über"), ("self", "self"), ("s05", "s05"))
+    val nulls = Seq[(String, String)]((null, "s00"), ("zz", null))
+    val strEdges = (real ++ nulls).toDF("id_a", "id_b")
+    ccAllCaps(strEdges, closureLabels(real, utf8Lt), middle = 12)
+
+    val ints = (0 until 40).map(i => (i, i + 1)) ++ Seq((-7, 100), (100, 101), (101, -7))
+    val intRuns = ccAllCaps(ints.toDF("id_a", "id_b"),
+      closureLabels(ints, (a: Int, b: Int) => a < b), middle = 10)
+    assert(intRuns.head == "loop" && intRuns(1) == "driver", s"int paths: $intRuns")
+
+    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    assert(ccAllCaps(empty, Map.empty, middle = 1).forall(_ == "driver"))
+  }
+
+  // ---------------------------------------------- MinHash bit identity
+
+  // The exploded form minHashSignatures ran before the per-row expression:
+  // the reference the expression must equal bit for bit.
+  private def explodedSignatures(df: org.apache.spark.sql.DataFrame, k: Int,
+      n: Int): org.apache.spark.sql.DataFrame = {
+    val aggs = (0 until n).map(i => min(md5(concat(lit(s"$i|"), col("shingle")))).as(s"mh$i"))
+    Dedup.shingleRows(df, "id", "text", k).groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  test("MinHash: the per-row expression is bit-identical to the exploded form") {
+    val token = Gen.oneOf("a", "b", "the", "fox", "über", "naïve", "日本語", "e\u0301",
+      "\uD83D\uDE00", "x\uD835\uDD18y", "\uE000", "\uFFFD")
+    val sep = Gen.frequency(6 -> " ", 1 -> "  ", 1 -> "\t", 1 -> " \n ")
+    val words = Gen.chooseNum(0, 7).flatMap(n => Gen.listOfN(n, Gen.zip(token, sep)))
+      .map(_.map { case (t, s) => t + s }.mkString)
+    val text: Gen[Option[String]] = Gen.frequency(
+      8 -> words.map(Some(_)),
+      1 -> Gen.oneOf("", " ", "   ", "\t \n", "\tlead", "trail\t").map(Some(_)),
+      1 -> Gen.const(None))
+    // ids from a small range: duplicate ids are the norm
+    val row = Gen.zip(Gen.chooseNum(0L, 12L).map(Option(_)), text)
+    val fixed = Seq[(Option[Long], Option[String])](
+      (Some(100L), Some("a a a a a a a a a")),        // one repeated shingle
+      (Some(101L), Some("a b a b a b a b")),          // two repeated shingles
+      (Some(102L), Some("one two three")),            // exactly k = 3
+      (Some(103L), Some("one two three four five")),  // exactly k = 5
+      (Some(104L), Some("two")),                      // shorter than every k > 1
+      (Some(104L), None),                             // duplicate id, null text
+      (Some(105L), None),
+      (None, Some("null id")),
+      (None, Some("null id too")))
+    val prop = Prop.forAll(Gen.listOfN(30, row)) { rows =>
+      val df = (rows ++ fixed).toDF("id", "text").repartition(3)
+      def sigs(f: org.apache.spark.sql.DataFrame): Map[Any, Seq[Any]] =
+        f.collect().map(r => r.get(0) -> r.toSeq.tail).toMap
+      val failures = for { n <- Seq(1, 8, 64); k <- Seq(1, 3, 5) } yield {
+        val want = sigs(explodedSignatures(df, k, n))
+        val got = sigs(Dedup.minHashSignatures(df, "id", "text", k, n))
+        (want.keySet ++ got.keySet).filter(i => got.get(i) != want.get(i)).take(3)
+          .map(i => s"numHashes=$n shingleK=$k id=$i: got ${got.get(i)}, want ${want.get(i)}")
+      }
+      failures.flatten.isEmpty :| failures.flatten.mkString("; ")
+    }
+    check(prop, 2)
+  }
+
   // ---------------------------------------------- LSH candidate prunes
 
   // The width cap and the singleton prune of Dedup.bucketSelfJoin are
