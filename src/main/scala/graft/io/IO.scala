@@ -2,7 +2,7 @@ package graft.io
 
 import java.time.Instant
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.config.FileType
@@ -51,22 +51,26 @@ trait GraftIO {
 /** Real filesystem-backed IO on Spark's native sources/sinks. */
 class SparkIO extends GraftIO {
 
+  /** The one source-format dispatch behind [[read]] and [[readFiles]]:
+    * format defaults first, caller options AFTER — `sep`, `header`,
+    * `inferSchema` etc. from the config override the house defaults. */
+  private def reader(spark: SparkSession, fileType: String,
+      options: Map[String, String]): DataFrameReader = {
+    val format = fileType.toLowerCase
+    if (!FileType.data.contains(format))
+      throw new IllegalArgumentException(s"unsupported source file type '$format'")
+    val defaults =
+      if (format == FileType.Csv) Map("header" -> "true", "inferSchema" -> "true")
+      else Map.empty[String, String]
+    spark.read.format(format).options(defaults).options(options)
+  }
+
   /** Lazy scan dispatch on file type (reference: adapters/io_pl.py:28-36,
     * io_funcs.py:23-27 — parquet/csv lazy, json eager-then-lazy; every Spark
     * read is lazy natively). */
   override def read(spark: SparkSession, path: String, fileType: String,
       options: Map[String, String]): DataFrame =
-    fileType.toLowerCase match {
-      case FileType.Parquet => spark.read.options(options).parquet(path)
-      case FileType.Csv =>
-        // format defaults first, caller options AFTER — `sep`, `header`,
-        // `inferSchema` etc. from the config override the house defaults
-        spark.read.option("header", "true").option("inferSchema", "true")
-          .options(options).csv(path)
-      case FileType.Json => spark.read.options(options).json(path)
-      case FileType.Orc => spark.read.options(options).orc(path)
-      case other => throw new IllegalArgumentException(s"unsupported source file type '$other'")
-    }
+    reader(spark, fileType, options).load(path)
 
   /** Chunked sink: ~`targetSizeGb` per output file (reference:
     * adapters/io_pl.py:65-92 slices + recomputes the whole plan per chunk —
@@ -84,17 +88,16 @@ class SparkIO extends GraftIO {
       options: Map[String, String]): Unit = {
     val rowBytes = math.max(8, df.schema.fields.map(_.dataType.defaultSize).sum)
     val maxRecords = math.max(1L, (targetSizeGb * 1024 * 1024 * 1024).toLong / rowBytes)
-    // caller options AFTER the defaults, so e.g. `compression: zstd` or a
-    // custom maxRecordsPerFile from the config wins
-    val writer = df.write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecords).options(options)
-    fileType.toLowerCase match {
-      case FileType.Parquet => writer.parquet(path)
-      case FileType.Csv => writer.option("header", "true").options(options).csv(path)
-      case FileType.Json => writer.json(path)
-      case FileType.Orc => writer.orc(path)
-      case other => throw new IllegalArgumentException(s"unsupported sink file type '$other'")
-    }
+    val format = fileType.toLowerCase
+    if (!FileType.data.contains(format))
+      throw new IllegalArgumentException(s"unsupported sink file type '$format'")
+    // caller options AFTER the defaults, so e.g. `compression: zstd`, a
+    // custom maxRecordsPerFile or `header: false` from the config wins
+    df.write.mode(SaveMode.Overwrite)
+      .option("maxRecordsPerFile", maxRecords)
+      .options(if (format == FileType.Csv) Map("header" -> "true") else Map.empty[String, String])
+      .options(options)
+      .format(format).save(path)
   }
 
   override def writeText(text: String, path: String): Unit = {
@@ -117,15 +120,7 @@ class SparkIO extends GraftIO {
   override def readFiles(spark: SparkSession, files: Seq[String], fileType: String,
       options: Map[String, String], schema: Option[StructType]): DataFrame = {
     require(files.nonEmpty, "readFiles: empty file list")
-    val base = fileType.toLowerCase match {
-      case FileType.Parquet => spark.read.options(options).format(FileType.Parquet)
-      case FileType.Csv =>
-        spark.read.option("header", "true").option("inferSchema", "true")
-          .options(options).format(FileType.Csv)
-      case FileType.Json => spark.read.options(options).format(FileType.Json)
-      case FileType.Orc => spark.read.options(options).format(FileType.Orc)
-      case other => throw new IllegalArgumentException(s"unsupported source file type '$other'")
-    }
+    val base = reader(spark, fileType, options)
     // an explicit schema silences inferSchema entirely (Spark skips the
     // inference scan when one is supplied) — the caller's full-source types
     // win over anything a lone batch would have inferred

@@ -3,10 +3,11 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType,
   StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact, MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -413,12 +414,12 @@ object Dedup {
     * The cap is [[defaultDriverEdgeCap]]: an eighth of the driver's max
     * heap at ~512 bytes per edge. No option or conf sets it.
     *
-    * Id types: integral ids (byte, short, int, long) are compared as
-    * `Long`s; string ids (binary collation) as UTF8String bytes, Spark's
-    * own order — not `String.compareTo`, which disagrees with it between
-    * surrogate pairs and U+E000–U+FFFF. Any other id type (decimal,
-    * double, binary, a collated string, ...) always runs the loop to an
-    * empty frontier.
+    * Id types: integral ids (byte, short, int, long) and string ids
+    * (binary collation) are union-found on the driver in Spark's own
+    * order — for strings that is UTF8String bytes, not `String.compareTo`,
+    * which disagrees with it between surrogate pairs and U+E000–U+FFFF.
+    * Any other id type (decimal, double, binary, a collated string, ...)
+    * always runs the loop to an empty frontier.
     *
     * Null endpoints are dropped: a null id is not a node. Throws
     * IllegalStateException when the loop has not finished (empty
@@ -451,19 +452,6 @@ object Dedup {
       checkpointDir: Option[String] = None
   ): DataFrame =
     connectedComponentsRun(edges, srcCol, dstCol, maxIters, checkpointDir).labels
-
-  /** [[connectedComponents]] plus the number of distributed rounds it ran
-    * (0 when the driver path ran). */
-  def connectedComponentsStats(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      maxIters: Int = 20,
-      checkpointDir: Option[String] = None
-  ): (DataFrame, Int) = {
-    val run = connectedComponentsRun(edges, srcCol, dstCol, maxIters, checkpointDir)
-    (run.labels, run.rounds)
-  }
 
   /** One [[connectedComponents]] call as structured data: the labels, the
     * distributed rounds, which path ran ("driver", "loop" or "hybrid"),
@@ -500,20 +488,25 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val sym = fwd.union(fwd.select(col("b"), col("a"))).distinct()
     val nodes = sym.select(col("a").as("node")).distinct().withColumn("label", col("node"))
+    // the union widens mixed endpoint types (int src, long dst) to one
+    // id type; the fetch casts to it so the driver sees one key class
     val idType = sym.schema("a").dataType
-    val ids = ccIds(idType)
+    val onDriver = idType match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    }
     val prevCheckpointDir = sc.getCheckpointDir
     val reliable = checkpointDir.isDefined
     try {
-      val fetched = ids.map(_ =>
+      val fetched = Option.when(onDriver)(
         fwd.select(col("a").cast(idType), col("b").cast(idType)).take(driverCap + 1))
       fetched match {
         case Some(got) if got.length <= driverCap =>
-          CcRun(localFrame(spark, nodes.schema, minLabels(got, ids.get)), 0, "driver", got.length)
+          CcRun(localFrame(spark, nodes.schema, minLabels(got, idType)), 0, "driver", got.length)
         case _ =>
           sym.persist(StorageLevel.MEMORY_AND_DISK)
           checkpointDir.foreach(sc.setCheckpointDir)
-          contractThenFinish(sym, nodes, ids, maxIters, reliable, driverCap)
+          contractThenFinish(sym, nodes, onDriver, maxIters, reliable, driverCap)
       }
     } finally {
       sym.unpersist()
@@ -528,7 +521,7 @@ object Dedup {
   private def contractThenFinish(
       sym: DataFrame,
       nodes: DataFrame,
-      ids: Option[CcIds],
+      onDriver: Boolean,
       maxIters: Int,
       reliable: Boolean,
       driverCap: Int
@@ -554,7 +547,7 @@ object Dedup {
     // the first round always runs: the driver fetch already found more
     // than driverCap edges, or the id type has no driver path
     var frontier = -1L
-    def finished = frontier == 0 || frontier > 0 && ids.isDefined && frontier <= driverCap
+    def finished = frontier == 0 || frontier > 0 && onDriver && frontier <= driverCap
     var i = 0
     while (!finished && i < maxIters) {
       // each node proposes min(own label, neighbors' labels) ...
@@ -595,38 +588,22 @@ object Dedup {
       val contracted = frontierOf(labels).collect()
       val remapSchema = StructType(Seq(
         labels.schema("label"), labels.schema("label").copy(name = "__final")))
-      val remap = localFrame(sym.sparkSession, remapSchema, minLabels(contracted, ids.get))
+      val remap = localFrame(sym.sparkSession, remapSchema,
+        minLabels(contracted, labels.schema("label").dataType))
       val relabeled = labels.join(remap, Seq("label"), "left")
         .select(col("node"), coalesce(col("__final"), col("label")).as("label"))
       CcRun(relabeled, i, "hybrid", contracted.length.toLong)
     }
   }
 
-  /** How [[connectedComponents]] handles one id type on the driver: a
-    * collected id's union-find key, the key order (Spark's), and the key
-    * back as a Row value. */
-  private final case class CcIds(key: Any => Any, lt: (Any, Any) => Boolean, out: Any => Any)
-
-  private def ccIds(t: DataType): Option[CcIds] = t match {
-    case ByteType | ShortType | IntegerType | LongType =>
-      val out: Any => Any = t match {
-        case ByteType => k => k.asInstanceOf[Long].toByte
-        case ShortType => k => k.asInstanceOf[Long].toShort
-        case IntegerType => k => k.asInstanceOf[Long].toInt
-        case _ => k => k
-      }
-      Some(CcIds(_.asInstanceOf[Number].longValue,
-        (a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long], out))
-    case StringType =>
-      Some(CcIds(v => UTF8String.fromString(v.asInstanceOf[String]),
-        (a, b) => a.asInstanceOf[UTF8String].binaryCompare(b.asInstanceOf[UTF8String]) < 0,
-        _.toString))
-    case _ => None
-  }
-
-  /** Union-find over `(a, b)` rows, every root linked to the smaller id:
-    * one `Row(node, label)` per node, label = its component's minimum. */
-  private def minLabels(edges: Array[Row], ids: CcIds): Seq[Row] = {
+  /** Union-find over `(a, b)` rows of `idType` ids, every root linked to
+    * the smaller id in Spark's order for the type (ids are keyed as
+    * catalyst values): one `Row(node, label)` per node, label = its
+    * component's minimum. */
+  private def minLabels(edges: Array[Row], idType: DataType): Seq[Row] = {
+    val key = CatalystTypeConverters.createToCatalystConverter(idType)
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val out = CatalystTypeConverters.createToScalaConverter(idType)
     val index = new java.util.HashMap[Any, Integer]()
     val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
     var parent = new Array[Int](16)
@@ -651,13 +628,13 @@ object Dedup {
       i
     }
     edges.foreach { e =>
-      val ra = find(slot(ids.key(e.get(0))))
-      val rb = find(slot(ids.key(e.get(1))))
+      val ra = find(slot(key(e.get(0))))
+      val rb = find(slot(key(e.get(1))))
       if (ra != rb) {
-        if (ids.lt(keys(ra), keys(rb))) parent(rb) = ra else parent(ra) = rb
+        if (ord.lt(keys(ra), keys(rb))) parent(rb) = ra else parent(ra) = rb
       }
     }
-    keys.indices.map(i => Row(ids.out(keys(i)), ids.out(keys(find(i)))))
+    keys.indices.map(i => Row(out(keys(i)), out(keys(find(i)))))
   }
 
   /** `rows` as a frame: a local relation, or `parallelize` past 10k rows

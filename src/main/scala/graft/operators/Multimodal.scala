@@ -1,28 +1,39 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary` columns
   * with typed metadata.
   *
-  * The Spark-side plumbing is real — schema, partition-preserving
-  * `mapPartitions` transform, batch shape. TWO codec paths share that seam:
-  * [[decodeImagesReal]] is a REAL image decoder built on `javax.imageio`
-  * (JDK built-in — PNG/JPEG/BMP/GIF, no external native libs), and
-  * [[decodeImages]] keeps the original deterministic STUB for payloads
-  * that aren't actual images (the synthetic test corpus) and for hermetic
-  * tests that must not depend on codec behavior. AUDIO decode is real too
-  * ([[decodeAudioReal]], round 16): `javax.sound.sampled` ships with the
-  * JDK and decodes WAV/AIFF/AU PCM — header-guarded, per-partition, with
-  * integer-exact signal features. VIDEO (round 17) has a real decode for
-  * MJPEG-in-AVI ([[decodeVideosReal]]): the JDK ships no video CODEC,
-  * but MJPEG needs none — each frame is a complete JPEG and the AVI
-  * container is a bounds-checked RIFF walk, so frames route through the
-  * same bomb-guarded ImageIO seam. Codec-bearing formats (H.264/VP9/AV1)
-  * keep the honest [[sampleFrames]] byte-stride stub — decoding them
-  * needs external native libraries outside the dependency budget.
+  * Every codec lane runs through one of two per-partition seams:
+  *   - [[decodeLane]] (decode): casts the id to long and the payload to
+  *     binary, turns the ImageIO disk cache off once per partition, drops
+  *     null payloads, and keeps the rows its per-row function returns
+  *     `Some` for. A per-row function returns `None` for a payload it
+  *     cannot decode (and catches its own non-fatal throws), so one bad
+  *     record is dropped rather than crashing the task — discard-not-crash;
+  *     `in.count - out.count` observes the drops. No shuffle.
+  *   - [[synthesizeLane]] (encode — the deterministic fixture generators):
+  *     the same cast and cache switch, then one `(idCol, content)` row per
+  *     input row, the bytes a pure function of the id.
+  *
+  * Real codecs are all JDK built-ins, no native libs: images through
+  * `javax.imageio` ([[decodeImagesReal]], [[imageHashes]]; PNG/JPEG/BMP/
+  * GIF, header-guarded against decode bombs), audio through
+  * `javax.sound.sampled` ([[decodeAudioReal]], [[audioFingerprints]];
+  * WAV/AIFF/AU PCM, integer-exact features), MJPEG-in-AVI video
+  * ([[decodeVideosReal]], [[videoFingerprints]]; a bounds-checked RIFF
+  * walk whose frames are plain JPEGs) and ISO-BMFF containers
+  * ([[mp4Metadata]]; [[decodeMp4FramesReal]] and [[mp4Fingerprints]] for
+  * self-contained-frame codecs). [[decodeImages]] keeps the deterministic
+  * STUB for payloads that aren't actual images, with its own body: it is
+  * the one lane that emits a row for a null payload. Codec-bearing video
+  * (H.264/VP9/AV1) keeps the [[sampleFrames]] byte-stride stub — decoding
+  * it needs native libraries outside the dependency budget.
   */
 object Multimodal {
 
@@ -128,47 +139,15 @@ object Multimodal {
     *     there are palette INDICES, and a mean index is not an intensity.
     *     Converted images therefore report channels=3. */
   def imageIoDecode(id: Long, content: Array[Byte],
-      maxPixels: Long = MaxDecodePixels): Option[ImageFeatures] = {
-    if (content.isEmpty) None
-    else try {
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(content))
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) None
-        else {
-          val reader = readers.next()
-          try {
-            reader.setInput(iis, true, true)
-            // header-only peek: no raster exists yet, so a bomb's declared
-            // dims cost nothing to inspect
-            val (w, h) = (reader.getWidth(0), reader.getHeight(0))
-            // bits-per-pixel from the declared sample model (raw type when
-            // the plugin exposes it, else the first decode target); 32 is
-            // the conservative INT_RGB fallback when neither is available
-            val bpp =
-              try {
-                Option(reader.getRawImageType(0))
-                  .orElse {
-                    val it = reader.getImageTypes(0)
-                    if (it != null && it.hasNext) Option(it.next()) else None
-                  }
-                  .map(_.getColorModel.getPixelSize)
-                  .filter(_ > 0)
-                  .getOrElse(32)
-              } catch { case scala.util.control.NonFatal(_) => 32 }
-            if (!headerAdmissible(w, h, bpp, maxPixels)) None
-            else Option(reader.read(0)).map(rasterFeatures(id, _))
-          } finally reader.dispose()
-        }
-      } finally if (iis != null) iis.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+      maxPixels: Long = MaxDecodePixels): Option[ImageFeatures] =
+    decodeBuffered(content, maxPixels).flatMap { img =>
+      try Some(rasterFeatures(id, img)) catch { case scala.util.control.NonFatal(_) => None }
+    }
 
-  /** Mean-intensity features over a decoded image; indexed color models
-    * are rerouted through an RGB copy first (see [[imageIoDecode]]). */
-  private def rasterFeatures(id: Long, decoded: java.awt.image.BufferedImage): ImageFeatures = {
-    val img = decoded.getColorModel match {
+  /** `decoded`, or an RGB copy of it when its color model is indexed:
+    * palette samples are indices, not intensities (see [[imageIoDecode]]). */
+  private def rgbIfIndexed(decoded: java.awt.image.BufferedImage): java.awt.image.BufferedImage =
+    decoded.getColorModel match {
       case _: java.awt.image.IndexColorModel =>
         val conv = new java.awt.image.BufferedImage(
           decoded.getWidth, decoded.getHeight, java.awt.image.BufferedImage.TYPE_INT_RGB)
@@ -177,6 +156,11 @@ object Multimodal {
         conv
       case _ => decoded
     }
+
+  /** Mean-intensity features over a decoded image; indexed color models
+    * are rerouted through an RGB copy first (see [[imageIoDecode]]). */
+  private def rasterFeatures(id: Long, decoded: java.awt.image.BufferedImage): ImageFeatures = {
+    val img = rgbIfIndexed(decoded)
     val raster = img.getRaster
     val (w, h, bands) = (img.getWidth, img.getHeight, raster.getNumBands)
     var sum = 0.0
@@ -197,18 +181,38 @@ object Multimodal {
     * partition-preserving per-partition batch seam, rows whose payload no
     * reader accepts are DROPPED (undecodable crawl bytes are discard-not-
     * crash at curation scale; count in.count - out.count to observe). */
-  def decodeImagesReal(df: DataFrame, idCol: String, contentCol: String): Dataset[ImageFeatures] = {
-    val spark = df.sparkSession
-    import spark.implicits._
+  def decodeImagesReal(df: DataFrame, idCol: String, contentCol: String): Dataset[ImageFeatures] =
+    decodeLane(df, idCol, contentCol)(imageIoDecode(_, _))
+
+  /** The decode seam (see the object doc): `f(id, payload)` per non-null
+    * payload of `(idCol, contentCol)`, its `Some` rows kept. */
+  private def decodeLane[T <: Product : TypeTag](df: DataFrame, idCol: String, contentCol: String)(
+      f: (Long, Array[Byte]) => Option[T]): Dataset[T] =
     df.select(col(idCol).cast(LongType), col(contentCol).cast(BinaryType))
       .mapPartitions { rows =>
         // per-partition codec context: no temp-file cache on executors
         javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { r =>
-          if (r.isNullAt(1)) None
-          else imageIoDecode(r.getLong(0), r.getAs[Array[Byte]](1))
+        rows.flatMap(r => if (r.isNullAt(1)) None else f(r.getLong(0), r.getAs[Array[Byte]](1)))
+      }(Encoders.product[T])
+
+  /** The encode seam (see the object doc): one `(idCol, content)` row per
+    * input row, `content = bytesOf(id)`. */
+  private def synthesizeLane(df: DataFrame, idCol: String)(bytesOf: Long => Array[Byte]): DataFrame =
+    df.select(col(idCol).cast(LongType))
+      .mapPartitions { rows =>
+        javax.imageio.ImageIO.setUseCache(false)
+        rows.map { r =>
+          val id = r.getLong(0)
+          (id, bytesOf(id))
         }
-      }
+      }(Encoders.product[(Long, Array[Byte])])
+      .toDF(idCol, "content")
+
+  /** PNG encode through `javax.imageio`. */
+  private def pngBytes(img: java.awt.image.BufferedImage): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", out)
+    out.toByteArray
   }
 
   /** Deterministic grayscale-PNG fixture generator: one `w x h` constant-
@@ -217,33 +221,22 @@ object Multimodal {
     * seeing the bytes. Runs on executors through the same per-partition
     * codec seam as decode (encode IS a codec). Fixture math:
     * w = 8 + id%9, h = 8 + (3*id)%9, intensity = (37*id)%256. */
-  def synthesizeGrayPngs(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.map { r =>
-          val id = r.getLong(0)
-          val w = 8 + (id % 9).toInt
-          val h = 8 + ((3 * id) % 9).toInt
-          val g = ((37 * id) % 256).toInt
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) { raster.setSample(x, y, 0, g); x += 1 }
-            y += 1
-          }
-          val out = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", out)
-          (id, out.toByteArray)
-        }
+  def synthesizeGrayPngs(df: DataFrame, idCol: String): DataFrame =
+    synthesizeLane(df, idCol) { id =>
+      val w = 8 + (id % 9).toInt
+      val h = 8 + ((3 * id) % 9).toInt
+      val g = ((37 * id) % 256).toInt
+      val img = new java.awt.image.BufferedImage(
+        w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+      val raster = img.getRaster
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) { raster.setSample(x, y, 0, g); x += 1 }
+        y += 1
       }
-      .toDF(idCol, "content")
-  }
+      pngBytes(img)
+    }
 
   /** Per-image perceptual hashes ([[imageHashes]]). */
   final case class ImageHash(
@@ -263,15 +256,7 @@ object Multimodal {
     * are not intensities — the [[imageIoDecode]] rule). */
   private[graft] def blockMeanGray(
       decoded: java.awt.image.BufferedImage, tw: Int, th: Int): Array[Double] = {
-    val img = decoded.getColorModel match {
-      case _: java.awt.image.IndexColorModel =>
-        val conv = new java.awt.image.BufferedImage(
-          decoded.getWidth, decoded.getHeight, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = conv.createGraphics()
-        try g.drawImage(decoded, 0, 0, null) finally g.dispose()
-        conv
-      case _ => decoded
-    }
+    val img = rgbIfIndexed(decoded)
     val raster = img.getRaster
     val (w, h, bands) = (img.getWidth, img.getHeight, raster.getNumBands)
     val out = new Array[Double](tw * th)
@@ -332,8 +317,12 @@ object Multimodal {
     bits
   }
 
-  /** Header-guarded decode to a raster (the [[imageIoDecode]] admission
-    * path, returning the image instead of its features). */
+  /** The (aHash, dHash) pair of one decoded image. */
+  private def perceptualHashes(img: java.awt.image.BufferedImage): (Long, Long) =
+    (aHash64(blockMeanGray(img, 8, 8)), dHash64(blockMeanGray(img, 9, 8)))
+
+  /** Header-guarded decode to a raster: the admission path behind
+    * [[imageIoDecode]], whose doc lists the guards. */
   private[graft] def decodeBuffered(content: Array[Byte],
       maxPixels: Long = MaxDecodePixels): Option[java.awt.image.BufferedImage] = {
     if (content == null || content.isEmpty) None
@@ -347,7 +336,12 @@ object Multimodal {
           val reader = readers.next()
           try {
             reader.setInput(iis, true, true)
+            // header-only peek: no raster exists yet, so a bomb's declared
+            // dims cost nothing to inspect
             val (w, h) = (reader.getWidth(0), reader.getHeight(0))
+            // bits-per-pixel from the declared sample model (raw type when
+            // the plugin exposes it, else the first decode target); 32 is
+            // the conservative INT_RGB fallback when neither is available
             val bpp =
               try {
                 Option(reader.getRawImageType(0))
@@ -374,22 +368,13 @@ object Multimodal {
     * block-mean downscale → 64-bit aHash + dHash. Undecodable payloads
     * are dropped (discard-not-crash). Partition-preserving: no shuffle;
     * hashing is the map side of the near-dup pipeline. */
-  def imageHashes(df: DataFrame, idCol: String, contentCol: String): Dataset[ImageHash] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType), col(contentCol).cast(BinaryType))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { r =>
-          if (r.isNullAt(1)) None
-          else decodeBuffered(r.getAs[Array[Byte]](1)).map { img =>
-            ImageHash(r.getLong(0), img.getWidth, img.getHeight,
-              aHash64(blockMeanGray(img, 8, 8)),
-              dHash64(blockMeanGray(img, 9, 8)))
-          }
-        }
+  def imageHashes(df: DataFrame, idCol: String, contentCol: String): Dataset[ImageHash] =
+    decodeLane(df, idCol, contentCol) { (id, bytes) =>
+      decodeBuffered(bytes).map { img =>
+        val (ahash, dhash) = perceptualHashes(img)
+        ImageHash(id, img.getWidth, img.getHeight, ahash, dhash)
       }
-  }
+    }
 
   /** The 36×32 gray pattern raster behind [[synthesizePatternPngs]] and
     * [[synthesizeMjpegAvis]]: 9 block columns whose ±15 gradient signs
@@ -447,19 +432,7 @@ object Multimodal {
     * id mod patterns, byte-identical repeats = id mod (patterns·20). */
   def synthesizePatternPngs(df: DataFrame, idCol: String, patterns: Int = 25): DataFrame = {
     require(patterns >= 1 && patterns <= 128, s"patterns must be in [1,128], got $patterns")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.map { r =>
-          val id = r.getLong(0)
-          val out = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(patternRaster(id, patterns), "png", out)
-          (id, out.toByteArray)
-        }
-      }
-      .toDF(idCol, "content")
+    synthesizeLane(df, idCol)(id => pngBytes(patternRaster(id, patterns)))
   }
 
   /** Decoded-audio feature schema produced by [[decodeAudioReal]].
@@ -499,80 +472,43 @@ object Multimodal {
     * `maxBytes` un-decoded — same poisoned-record rules as
     * [[imageIoDecode]] (any non-fatal throw = undecodable). */
   def audioDecode(id: Long, content: Array[Byte],
-      maxBytes: Long = MaxAudioBytes): Option[AudioFeatures] = {
-    import javax.sound.sampled.{AudioFormat, AudioSystem}
-    if (content == null || content.isEmpty) None
-    else try {
-      // header-only peek: file format carries frame length + frame size
-      // without touching sample data
-      val bin = new java.io.ByteArrayInputStream(content)
-      val fileFormat = AudioSystem.getAudioFileFormat(bin)
-      val fmt = fileFormat.getFormat
-      val declaredFrames = fileFormat.getFrameLength.toLong
-      val frameSize = fmt.getFrameSize.toLong
-      val admissible =
-        fmt.getEncoding == AudioFormat.Encoding.PCM_SIGNED &&
-          fmt.getSampleSizeInBits == 16 &&
-          fmt.getChannels >= 1 &&
-          declaredFrames >= 0 && frameSize > 0 &&
-          declaredFrames * frameSize <= maxBytes
-      if (!admissible) None
-      else {
-        val ais = AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(content))
-        try {
-          val channels = fmt.getChannels
-          val bigEndian = fmt.isBigEndian
-          val data = ais.readAllBytes()
-          if (data.length > maxBytes) None
-          else {
-            val nSamples = data.length / 2
-            val nFrames = nSamples.toLong / channels
-            var sumsq = 0L
-            var peak = 0
-            var zc = 0L
-            var clip = 0L
-            var silent = 0L
-            var prevSign = 0 // channel-0 previous nonzero-product tracking
-            var i = 0
-            while (i < nSamples) {
-              val b0 = data(2 * i) & 0xff
-              val b1 = data(2 * i + 1) & 0xff
-              val s = (if (bigEndian) (b0 << 8) | b1 else (b1 << 8) | b0).toShort.toInt
-              val a = math.abs(s)
-              sumsq += s.toLong * s
-              if (a > peak) peak = a
-              if (a >= ClipThreshold) clip += 1
-              if (a < SilenceThreshold) silent += 1
-              if (i % channels == 0) { // channel 0 only
-                val sign = Integer.signum(s)
-                if (sign != 0 && prevSign != 0 && sign != prevSign) zc += 1
-                if (sign != 0) prevSign = sign
-              }
-              i += 1
-            }
-            Some(AudioFeatures(id, fmt.getSampleRate.toInt, channels, 16,
-              nFrames, nFrames * 1000000L / fmt.getSampleRate.toInt,
-              sumsq, peak, zc, clip, silent))
+      maxBytes: Long = MaxAudioBytes): Option[AudioFeatures] =
+    readPcm16(content, maxBytes).flatMap { case (channels, sampleRate, bigEndian, data) =>
+      try {
+        val nSamples = data.length / 2
+        val nFrames = nSamples.toLong / channels
+        var sumsq = 0L
+        var peak = 0
+        var zc = 0L
+        var clip = 0L
+        var silent = 0L
+        var prevSign = 0 // channel-0 previous nonzero-product tracking
+        var i = 0
+        while (i < nSamples) {
+          val b0 = data(2 * i) & 0xff
+          val b1 = data(2 * i + 1) & 0xff
+          val s = (if (bigEndian) (b0 << 8) | b1 else (b1 << 8) | b0).toShort.toInt
+          val a = math.abs(s)
+          sumsq += s.toLong * s
+          if (a > peak) peak = a
+          if (a >= ClipThreshold) clip += 1
+          if (a < SilenceThreshold) silent += 1
+          if (i % channels == 0) { // channel 0 only
+            val sign = Integer.signum(s)
+            if (sign != 0 && prevSign != 0 && sign != prevSign) zc += 1
+            if (sign != 0) prevSign = sign
           }
-        } finally ais.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+          i += 1
+        }
+        Some(AudioFeatures(id, sampleRate, channels, 16,
+          nFrames, nFrames * 1000000L / sampleRate, sumsq, peak, zc, clip, silent))
+      } catch { case scala.util.control.NonFatal(_) => None } // e.g. a 0 Hz header
+    }
 
   /** [[decodeImagesReal]]'s audio twin: per-partition batch decode through
     * [[audioDecode]]; undecodable payloads dropped (discard-not-crash). */
-  def decodeAudioReal(df: DataFrame, idCol: String, contentCol: String): Dataset[AudioFeatures] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType), col(contentCol).cast(BinaryType))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          if (r.isNullAt(1)) None
-          else audioDecode(r.getLong(0), r.getAs[Array[Byte]](1))
-        }
-      }
-  }
+  def decodeAudioReal(df: DataFrame, idCol: String, contentCol: String): Dataset[AudioFeatures] =
+    decodeLane(df, idCol, contentCol)(audioDecode(_, _))
 
   /** Deterministic WAV fixture generator — the audio twin of
     * [[synthesizeGrayPngs]]: one mono 16-bit 8 kHz PCM WAV per row whose
@@ -588,47 +524,47 @@ object Multimodal {
     * Rows with id % 97 == 0 get NON-audio bytes (the decoder must drop
     * them — the oracle predicts their absence). Encoding goes through the
     * real `AudioSystem.write` WAVE writer (encode IS a codec). */
-  def synthesizeWavs(df: DataFrame, idCol: String): DataFrame = {
-    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          if (id % 97 == 0) (id, s"not-a-wav-payload-$id".getBytes("UTF-8"))
-          else {
-            val n = 256 + (id % 7).toInt * 64
-            val p = 16 + (id % 23).toInt
-            val amp = 4000 + (id % 12).toInt * 2600
-            val pcm = new Array[Byte](n * 2)
-            var k = 0
-            while (k < n) {
-              val s = amp - (2 * amp * (k % p)) / p
-              pcm(2 * k) = (s & 0xff).toByte // little-endian
-              pcm(2 * k + 1) = ((s >> 8) & 0xff).toByte
-              k += 1
-            }
-            val fmt = new AudioFormat(8000f, 16, 1, true, false)
-            val ais = new AudioInputStream(
-              new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-            val out = new java.io.ByteArrayOutputStream()
-            AudioSystem.write(ais, AudioFileFormat.Type.WAVE, out)
-            (id, out.toByteArray)
-          }
+  def synthesizeWavs(df: DataFrame, idCol: String): DataFrame =
+    synthesizeLane(df, idCol) { id =>
+      if (id % 97 == 0) s"not-a-wav-payload-$id".getBytes("UTF-8")
+      else {
+        val n = 256 + (id % 7).toInt * 64
+        val p = 16 + (id % 23).toInt
+        val amp = 4000 + (id % 12).toInt * 2600
+        val pcm = new Array[Byte](n * 2)
+        var k = 0
+        while (k < n) {
+          val s = amp - (2 * amp * (k % p)) / p
+          pcm(2 * k) = (s & 0xff).toByte // little-endian
+          pcm(2 * k + 1) = ((s >> 8) & 0xff).toByte
+          k += 1
         }
+        monoWav8k(pcm)
       }
-      .toDF(idCol, "content")
+    }
+
+  /** Little-endian 16-bit `pcm` as a mono 8 kHz WAV, through the real
+    * `AudioSystem.write` WAVE writer. */
+  private def monoWav8k(pcm: Array[Byte]): Array[Byte] = {
+    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
+    val fmt = new AudioFormat(8000f, 16, 1, true, false)
+    val ais = new AudioInputStream(
+      new java.io.ByteArrayInputStream(pcm), fmt, pcm.length / 2L)
+    val out = new java.io.ByteArrayOutputStream()
+    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, out)
+    out.toByteArray
   }
 
-  /** Header-guarded PCM16 read shared by [[audioDecode]]'s streaming
-    * feature pass and the fingerprint path: (channels, sampleRate,
-    * bigEndian, raw sample bytes), or None under the same admission rules. */
+  /** Header-guarded PCM16 read behind [[audioDecode]] and the fingerprint
+    * path: (channels, sampleRate, bigEndian, raw sample bytes), or None
+    * under the admission rules [[audioDecode]] documents. */
   private def readPcm16(content: Array[Byte],
       maxBytes: Long): Option[(Int, Int, Boolean, Array[Byte])] = {
     import javax.sound.sampled.{AudioFormat, AudioSystem}
     if (content == null || content.isEmpty) None
     else try {
+      // header-only peek: file format carries frame length + frame size
+      // without touching sample data
       val fileFormat = AudioSystem.getAudioFileFormat(
         new java.io.ByteArrayInputStream(content))
       val fmt = fileFormat.getFormat
@@ -683,32 +619,23 @@ object Multimodal {
     * decode): the feature extraction under audio near-dup
     * ([[graft.operators.Dedup.hammingNearDupPairs]] on the `afp` column).
     * Undecodable or shorter-than-65-frame payloads are dropped. */
-  def audioFingerprints(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType), col(contentCol).cast(BinaryType))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          if (r.isNullAt(1)) None
-          else readPcm16(r.getAs[Array[Byte]](1), MaxAudioBytes).flatMap {
-            case (channels, _, bigEndian, data) =>
-              val nSamples = data.length / 2
-              val nFrames = nSamples / channels
-              val ch0 = new Array[Int](nFrames)
-              var f = 0
-              while (f < nFrames) {
-                val i = f * channels
-                val b0 = data(2 * i) & 0xff
-                val b1 = data(2 * i + 1) & 0xff
-                ch0(f) = (if (bigEndian) (b0 << 8) | b1 else (b1 << 8) | b0).toShort.toInt
-                f += 1
-              }
-              audioFingerprint64(ch0).map(fp => (r.getLong(0), nFrames.toLong, fp))
-          }
+  def audioFingerprints(df: DataFrame, idCol: String, contentCol: String): DataFrame =
+    decodeLane(df, idCol, contentCol) { (id, bytes) =>
+      readPcm16(bytes, MaxAudioBytes).flatMap { case (channels, _, bigEndian, data) =>
+        val nSamples = data.length / 2
+        val nFrames = nSamples / channels
+        val ch0 = new Array[Int](nFrames)
+        var f = 0
+        while (f < nFrames) {
+          val i = f * channels
+          val b0 = data(2 * i) & 0xff
+          val b1 = data(2 * i + 1) & 0xff
+          ch0(f) = (if (bigEndian) (b0 << 8) | b1 else (b1 << 8) | b0).toShort.toInt
+          f += 1
         }
+        audioFingerprint64(ch0).map(fp => (id, nFrames.toLong, fp))
       }
-      .toDF("id", "n_frames", "afp")
-  }
+    }.toDF("id", "n_frames", "afp")
 
   /** Deterministic PATTERNED-WAV fixture generator — the near-dup twin of
     * [[synthesizeWavs]] (whose sawtooth energy profile is flat, so all
@@ -729,41 +656,28 @@ object Multimodal {
     * truth is id arithmetic. */
   def synthesizePatternWavs(df: DataFrame, idCol: String, patterns: Int = 25): DataFrame = {
     require(patterns >= 1 && patterns <= 64, s"patterns must be in [1,64], got $patterns")
-    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val pk = (id % patterns).toInt
-          val word = (pk << 1) | (Integer.bitCount(pk) & 1)
-          val m = 2 + ((id / patterns) % 5).toInt // amplitude jitter 2..6
-          val n = 650
-          val pcm = new Array[Byte](n * 2)
-          var k = 0
-          while (k < n) {
-            val j = (k * 65) / n
-            val level =
-              if (j % 2 == 0) 300 // reference chunk
-              else 300 * (1 + ((word >> (((j - 1) / 2) % 8)) & 1))
-            // ramp −4..5 with NO division: truncation would break the
-            // m²-multiple energy structure scale invariance rests on.
-            // |s| ≤ 6·600·5 = 18000 < 32767
-            val s = m * level * ((k % 10) - 4)
-            pcm(2 * k) = (s & 0xff).toByte
-            pcm(2 * k + 1) = ((s >> 8) & 0xff).toByte
-            k += 1
-          }
-          val fmt = new AudioFormat(8000f, 16, 1, true, false)
-          val ais = new AudioInputStream(
-            new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-          val out = new java.io.ByteArrayOutputStream()
-          AudioSystem.write(ais, AudioFileFormat.Type.WAVE, out)
-          (id, out.toByteArray)
-        }
+    synthesizeLane(df, idCol) { id =>
+      val pk = (id % patterns).toInt
+      val word = (pk << 1) | (Integer.bitCount(pk) & 1)
+      val m = 2 + ((id / patterns) % 5).toInt // amplitude jitter 2..6
+      val n = 650
+      val pcm = new Array[Byte](n * 2)
+      var k = 0
+      while (k < n) {
+        val j = (k * 65) / n
+        val level =
+          if (j % 2 == 0) 300 // reference chunk
+          else 300 * (1 + ((word >> (((j - 1) / 2) % 8)) & 1))
+        // ramp −4..5 with NO division: truncation would break the
+        // m²-multiple energy structure scale invariance rests on.
+        // |s| ≤ 6·600·5 = 18000 < 32767
+        val s = m * level * ((k % 10) - 4)
+        pcm(2 * k) = (s & 0xff).toByte
+        pcm(2 * k + 1) = ((s >> 8) & 0xff).toByte
+        k += 1
       }
-      .toDF(idCol, "content")
+      monoWav8k(pcm)
+    }
   }
 
   /** Frame-sampling stub for CODEC-LESS video payloads: cut the byte
@@ -872,23 +786,20 @@ object Multimodal {
     * needs (decode cost per video is O(maxFrames), never O(duration)).
     * Non-AVI payloads are dropped (discard-not-crash). */
   def decodeVideosReal(df: DataFrame, idCol: String, contentCol: String,
-      stride: Int = 1, maxFrames: Int = 64): Dataset[VideoFeatures] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType), col(contentCol).cast(BinaryType))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { r =>
-          if (r.isNullAt(1)) None
-          else parseAviMjpeg(r.getAs[Array[Byte]](1), stride, maxFrames).map {
-            case (w, h, us, chunks, sampled) =>
-              val decoded = sampled.count(decodeBuffered(_).isDefined)
-              VideoFeatures(r.getLong(0), w, h, us, chunks * us, chunks,
-                sampled.size, decoded)
-          }
-        }
+      stride: Int = 1, maxFrames: Int = 64): Dataset[VideoFeatures] =
+    decodeLane(df, idCol, contentCol) { (id, bytes) =>
+      parseAviMjpeg(bytes, stride, maxFrames).map { case (w, h, us, chunks, sampled) =>
+        VideoFeatures(id, w, h, us, chunks * us, chunks, sampled.size, decodableCount(sampled))
       }
-  }
+    }
+
+  /** How many of a video's sampled frames decode. */
+  private def decodableCount(frames: Seq[Array[Byte]]): Int =
+    frames.count(decodeBuffered(_).isDefined)
+
+  /** A video's first sampled frame that decodes (later frames untouched). */
+  private def firstDecodable(frames: Seq[Array[Byte]]): Option[java.awt.image.BufferedImage] =
+    frames.iterator.flatMap(decodeBuffered(_)).nextOption()
 
   /** Per-video perceptual fingerprint: dHash of the FIRST sampled decoded
     * frame (+ aHash, + per-video frame stats) — video near-dup then rides
@@ -896,24 +807,13 @@ object Multimodal {
     * .hammingNearDupPairs]] pigeonhole hamming-segment join, never
     * all-pairs). Videos with no decodable frame are dropped. */
   def videoFingerprints(df: DataFrame, idCol: String, contentCol: String,
-      stride: Int = 1, maxFrames: Int = 64): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType), col(contentCol).cast(BinaryType))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { r =>
-          if (r.isNullAt(1)) None
-          else for {
-            (w, h, _, chunks, sampled) <-
-              parseAviMjpeg(r.getAs[Array[Byte]](1), stride, maxFrames)
-            first <- sampled.iterator.flatMap(decodeBuffered(_)).buffered.headOption
-          } yield (r.getLong(0), w, h, chunks,
-            aHash64(blockMeanGray(first, 8, 8)), dHash64(blockMeanGray(first, 9, 8)))
-        }
-      }
-      .toDF(idCol, "width", "height", "n_frames", "ahash", "dhash")
-  }
+      stride: Int = 1, maxFrames: Int = 64): DataFrame =
+    decodeLane(df, idCol, contentCol) { (id, bytes) =>
+      for {
+        (w, h, _, chunks, sampled) <- parseAviMjpeg(bytes, stride, maxFrames)
+        (ahash, dhash) <- firstDecodable(sampled).map(perceptualHashes)
+      } yield (id, w, h, chunks, ahash, dhash)
+    }.toDF(idCol, "width", "height", "n_frames", "ahash", "dhash")
 
   /** JPEG encode at an explicit quality (the MJPEG frame payload). */
   private def jpegBytes(img: java.awt.image.BufferedImage, quality: Float): Array[Byte] = {
@@ -976,21 +876,15 @@ object Multimodal {
     * cross-pattern margin ≥ 3 survives the lossy encode). */
   def synthesizeMjpegAvis(df: DataFrame, idCol: String, patterns: Int = 25): DataFrame = {
     require(patterns >= 1 && patterns <= 128, s"patterns must be in [1,128], got $patterns")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.map { r =>
-          val id = r.getLong(0)
-          val nf = (4 + id % 5).toInt
-          val frames = (0 until nf).map(f =>
-            jpegBytes(patternRaster(id, patterns, extraShift = f % 3), 0.95f))
-          (id, buildMjpegAvi(frames, 36, 32, usPerFrame = 100000))
-        }
-      }
-      .toDF(idCol, "content")
+    synthesizeLane(df, idCol)(id =>
+      buildMjpegAvi(patternJpegFrames(id, patterns), 36, 32, usPerFrame = 100000))
   }
+
+  /** The `4 + id % 5` JPEG frames of pattern video `id`, frame `f`
+    * brightness-wiggled by `f % 3` (the AVI and MP4 fixtures' frames). */
+  private def patternJpegFrames(id: Long, patterns: Int): Seq[Array[Byte]] =
+    (0 until (4 + id % 5).toInt).map(f =>
+      jpegBytes(patternRaster(id, patterns, extraShift = f % 3), 0.95f))
 
   // ---- MP4 / ISO-BMFF (round 18) ----------------------------------------
   // The judge-drawn codec boundary stands: H.264/HEVC/VP9/AV1 FRAME decode
@@ -1123,24 +1017,14 @@ object Multimodal {
     * box walk, no shuffle, O(header bytes) per file regardless of mdat
     * size (the 100 TB shape: a metadata pass never touches sample data).
     * Non-MP4 payloads are dropped (discard-not-crash). */
-  def mp4Metadata(df: DataFrame, idCol: String, contentCol: String): Dataset[Mp4Meta] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType), col(contentCol).cast(BinaryType))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          if (r.isNullAt(1)) None
-          else parseMp4Meta(r.getAs[Array[Byte]](1)).map {
-            case (brand, ts, dur, nt, vc, ac, nk, fk, nc) =>
-              Mp4Meta(r.getLong(0), brand,
-                if (ts > 0) dur * 1000L / ts else 0L, nt,
-                vc.sorted.mkString(","), ac.sorted.mkString(","),
-                nk, fk, nc,
-                vc.exists(SelfContainedVideoCodecs.contains))
-          }
-        }
+  def mp4Metadata(df: DataFrame, idCol: String, contentCol: String): Dataset[Mp4Meta] =
+    decodeLane(df, idCol, contentCol) { (id, bytes) =>
+      parseMp4Meta(bytes).map { case (brand, ts, dur, nt, vc, ac, nk, fk, nc) =>
+        Mp4Meta(id, brand, if (ts > 0) dur * 1000L / ts else 0L, nt,
+          vc.sorted.mkString(","), ac.sorted.mkString(","), nk, fk, nc,
+          vc.exists(SelfContainedVideoCodecs.contains))
       }
-  }
+    }
 
   /** Assemble a minimal spec-shaped ISO-BMFF file: ftyp + moov(mvhd,
     * trak(tkhd, mdia(mdhd, hdlr, minf(stbl(stsd, [stss], stco))))…) +
@@ -1200,27 +1084,21 @@ object Multimodal {
     * video track has `10·(1 + id % 4)` samples with a sync sample every
     * 5th from 1 (so `2·(1 + id % 4)` keyframes) spread over
     * `1 + id % 3` chunks. */
-  def synthesizeMp4s(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val codec = (id % 3) match {
-            case 0 => "avc1"; case 1 => "hvc1"; case _ => "jpeg"
-          }
-          val nSamples = (10 * (1 + id % 4)).toInt
-          val sync = (1 to nSamples by 5).toSeq
-          val chunks = (0 until (1 + id % 3).toInt).map(i => 48 + 16 * i)
-          val video = ("vide", codec, sync, chunks)
-          val tracks =
-            if (id % 2 == 0) Seq(video, ("soun", "mp4a", Nil, Seq(1024)))
-            else Seq(video)
-          (id, buildMp4("isom", 1000, (1000 * (1 + id % 7)).toInt, tracks))
-        }
-      }
-      .toDF(idCol, "content")
+  def synthesizeMp4s(df: DataFrame, idCol: String): DataFrame =
+    synthesizeLane(df, idCol) { id =>
+      val nSamples = (10 * (1 + id % 4)).toInt
+      val sync = (1 to nSamples by 5).toSeq
+      val chunks = (0 until (1 + id % 3).toInt).map(i => 48 + 16 * i)
+      val video = ("vide", mp4FixtureCodec(id), sync, chunks)
+      val tracks =
+        if (id % 2 == 0) Seq(video, ("soun", "mp4a", Nil, Seq(1024)))
+        else Seq(video)
+      buildMp4("isom", 1000, (1000 * (1 + id % 7)).toInt, tracks)
+    }
+
+  /** The MP4 fixtures' video codec: avc1/hvc1/jpeg by `id % 3`. */
+  private def mp4FixtureCodec(id: Long): String = (id % 3) match {
+    case 0 => "avc1"; case 1 => "hvc1"; case _ => "jpeg"
   }
 
   // ---- MP4 SAMPLE extraction (round 19, judge item 4) --------------------
@@ -1385,45 +1263,24 @@ object Multimodal {
     * video trak (avc1/hvc1/vp09/av01, or no video) are dropped: that IS
     * the q183 `decodable` routing doing work. */
   def decodeMp4FramesReal(df: DataFrame, idCol: String, contentCol: String,
-      stride: Int = 1, maxFrames: Int = 64): Dataset[Mp4Frames] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType), col(contentCol).cast(BinaryType))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { r =>
-          if (r.isNullAt(1)) None
-          else parseMp4Samples(r.getAs[Array[Byte]](1), stride, maxFrames).map {
-            case (fmt, n, sampled) =>
-              Mp4Frames(r.getLong(0), fmt, n, sampled.size,
-                sampled.count(decodeBuffered(_).isDefined))
-          }
-        }
+      stride: Int = 1, maxFrames: Int = 64): Dataset[Mp4Frames] =
+    decodeLane(df, idCol, contentCol) { (id, bytes) =>
+      parseMp4Samples(bytes, stride, maxFrames).map { case (fmt, n, sampled) =>
+        Mp4Frames(id, fmt, n, sampled.size, decodableCount(sampled))
       }
-  }
+    }
 
   /** Per-MP4 perceptual fingerprint (first sampled decoded frame, aHash +
     * dHash) — rides the exact q167/q178 pigeonhole hamming near-dup
     * path. Non-decodable files drop, same as [[videoFingerprints]]. */
   def mp4Fingerprints(df: DataFrame, idCol: String, contentCol: String,
-      stride: Int = 1, maxFrames: Int = 64): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType), col(contentCol).cast(BinaryType))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { r =>
-          if (r.isNullAt(1)) None
-          else for {
-            (fmt, n, sampled) <-
-              parseMp4Samples(r.getAs[Array[Byte]](1), stride, maxFrames)
-            first <- sampled.iterator.flatMap(decodeBuffered(_)).buffered.headOption
-          } yield (r.getLong(0), fmt, n,
-            aHash64(blockMeanGray(first, 8, 8)), dHash64(blockMeanGray(first, 9, 8)))
-        }
-      }
-      .toDF(idCol, "codec", "n_samples", "ahash", "dhash")
-  }
+      stride: Int = 1, maxFrames: Int = 64): DataFrame =
+    decodeLane(df, idCol, contentCol) { (id, bytes) =>
+      for {
+        (fmt, n, sampled) <- parseMp4Samples(bytes, stride, maxFrames)
+        (ahash, dhash) <- firstDecodable(sampled).map(perceptualHashes)
+      } yield (id, fmt, n, ahash, dhash)
+    }.toDF(idCol, "codec", "n_samples", "ahash", "dhash")
 
   /** Assemble an MP4 with REAL sample data: full stsd/stsz/stsc/stco
     * tables and the sample payloads laid into mdat, chunk offsets
@@ -1503,26 +1360,13 @@ object Multimodal {
   def synthesizeMp4sWithSamples(df: DataFrame, idCol: String,
       patterns: Int = 25): DataFrame = {
     require(patterns >= 1 && patterns <= 128, s"patterns must be in [1,128], got $patterns")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.map { r =>
-          val id = r.getLong(0)
-          val nf = (4 + id % 5).toInt
-          val fmt = (id % 3) match {
-            case 0 => "avc1"; case 1 => "hvc1"; case _ => "jpeg"
-          }
-          val samples =
-            if (fmt == "jpeg")
-              (0 until nf).map(f =>
-                jpegBytes(patternRaster(id, patterns, extraShift = f % 3), 0.95f))
-            else (0 until nf).map(f => Array.tabulate[Byte](64)(i => (id + f + i).toByte))
-          (id, buildMp4WithSamples("isom", 1000, (1000 * (1 + id % 7)).toInt,
-            fmt, samples, (1 + id % 3).toInt))
-        }
-      }
-      .toDF(idCol, "content")
+    synthesizeLane(df, idCol) { id =>
+      val fmt = mp4FixtureCodec(id)
+      val samples =
+        if (fmt == "jpeg") patternJpegFrames(id, patterns)
+        else (0 until (4 + id % 5).toInt).map(f => Array.tabulate[Byte](64)(i => (id + f + i).toByte))
+      buildMp4WithSamples("isom", 1000, (1000 * (1 + id % 7)).toInt,
+        fmt, samples, (1 + id % 3).toInt)
+    }
   }
 }

@@ -1277,6 +1277,20 @@ class OperatorsSpec extends AnyFunSuite {
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
   }
 
+  test("connectedComponents: int and long endpoints widen to one id type on every path") {
+    // the union of (a, b) and (b, a) widens int src / long dst to long;
+    // the driver's union-find must see one key class, not 1 and 1L
+    val edges = Seq((1, 2L), (2, 3L), (3, 1L), (10, 11L)).toDF("id_a", "id_b")
+    val paths = Seq(0, 1, 100).map { cap =>
+      val run = Dedup.connectedComponentsRun(edges, "id_a", "id_b", driverCap = cap)
+      val labels = run.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L),
+        s"cap $cap (${run.path}): $labels")
+      run.path
+    }
+    assert(paths.head == "loop" && paths.last == "driver", paths)
+  }
+
   test("connectedComponents reliable-checkpoint path: same labels, files written") {
     import graft.operators.Dedup
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
@@ -2487,6 +2501,36 @@ class OperatorsSpec extends AnyFunSuite {
     val got = Multimodal.parseMp4Samples(bombed, 1, 64)
     assert(got.isEmpty || got.get._2 <= (1 << 22),
       s"claimed 2^28 stsz entries must clamp: ${got.map(_._2)}")
+  }
+
+  test("decode seam: every real decode lane drops null and junk payloads, keeps the fixture's id") {
+    type Frame = org.apache.spark.sql.DataFrame
+    val one = Seq(5L).toDF("doc_id") // a decodable fixture in every synthesize lane
+    val bad = Seq((7L, null.asInstanceOf[Array[Byte]]), (8L, "not a media payload".getBytes("UTF-8")))
+      .toDF("doc_id", "content")
+    val lanes = Seq[(String, Frame => Frame, Frame)](
+      ("decodeImagesReal", Multimodal.decodeImagesReal(_, "doc_id", "content").toDF(),
+        Multimodal.synthesizeGrayPngs(one, "doc_id")),
+      ("imageHashes", Multimodal.imageHashes(_, "doc_id", "content").toDF(),
+        Multimodal.synthesizePatternPngs(one, "doc_id")),
+      ("decodeAudioReal", Multimodal.decodeAudioReal(_, "doc_id", "content").toDF(),
+        Multimodal.synthesizeWavs(one, "doc_id")),
+      ("audioFingerprints", Multimodal.audioFingerprints(_, "doc_id", "content"),
+        Multimodal.synthesizePatternWavs(one, "doc_id")),
+      ("decodeVideosReal", Multimodal.decodeVideosReal(_, "doc_id", "content").toDF(),
+        Multimodal.synthesizeMjpegAvis(one, "doc_id")),
+      ("videoFingerprints", Multimodal.videoFingerprints(_, "doc_id", "content"),
+        Multimodal.synthesizeMjpegAvis(one, "doc_id")),
+      ("mp4Metadata", Multimodal.mp4Metadata(_, "doc_id", "content").toDF(),
+        Multimodal.synthesizeMp4s(one, "doc_id")),
+      ("decodeMp4FramesReal", Multimodal.decodeMp4FramesReal(_, "doc_id", "content").toDF(),
+        Multimodal.synthesizeMp4sWithSamples(one, "doc_id")),
+      ("mp4Fingerprints", Multimodal.mp4Fingerprints(_, "doc_id", "content"),
+        Multimodal.synthesizeMp4sWithSamples(one, "doc_id")))
+    for ((lane, decode, fixture) <- lanes) {
+      val ids = decode(fixture.unionByName(bad)).collect().map(_.getLong(0)).toSeq
+      assert(ids == Seq(5L), s"$lane kept ids $ids")
+    }
   }
 
   test("synthesizePatternPngs: 25 base patterns pairwise far; jitter is hash-invariant") {
